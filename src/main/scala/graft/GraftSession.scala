@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session builders with the engine's configuration profiles
+/** Session builder with the engine's configuration profile
   * (SURVEY.md §4.3).
   *
   * `default` — plain Spark 4.x posture: AQE (with skew-join split and
@@ -14,10 +14,6 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone for cross-engine determinism,
   *  - nanos-as-long so TIMESTAMP(NANOS) parquet (the events table)
   *    reads without error.
-  *
-  * `parity` — reproduces the reference's physical knobs
-  * (broadcast disabled → sort-merge joins, 200 shuffle partitions;
-  * reference: src/curated/curated_layer.py:12-17) for A/B runs.
   */
 object GraftSession {
 
@@ -97,7 +93,7 @@ object GraftSession {
       // JOB once a read spans more than this many paths (default 32).
       // Every serving read of a 128-list IVF index tripped it, paying
       // a ~1 s job to list 128 local directories that the driver lists
-      // in ~0.3 s (r16 measurement, WriteExp). 1024 keeps driver-side
+      // in ~0.3 s (r16 measurement). 1024 keeps driver-side
       // listing for index-sized partition counts on filesystem-backed
       // stores; genuinely huge partitioned tables (or slow object
       // stores — lower it there) still get the distributed listing
@@ -120,19 +116,6 @@ object GraftSession {
     val s = defaultBuilder(master, cores).getOrCreate()
     // also covers sessions that existed before this call (extensions
     // only apply at build time)
-    graft.expressions.GraftExtensions.register(s)
-    s
-  }
-
-  /** Reference-parity physical profile: forces the sort-merge joins the
-    * reference runs with (autoBroadcastJoinThreshold=-1) and its 200
-    * shuffle partitions.
-    */
-  def parity(master: String = "local[32]"): SparkSession = {
-    val s = defaultBuilder(master)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.shuffle.partitions", "200")
-      .getOrCreate()
     graft.expressions.GraftExtensions.register(s)
     s
   }

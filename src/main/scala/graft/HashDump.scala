@@ -73,8 +73,6 @@ object HashDump {
 
   /** Escape the three digest metacharacters in a string column —
     * escape char first so the other two rewrites can't double-escape.
-    * Shared with [[graft.etl.StagingLayer]]'s hash-dedup row key
-    * (the same boundary-shift hazard, in dedup clothing).
     */
   def escaped(c: Column): Column =
     replace(

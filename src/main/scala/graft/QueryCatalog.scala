@@ -242,7 +242,7 @@ object QueryCatalog {
             prev._2.dimProduct, prev._2.factSales).foreach(_.unpersist())
           evictServed(s)
         }
-        val built = graft.etl.Pipeline.runBatch(synthInventory(s, dir), cacheStaging = true)
+        val built = graft.etl.Pipeline.runBatch(synthInventory(s, dir))
         // cache the curated zone too (a real medallion pipeline
         // MATERIALIZES curated, it doesn't rebuild it per dashboard
         // query): without this, every serve re-runs dim_product's

@@ -28,28 +28,14 @@ object Pipeline {
       factSales: DataFrame,
       staging: DataFrame)
 
-  /** Build all curated outputs from a raw DataFrame in one pass.
-    *
-    * @param cacheStaging cache the cleaned staging frame — right when
-    *   all four outputs are materialized (the reference re-scanned the
-    *   staging zone 8×); skip it when only one output is consumed, the
-    *   materialization then costs more than the recompute.
-    */
+  /** Build all curated outputs from a raw DataFrame in one pass. */
   def runBatch(
       raw: DataFrame,
       existingStore: Option[DataFrame] = None,
       existingProduct: Option[DataFrame] = None,
       asOf: Timestamp = Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z")),
-      referenceSemantics: Boolean = true,
-      cacheStaging: Boolean = true,
-      // the 100 TB posture flag, threaded to StagingLayer.clean: the
-      // parity default full-row dropDuplicates shuffles every wide
-      // column; hashDedup=true shuffles one md5 key instead (result
-      // equal up to 2^-128 — see StagingLayer.clean). Measured A/B at
-      // sf10 in SCALING.md "r14 at the 100× point".
-      hashDedup: Boolean = false): CuratedOutputs = {
-    val cleaned = StagingLayer.clean(raw, hashDedup = hashDedup)
-    val staging = if (cacheStaging) cleaned.cache() else cleaned
+      referenceSemantics: Boolean = true): CuratedOutputs = {
+    val staging = StagingLayer.clean(raw).cache()
     CuratedOutputs(
       dimDate = CuratedLayer.dimDate(staging),
       dimStore = CuratedLayer.dimStore(staging, existingStore, asOf, referenceSemantics),

@@ -18,9 +18,8 @@ object StagingLayer {
   val fillZeroDouble: Seq[String] = Seq("carrying_cost", "stock_out_risk", "inventory_turnover")
 
   /** Rows that appear more than once, with their multiplicity
-    * (reference: staging_layer.py:41-49). Full-width groupBy — at scale
-    * prefer a hash of the row as the grouping key; kept exact here for
-    * parity.
+    * (reference: staging_layer.py:41-49). Full-width groupBy, exact
+    * for parity.
     */
   def duplicateReport(df: DataFrame): DataFrame =
     df.groupBy(df.columns.map(col).toIndexedSeq: _*).count().filter(col("count") > 1)
@@ -32,50 +31,9 @@ object StagingLayer {
     * the `is_restock_needed` guard is vacuous after fillna — both are
     * declared reference semantics (SURVEY.md §2.9 notes), reproduced
     * as-is.
-    *
-    * `hashDedup` (VERDICT r12 #5, the 100 TB posture flag): the
-    * reference's full-row `dropDuplicates()` groups on all 16 wide
-    * columns — at scale the shuffle sorts and compares every column of
-    * every row. With the flag on, the grouping key is ONE md5 of the
-    * row's canonical rendering (cells null-sentineled and
-    * metacharacter-escaped via [[graft.HashDump.escaped]] so a string
-    * value can neither impersonate NULL nor shift cell boundaries —
-    * the ADVICE r12 digest discipline) and one arbitrary row per key
-    * survives; rows with equal keys are identical up to a 2^-128
-    * collision, so the result equals exact dedup (spec-pinned on the
-    * walmart fixture, dirty rows included). Default OFF for
-    * reference parity.
     */
-  /** The two full-row dedup postures of [[clean]], factored out so the
-    * A/B harness ([[graft.tools.StagingAB]]) measures the EXACT
-    * library code path on arbitrary-width corpora, not a re-statement
-    * of it. Semantics identical up to a 2^-128 md5 collision (see
-    * [[clean]]'s scaladoc).
-    *
-    * MEASURED WASH at 16 cols × 60 M rows (r14) AND at 33 cols ×
-    * ~2.5 KB rows (r15, SCALING.md): `dropDuplicates` on the key
-    * still ships whole rows through its shuffle, so the md5 only
-    * cheapens hash/sort comparisons that partial aggregation already
-    * bounds. A genuinely lighter wide-row posture is a different
-    * algorithm — shuffle (md5, id) pairs only, pick one id per key,
-    * semi-join survivors back against the unshuffled table — worth
-    * building only if a real corpus shows this path on a profile.
-    */
-  private[graft] def dedupRows(df: DataFrame, hashDedup: Boolean): DataFrame =
-    if (!hashDedup) df.dropDuplicates()
-    else {
-      val sep = 1.toChar.toString
-      val nul = 2.toChar.toString
-      val key = md5(concat_ws(sep, df.columns.toIndexedSeq.map { c =>
-        coalesce(graft.HashDump.escaped(col(c).cast("string")), lit(nul))
-      }: _*))
-      df.withColumn("__row_md5", key)
-        .dropDuplicates("__row_md5")
-        .drop("__row_md5")
-    }
-
-  def clean(df: DataFrame, hashDedup: Boolean = false): DataFrame = {
-    val deduped = dedupRows(df, hashDedup)
+  def clean(df: DataFrame): DataFrame = {
+    val deduped = df.dropDuplicates()
       .filter(col("date").isNotNull)
       .withColumn("unit_price", col("unit_price").cast(DecimalType(10, 2)))
       .withColumn("total_sales", col("total_sales").cast(DecimalType(15, 2)))

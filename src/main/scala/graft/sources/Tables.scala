@@ -22,17 +22,25 @@ object Tables {
     * v1 parquet path costs a footer read + relation resolution per
     * `spark.read.parquet` call — measured 45–63 ms/load vs 5.7 ms with
     * an explicit schema, and a bench pass issues ~400 loads (~18 s of
-    * pure re-inference). The schema is METADATA of an immutable file
-    * (the same per-session immutability the memoized dashboard build
-    * documents, and the same class as Spark's own FileStatusCache) —
-    * no row, statistic, or result is cached, and the first load of
-    * each path still infers from the footer under the pinned
-    * NTZ-inference-off conf, so cached loads are bit-identical AND
-    * session-independent (the explicit schema makes bare NTZ-default
-    * sessions read the same types without the conf dance).
+    * pure re-inference). The schema is METADATA of the file (the same
+    * class as Spark's own FileStatusCache) — no row, statistic, or
+    * result is cached, and the first load of each path still infers
+    * from the footer under the pinned NTZ-inference-off conf, so
+    * cached loads are bit-identical AND session-independent (the
+    * explicit schema makes bare NTZ-default sessions read the same
+    * types without the conf dance). Each entry is stamped with the
+    * root's modification time and length: a table regenerated at the
+    * same path misses the stamp and is re-inferred, never read with
+    * the old schema.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
+
+  private def rootStamp(spark: SparkSession, p: String): (Long, Long) = {
+    val root = new org.apache.hadoop.fs.Path(p)
+    val st = root.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(root)
+    (st.getModificationTime, st.getLen)
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // TIMESTAMP(NANOS) parquet (events.ts) is unreadable without this
@@ -54,9 +62,10 @@ object Tables {
     // semantics (TablesSpec asserts both).
     val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
     val p = path(dir, name)
-    val cachedSchema = schemaCache.get(p)
+    val stamp = rootStamp(spark, p)
+    val cached = schemaCache.get(p)
     val df =
-      if (cachedSchema != null) spark.read.schema(cachedSchema).parquet(p)
+      if (cached != null && cached._1 == stamp) spark.read.schema(cached._2).parquet(p)
       else {
         val ntzSaved = spark.conf.get(ntzKey)
         val d =
@@ -64,7 +73,7 @@ object Tables {
             spark.conf.set(ntzKey, "false")
             spark.read.parquet(p)
           } finally spark.conf.set(ntzKey, ntzSaved)
-        schemaCache.put(p, d.schema)
+        schemaCache.put(p, (stamp, d.schema))
         d
       }
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads as
@@ -76,13 +85,6 @@ object Tables {
       case None => df
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` serves the same
-    * query texts the reference's dashboard sends to Postgres
-    * (reference: dashboard.py:29-122 — serving moves into Spark SQL).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   // ------------------------------------------------------------------
   // Driver-side parquet-FOOTER statistics probes (r17). The catalog's
@@ -105,12 +107,16 @@ object Tables {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(tablePath)
     val fs = root.getFileSystem(conf)
-    val files: Seq[org.apache.hadoop.fs.Path] =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toIndexedSeq.filter(_.isFile).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-      else Seq(root)
-    files.map { p =>
+    // every leaf data file below the root, as the scan's file index
+    // lists it: partition directories (`k=v/`) and nested dirs are
+    // descended, `_`/`.`-prefixed entries (`_SUCCESS`, `_temporary`,
+    // `.crc` checksums) skipped at every level
+    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.Path] =
+      if (!st.isDirectory) Seq(st.getPath)
+      else fs.listStatus(st.getPath).toIndexedSeq
+        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+        .flatMap(leaves)
+    leaves(fs.getFileStatus(root)).map { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getFooter finally r.close()

@@ -3,10 +3,11 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Throwaway instrumentation (r17): full-catalog sweep recording, per
-  * query, cold + warm wall time and the warm run's job/stage/task
-  * counts — the attribution data for the ~0.3 s/query fixed-overhead
-  * floor across the bench tail (VERDICT r16 "next round" #1).
+/** Full-catalog sweep recording, per query, cold + warm wall time and
+  * the warm run's job/stage/task counts — the attribution data for the
+  * ~0.3 s/query fixed-overhead floor across the bench tail (VERDICT r16
+  * "next round" #1). `failed` is 1 when either run threw: its times are
+  * then the time to the failure, not a query time.
   * Usage: runMain graft.tools.QSweep [sfDir] [outFile]
   */
 object QSweep {
@@ -29,12 +30,13 @@ object QSweep {
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     val sb = new StringBuilder
-    sb.append("query\tcold_s\twarm_s\tjobs\tstages\ttasks\tgc_ms\n")
+    sb.append("query\tcold_s\twarm_s\tjobs\tstages\ttasks\tgc_ms\tfailed\n")
     def sweepOne(q: String): Unit = {
+      var failed = 0
       def run(): Double = {
         val t0 = System.nanoTime()
         try graft.SparkEntry.queries(q)(spark, dir).count()
-        catch { case _: Throwable => -1L }
+        catch { case _: Throwable => failed = 1 }
         (System.nanoTime() - t0) / 1e9
       }
       val cold = run()
@@ -42,7 +44,7 @@ object QSweep {
       val j0 = jobs.get(); val s0 = stages.get(); val t0 = tasks.get(); val g0 = gcMs
       val warm = run()
       Thread.sleep(150)
-      val line = f"$q\t$cold%.3f\t$warm%.3f\t${jobs.get - j0}%d\t${stages.get - s0}%d\t${tasks.get - t0}%d\t${gcMs - g0}%d"
+      val line = f"$q\t$cold%.3f\t$warm%.3f\t${jobs.get - j0}%d\t${stages.get - s0}%d\t${tasks.get - t0}%d\t${gcMs - g0}%d\t$failed%d"
       println("QSWEEP " + line)
       sb.append(line).append('\n')
     }

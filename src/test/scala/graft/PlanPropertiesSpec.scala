@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * that keeps a query correct but drops its filter pushdown / broadcast
   * / partial top-k would only surface as a 100× slowdown on a real
   * cluster — these assertions fail it in CI instead. (The full plan
-  * dump lives in `graft.tools.PlanAudit`.)
+  * dump lives in `graft.tools.PlanDump`.)
   */
 class PlanPropertiesSpec extends SparkSpec {
 

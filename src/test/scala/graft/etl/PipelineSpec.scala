@@ -3,6 +3,7 @@ package graft.etl
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 
@@ -31,6 +32,12 @@ class PipelineSpec extends SparkSpec {
     // non-functional dependency preserved: P1 appears with 2 prices
     assert(out.dimProduct.filter(out.dimProduct("product_id") === "P1").count() === 2)
     assert(out.factSales.count() === 4)
+  }
+
+  test("runBatch caches the staging frame the four outputs build from") {
+    val out = Pipeline.runBatch(raw)
+    try assert(out.staging.storageLevel != StorageLevel.NONE)
+    finally out.staging.unpersist()
   }
 
   test("dashboard Q1 runs on Spark SQL views and aggregates correctly") {

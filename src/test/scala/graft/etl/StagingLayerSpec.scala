@@ -88,7 +88,7 @@ class StagingLayerSpec extends SparkSpec {
     assert(r.head.getLong(r.head.length - 1) === 3L)
   }
 
-  test("clean(hashDedup = true) ≡ exact dedup on the fixture, dirty rows included (VERDICT r12 #5)") {
+  test("clean dedups the fixture zoo to the hand-expected rows") {
     val dirty = Row("TXN4", ts("2023-01-03"), "ST1", "NYC", "P1", "Dum",
       2, 10.0, 50.0, 5, 10, 3, 1.0, 0.1, 2.0)
     val nullDate = Row("TXN2", null, "ST1", "NYC", "P1", "Toys",
@@ -99,18 +99,26 @@ class StagingLayerSpec extends SparkSpec {
     // null-metrics row — the full fixture zoo, tripled
     val df = raw(Seq(clean1, clean1, dirty, dirty, dirty, nullDate,
       withNulls, withNulls))
-    val exact = StagingLayer.clean(df)
-    val hashed = StagingLayer.clean(df, hashDedup = true)
-    assert(hashed.schema === exact.schema)
+    // decimals compared by value; columns: the 15 source columns (casts
+    // applied), then profit_margin and is_restock_needed
+    def norm(r: Row): Seq[Any] = r.toSeq.map {
+      case d: java.math.BigDecimal => d.doubleValue
+      case v => v
+    }
+    val expected = Seq(
+      Seq("TXN1", ts("2023-01-01"), "ST1", "NYC", "P1", "Toys",
+        2, 10.0, 20.0, 5, 10, 3, 1.0, 0.1, 2.0, 0.0, "Yes"),
+      Seq("TXN3", ts("2023-01-02"), "ST1", "NYC", "P1", "Toys",
+        2, 10.0, 20.0, 0, 0, 0, 0.0, 0.0, 0.0, 0.0, "No"),
+      Seq("TXN4", ts("2023-01-03"), "ST1", "NYC", "P1", "Dum",
+        2, 10.0, 50.0, 5, 10, 3, 1.0, 0.1, 2.0, 30.0, "Yes"))
     // row-for-row equality as multisets (exceptAll trips a Spark
     // ReplicateRows binding bug against this plan shape)
-    assert(hashed.collect().map(_.toString).sorted.toSeq ===
-      exact.collect().map(_.toString).sorted.toSeq)
-    // near-identical rows (one cell differs) both survive hash dedup
+    assert(StagingLayer.clean(df).collect().map(norm).sortBy(_.head.toString).toSeq === expected)
+    // near-identical rows (one cell differs) both survive the dedup
     val nearTwin = Row("TXN1", ts("2023-01-01"), "ST1", "NYC", "P1", "Toys",
       2, 10.0, 20.0, 5, 10, 3, 1.0, 0.1, 2.1)
-    assert(StagingLayer.clean(raw(Seq(clean1, nearTwin)),
-      hashDedup = true).count() === 2)
+    assert(StagingLayer.clean(raw(Seq(clean1, nearTwin))).count() === 2)
   }
 
   test("clean is idempotent: clean(clean(x)) == clean(x)") {

@@ -140,4 +140,42 @@ class TablesSpec extends SparkSpec {
     assert(Tables.footerRowCount(spark, empty) == 0L)
     assert(Tables.footerMaxLong(spark, empty, "id") == Some(None))
   }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("footer probes read every leaf file of a partitioned root") {
+    import org.apache.spark.sql.functions.max
+    val dir = tmpDir("graft_footer_part")
+    val df = spark.range(0, 500).withColumn("yr", (col("id") % 3).cast("int"))
+    graft.operators.PartitionedLake.writePartitioned(df.repartition(2), Tables.path(dir, "lake"), "yr")
+    val p = Tables.path(dir, "lake")
+    val loaded = Tables.load(spark, dir, "lake")
+    assert(Tables.footerRowCount(spark, p) == loaded.count())
+    assert(Tables.footerMaxLong(spark, p, "id") ==
+      Some(Some(loaded.agg(max(col("id"))).head.getLong(0))))
+    // the partition column lives in directory names, not in the files:
+    // no footer can answer it, so the caller must scan
+    assert(Tables.footerMaxLong(spark, p, "yr").isEmpty)
+  }
+
+  test("footer row count sums every part file of a multi-file root") {
+    val dir = tmpDir("graft_footer_multi")
+    val p = Tables.path(dir, "multi")
+    spark.range(0, 700).repartition(3).write.parquet(p)
+    assert(graft.operators.PartitionedLake.dataFileCount(p) > 1)
+    assert(Tables.footerRowCount(spark, p) == Tables.load(spark, dir, "multi").count())
+  }
+
+  test("a table regenerated at the same path loads with its new schema") {
+    val dir = tmpDir("graft_schema_regen")
+    val p = Tables.path(dir, "t")
+    spark.range(0, 10).write.parquet(p)
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id"))
+    spark.range(0, 10).withColumn("name", col("id").cast("string"))
+      .write.mode("overwrite").parquet(p)
+    val reloaded = Tables.load(spark, dir, "t")
+    assert(reloaded.columns.toSeq == Seq("id", "name"))
+    assert(reloaded.filter(col("name") === "7").count() == 1)
+  }
 }

@@ -1,5 +1,30 @@
 package graft
 object Bench {
+  /** The warmup queries: one representative per plan family (agg,
+    * window, banding join, cosine/topk, pipeline, generate/explode,
+    * range window, CC loop) so no timed query pays first-plan JIT for
+    * its whole shape. FROZEN as warmup_set "r16" (VERDICT r16 #3): any
+    * future edit to this list ships in its own measurement-only commit,
+    * bumps the warmup_set tag in the JSON, and records old- AND
+    * new-protocol totals in BASELINE.md — cold totals are only
+    * round-over-round comparable at equal warmup_set.
+    *
+    * r16 additions: the ADC/IVFADC family (q174–q181 — custom scan
+    * kernels, BoundedTopK ObjectHashAggregate, DPP-pruned index
+    * serving: q178 covers build+write+read, q175 the in-flight
+    * composition) and the span-mining family (q193/q197 — window
+    * gram-hash Generate + count-window shapes) had NO warmup
+    * representative, so their first timed query paid the whole
+    * family's codegen/JIT: q193 measured 13.8 s cold vs 1.9 s warm
+    * for an identical plan at sf0.1.
+    */
+  val warmupQueries: Seq[String] = Seq("q01_pricing_summary", "q06_join_3way_agg",
+    "q13_window_topk", "q26_docs_minhash_neardup", "q29_emb_cosine_topk",
+    "q40_pipeline_dashboard", "q45_tpch_q3", "q50_word_count",
+    "q58_docs_neardup_resolve", "q64_events_trailing",
+    "q175_emb_ann_ivfadc", "q178_emb_ann_ivfadc_index",
+    "q193_docs_repeated_spans")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -15,28 +40,7 @@ object Bench {
     // still include each plan's own codegen.)
     val warmup0 = System.nanoTime()
     val warmupDir = "/root/testdata/sf0.001"
-    // one representative per plan family (agg, window, banding join,
-    // cosine/topk, pipeline, generate/explode, range window, CC loop)
-    // so no timed query pays first-plan JIT for its whole shape.
-    // FROZEN as warmup_set "r16" (VERDICT r16 #3): any future edit to
-    // this list ships in its own measurement-only commit, bumps the
-    // warmup_set tag in the JSON, and records old- AND new-protocol
-    // totals in BASELINE.md — cold totals are only round-over-round
-    // comparable at equal warmup_set.
-    // r16 additions: the ADC/IVFADC family (q174–q181 — custom scan
-    // kernels, BoundedTopK ObjectHashAggregate, DPP-pruned index
-    // serving: q178 covers build+write+read, q175 the in-flight
-    // composition) and the span-mining family (q193/q197 — window
-    // gram-hash Generate + count-window shapes) had NO warmup
-    // representative, so their first timed query paid the whole
-    // family's codegen/JIT: q193 measured 13.8 s cold vs 1.9 s warm
-    // for an identical plan at sf0.1.
-    Seq("q01_pricing_summary", "q06_join_3way_agg", "q13_window_topk",
-      "q26_docs_minhash_neardup", "q29_emb_cosine_topk", "q40_pipeline_dashboard",
-      "q45_tpch_q3", "q50_word_count",
-      "q58_docs_neardup_resolve", "q64_events_trailing",
-      "q175_emb_ann_ivfadc", "q178_emb_ann_ivfadc_index",
-      "q193_docs_repeated_spans").foreach { q =>
+    warmupQueries.foreach { q =>
       try SparkEntry.queries(q)(spark, warmupDir).count()
       catch { case _: Throwable => warmupFailed += 1 }
     }
@@ -47,7 +51,7 @@ object Bench {
     // work excluded from the timed pass — warmup_s puts it on the
     // record so the q40/q55–q57 serve-cache reads don't silently
     // flatter the total (r6 verdict, "what's wrong" #1).
-    try QueryCatalog.warmDashboard(spark, sfDir)
+    try catalog.CatalogSupport.warmDashboard(spark, sfDir)
     catch { case _: Throwable => warmupFailed += 1 }
     val warmupS = (System.nanoTime() - warmup0) / 1e9
     def timed(name: String): Option[Double] = {

@@ -1,21 +1,13 @@
 package graft
 
-import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-
-import graft.etl.{RawLayer, Scd2}
-import graft.functions.{TextFunctions, VectorFunctions}
-import graft.operators.{AsOfJoin, Bpe, Chunking, Classifier, DataSkipping, Dedup, Funnel, Ids, IncrementalAgg, LangId, LanguageModel, Multimodal, PartitionedLake, Profiler, Quality, Sampling, ScaleJoins, Sharding, Similarity, Sketches, TermStats, TypedOps, VersionedTable, Windows, ZOrder}
-import graft.sources.Tables
-import graft.streaming.EventStreams
+import graft.catalog._
 
 /** The declared operator inventory (SURVEY.md §2 + the LLM-pipeline
-  * extensions), one runnable query per operator, each with a DuckDB
-  * oracle where SQL can express the semantics.
+  * extensions), one runnable query per operator, each registered once
+  * in a family module under `graft.catalog` together with its DuckDB
+  * oracle SQL.
   *
   * Determinism rules (the driver hash-compares results):
   *  - no raw double SUM/AVG — aggregate decimals (exact, associative)
@@ -36,8017 +28,30 @@ object QueryCatalog {
 
   type QueryFn = (SparkSession, String) => DataFrame
 
-  // exact decimal sum, surfaced as double (identical on both engines)
-  private def dsum2(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
-  private def dsum4(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
-
-  /** UTC-anchored timestamp: `Timestamp.valueOf` parses in the JVM
-    * default timezone, which would shift instants (and the resulting
-    * date strings / filter boundaries) on non-UTC hosts while the
-    * DuckDB oracles stay naive-UTC. All catalog timestamps go through
-    * here.
+  /** Every family module; a query is added by appending one [[Entry]],
+    * with its oracle, to its family's `entries`.
     */
-  private def utcTs(s: String): Timestamp =
-    Timestamp.from(java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-      .atZone(java.time.ZoneOffset.UTC).toInstant)
+  val families: Seq[Family] = Seq(RelationalQueries, TpchQueries,
+    EtlQueries, EventQueries, AnnQueries, DedupQueries, CurationQueries, LmQueries,
+    MultimodalQueries, SamplingQueries)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Inventory table synthesized from lineitem for the end-to-end
-    * pipeline queries (q40, q55–q57): store/date attributes are
-    * functions of their keys so dim_store/dim_date are 1-row-per-key,
-    * while unit_price intentionally is NOT a function of product_id —
-    * dim_product is legitimately multi-row per business key, matching
-    * the reference's sample-data shape (SURVEY.md §1.5), and the
-    * dashboard joins fan out accordingly on BOTH engines.
+  /** The families' entries in registration order, each with its family
+    * name. A name registered twice is rejected: a map literal would keep
+    * the later entry without a word.
     */
-  private[graft] def synthInventory(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
-      concat(lit("TXN"), col("l_orderkey"), lit("-"), col("l_linenumber")).as("transaction_id"),
-      col("l_shipdate").as("date"),
-      concat(lit("ST"), col("l_suppkey")).as("store_id"),
-      concat(lit("LOC"), pmod(col("l_suppkey"), lit(20))).as("store_location"),
-      concat(lit("P"), col("l_partkey")).as("product_id"),
-      concat(lit("CAT"), pmod(col("l_partkey"), lit(7))).as("product_category"),
-      floor(col("l_quantity")).cast("int").as("quantity_sold"),
-      // DOUBLE-FREE unit_price (r2/r3 hash postmortem): any IEEE
-      // division whose quotient lands near a rounding boundary is
-      // engine-version-dependent (e.g. FMA fusion of x/q*100+0.5
-      // evaluates with one rounding instead of two). So the price is
-      // derived with pure integer arithmetic: exact cents from the
-      // stored double (margin-safe — l_extendedprice is cents-exact,
-      // so ep*100+0.5 sits ~1e-9 from an integer, never near .5), then
-      // BIGINT integer division. The only doubles left have huge
-      // margins; the value that determines the dim_product fan-out is
-      // a BIGINT. unit_price itself is that cents value rescaled to
-      // dollars with exact decimal multiplication (no division).
-      (expr("floor(l_extendedprice * 100 + 0.5) DIV greatest(floor(l_quantity), 1)")
-        .cast(DecimalType(12, 0)) * lit(new java.math.BigDecimal("0.01")))
-        .cast(DecimalType(10, 2)).as("unit_price"),
-      round(col("l_extendedprice"), 2).as("total_sales"),
-      pmod(col("l_suppkey") * 7, lit(100)).cast("int").as("stock_level"),
-      pmod(col("l_suppkey") * 3, lit(50)).cast("int").as("reorder_point"),
-      pmod(col("l_suppkey"), lit(14)).cast("int").as("lead_time_days"),
-      round(pmod(col("l_suppkey"), lit(10)) * 0.5, 2).as("carrying_cost"),
-      round(pmod(col("l_suppkey"), lit(5)) * 0.1, 2).as("stock_out_risk"),
-      lit(1.0).as("inventory_turnover"))
-
-  /** Run the full pipeline on the synthesized inventory and serve one
-    * dashboard query over the registered star-schema views.
-    *
-    * The star-schema build is memoized per (session, sf-dir): q40 and
-    * q55–q57 serve different dashboard queries over the SAME pipeline
-    * output, and rebuilding (plus re-caching staging) four times both
-    * quadrupled the bench cost and leaked three extra pinned caches per
-    * Bench/Verify run (round-2 regression). One entry is kept per
-    * session; switching sf-dir unpersists the previous staging cache.
-    */
-  private val dashCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (String, graft.etl.Pipeline.CuratedOutputs)]()
-
-  /** Loud guard for the q131/q147 oracle contract: their DuckDB sides
-    * read the payload back with CHARACTER semantics (length/ord/
-    * substr) while the Spark codecs encode UTF-8 BYTES — the parity
-    * holds only while `text` is pure ASCII (true for the generated
-    * testdata). One multi-byte character must fail the query loudly,
-    * not silently hash-diverge a round later.
-    */
-  private def assertAscii(docs: DataFrame): DataFrame =
-    docs.filter(
-      when(octet_length(col("text")) =!= length(col("text")),
-        raise_error(concat(lit("non-ASCII text breaks the byte/char oracle parity for doc_id "),
-          col("doc_id").cast("string"))).cast("boolean"))
-      .otherwise(lit(true)))
-
-  /** Per-invocation scratch directory for queries that must materialize
-    * an index/lake/zone to exercise read-path effects. Registered for
-    * recursive deletion at JVM exit (the frames a query returns read
-    * lazily from these dirs, so deleting any earlier would break the
-    * driver's collect) — repeated bench/verify runs no longer
-    * accumulate orphaned parquet trees in /tmp. ONE JVM-wide hook
-    * drains a concurrent queue of registered paths, so N invocations
-    * cost N temp dirs but O(1) hook threads.
-    */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      scratchDirs.forEach(p => rm(p.toFile))
-    }))
-  private def scratchDir(prefix: String): String = {
-    scratchHook
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    scratchDirs.add(p)
-    p.toString
+  private[graft] def register(fs: Seq[Family]): Seq[(String, Entry)] = {
+    val all = fs.flatMap(f => f.entries.map(f.name -> _))
+    val dups = all.groupBy(_._2.name).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"catalog query registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    all
   }
 
-  /** Plant-id offset that cannot collide with natural ids at ANY
-    * corpus scale: the smallest multiple of 1,000,000 above every id
-    * in the frame (r11 — ADVICE r10's q182 finding applied to the
-    * whole plant family). A fixed offset silently merges plants with
-    * real rows once a scaled corpus outgrows it: the sf10 sweep corpus
-    * (doc ids to ~700 k, vec ids to 200 k) crossed every fixed
-    * document offset the catalog used. One max() over the id column
-    * (answered from parquet footer statistics); every oracle computes
-    * the identical scalar with the same arithmetic, so both engines
-    * place plants at the same ids at every scale. Multi-group plants
-    * use 2·off / 3·off — disjoint from the corpus AND each other.
-    */
-  private def plantOffset(df: DataFrame, idCol: String): Long = {
-    val footer = sourceParquetPath(df)
-      .flatMap(p => Tables.footerMaxLong(df.sparkSession, p, idCol))
-    val maxId = footer match {
-      case Some(m) => m.getOrElse(0L) // exact footer max (None = no rows)
-      case None =>
-        val m = df.agg(max(col(idCol))).head
-        if (m.isNullAt(0)) 0L else m.getLong(0)
-    }
-    (maxId / 1000000L + 1L) * 1000000L
-  }
+  private val registry: Seq[(String, Entry)] = register(families)
 
-  /** The single parquet root behind `df` when — and only when — the
-    * frame is a BARE scan (Project-of-attributes/alias nodes over one
-    * parquet relation; any Filter/derivation disqualifies). This is
-    * the guard that lets [[plantOffset]]/[[probeCount]] answer from
-    * footer metadata with values identical to the scan-based
-    * aggregation: over a bare scan, footer row counts and column
-    * min/max ARE the aggregation's answers.
-    */
-  private def sourceParquetPath(df: DataFrame): Option[String] = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def walk(p: LogicalPlan): Option[String] = p match {
-      case Project(projs, child)
-          if projs.forall(_.isInstanceOf[AttributeReference]) => walk(child)
-      case SubqueryAlias(_, child) => walk(child)
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation
-            if fs.fileFormat.isInstanceOf[
-              org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]
-              && fs.location.rootPaths.size == 1 =>
-          Some(fs.location.rootPaths.head.toString)
-        case _ => None
-      }
-      case _ => None
-    }
-    walk(df.queryExecution.analyzed)
-  }
+  val queries: Map[String, QueryFn] = registry.map { case (_, e) => e.name -> e.run }.toMap
 
-  /** Row count of `df` — from parquet footer metadata when the frame
-    * is a bare table scan ([[sourceParquetPath]]; block row counts are
-    * exact by the format's definition), else the ordinary `count()`.
-    * The catalog's parameter probes (quantizer widths, inverted-index
-    * caps) are metadata questions; answering them without a cluster
-    * scan is the difference between a footer read and a full-table
-    * pass at 100 TB (r17 — the probe cost was ~2 Spark jobs each,
-    * ~38 probes per bench pass).
-    */
-  private def probeCount(df: DataFrame): Long =
-    sourceParquetPath(df) match {
-      case Some(p) => Tables.footerRowCount(df.sparkSession, p)
-      case None => df.count()
-    }
+  val oracleSql: Map[String, String] = registry.map { case (_, e) => e.name -> e.oracle }.toMap
 
-  /** The [[plantOffset]] scalar as oracle SQL (DuckDB). */
-  private def plantOffsetSql(table: String, idCol: String): String =
-    s"(SELECT (max($idCol) // 1000000 + 1) * 1000000 FROM $table)"
-
-  /** Memoization assumes the parquet under `dir` is immutable for the
-    * session's lifetime (true for the driver's generated testdata); a
-    * session that rewrites its inputs mid-flight would be served the
-    * memoized pipeline. The entry — and with it the strong reference
-    * to the session — is evicted when the application ends, so
-    * long-lived processes that cycle sessions don't accumulate stopped
-    * ones here.
-    */
-  private def dashboardServe(s: SparkSession, dir: String, sqlText: String): DataFrame = {
-    val out = dashCache.compute(s, (_, prev) => {
-      if (prev == null)
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            dashCache.remove(s)
-            evictServed(s)
-          }
-        })
-      if (prev != null && prev._1 == dir) prev
-      else {
-        if (prev != null) {
-          Seq(prev._2.staging, prev._2.dimDate, prev._2.dimStore,
-            prev._2.dimProduct, prev._2.factSales).foreach(_.unpersist())
-          evictServed(s)
-        }
-        val built = graft.etl.Pipeline.runBatch(synthInventory(s, dir))
-        // cache the curated zone too (a real medallion pipeline
-        // MATERIALIZES curated, it doesn't rebuild it per dashboard
-        // query): without this, every serve re-runs dim_product's
-        // DISTINCT shuffle from the cached staging frame
-        Seq(built.dimDate, built.dimStore, built.dimProduct, built.factSales)
-          .foreach(_.cache())
-        (dir, built)
-      }
-    })._2
-    graft.etl.Pipeline.registerViews(s, out)
-    if (sqlText == "SELECT 1") s.sql(sqlText)
-    else
-      // serve-layer RESULT cache, the other half of a real dashboard:
-      // the same SQL against the same immutable zone returns the same
-      // few-thousand-row result, so repeated serves (q55 + the q164/
-      // q165 diagnostics all run dashboard Q2) pay the dim_product
-      // fan-out join ONCE per (session, dir), not per query. Evicted
-      // with the pipeline cache on dir switch / application end.
-      servedCache.computeIfAbsent((s, dir, sqlText), _ => s.sql(sqlText).cache())
-  }
-
-  private val servedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  private def evictServed(s: SparkSession): Unit =
-    servedCache.keySet.forEach { k =>
-      if (k._1 eq s) {
-        val df = servedCache.remove(k)
-        if (df != null) df.unpersist()
-      }
-    }
-
-  /** The q56/q57 serving texts, shared with [[warmDashboard]]'s
-    * result-cache pre-fill (integer-stable variants of
-    * DashboardQueries.q3/q4 — see the q56/q57 catalog comments for the
-    * DIV/cents rationale).
-    */
-  private val dashQ3Sql =
-    """SELECT s.store_location, p.product_category,
-      |       SUM(f.quantity_sold) AS total_sold,
-      |       (SUM(CAST(f.stock_level AS BIGINT)) * 1000) DIV COUNT(*) AS avg_stock_x1000
-      |FROM fact_sales f
-      |JOIN dim_store s ON f.store_id = s.store_id
-      |JOIN dim_product p ON f.product_id = p.product_id
-      |GROUP BY s.store_location, p.product_category""".stripMargin
-
-  private val dashQ4Sql =
-    """SELECT s.store_location, p.product_category,
-      |       SUM(f.quantity_sold) AS total_quantity,
-      |       SUM(CAST(f.total_sales * 100 AS BIGINT)) AS sales_cents
-      |FROM fact_sales f
-      |JOIN dim_store s ON f.store_id = s.store_id
-      |JOIN dim_product p ON f.product_id = p.product_id
-      |GROUP BY s.store_location, p.product_category""".stripMargin
-
-  /** Materialize every cached star-schema output for `dir` so the four
-    * serving queries (q40, q55–q57) measure serving cost only. Caching
-    * above is lazy: each cached frame fills on FIRST access, so without
-    * this the dim_product fan-out fill lands on whichever serving query
-    * happens to touch it first (r4 bench: q55 +31% for exactly that
-    * reason). Bench calls this in its warmup phase.
-    *
-    * Also pre-fills the serve-layer RESULT cache for all four
-    * dashboard texts — the real serving posture: a dashboard
-    * materializes its handful of small aggregates once per zone
-    * refresh and serves reads from them. r5 measured the asymmetry of
-    * NOT doing this: q55 served from cache in 0.18 s (its SQL is
-    * shared with the q164/q165 diagnostics, so warmup filled it) while
-    * q56/q57 paid their fan-out join per run at 3.5/2.4 s. Bounded: 4
-    * cached aggregates of ≤ a few thousand rows per (session, dir).
-    */
-  def warmDashboard(s: SparkSession, dir: String): Unit = {
-    dashboardServe(s, dir, "SELECT 1")
-    val out = dashCache.get(s)._2
-    Seq(out.staging, out.dimDate, out.dimStore, out.dimProduct, out.factSales)
-      .foreach(_.count())
-    Seq(graft.etl.DashboardQueries.q1, graft.etl.DashboardQueries.q2(1995),
-        dashQ3Sql, dashQ4Sql)
-      .foreach(sql => dashboardServe(s, dir, sql).count())
-  }
-
-  // ---------------------------------------------------------------
-  // SCD2 synthetic current/new inputs derived deterministically from
-  // `supplier` (the testdata has no versioned dim, so we build one):
-  // even keys re-arrive, keys %4==0 with a changed attribute, keys
-  // %5==0 re-keyed +1_000_000 as brand-new.
-  // ---------------------------------------------------------------
-  private val scdAsOf = utcTs("2024-01-01 00:00:00")
-  private val scdStart = utcTs("2023-01-01 00:00:00")
-
-  private def scdInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val sup = t(s, dir, "supplier")
-    val acct = floor(col("s_acctbal")).cast("long")
-    val existing = sup.select(col("s_suppkey"), col("s_name"), acct.as("acct"))
-      .withColumn("start_date", lit(scdStart))
-      .withColumn("end_date", lit(null).cast("timestamp"))
-      .withColumn("is_current", lit(true))
-    val newBatch = sup.filter(col("s_suppkey") % 2 === 0)
-      .select(col("s_suppkey"), col("s_name"),
-        (acct + when(col("s_suppkey") % 4 === 0, 100).otherwise(0)).as("acct"))
-      .unionByName(sup.filter(col("s_suppkey") % 5 === 0)
-        .select((col("s_suppkey") + 1000000L).as("s_suppkey"), col("s_name"), acct.as("acct")))
-    (newBatch, existing)
-  }
-
-  private def scdFormat(df: DataFrame): DataFrame =
-    df.select(col("s_suppkey"), col("s_name"), col("acct"),
-        date_format(col("start_date"), "yyyy-MM-dd").as("start_date"),
-        date_format(col("end_date"), "yyyy-MM-dd").as("end_date"),
-        col("is_current"))
-      .orderBy(col("s_suppkey"), col("is_current"), col("start_date"))
-
-  private val scdSqlInputs =
-    """WITH existing AS (
-      |  SELECT s_suppkey, s_name, CAST(FLOOR(s_acctbal) AS BIGINT) AS acct,
-      |         TIMESTAMP '2023-01-01 00:00:00' AS start_date,
-      |         CAST(NULL AS TIMESTAMP) AS end_date, TRUE AS is_current
-      |  FROM supplier
-      |), newbatch AS (
-      |  SELECT s_suppkey, s_name,
-      |         CAST(FLOOR(s_acctbal) AS BIGINT)
-      |           + CASE WHEN s_suppkey % 4 = 0 THEN 100 ELSE 0 END AS acct
-      |  FROM supplier WHERE s_suppkey % 2 = 0
-      |  UNION ALL
-      |  SELECT s_suppkey + 1000000 AS s_suppkey, s_name,
-      |         CAST(FLOOR(s_acctbal) AS BIGINT) AS acct
-      |  FROM supplier WHERE s_suppkey % 5 = 0
-      |)""".stripMargin
-
-  // ---------------------------------------------------------------
-  // Core relational queries (parity with SURVEY.md §2) — each entry is
-  // (spark builder, duckdb oracle SQL).
-  // ---------------------------------------------------------------
-
-  val queries: Map[String, QueryFn] = Map(
-    // A5/A7/A9 + P6: multi-aggregate group-by (pricing summary).
-    "q01_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum2(col("l_quantity")).as("sum_qty"),
-          dsum2(col("l_extendedprice")).as("sum_base_price"),
-          (dsum2(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // P1/P2/P4: projection + pushed-down comparison filters.
-    "q02_filter_project" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(utcTs("1998-01-01 00:00:00")) &&
-          col("l_quantity") >= 48)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_extendedprice"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // P7/P8/P9/P10: when/otherwise, arithmetic, literals (raw double
-    // scalar math — deterministic, no aggregation).
-    "q03_derived_columns" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          (col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
-            .as("charge"),
-          when(col("l_quantity") < 10, lit("LOW"))
-            .when(col("l_quantity") < 40, lit("MID"))
-            .otherwise(lit("HIGH")).as("qty_class"),
-          (col("l_discount") > lit(0.05)).as("high_discount"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // A4: projected distinct.
-    "q04_distinct_projected" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(col("o_orderstatus"), col("o_orderpriority")).distinct()
-        .orderBy(col("o_orderstatus"), col("o_orderpriority"))
-    }),
-
-    // A2/P3: duplicate detection via group-by-all-columns (forced dups
-    // by self-union since the testdata is dup-free).
-    "q05_dup_detect" -> ((s, dir) => {
-      val r = t(s, dir, "region")
-      val doubled = r.union(r)
-      doubled.groupBy(doubled.columns.map(col).toIndexedSeq: _*).count()
-        .filter(col("count") > 1)
-        .orderBy(col("r_regionkey"))
-    }),
-
-    // J3/J4: 3-way inner equi-join + aggregation.
-    "q06_join_3way_agg" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(dsum2(col("o_totalprice")).as("total_revenue"), count(lit(1)).as("n_orders"))
-        .orderBy(col("n_name"))
-    }),
-
-    // J1 + P11: left outer join + fillna on the miss side.
-    "q07_join_left_fillna" -> ((s, dir) => {
-      val perCust = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-      t(s, dir, "customer")
-        .join(perCust, col("c_custkey") === col("o_custkey"), "left")
-        .na.fill(0L, Seq("n_orders"))
-        .select(col("c_custkey"), col("c_name"), col("n_orders"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // J2: left anti join (customers with no order above a threshold).
-    "q08_join_anti" -> ((s, dir) => {
-      val bigOrders = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      t(s, dir, "customer")
-        .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // left semi join (EXISTS).
-    "q09_join_semi" -> ((s, dir) => {
-      val bigOrders = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      t(s, dir, "customer")
-        .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // SCD2, reference-exact semantics (SURVEY.md §2.9).
-    "q10_scd2_reference" -> ((s, dir) => {
-      val (newBatch, existing) = scdInputs(s, dir)
-      scdFormat(Scd2.reference(newBatch, existing, "s_suppkey", Seq("s_name", "acct"), scdAsOf))
-    }),
-
-    // SCD2, corrected textbook semantics.
-    "q11_scd2_corrected" -> ((s, dir) => {
-      val (newBatch, existing) = scdInputs(s, dir)
-      scdFormat(Scd2.corrected(newBatch, existing, "s_suppkey", Seq("s_name", "acct"), scdAsOf))
-    }),
-
-    // U1/A3/I3: overlapping-slice union + full-row dedup (incremental
-    // merge semantics).
-    "q12_incremental_merge" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val slice1 = o.filter(col("o_orderdate") < lit(utcTs("1999-01-01 00:00:00")))
-      val slice2 = o.filter(col("o_orderdate") >= lit(utcTs("1997-01-01 00:00:00")))
-      slice1.union(slice2).dropDuplicates()
-        .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // W (extension beyond reference): ranking window, top-3 per group.
-    "q13_window_topk" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-        .orderBy(col("o_orderstatus"), col("rn"))
-    }),
-
-    // running aggregate window (exact decimal running sum).
-    "q14_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "orders")
-        .withColumn("running_spend",
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w).cast("double"))
-        .select(col("o_custkey"), col("o_orderkey"), col("running_spend"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    // F1/P5/A4: dim_date build (distinct dates + date parts).
-    "q15_dim_date" -> ((s, dir) => {
-      t(s, dir, "orders").select(col("o_orderdate")).distinct()
-        .select(
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("date_id"),
-          year(col("o_orderdate")).cast("long").as("year"),
-          month(col("o_orderdate")).cast("long").as("month"),
-          dayofmonth(col("o_orderdate")).cast("long").as("day"))
-        .orderBy(col("date_id"))
-    }),
-
-    // dashboard Q1 parity: sales by year/month (dashboard.py:30-41).
-    "q16_sales_by_month" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(
-          year(col("o_orderdate")).cast("long").as("year"),
-          month(col("o_orderdate")).cast("long").as("month"))
-        .agg(dsum2(col("o_totalprice")).as("total_sales"))
-        .orderBy(col("year"), col("month"))
-    }),
-
-    // dashboard Q2 parity: quantity by product in a year, ranked
-    // (dashboard.py:53-67).
-    "q17_qty_by_brand" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(year(col("l_shipdate")) === 1998)
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(dsum2(col("l_quantity")).as("total_quantity_sold"))
-        .orderBy(col("total_quantity_sold").desc, col("p_brand"))
-    }),
-
-    // dashboard Q3 parity: SUM + AVG by store×product analog
-    // (dashboard.py:78-91).
-    "q18_supplier_part_stats" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("s_name"), col("p_brand"))
-        .agg(
-          dsum2(col("l_quantity")).as("total_sold"),
-          (dsum2(col("l_extendedprice")) / count(lit(1))).as("avg_price"))
-        .orderBy(col("s_name"), col("p_brand"))
-    }),
-
-    // dashboard Q4 parity: two SUMs by store×product analog
-    // (dashboard.py:102-115).
-    "q19_store_product_sums" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("s_name"), col("p_brand"))
-        .agg(
-          dsum2(col("l_quantity")).as("total_quantity"),
-          dsum2(col("l_extendedprice")).as("total_sales"))
-        .orderBy(col("total_sales").desc, col("s_name"), col("p_brand"))
-    }),
-
-    // streaming-equivalent tumbling window aggregation (batch mode).
-    "q20_events_hourly" -> ((s, dir) => {
-      EventStreams.hourlyStats(t(s, dir, "events"))
-        .select(
-          date_format(col("window_start"), "yyyy-MM-dd HH:mm").as("hour"),
-          col("event_type"), col("n_events"), col("total_value"))
-        .orderBy(col("hour"), col("event_type"))
-    }),
-
-    // sessionization via session_window (batch mode).
-    "q21_events_sessionize" -> ((s, dir) => {
-      EventStreams.sessionize(t(s, dir, "events"), "30 minutes")
-        .select(
-          col("user_id"),
-          date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"), col("session_value"))
-        .orderBy(col("user_id"), col("session_start"))
-    }),
-
-    // text: token counting.
-    "q22_docs_token_count" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // dedup: exact text dedup by content hash (dup groups forced by a
-    // deterministic re-keyed copy of every 10th doc).
-    "q23_docs_dedup_exact" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val dupes = d.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + plantOffset(d, "doc_id"))
-      Dedup.exact(d.unionByName(dupes), "doc_id", "text")
-        .orderBy(col("text_hash"))
-    }),
-
-    // text: quality-scoring ratios.
-    "q24_docs_quality" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          length(txt).cast("long").as("len_chars"),
-          TextFunctions.alphaRatio(txt).as("alpha_ratio"),
-          TextFunctions.spaceRatio(txt).as("space_ratio"),
-          TextFunctions.meanTokenLen(txt).as("mean_token_len"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- extension operators (no exact SQL oracle → rows-only) ---
-
-    // language ID heuristic.
-    // lang-id emits the argmax label plus INTEGER evidence counts
-    // (stopword-token multiset count, token count) instead of a double
-    // ratio — fully oracle-checkable: the label's argmax/tiebreak and
-    // both counts are exact on any engine.
-    "q25_docs_lang_id" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.langId(col("text")).as("detected_lang"),
-          TextFunctions.stopwordTokenCount(col("text"), "en").as("en_stop_tokens"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // MinHash + LSH near-dup pairs, Jaccard-verified. Near-dups forced
-    // by re-keyed copies with the last 2 tokens dropped. ORACLE-CHECKED
-    // (r5): output is the planted pair set with exact integer gram
-    // counts from the same shingle sets the operator verified with —
-    // the oracle recomputes the word-3-gram sets and the 0.5 threshold
-    // in SQL, so both candidate recall (k=48/24 bands, r = 2:
-    // band-miss odds at the weakest measured planted pair, j = 0.75,
-    // are (1-j²)^24 ≈ 2.5e-9 — ~3e-8 summed over all 715 planted
-    // pairs at sf0.1) and the
-    // Jaccard-verify arithmetic are value-grounded. Natural near-dup
-    // pairs (unbounded, banding-recall-dependent) stay out of the
-    // compared set by the planted keying filter.
-    "q26_docs_minhash_neardup" -> ((s, dir) => {
-      val d = assertAscii(t(s, dir, "documents")).select(col("doc_id"), col("text"))
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val mutated = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + off).as("doc_id"),
-          concat_ws(" ", slice(TextFunctions.tokens(col("text")), lit(1),
-            greatest(size(TextFunctions.tokens(col("text"))) - 2, lit(1)))).as("text"))
-      val all = d.unionByName(mutated)
-      // ONE shingle/signature kernel pass, materialized: the plan below
-      // references the sets five times (banding, pair verification,
-      // and the two audit gram-count joins) — unmaterialized, each
-      // reference re-shingled the corpus and q26 was the slowest query
-      // in the r5 driver bench at 13.3 s. (DISK_ONLY: payload frames
-      // starve join memory from the storage pool at sweep scale; a
-      // cluster pipeline would use a reliable checkpoint.)
-      val prepared = Dedup.prepareNearDup(all, "doc_id", "text", k = 48, shingleSize = 3)
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      // hint("merge"): a corpus-sized payload side must never broadcast
-      // (its size estimate undercounts by orders of magnitude — the r11
-      // sweep lesson, Dedup.neverBroadcast)
-      val sets = prepared.select(col("doc_id"), col("sh")).hint("merge")
-      Dedup.nearDupPairsPrepared(prepared, threshold = 0.5, k = 48, bands = 24)
-        .filter(col("doc_a") % 7 === 0 && col("doc_b") === col("doc_a") + off)
-        .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
-        .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          size(col("sha")).cast("long").as("n_grams_a"),
-          size(col("shb")).cast("long").as("n_grams_b"),
-          size(array_intersect(col("sha"), col("shb"))).cast("long").as("n_shared"))
-        .orderBy(col("doc_a"))
-    }),
-
-    // SimHash near-dup candidates (Hamming ≤ 3 over 64-bit signatures).
-    // ORACLE-CHECKED (r5) via two planted classes with provable
-    // outcomes: exact copies MUST pair with their source at Hamming 0
-    // (identical text → identical signature → identical bands, pure
-    // determinism), reversed copies MUST NOT pair (measured signature
-    // distance ≥ 13 at every scale vs the ≤ 3 gate). The banding is
-    // complete for Hamming ≤ 3 by pigeonhole (4 × 16-bit bands), so a
-    // missing copy pair or a surviving reversed pair is a real defect.
-    // Near-threshold Hamming behavior stays spec-gated.
-    "q27_docs_simhash" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val copies = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + off).as("doc_id"), col("text"))
-      val rev = d.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + 2L * off).as("doc_id"), reverse(col("text")).as("text"))
-      Dedup.simhashPairs(d.unionByName(copies).unionByName(rev), "doc_id", "text",
-          maxHamming = 3)
-        .filter((col("doc_a") % 7 === 0 && col("doc_b") === col("doc_a") + off) ||
-                (col("doc_a") % 11 === 0 && col("doc_b") === col("doc_a") + 2L * off))
-        .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // character n-gram Jaccard set-similarity join (anchor-blocked, so
-    // candidate generation never goes all-pairs). Near-dups forced by
-    // re-keyed copies with a token appended.
-    // ORACLE-CHECKED (r5), same pattern as q26: planted appended-tail
-    // pairs with exact char-6-gram counts; the oracle regenerates the
-    // grams with substr windows and applies the 0.8 threshold by
-    // integer cross-multiplication, so the char-shingle kernel and the
-    // threshold arithmetic are value-checked end to end. k=48/24 bands
-    // (r = 2) make a band miss at the weakest measured planted pair
-    // (j = 0.800 at sf0.1) a (1-j²)^24 ≈ 2e-11 event.
-    "q28_docs_ngram_jaccard" -> ((s, dir) => {
-      val d = assertAscii(t(s, dir, "documents")).select(col("doc_id"), col("text"))
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val mutated = d.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + off).as("doc_id"),
-          concat(col("text"), lit(" appended tail")).as("text"))
-      val all = d.unionByName(mutated)
-      // same single-pass materialization as q26 (char-level grams here)
-      val prepared = Dedup.prepareNearDup(all, "doc_id", "text",
-          k = 48, shingleSize = 6, charLevel = true)
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val sets = prepared.select(col("doc_id"), col("sh")).hint("merge")
-      Dedup.nearDupPairsPrepared(prepared, threshold = 0.8, k = 48, bands = 24)
-        .filter(col("doc_a") % 9 === 0 && col("doc_b") === col("doc_a") + off)
-        .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
-        .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          size(col("sha")).cast("long").as("n_grams_a"),
-          size(col("shb")).cast("long").as("n_grams_b"),
-          size(array_intersect(col("sha"), col("shb"))).cast("long").as("n_shared"))
-        .orderBy(col("doc_a"))
-    }),
-
-    // similarity search: exact brute-force cosine top-k.
-    "q29_emb_cosine_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") % 50 === 0)
-      Similarity.bruteForceTopK(queries, e, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // kNN majority-label classification.
-    "q30_emb_knn_label" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") % 50 === 0)
-      Similarity.knnLabel(queries, e, k = 5)
-        .orderBy(col("query_id"))
-    }),
-
-    // approximate ANN via sign-bit LSH (8 tables × 4 axis planes) —
-    // the oracle-portable variant: bucket membership is pure sign
-    // tests on stored floats, so the DuckDB oracle reproduces the
-    // exact candidate sets and the full ranked result is value-checked
-    // (the random-plane lshTopK stays as the spec-gated quality path).
-    "q31_emb_ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") % 50 === 0)
-      // regime-dispatched (r11, VERDICT r10 #1): inside the LSH regime
-      // this is the joint autoLshPlan — (4, 8) at every driver-gated
-      // scale, the regime the oracle's pinned SQL encodes, planes then
-      // growing at quarter rate with tables compensating inside the
-      // dim wall. Past lshRegimeMax (~10⁵ at 64 dims, where the 100×
-      // sweep measured the best LSH plan at 1,055 s vs sign-IVF's
-      // 16 ms/query) annTopK routes to the sign-IVF path — the cliff a
-      // scaladoc pointer alone let callers walk into
-      Similarity.annTopK(queries, e, k = 5, dim = 64)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // winnowing fingerprints.
-    "q32_docs_fingerprint" -> ((s, dir) => {
-      Dedup.fingerprints(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"),
-          size(col("fingerprints")).cast("long").as("n_fingerprints"),
-          array_min(col("fingerprints")).as("min_fp"),
-          array_max(col("fingerprints")).as("max_fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // multimodal with a REAL codec: text bytes → valid 24-bpp BMP
-    // (BmpCodec.encode) → actual header parse + bottom-up row decode →
-    // exact per-channel pixel sums. All-integer output; the oracle
-    // recomputes the same sums from the source bytes (BMP channel j =
-    // byte position mod 3; zero padding adds nothing).
-    "q33_multimodal_features" -> ((s, dir) => {
-      val media = Multimodal.bmpFromText(s, t(s, dir, "documents"), "doc_id", "text",
-        width = 16)
-      Multimodal.imageStats(media).toDF()
-        .select(col("media_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))
-        .orderBy(col("media_id"))
-    }),
-
-    // distinct aggregates (expand-based two-phase plan in Spark).
-    "q34_distinct_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_suppkey")).as("n_suppliers"),
-          countDistinct(col("l_partkey")).as("n_parts"),
-          count(lit(1)).as("n_rows"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // set operations: intersect / except (distinct semantics).
-    "q35_set_ops" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val recent = o.filter(col("o_orderdate") >= lit(utcTs("1997-01-01 00:00:00")))
-        .select(col("o_custkey"))
-      val big = o.filter(col("o_totalprice") > 200000).select(col("o_custkey"))
-      val both = recent.intersect(big).withColumn("bucket", lit("both"))
-      val onlyRecent = recent.except(big).withColumn("bucket", lit("recent_only"))
-      both.unionByName(onlyRecent)
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_customers"))
-        .orderBy(col("bucket"))
-    }),
-
-    // multi-level aggregation: ROLLUP over year/status with grouping id.
-    "q36_rollup" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .rollup(year(col("o_orderdate")).cast("long").as("year"), col("o_orderstatus"))
-        .agg(dsum2(col("o_totalprice")).as("total_price"), count(lit(1)).as("n_orders"))
-        .orderBy(col("year").asc_nulls_first, col("o_orderstatus").asc_nulls_first)
-    }),
-
-    // embedding-cosine near-dup dedup: hyperplane-LSH candidates,
-    // exact cosine ≥ 0.95 (dups forced by re-keyed copies).
-    // ORACLE-CHECKED (r5): planted identical-vector copies MUST pair
-    // with their source — an identical vector lands in the same
-    // hyperplane bucket of every table (identical sign tests) and its
-    // exact-cosine verify is 1 up to a few ulp, far above 0.95 — so
-    // the oracle states the full planted set. Natural near-dup pairs
-    // (cosine doubles near the threshold, banding-recall-dependent)
-    // are excluded by the keying filter and stay spec-gated.
-    "q37_emb_neardup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val off = plantOffset(e, "vec_id") // collision-free at any scale (r11)
-      val dupes = e.filter(col("vec_id") % 40 === 0)
-        .withColumn("vec_id", col("vec_id") + off)
-      Similarity.embeddingNearDupPairs(e.unionByName(dupes), threshold = 0.95, dim = 64)
-        .filter(col("id_a") % 40 === 0 && col("id_b") === col("id_a") + off)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"))
-    }),
-
-    // training-data curation pipeline: exact dedup → quality filter →
-    // per-source survivor stats. Every stage oracle-checked.
-    "q38_docs_curation" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val dupes = d.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + plantOffset(d, "doc_id"))
-      val all = d.unionByName(dupes)
-      val keepIds = Dedup.exact(all, "doc_id", "text").select(col("keep_id").as("doc_id"))
-      val kept = all.join(keepIds, Seq("doc_id"), "left_semi")
-      kept
-        // ZERO doubles (r1–r3 driver hash postmortem): the ratio, its
-        // filter, and its quantization are all pure integer arithmetic
-        // over character counts. alpha/len >= 0.55 ⟺ alpha*100 >= 55*len
-        // exactly (len > 0), and the basis-point score rounds half-up
-        // via (a*10000 + len DIV 2) DIV len — identical BIGINT ops on
-        // any engine version. No final division: the oracle compares
-        // the summed basis points directly.
-        .withColumn("alpha_chars", TextFunctions.alphaChars(col("text")))
-        .withColumn("len", length(col("text")).cast("long"))
-        .withColumn("n_tokens", TextFunctions.tokenCount(col("text")).cast("long"))
-        .filter(col("len") >= 100 &&
-          col("alpha_chars") * 100 >= col("len") * 55 && col("n_tokens") >= 10)
-        .withColumn("alpha_q", expr("(alpha_chars * 10000 + len DIV 2) DIV len"))
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          sum(col("alpha_q")).as("sum_alpha_q"))
-        .orderBy(col("source"))
-    }),
-
-    // sliding event-time windows (1h window, 30m slide — each event in
-    // two windows).
-    "q39_events_sliding" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), dsum4(col("value")).as("total_value"))
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("window_start"),
-          col("event_type"), col("n_events"), col("total_value"))
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // full ETL pipeline end-to-end: synthesize the inventory table from
-    // lineitem, run staging clean → star schema → dashboard Q1 on Spark
-    // SQL views (reference: dashboard.py:30-41). Store attributes are
-    // functions of the key here so dims are 1-row-per-key and the
-    // whole pipeline is exactly SQL-expressible for the oracle.
-    "q40_pipeline_dashboard" -> ((s, dir) => {
-      dashboardServe(s, dir, graft.etl.DashboardQueries.q1)
-        .select(col("year").cast("long").as("year"), col("month").cast("long").as("month"),
-          col("store_location"), col("total_sales").cast("double").as("total_sales"))
-        .orderBy(col("year"), col("month"), col("store_location"))
-    }),
-
-    // dashboard Q2 end-to-end (reference: dashboard.py:53-67) — the
-    // dim_product join fans out per (category, unit_price) variant;
-    // the oracle reproduces the same distinct-dim join.
-    "q55_pipeline_dash_q2" -> ((s, dir) => {
-      dashboardServe(s, dir, graft.etl.DashboardQueries.q2(1995))
-        .select(col("product_id"), col("product_category"),
-          col("total_quantity_sold").cast("long").as("total_quantity_sold"))
-        .orderBy(col("product_id"))
-    }),
-
-    // dashboard Q3 end-to-end (reference: dashboard.py:78-91). Same
-    // star join + grouping as DashboardQueries.q3, but the emitted
-    // average is the ×1000-scaled BIGINT quotient — "one IEEE division
-    // is bit-identical" (r2 theory) proved false at the driver, whose
-    // DuckDB build evaluates boundary quotients differently (FMA-class
-    // fusion). DIV on BIGINTs is the only cross-engine-stable form.
-    "q56_pipeline_dash_q3" -> ((s, dir) => {
-      dashboardServe(s, dir, dashQ3Sql)
-        .select(col("store_location"), col("product_category"),
-          col("total_sold").cast("long").as("total_sold"),
-          col("avg_stock_x1000").cast("long").as("avg_stock_x1000"))
-        .orderBy(col("store_location"), col("product_category"))
-    }),
-
-    // dashboard Q4 end-to-end (reference: dashboard.py:102-115). Sales
-    // are emitted as exact BIGINT cents: total_sales is DECIMAL(15,2),
-    // so per-row ×100 then SUM is pure integer arithmetic end to end.
-    "q57_pipeline_dash_q4" -> ((s, dir) => {
-      dashboardServe(s, dir, dashQ4Sql)
-        .select(col("store_location"), col("product_category"),
-          col("total_quantity").cast("long").as("total_quantity"),
-          col("sales_cents").cast("long").as("sales_cents"))
-        .orderBy(col("store_location"), col("product_category"))
-    }),
-
-    // near-dup RESOLUTION: candidate pairs → connected components →
-    // min-id survivor per cluster (the fuzzy counterpart of q23's
-    // exact keep list). Banding runs with the per-bucket neighbor cap,
-    // so a mass-duplicated cluster costs O(m·cap) candidates.
-    // ORACLE-CHECKED (r6): the oracle recomputes the EXACT j ≥ 0.5
-    // token-3-gram pair graph in SQL (q73's recursive-reachability
-    // pattern, over the full corpus — measured ≤ 1 s in DuckDB even at
-    // sf0.1) and resolves it to min-reachable-id clusters, so the
-    // banding + verify + component loop is value-checked end to end,
-    // natural near-dups INCLUDED. Soundness: the threshold sits in a
-    // measured empty band — the weakest pair at any tested scale has
-    // j = 0.6 and NO pair lands in [0.4, 0.5) — so the oracle's exact
-    // integer gate and the engine's double compare cannot disagree;
-    // k = 48 / 24 bands (r = 2, vs the r = 4 default that would miss a
-    // j = 0.6 pair 57% of the time) puts a band miss at the weakest
-    // pair at (1-0.36)^24 ≈ 2e-5, and only component CONNECTIVITY (not
-    // pair listing) has to survive, which capped banding preserves.
-    "q58_docs_neardup_resolve" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val mutated = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + plantOffset(d, "doc_id")).as("doc_id"),
-          concat_ws(" ", slice(TextFunctions.tokens(col("text")), lit(1),
-            greatest(size(TextFunctions.tokens(col("text"))) - 2, lit(1)))).as("text"))
-      Dedup.resolveNearDups(d.unionByName(mutated), "doc_id", "text",
-          threshold = 0.5, k = 48, bands = 24)
-        .groupBy(col("keep_id")).agg(count(lit(1)).as("cluster_size"))
-        .orderBy(col("keep_id"))
-    }),
-
-    // winnowing-fingerprint overlap join: partial copies (a 200-char
-    // prefix re-keyed) share selected fingerprints with their source —
-    // the containment shape whole-document MinHash dilutes away.
-    // ORACLE-CHECKED (r5): the planted containment pairs are the
-    // compared set; every planted pair shares ≥ 12 selected
-    // fingerprints at every tested scale (vs the minShared = 3 gate),
-    // so the oracle states the full planted set. maxDocFreq is DERIVED
-    // from the corpus count (≥ 20% of docs), not hardcoded: at sf0.1
-    // the 10×-denser corpus pushed common prefix fingerprints past a
-    // fixed cap of 50 and silently dropped 69/1000 planted pairs — the
-    // cap exists to bound the inverted-index join, so it must scale
-    // with corpus size, not sit inside the natural doc-frequency
-    // distribution. The count is a parameter probe (parquet footer
-    // metadata), not a data scan.
-    "q59_docs_fingerprint_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val partial = d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + off).as("doc_id"),
-          substring(col("text"), 1, 200).as("text"))
-      val mdf = math.max(1000L, probeCount(d) / 5).min(Int.MaxValue.toLong).toInt
-      Dedup.fingerprintPairs(d.unionByName(partial), "doc_id", "text",
-          k = 8, w = 4, minShared = 3, maxDocFreq = mdf)
-        .filter(col("doc_a") % 5 === 0 && col("doc_b") === col("doc_a") + off)
-        .select(col("doc_a"), col("doc_b"))
-        .orderBy(col("doc_a"))
-    }),
-
-    // embedding near-dup resolution: LSH-bucketed candidate pairs →
-    // exact-cosine verify → connected components → keep list.
-    // ORACLE-CHECKED (r6): the cluster structure is provably exactly
-    // the planted copies — the maximum NATURAL pairwise cosine in the
-    // embeddings table is 0.60 at sf0.1 (0.51 at sf0.01, 0.48 at
-    // sf0.001; measured exhaustively) vs the 0.95 gate, so no natural
-    // pair can merge on any engine, and a planted identical copy
-    // always pairs with its source (identical sign tests → same bucket
-    // in every hyperplane table, exact cosine 1 — q37's argument). The
-    // oracle therefore states the keep list from first principles:
-    // every vector keeps itself, %25 == 0 sources absorb their copy.
-    "q60_emb_neardup_resolve" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val copies = e.filter(col("vec_id") % 25 === 0)
-        .withColumn("vec_id", col("vec_id") + plantOffset(e, "vec_id"))
-      Similarity.resolveEmbeddingNearDups(e.unionByName(copies),
-          threshold = 0.95, dim = 64)
-        .groupBy(col("keep_id")).agg(count(lit(1)).as("cluster_size"))
-        .orderBy(col("keep_id"))
-    }),
-
-    // deterministic key-hash sampling: rerun- and partitioning-stable,
-    // exactly reproducible by the oracle (no RNG anywhere).
-    "q61_sample_deterministic" -> ((s, dir) => {
-      Sampling.deterministicSample(t(s, dir, "documents"), "doc_id", 0.2)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // stratified sampling: keep every purchase, 10% of clicks, 5% of
-    // the rest — per-class training-data balancing as one scan filter.
-    "q62_sample_stratified" -> ((s, dir) => {
-      Sampling.stratifiedSample(t(s, dir, "events"), "event_id", "event_type",
-          Map("purchase" -> 1.0, "click" -> 0.1), default = 0.05)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n_sampled"))
-        .orderBy(col("event_type"))
-    }),
-
-    // duplicate-n-gram repetition scoring (Gopher/RefinedWeb-style
-    // quality signal): distinct grams via the compiled shingle-set
-    // kernel, total via length arithmetic — one codegen pass per doc.
-    "q63_docs_repetition" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.dupNgramRatio(col("text"), 10).as("dup10_ratio"),
-          TextFunctions.dupNgramRatio(col("text"), 5).as("dup5_ratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // trailing event-time RANGE window (per-user features over the
-    // last hour at every event) — the feature-engineering shape for
-    // sessionless behavioral features; one shuffle on user_id.
-    "q64_events_trailing" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").cast("long"))
-        .rangeBetween(-3600, Window.currentRow)
-      t(s, dir, "events").select(
-        col("event_id"), col("user_id"),
-        count(lit(1)).over(w).as("n_events_1h"),
-        sum(col("value").cast(DecimalType(18, 4))).over(w).cast("double").as("value_1h"))
-        .orderBy(col("event_id"))
-    }),
-
-    // incremental dedup: a new batch (exact copies, near-dup
-    // mutations, genuinely-new reversed docs) dedups against the kept
-    // history's compact artifacts — only the genuinely new survive.
-    // ORACLE-CHECKED (r5): the oracle derives the survivor set from
-    // first principles — every exact copy dies (md5 anti-join, pure
-    // determinism), every near-dup mutation dies (j ≈ 0.9 vs its
-    // source; a band miss at 8 bands of 2 rows is < 2e-6 per doc and
-    // zero at every tested scale), and the reversed docs survive
-    // EXCEPT non-minimal members of within-batch j ≥ 0.5 components,
-    // which the oracle recomputes exactly (reversal is a bijection on
-    // shingle sets, so reversed-pair Jaccard equals original-pair
-    // Jaccard; the measured reversed-vs-history maximum is 0.0 and
-    // within-batch pairs sit at j ≥ 0.9 — nothing lives near the 0.5
-    // boundary where banding recall could differ from the oracle's
-    // exact graph). bands = 8 (r = 2), not the default 4 (r = 4): the
-    // planted j ≈ 0.9 mutations had a measured ~1.4% per-doc band-miss
-    // rate at r = 4 (two escaped at sf0.01) vs < 2e-6 at r = 2.
-    "q68_docs_incremental_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // materialized: dedupeIncrement references the history 3× and a
-      // real pipeline passes a persisted artifact table here. DISK_ONLY
-      // — artifact tables are corpus-sized payload (shingle sets); in
-      // unified memory they starve the joins that read them (r11 sweep)
-      val history = Dedup.artifacts(d, "doc_id", "text")
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val batch = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + off).as("doc_id"), col("text"))
-        .unionByName(d.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 2L * off).as("doc_id"),
-            concat(col("text"), lit(" appended near dup token")).as("text")))
-        .unionByName(d.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 3L * off).as("doc_id"),
-            reverse(col("text")).as("text")))
-      Dedup.dedupeIncrement(Dedup.artifacts(batch, "doc_id", "text"),
-          history, threshold = 0.5, bands = 8)
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // context-window chunking: 500-char windows, 50-char overlap —
-    // pure column arithmetic + one explode, fully SQL-expressible.
-    "q66_docs_chunks" -> ((s, dir) => {
-      Chunking.chunkByChars(t(s, dir, "documents"), "doc_id", "text",
-          maxLen = 500, overlap = 50)
-        .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-          col("chunk_text"))
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
-
-    // benchmark decontamination: flag corpus docs containing any
-    // 13-token-gram of a (synthesized) benchmark set — docs %40==0
-    // stand in as the eval set, so their sources must be flagged.
-    "q67_docs_decontaminate" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 40 === 0).select(col("text"))
-      Chunking.flagContaminated(d, bench, "doc_id", "text", n = 13)
-        .orderBy(col("doc_id"))
-    }),
-
-    // IVF serving path: build the PERSISTED index (inverted lists
-    // partitioned by list_id), then query it — probed lists reach the
-    // scan as partition filters, so per-query I/O is nProbe/nLists of
-    // the corpus at any scale. Sign-quantizer variant at the same
-    // params as q44, so index-serving ≡ in-flight is itself
-    // value-checked by the shared oracle (the k-means index path
-    // keeps its own spec).
-    "q72_emb_ann_ivf_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") % 50 === 0)
-      val path = scratchDir("graft_ivf_idx")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val bits = Similarity.autoQuantBits(probeCount(e), 64)
-      Similarity.buildSignIvfIndex(e, path, dim = 64, bits = bits)
-      // fraction-denominated probe budget (r11, ADVICE): 375 ‰ of the
-      // lists = the pinned 48-of-128 at every gated scale, and the
-      // probed FRACTION stays flat as autoQuantBits grows the lists —
-      // a fixed count decayed recall to 0.70 at the 100× point
-      Similarity.querySignIvfIndex(s, path, queries, k = 5, dim = 64, bits = bits,
-        nProbe = Similarity.probeBudget(bits))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // null-aware gap-fill (LOCF forward-fill): carry each user's last
-    // observed non-click value forward to every event — the
-    // feature-engineering shape for sparse signals; null until the
-    // first observation. Same deterministic ordering key as q64/q69.
-    "q71_events_gap_fill" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").cast("long"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val sparse = when(col("event_type") =!= "click",
-        col("value").cast(DecimalType(18, 4)))
-      t(s, dir, "events").select(
-        col("event_id"), col("user_id"),
-        last(sparse, ignoreNulls = true).over(w).cast("double").as("filled_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // EXACT all-pairs token-3-gram Jaccard join on a bounded subset —
-    // the value-verified baseline for the banded (rows-only) similarity
-    // joins q26/q28, the way q29's exact cosine grounds the ANN
-    // entries. Shingle-hash sets stand in for the gram sets (64-bit
-    // collision odds are negligible at this cardinality), so set sizes,
-    // intersections, and the int/int-division Jaccard agree with the
-    // oracle's literal gram sets exactly.
-    "q70_docs_jaccard_exact" -> ((s, dir) => {
-      exactJaccardPairs(s, dir)._2
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // int8 embedding quantization: per-vector integer summaries of the
-    // symmetric-quantized codes. Division-free (one multiply + floor
-    // per component), so the codes — and these sums — are exact on any
-    // engine. Shape: posexplode + scalar quantize (codegen'd, each
-    // component quantized ONCE) + partial-agg shuffle on vec_id — the
-    // q65 pattern; the array-HOF form would re-run the interpreted
-    // transform per referencing aggregate.
-    "q74_emb_quantize_int8" -> ((s, dir) => {
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .select(col("vec_id"),
-          VectorFunctions.quantizeInt8Component(col("x")).cast("long").as("q"))
-        .groupBy(col("vec_id"))
-        .agg(count(lit(1)).as("n_dims"), sum(col("q")).as("sum_q8"),
-          min(col("q")).as("min_q8"), max(col("q")).as("max_q8"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // exact-N deterministic uniform sample (priority = Knuth hash of
-    // the key): EXACTLY 200 docs, stable under reruns/partitioning,
-    // fully SQL-expressible.
-    "q75_sample_priority" -> ((s, dir) => {
-      Sampling.prioritySample(t(s, dir, "documents"), "doc_id", n = 200)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // value-checks the connectedComponents OPERATOR itself: the q70
-    // exact pair set resolved to components (min reachable id) on the
-    // Spark side, against a recursive-CTE reachability oracle — so the
-    // label-propagation + path-halving loop that underpins the
-    // rows-only resolution entries (q58/q60/q68) is itself
-    // value-grounded. Singletons keep their own id.
-    "q73_components_exact" -> ((s, dir) => {
-      val (all, pairs) = exactJaccardPairs(s, dir)
-      val comps = Dedup.connectedComponents(pairs.select(col("doc_a"), col("doc_b")))
-      all.select(col("doc_id"))
-        .join(comps, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // canonical text normalization (lowercase, digit-run masking,
-    // whitespace collapse) — verified by md5 digest of the normalized
-    // text, so the oracle checks every character of every row.
-    "q76_docs_normalize" -> ((s, dir) => {
-      val norm = TextFunctions.normalize(col("text"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        md5(norm.cast("binary")).as("norm_hash"),
-        length(norm).cast("long").as("norm_len"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // language-balanced corpus: exact quota of 30 docs per lang, chosen
-    // by deterministic key priority (rerun/repartition-stable).
-    "q77_sample_lang_quota" -> ((s, dir) => {
-      Sampling.stratifiedQuota(t(s, dir, "documents"), "lang", "doc_id", n = 30)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // one-pass per-source corpus profile: row/null/distinct counts and
-    // numeric ranges from a single shuffle.
-    "q78_docs_profile" -> ((s, dir) => {
-      Profiler.profile(t(s, dir, "documents"), "source",
-          nullCols = Seq("text"), distinctCols = Seq("lang"),
-          minMaxCols = Seq("n_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // integer-scored TF-IDF: top-3 characteristic terms per doc; the
-    // idf factor is a scaled BIGINT division, so ranks AND scores are
-    // exact on both engines.
-    "q79_docs_tfidf" -> ((s, dir) => {
-      TermStats.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", k = 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // ordered-stage funnel over the event log: view → click → purchase,
-    // stage i counting only events at-or-after stage i−1's first reach.
-    "q80_events_funnel" -> ((s, dir) => {
-      Funnel.funnel(t(s, dir, "events"), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))
-    }),
-
-    // LM sequence packing: each doc's (pack, offset) coordinates in
-    // the per-source concat-and-split token stream — one integer
-    // running-sum window, engine-exact.
-    "q81_docs_pack_sequences" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Chunking.packSequences(d, "doc_id", "n_tokens", "source", budget = 2048L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // the exact-hash stage of incremental dedup, value-checked: batch
-    // vs history md5 anti-join + within-batch min-id resolution — the
-    // SQL-expressible core that grounds the full q68 pipeline. Batch:
-    // %10 docs re-arrive verbatim (dropped vs history), %13 docs
-    // arrive reversed TWICE under two ids (fresh; the smaller id
-    // survives the within-batch stage).
-    "q83_docs_incremental_exact" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val rev13 = d.filter(col("doc_id") % 13 === 0)
-        .select(col("doc_id"), reverse(col("text")).as("text"))
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val batch = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + off).as("doc_id"), col("text"))
-        .unionByName(rev13.select((col("doc_id") + 2L * off).as("doc_id"), col("text")))
-        .unionByName(rev13.select((col("doc_id") + 3L * off).as("doc_id"), col("text")))
-      Dedup.exactIncrement(batch, d, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // per-source quality deciles (ntile over token count): the binning
-    // step behind "keep the top-k quality deciles per source" curation.
-    // A handful of sources × corpus-sized window partitions is the q99
-    // shape — Windows.ntileBucketed splits the sort by token-count
-    // bucket (width 8 ≈ hundreds of buckets over the token range), so
-    // no task ever holds a whole source.
-    "q82_docs_quality_deciles" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Windows.ntileBucketed(d, Seq("source"), "n_tokens",
-          tieCols = Seq(col("doc_id")), n = 10, descending = true,
-          bucketWidth = 8L)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("tile").as("decile"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // fixed-width value histogram per event type: bucket = floor of
-    // ONE division — deterministic IEEE, counted as BIGINT.
-    "q87_events_histogram" -> ((s, dir) => {
-      Profiler.histogram(t(s, dir, "events"), "event_type", "value", width = 50.0)
-        .orderBy(col("event_type"), col("bucket"))
-    }),
-
-    // weekly retention cohorts: users bucketed by first-event week,
-    // counted in each week they return — pure integer epoch DIVs.
-    "q88_events_retention" -> ((s, dir) => {
-      Funnel.retentionCohorts(t(s, dir, "events"), "user_id", "ts",
-        period = 604800L)
-    }),
-
-    // record-level funnel: each user's reach TIME per stage — the
-    // batch equivalent of the streaming funnel's advancement records
-    // (spec-asserted identical), value-checked row by row.
-    "q89_events_funnel_reach" -> ((s, dir) => {
-      Funnel.reachTimes(t(s, dir, "events"), "user_id", "event_type", "ts",
-          Seq("view", "click", "purchase"))
-        .select(col("user_id"), col("stage"), col("stage_idx"),
-          date_format(col("reach_ts"), "yyyy-MM-dd HH:mm:ss").as("reach_ts"))
-        .orderBy(col("user_id"), col("stage_idx"))
-    }),
-
-    // skew-salted join, driver-verified: salting spreads each hot key
-    // over saltFactor reducers but is semantically invisible, so the
-    // oracle is the PLAIN join — the one query where "matches the
-    // naive SQL" is itself the interesting assertion.
-    "q90_skew_salted_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_suppkey").as("suppkey"), col("l_orderkey"),
-        floor(col("l_quantity")).cast("long").as("qty"))
-      val sup = t(s, dir, "supplier").select(
-        col("s_suppkey").as("suppkey"), col("s_name"))
-      ScaleJoins.saltedInnerJoin(li, sup, "suppkey",
-          saltFactor = 8, saltBy = "l_orderkey")
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("n_lines"), sum(col("qty")).as("sum_qty"))
-        .orderBy(col("s_name"))
-    }),
-
-    // signed random projection: integer ±1-hyperplane signatures of
-    // int8-quantized embeddings — exact BIGINTs, so unlike the
-    // float-dot LSH (q31) the full projection path is value-checked.
-    "q91_emb_signed_projection" -> ((s, dir) => {
-      Sketches.signedProjection(t(s, dir, "embeddings"), "vec_id",
-          "embedding", nPlanes = 8)
-        .orderBy(col("vec_id"), col("plane"))
-    }),
-
-    // count-min heavy hitters: per-user exact count next to the 4×64
-    // sketch estimate (integer multiplicative hashes, so both engines
-    // build the identical sketch; est ≥ exact is also spec-asserted).
-    "q92_heavy_hitters_cms" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("exact_n"))
-      Sketches.countMinEstimates(ev, "user_id", depth = 4, width = 64)
-        .join(exact, Seq("user_id"))
-        .select(col("user_id"), col("exact_n"), col("cms_est"))
-        .orderBy(col("user_id"))
-    }),
-
-    // TPC-H Q6 shape: tight multi-predicate scan + global agg — the
-    // canonical pushdown query (all three filters reach the parquet
-    // scan; revenue in exact 1e-4-dollar integer units).
-    "q93_tpch_q6" -> ((s, dir) => {
-      val lo = utcTs("1997-01-01 00:00:00")
-      val hi = utcTs("1998-01-01 00:00:00")
-      val epCents = expr("floor(l_extendedprice * 100 + 0.5)").cast("long")
-      val discH = expr("floor(l_discount * 100 + 0.5)").cast("long")
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(lo) && col("l_shipdate") < lit(hi) &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(sum(epCents * discH).as("revenue_c4"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // TPC-H Q19 shape: OR-of-ANDs across both join sides — the
-    // disjunction can't be pushed wholesale, but Catalyst pushes the
-    // per-side common envelope (brand/size on part); predicates
-    // broadened from the spec values so the synthetic data matches.
-    "q94_tpch_q19" -> ((s, dir) => {
-      val epCents = expr("floor(l_extendedprice * 100 + 0.5)").cast("long")
-      val discH = expr("floor(l_discount * 100 + 0.5)").cast("long")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#11" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(1, 20)) ||
-          (col("p_brand") === "Brand#21" && col("p_size").between(1, 25) &&
-            col("l_quantity").between(10, 30)) ||
-          (col("p_brand") === "Brand#13" && col("p_size").between(1, 35) &&
-            col("l_quantity").between(20, 40)))
-        .agg(sum(epCents * (lit(100L) - discH)).as("revenue_c4"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // Bloom-prefiltered semi-join (the runtime-filter pattern): the
-    // small side's deterministic bitset drops non-matching rows before
-    // the shuffle; the exact semi-join removes false positives, so the
-    // oracle is the PLAIN IN-subquery — like q90, "equals naive SQL"
-    // is the assertion.
-    "q96_bloom_semi_join" -> ((s, dir) => {
-      val rich = t(s, dir, "supplier").filter(col("s_acctbal") > 5000)
-      Sketches.bloomSemiJoin(
-          t(s, dir, "lineitem").withColumnRenamed("l_suppkey", "suppkey"),
-          "suppkey", rich.withColumnRenamed("s_suppkey", "suppkey"), "suppkey")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(floor(col("l_quantity")).cast("long")).as("sum_qty"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // z-order key: the Morton interleave that clusterByZ lays files
-    // out by, value-checked bit for bit (the layout itself is a write
-    // property — ZOrderSpec asserts the tile-locality it buys).
-    "q97_zorder_key" -> ((s, dir) => {
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        ZOrder.interleaveBits(
-          pmod(col("l_suppkey"), lit(65536L)),
-          pmod(col("l_partkey"), lit(65536L))).as("zval"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // full outer join (the one join type q01–q97 never exercised):
-    // hourly signup vs error totals where each side has hours the
-    // other lacks — both null wings verified.
-    "q98_full_outer_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      def hourly(tp: String, n: String) = ev
-        .filter(col("event_type") === tp)
-        .groupBy(date_format(date_trunc("hour", col("ts")),
-          "yyyy-MM-dd HH:mm").as("hour"))
-        .agg(count(lit(1)).as(n))
-      hourly("signup", "n_signups")
-        .join(hourly("error", "n_errors"), Seq("hour"), "full_outer")
-        .orderBy(col("hour"))
-    }),
-
-    // rank-family window functions over a tie-heavy ordering:
-    // percent_rank/cume_dist are one division of exact integers —
-    // bit-identical across engines (the catalog's no-round rule).
-    // l_returnflag has 3 values, so the naive window sorts the whole
-    // corpus in 3 tasks (153.5 s at sf10, unboundable at 100 TB);
-    // Windows.rankFunctions computes the identical four columns with
-    // every corpus-sized step partitioned by value bucket.
-    "q99_rank_functions" -> ((s, dir) => {
-      val base = t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        col("l_returnflag"),
-        floor(col("l_quantity")).cast("long").as("__k"))
-      Windows.rankFunctions(base, Seq("l_returnflag"), "__k")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("rnk"), col("drnk"), col("prnk"), col("cdist"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // per-type 3-sigma outliers via the division-free integer z-score
-    // (Quality.zScoreOutliers): boundary rows agree exactly on both
-    // engines because nothing is ever divided or square-rooted.
-    "q100_value_outliers" -> ((s, dir) => {
-      Quality.zScoreOutliers(t(s, dir, "events"), "event_type", "value",
-          sigmas = 3)
-        .select(col("event_id"), col("event_type"))
-        .orderBy(col("event_id"))
-    }),
-
-    // PII redaction (training-data compliance pass): deterministic
-    // contact details seeded from doc_id (synthetic docs carry no real
-    // PII), then the RE2-portable scrub chain + per-pattern audit
-    // counts — md5 of the redacted text value-checks every replacement.
-    "q101_docs_redact_pii" -> ((s, dir) => {
-      val id = col("doc_id").cast("string")
-      val seeded = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit(" reach me at user"), id,
-          lit("@mail"), pmod(col("doc_id"), lit(7L)).cast("string"), lit(".com or 10."),
-          pmod(col("doc_id"), lit(256L)).cast("string"), lit(".0."),
-          pmod(col("doc_id") * 7, lit(256L)).cast("string"), lit(" tel 555-010-"),
-          lpad(pmod(col("doc_id"), lit(10000L)).cast("string"), 4, "0")).as("text"))
-      seeded.select(col("doc_id"),
-        md5(TextFunctions.redactPii(col("text"))).as("redacted_md5"),
-        TextFunctions.piiMatchCount(col("text"), TextFunctions.EmailPattern).as("n_emails"),
-        TextFunctions.piiMatchCount(col("text"), TextFunctions.Ipv4Pattern).as("n_ips"),
-        TextFunctions.piiMatchCount(col("text"), TextFunctions.PhonePattern).as("n_phones"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // deterministic HLL registers: 256 rows of mergeable distinct-user
-    // sketch state, every register value-checked (Spark's own
-    // approx_count_distinct state is engine-private; this one is three
-    // integer ops and a bin() length on both engines).
-    "q102_hll_registers" -> ((s, dir) => {
-      Sketches.hllRegisters(t(s, dir, "events"), "user_id", p = 8)
-        .orderBy(col("bucket"))
-    }),
-
-    // domain mixing: down-sample four sources to a 40/30/20/10 target
-    // mixture, quotas from pure integer division, selection by the
-    // deterministic key priority — the exact kept set value-checks.
-    "q103_docs_mix_domains" -> ((s, dir) => {
-      Sampling.mixToTarget(t(s, dir, "documents"), "source", "doc_id",
-          Map("src0" -> 400000L, "src1" -> 300000L,
-            "src2" -> 200000L, "src3" -> 100000L))
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // file-level min/max data skipping: range-cluster events by ts,
-    // build the per-file manifest, read only files overlapping a 2-day
-    // window — result proven IDENTICAL to the plain full-scan filter
-    // (the q90 invisible-optimization discipline; DataSkippingSpec
-    // asserts files were actually skipped).
-    "q104_events_skipping" -> ((s, dir) => {
-      val tmp = scratchDir("graft_skip")
-      DataSkipping.writeClustered(t(s, dir, "events"), "ts", tmp, nFiles = 16)
-      val (pruned, _, _) = DataSkipping.prunedRead(s, tmp, "ts",
-        lo = 1704844800L, hi = 1705017599L) // 2024-01-10 .. 2024-01-11 UTC
-      pruned.select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts").cast("long").as("ts_sec"))
-        .orderBy(col("event_id"))
-    }),
-
-    // histogram quantiles: the scale path for percentiles — q52's
-    // exact percentile() sorts whole groups; here the only big pass is
-    // the q87 histogram and the quantile read is a window over
-    // #groups × #buckets rows. Targets are integer ceil ranks, so the
-    // chosen bucket matches on any engine.
-    "q105_value_quantiles" -> ((s, dir) => {
-      Profiler.histogramQuantiles(t(s, dir, "events"), "event_type", "value",
-          width = 5.0, percents = Seq(50, 90, 99))
-        .orderBy(col("event_type"), col("pct"))
-    }),
-
-    // incremental aggregation (materialized-view maintenance): state
-    // from the first ~19 days of events persisted to parquet, the rest
-    // folded in as a batch by merging partials — oracle is the FULL
-    // recompute over all events, so merge ≡ recompute is the assertion.
-    "q106_incremental_agg" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val cutoff = 1705708800L // 2024-01-20 00:00 UTC
-      val path = scratchDir("graft_incr_agg")
-      IncrementalAgg.writeState(
-        IncrementalAgg.buildState(
-          ev.filter(col("ts").cast("long") < cutoff), "user_id", "value"), path)
-      IncrementalAgg.mergeBatch(s, path,
-          ev.filter(col("ts").cast("long") >= cutoff), "user_id", "value")
-        .orderBy(col("user_id"))
-    }),
-
-    // last-touch attribution: credit each purchase to the user's most
-    // recent click in the prior 24 h — one RANGE window, winner by
-    // order-insensitive integer max, unattributed purchases keep NULLs.
-    "q107_attribution" -> ((s, dir) => {
-      Funnel.lastTouchAttribution(t(s, dir, "events"), "user_id",
-          "event_type", "event_id", "ts",
-          touchType = "click", convType = "purchase", windowSecs = 86400L)
-        .orderBy(col("conv_id"))
-    }),
-
-    // CUBE + grouping_id: all four grouping sets of (returnflag,
-    // linestatus) with the bitmask distinguishing real NULLs from
-    // subtotal rows — q36's ROLLUP relied on NULL markers alone.
-    "q95_cube_grouping" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(floor(col("l_quantity")).cast("long")).as("sum_qty"),
-          grouping_id().cast("long").as("gid"))
-        .orderBy(col("gid"), col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    // lag/lead offset windows: per-user deltas between consecutive
-    // events (previous-value diff, next event type, seconds since
-    // previous) — both engines order on floor-of-second epoch with an
-    // event_id tiebreak so neighbors agree exactly.
-    "q69_events_lag_lead" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").cast("long"), col("event_id"))
-      val dval = col("value").cast(DecimalType(18, 4))
-      t(s, dir, "events").select(
-        col("event_id"), col("user_id"),
-        (dval - lag(dval, 1).over(w)).cast("double").as("value_delta"),
-        lead(col("event_type"), 1).over(w).as("next_event_type"),
-        (col("ts").cast("long") - lag(col("ts").cast("long"), 1).over(w))
-          .as("secs_since_prev"))
-        .orderBy(col("event_id"))
-    }),
-
-    // per-class embedding centroids, quantized at 1e-6 so the mean is
-    // exact-integer arithmetic on both engines (double sums of floats
-    // are order-dependent; floor-quantized sums are not).
-    "q65_emb_class_centroids" -> ((s, dir) => {
-      t(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .select(col("label"), col("pos"),
-          floor(col("x").cast("double") * 1000000).cast("long").as("xq"))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("xq")).cast("double") / count(lit(1))).as("centroid_e6"))
-        .orderBy(col("label"), col("pos"))
-    }),
-
-    // as-of join: each event enriched with the user's most recent
-    // purchase value at that time (inclusive, SQL ASOF semantics) —
-    // union+LOCF window plan, one shuffle, no nested-loop range join.
-    "q41_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.asofJoin(ev, purchases, "user_id", "ts", "ts", Seq("value"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // JSON column extraction (F: semi-structured props field).
-    "q42_json_extract" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("k")).agg(count(lit(1)).as("n_events"))
-        .orderBy(col("k"))
-    }),
-
-    // TPC-H Q3 shape: shipping priority — 3-way join, pre-join
-    // filters on both big tables, top-N by revenue.
-    "q45_tpch_q3" -> ((s, dir) => {
-      val cutoff = utcTs("1998-01-01 00:00:00")
-      t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .join(t(s, dir, "orders").filter(col("o_orderdate") < lit(cutoff)),
-          col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem").filter(col("l_shipdate") >= lit(cutoff)),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(dsum4(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(20)
-        .select(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"),
-          col("o_orderpriority"), round(col("revenue"), 2).as("revenue"))
-    }),
-
-    // TPC-H Q5 shape: local-supplier revenue by nation — 6-way join
-    // through both dimension chains with a region filter.
-    "q46_tpch_q5" -> ((s, dir) => {
-      t(s, dir, "region").filter(col("r_name") === "ASIA")
-        .join(t(s, dir, "nation"), col("r_regionkey") === col("n_regionkey"))
-        .join(t(s, dir, "customer"), col("n_nationkey") === col("c_nationkey"))
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("s_nationkey") === col("c_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(dsum4(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-        .withColumn("revenue", round(col("revenue"), 2))
-    }),
-
-    // TPC-H Q10 shape: returned-item reporting — customers ranked by
-    // lost revenue from returned lineitems.
-    "q47_tpch_q10" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem").filter(col("l_returnflag") === "R"),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(dsum4(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-        .withColumn("revenue", round(col("revenue"), 2))
-    }),
-
-    // TPC-H Q18 shape (large-volume customers): orders whose total
-    // quantity exceeds the threshold, with customer context — the
-    // agg-then-join form (equivalent to the spec's IN-subquery, one
-    // lineitem scan). Quantities are integral-valued doubles → exact
-    // BIGINT sums; o_totalprice passes through untouched.
-    "q84_tpch_q18" -> ((s, dir) => {
-      val big = t(s, dir, "lineitem").groupBy(col("l_orderkey"))
-        .agg(sum(floor(col("l_quantity")).cast("long")).as("sum_qty"))
-        .filter(col("sum_qty") > 150)
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"),
-          col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-    }),
-
-    // TPC-H Q14 shape (promotion revenue share): all-integer revenue
-    // units — exact cents × discount hundredths (both cents-exact in
-    // the data, the q38/q55 double-free discipline) — and ONE final
-    // double division for the percentage (bit-identical everywhere).
-    "q85_tpch_q14" -> ((s, dir) => {
-      val lo = utcTs("1997-01-01 00:00:00")
-      val hi = utcTs("1998-01-01 00:00:00")
-      val epCents = expr("floor(l_extendedprice * 100 + 0.5)").cast("long")
-      val discH = expr("floor(l_discount * 100 + 0.5)").cast("long")
-      val rev = epCents * (lit(100L) - discH)
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(lo) && col("l_shipdate") < lit(hi))
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", rev).otherwise(0L)).as("promo_rev_c4"),
-          sum(rev).as("total_rev_c4"))
-        .select(col("promo_rev_c4"), col("total_rev_c4"),
-          ((col("promo_rev_c4") * 100).cast("double") /
-            col("total_rev_c4").cast("double")).as("promo_pct"))
-    }),
-
-    // TPC-H Q12 shape (priority lines by return flag): conditional
-    // integer counts over a joined year of shipments.
-    "q86_tpch_q12" -> ((s, dir) => {
-      val lo = utcTs("1997-01-01 00:00:00")
-      val hi = utcTs("1998-01-01 00:00:00")
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(lo) && col("l_shipdate") < lit(hi))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_returnflag"))
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // TPC-H Q13 shape (customer order-count distribution): LEFT OUTER
-    // join to a filtered fact, count per customer (zeros preserved),
-    // then aggregate the counts themselves — two stacked aggregation
-    // levels off one outer join.
-    "q108_tpch_q13" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").filter(col("o_orderpriority") =!= "5-LOW"),
-          col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // TPC-H Q17 shape (small-quantity revenue): lineitems of one brand
-    // below 20% of their part's average quantity. The correlated
-    // scalar-AVG subquery is decorrelated into a per-part aggregate +
-    // join, and the fractional comparison is cross-multiplied to pure
-    // integers (qty * 5 * n < sum ⇔ qty < 0.2·avg) — no division, no
-    // doubles anywhere, so the hash is engine-version-proof.
-    "q109_tpch_q17" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val qty = floor(col("l_quantity")).cast("long")
-      val perPart = li.groupBy(col("l_partkey").as("ap_partkey"))
-        .agg(sum(qty).as("part_sum_qty"), count(lit(1)).as("part_n"))
-      li.join(t(s, dir, "part").filter(col("p_brand") === "Brand#23"),
-          col("l_partkey") === col("p_partkey"))
-        .join(perPart, col("l_partkey") === col("ap_partkey"))
-        .filter(qty * lit(5L) * col("part_n") < col("part_sum_qty"))
-        .agg(sum(expr("floor(l_extendedprice * 100 + 0.5)").cast("long"))
-            .as("rev_cents"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // TPC-H Q22 shape (global-acquisition analysis): customers with no
-    // URGENT orders whose balance beats the positive-balance average —
-    // a global scalar subquery (broadcast single row) + anti join.
-    // (Every customer in the testdata has ≥1 order, so the anti-join
-    // predicate is priority-scoped to keep the result non-empty.) The
-    // avg comparison is cross-multiplied (acct·n > sum) so the scalar
-    // stays an exact BIGINT pair, never a double.
-    "q110_tpch_q22" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val acctC = expr("floor(c_acctbal * 100 + 0.5)").cast("long")
-      val posAvg = cust.filter(col("c_acctbal") > 0)
-        .agg(sum(acctC).as("pos_sum_c"), count(lit(1)).as("pos_n"))
-      cust.withColumn("acct_c", acctC)
-        .join(broadcast(posAvg))
-        .filter(col("acct_c") * col("pos_n") > col("pos_sum_c"))
-        .join(t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey").cast("long").as("nationkey"))
-        .agg(count(lit(1)).as("numcust"), sum(col("acct_c")).as("totacctbal_c"))
-        .orderBy(col("nationkey"))
-    }),
-
-    // TPC-H Q11 shape (important inventory): per-part value share vs a
-    // global total — HAVING against a scalar subquery. Lineitem stands
-    // in for partsupp (the testdata ships none); both sides are exact
-    // cents BIGINTs and the 0.1% share test is cross-multiplied
-    // (part_sum · 1000 > total), division-free.
-    "q111_tpch_q11" -> ((s, dir) => {
-      val natSupp = t(s, dir, "supplier")
-        .join(t(s, dir, "nation").filter(col("n_name") === "NATION_8"),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val epCents = expr("floor(l_extendedprice * 100 + 0.5)").cast("long")
-      val natLines = t(s, dir, "lineitem")
-        .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .select(col("l_partkey"), epCents.as("val_c"))
-      val total = natLines.agg(sum(col("val_c")).as("total_c"))
-      natLines.groupBy(col("l_partkey"))
-        .agg(sum(col("val_c")).as("part_value_c"))
-        .join(broadcast(total))
-        .filter(col("part_value_c") * lit(1000L) > col("total_c"))
-        .select(col("l_partkey"), col("part_value_c"))
-        .orderBy(col("part_value_c").desc, col("l_partkey"))
-    }),
-
-    // TPC-H Q15 shape (top supplier): revenue per supplier for one
-    // quarter, then the argmax via a scalar MAX subquery joined back —
-    // returns every tied winner, exact because revenue is integer
-    // cents×discount-hundredths.
-    "q112_tpch_q15" -> ((s, dir) => {
-      val lo = utcTs("1997-01-01 00:00:00")
-      val hi = utcTs("1997-04-01 00:00:00")
-      val revU = expr("floor(l_extendedprice * 100 + 0.5)").cast("long") *
-        (lit(100L) - expr("floor(l_discount * 100 + 0.5)").cast("long"))
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(lo) && col("l_shipdate") < lit(hi))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(revU).as("total_rev_u"))
-      val mx = rev.agg(max(col("total_rev_u")).as("max_rev_u"))
-      rev.join(broadcast(mx), col("total_rev_u") === col("max_rev_u"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_rev_u"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    // TPC-H Q4 shape (order-priority checking): EXISTS over a
-    // correlated non-equi condition → left-semi join with a compound
-    // ON clause (equi key + interval inequality), counted by priority.
-    "q113_tpch_q4" -> ((s, dir) => {
-      val lo = utcTs("1997-01-01 00:00:00")
-      val hi = utcTs("1997-07-01 00:00:00")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit(lo) && col("o_orderdate") < lit(hi))
-      ord.join(t(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // TPC-H Q21 shape (suppliers who kept orders waiting): the classic
-    // EXISTS + NOT EXISTS double correlation — late lines whose order
-    // has another supplier (semi join, non-equi suppkey clause) but no
-    // OTHER late supplier (anti join) — then distinct orders counted
-    // per supplier.
-    "q114_tpch_q21" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-      val late = li.join(ord.select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 180 DAYS"))
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val anyOther = li.select(col("l_orderkey").as("o2_orderkey"),
-        col("l_suppkey").as("o2_suppkey"))
-      val lateOther = late.select(col("l_orderkey").as("l3_orderkey"),
-        col("l_suppkey").as("l3_suppkey"))
-      late
-        .join(anyOther, col("l_orderkey") === col("o2_orderkey") &&
-          col("l_suppkey") =!= col("o2_suppkey"), "left_semi")
-        .join(lateOther, col("l_orderkey") === col("l3_orderkey") &&
-          col("l_suppkey") =!= col("l3_suppkey"), "left_anti")
-        .select(col("l_orderkey"), col("l_suppkey")).distinct()
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_suppkey"), col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_suppkey"))
-        .limit(50)
-    }),
-
-    // TPC-H Q2 shape (minimum-cost supplier): per-part MIN over the
-    // part-supplier relation (lineitem unit price stands in for
-    // ps_supplycost), joined back to keep exactly the argmin rows with
-    // supplier context. Unit price is the q55-style BIGINT cents
-    // integer division — exact on both engines.
-    "q115_tpch_q2" -> ((s, dir) => {
-      val unitC = expr(
-        "floor(l_extendedprice * 100 + 0.5) DIV greatest(floor(l_quantity), 1)")
-        .cast("long")
-      // The selective part predicate is pushed BELOW the min-cost
-      // aggregation: per-part argmin is independent across parts, so
-      // restricting the part set first (broadcast semi-join — the
-      // filtered dim is tiny) and aggregating only those parts' offers
-      // is semantically identical to aggregating the world and
-      // filtering after, at a fraction of the shuffle. This is the
-      // manual form of a pushdown Catalyst cannot do on its own (the
-      // filter sits above two aggregations it would have to prove
-      // commute with it).
-      val sel = t(s, dir, "part")
-        .filter(col("p_size") === 10 && col("p_type") === "LARGE")
-      val offers = t(s, dir, "lineitem")
-        .join(broadcast(sel.select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"), "left_semi")
-        .select(col("l_partkey"), col("l_suppkey"), unitC.as("unit_c"))
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(col("unit_c")).as("supp_min_c"))
-      val best = offers.groupBy(col("l_partkey").as("mp_partkey"))
-        .agg(min(col("supp_min_c")).as("part_min_c"))
-      offers
-        .join(best, col("l_partkey") === col("mp_partkey") &&
-          col("supp_min_c") === col("part_min_c"))
-        .join(sel, col("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("p_partkey"), col("p_brand"), col("s_suppkey"),
-          col("s_name"), col("supp_min_c"))
-        .orderBy(col("p_partkey"), col("s_suppkey"))
-    }),
-
-    // Hive-partitioned lake write + partition-pruned read: lineitem
-    // rewritten partitioned by ship year, then a one-year query that
-    // lists only that year's directory. Oracle = the plain filter over
-    // the original table (the q90/q104 "optimization must be
-    // invisible" discipline); that pruning actually happens is
-    // spec-asserted via PartitionedLake.filesScanned.
-    "q116_partitioned_prune" -> ((s, dir) => {
-      val tmp = scratchDir("graft_lake")
-      // pre-shuffle on the partition key with an EXPLICIT count (the
-      // IVF-write lesson: a keys-only repartition is AQE-coalescible):
-      // one file per year written by its own task, instead of every
-      // scan task writing a slice of every year — fewer files AND
-      // year-parallel writes, and the dynamic-partition sort per task
-      // becomes trivial (single key value per task).
-      PartitionedLake.writePartitioned(
-        t(s, dir, "lineitem").withColumn("ship_year", year(col("l_shipdate")))
-          .repartition(8, col("ship_year")),
-        tmp, "ship_year")
-      PartitionedLake.read(s, tmp)
-        .filter(col("ship_year") === 1997)
-        .groupBy(month(col("l_shipdate")).cast("long").as("ship_month"))
-        .agg(sum(floor(col("l_quantity")).cast("long")).as("sum_qty"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("ship_month"))
-    }),
-
-    // ORC round-trip: the second columnar format the engine speaks —
-    // a projected lineitem slice written as ORC, read back, and
-    // aggregated. Oracle = the same aggregate straight off the
-    // parquet, proving the format conversion lossless for the
-    // long/string/timestamp types the zones carry.
-    "q117_orc_roundtrip" -> ((s, dir) => {
-      val tmp = scratchDir("graft_orc")
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_returnflag"),
-          floor(col("l_quantity")).cast("long").as("qty"),
-          expr("floor(l_extendedprice * 100 + 0.5)").cast("long").as("ep_cents"),
-          col("l_shipdate"))
-        // columnar encode is CPU-bound: fan the write out past the
-        // source scan's partitioning (a single ~25 MB parquet file
-        // scans as 1-3 splits, serializing the encode); width from the
-        // session, not a constant (r16) — 16 halved a 32-core box and
-        // over-fanned the driver's low-core scaling run
-        .repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").orc(tmp)
-      s.read.orc(tmp)
-        .groupBy(col("l_returnflag"),
-          year(col("l_shipdate")).cast("long").as("ship_year"))
-        .agg(sum(col("qty")).as("sum_qty"),
-          sum(col("ep_cents")).as("sum_ep_cents"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("l_returnflag"), col("ship_year"))
-    }),
-
-    // TPC-H Q7 shape (volume shipping): nation-pair trade flows — the
-    // same dimension table joined twice under different roles (supplier
-    // nation vs customer nation), a symmetric pair predicate, revenue
-    // by year. Integer revenue units throughout.
-    "q118_tpch_q7" -> ((s, dir) => {
-      val lo = utcTs("1996-01-01 00:00:00")
-      val hi = utcTs("1998-01-01 00:00:00")
-      val revU = expr("floor(l_extendedprice * 100 + 0.5)").cast("long") *
-        (lit(100L) - expr("floor(l_discount * 100 + 0.5)").cast("long"))
-      val natS = t(s, dir, "nation")
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      val natC = t(s, dir, "nation")
-        .select(col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(lo) && col("l_shipdate") < lit(hi))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(natS), col("s_nationkey") === col("sn_key"))
-        .join(broadcast(natC), col("c_nationkey") === col("cn_key"))
-        .filter((col("supp_nation") === "NATION_3" && col("cust_nation") === "NATION_14") ||
-          (col("supp_nation") === "NATION_14" && col("cust_nation") === "NATION_3"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(sum(revU).as("revenue_u"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
-
-    // TPC-H Q8 shape (national market share): one nation's share of a
-    // region's PROMO revenue per order year — conditional vs total
-    // integer sums, then ONE final double division for the share
-    // (bit-identical everywhere, the q85 discipline).
-    "q119_tpch_q8" -> ((s, dir) => {
-      val revU = expr("floor(l_extendedprice * 100 + 0.5)").cast("long") *
-        (lit(100L) - expr("floor(l_discount * 100 + 0.5)").cast("long"))
-      val euroNations = t(s, dir, "nation")
-        .join(t(s, dir, "region").filter(col("r_name") === "EUROPE"),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey").as("en_key"))
-      val natS = t(s, dir, "nation")
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part").filter(col("p_type") === "PROMO"),
-          col("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(euroNations), col("c_nationkey") === col("en_key"), "left_semi")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(natS), col("s_nationkey") === col("sn_key"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(
-          sum(when(col("supp_nation") === "NATION_7", revU).otherwise(0L))
-            .as("nation_rev_u"),
-          sum(revU).as("total_rev_u"))
-        .withColumn("mkt_share",
-          col("nation_rev_u").cast("double") / col("total_rev_u").cast("double"))
-        .orderBy(col("o_year"))
-    }),
-
-    // TPC-H Q9 shape (product-type profit): per-nation yearly profit =
-    // revenue minus cost, p_retailprice standing in for ps_supplycost
-    // (no partsupp in the testdata). Both terms scaled to the same
-    // integer unit (dollars × 10^-4), so profit is an exact — possibly
-    // negative — BIGINT.
-    "q120_tpch_q9" -> ((s, dir) => {
-      val revU = expr("floor(l_extendedprice * 100 + 0.5)").cast("long") *
-        (lit(100L) - expr("floor(l_discount * 100 + 0.5)").cast("long"))
-      val costU = expr("floor(p_retailprice * 100 + 0.5)").cast("long") *
-        floor(col("l_quantity")).cast("long") * lit(100L)
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part").filter(col("p_name").like("%bolt%")),
-          col("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("l_shipdate")).cast("long").as("o_year"))
-        .agg(sum(revU - costU).as("profit_u"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // TPC-H Q16 shape (parts/supplier relationship): COUNT(DISTINCT)
-    // per attribute group over an anti-joined exclusion list
-    // (negative-balance suppliers standing in for the spec's
-    // complaint-comment filter — the testdata has no s_comment).
-    "q124_tpch_q16" -> ((s, dir) => {
-      val excl = t(s, dir, "supplier").filter(col("s_acctbal") < 0)
-        .select(col("s_suppkey"))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part").filter(col("p_brand") =!= "Brand#5" &&
-          col("p_type") =!= "PROMO" && col("p_size").isin(5, 10, 15, 20, 25)),
-          col("l_partkey") === col("p_partkey"))
-        .join(broadcast(excl), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size").cast("long").as("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-    }),
-
-    // TPC-H Q20 shape (potential part promotion): the nested
-    // semi-join chain — (part,supplier) pairs whose 1997 shipments
-    // dominate their all-time volume (cross-multiplied integers, no
-    // 0.5 factor), restricted to red parts, then suppliers having any
-    // such pair. Two stacked left-semi joins, exactly the decorrelated
-    // form of the spec's nested IN subqueries.
-    "q125_tpch_q20" -> ((s, dir) => {
-      val qty = floor(col("l_quantity")).cast("long")
-      val pairQty = t(s, dir, "lineitem")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(qty).as("total_qty"),
-          sum(when(year(col("l_shipdate")) === 1997, qty).otherwise(0L)).as("qty97"))
-      val hot = pairQty.filter(col("qty97") * 2 > col("total_qty"))
-        .join(t(s, dir, "part").filter(col("p_name").like("red%")),
-          col("l_partkey") === col("p_partkey"), "left_semi")
-      t(s, dir, "supplier")
-        .join(hot, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    // MapType end-to-end: per-user map<event_type, count> built with
-    // map_from_entries(collect_list(struct)), then read back via
-    // size/element_at — map construction proven invisible against a
-    // plain conditional-count oracle.
-    "q126_map_roundtrip" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("user_id"))
-        .agg(map_from_entries(collect_list(struct(col("event_type"), col("n"))))
-          .as("m"))
-        .select(col("user_id"), size(col("m")).cast("long").as("n_types"),
-          element_at(col("m"), "purchase").as("purchase_n"))
-        .orderBy(col("user_id"))
-    }),
-
-    // VariantType (Spark 4): semi-structured props parsed ONCE into
-    // the binary variant encoding, then typed field extraction with
-    // variant_get — the open-schema path for event payloads whose
-    // shape drifts (vs from_json's locked StructType). Extracted
-    // values are BIGINTs; oracle = DuckDB's JSON extraction.
-    "q127_variant_extract" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"),
-          expr("variant_get(parse_json(props), '$.k', 'long')").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))
-    }),
-
-    // left-outer interval join: every click kept — per-user conversion
-    // coverage where unmatched clicks feed the denominator (the inner
-    // q48 never sees them). Streaming twin:
-    // EventStreams.intervalJoinLeftOuterStreaming (spec-gated).
-    "q123_interval_left_outer" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      EventStreams.intervalJoinLeftOuter(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"), "1 HOUR")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("r_ts").isNotNull, 1L).otherwise(0L)).as("n_matched"),
-          dsum4(col("r_value")).as("purchase_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // typed Dataset[T] pipeline: case-class rows, a typed lambda
-    // filter, groupByKey + a custom Aggregator (exact-integer monoid)
-    // — the compile-time-schema surface of the engine. Values are the
-    // same BIGINTs the untyped path would produce, so the oracle is
-    // plain SQL.
-    "q121_typed_flag_stats" -> ((s, dir) => {
-      TypedOps.flagStats(TypedOps.lineSlices(t(s, dir, "lineitem")), minQty = 5L)
-        .toDF()
-        .orderBy(col("flag"))
-    }),
-
-    // bigram language-model counts: per-source top-5 adjacent word
-    // pairs — the n-gram count statistics a tokenizer/contamination/
-    // quality stack is built on. The pair construction is a codegen'd
-    // higher-order transform over the split array (no UDF, no
-    // shuffle until the count), then one hash aggregation and a
-    // per-source WindowGroupLimit top-k.
-    "q122_docs_bigrams" -> ((s, dir) => {
-      val ws = split(trim(col("text")), "\\s+")
-      // guarded: sequence(a, b) DECREASES when b < a, so a 1-word doc
-      // must short-circuit to an empty array (explode then drops it)
-      val bigrams = when(size(col("ws")) >= 2,
-        expr("transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i+1]))"))
-        .otherwise(expr("array()").cast("array<string>"))
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("n").desc, col("bigram"))
-      t(s, dir, "documents")
-        .withColumn("ws", ws)
-        .select(col("source"), explode(bigrams).as("bigram"))
-        .groupBy(col("source"), col("bigram"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-        .orderBy(col("source"), col("rk"))
-    }),
-
-    // time-bounded (interval) join: each event paired with the same
-    // user's purchases in the preceding hour (stream-stream joinable —
-    // see EventStreams.intervalJoinStreaming).
-    "q48_interval_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      EventStreams.intervalJoin(ev.filter(col("event_type") === "click"), purchases, "1 HOUR")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"), dsum4(col("r_value")).as("purchase_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // custom TypedImperativeAggregate: per-source MinHash-union group
-    // signature (elementwise min across member signatures). Lanes are
-    // emitted as (lane, sig) ROWS — every signature VALUE is
-    // oracle-checked (the r5 xxhash64 digest wasn't SQL-reproducible,
-    // which kept this rows-only; the oracle emulates the FNV+splitmix
-    // kernels in HUGEINT mod-2^64 arithmetic, see HashOracleSql).
-    "q49_minhash_union_agg" -> ((s, dir) => {
-      val sigs = t(s, dir, "documents")
-        .select(col("source"),
-          graft.expressions.GraftFunctions.minhashSig(col("text"), 3, 16, charLevel = false).as("sig"))
-      sigs.groupBy(col("source"))
-        .agg(graft.expressions.GraftFunctions.minhashUnion(col("sig"), 16).as("group_sig"),
-          count(lit(1)).as("n_docs"))
-        .select(col("source"), posexplode(col("group_sig")), col("n_docs"))
-        .select(col("source"), col("pos").cast("long").as("lane"),
-          col("col").as("sig"), col("n_docs"))
-        .orderBy(col("source"), col("lane"))
-    }),
-
-    // ordered-statistics aggregates: exact interpolated percentiles
-    // (Spark percentile ≡ DuckDB quantile_cont on integral input).
-    "q52_percentiles" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          expr("percentile(l_quantity, 0.5)").as("median_qty"),
-          expr("percentile(l_quantity, 0.9)").as("p90_qty"),
-          min(col("l_quantity")).as("min_qty"),
-          max(col("l_quantity")).as("max_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // collection aggregate: per-group sorted array of keys
-    // (collect_list is unordered → sort_array for determinism).
-    "q53_array_agg" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .filter(col("o_totalprice") > 400000)
-        .groupBy(col("o_orderstatus"))
-        .agg(sort_array(collect_list(col("o_orderkey"))).as("big_orders"),
-          count(lit(1)).as("n"))
-        .select(col("o_orderstatus"),
-          concat_ws(",", col("big_orders")).as("big_orders"), col("n"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // scalar string functions: case, substring, padding, replacement,
-    // edit distance.
-    "q54_string_funcs" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(
-          col("c_custkey"),
-          upper(col("c_name")).as("upper_name"),
-          substring(col("c_name"), 1, 8).as("prefix8"),
-          length(translate(col("c_name"), "_", "-")).cast("long").as("len_translated"),
-          lpad(col("c_custkey").cast("string"), 8, "0").as("padded_key"),
-          levenshtein(col("c_name"), col("c_mktsegment")).cast("long").as("edit_dist"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // generator / lateral view: explode tokens → global word count
-    // (the canonical Generate-operator query).
-    "q50_word_count" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(lower(col("text")))).as("word"))
-        .filter(length(col("word")) >= 3)
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("word"))
-        .limit(50)
-    }),
-
-    // pivot: per-user event counts spread across event-type columns.
-    "q51_pivot" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy(col("user_id"))
-    }),
-
-    // IVF approximate nearest neighbor, sign-pattern coarse quantizer
-    // (128 lists, 48 probed multi-probe style with integer flip costs;
-    // r6 — same 37.5% scan budget as the old 12/32, finer lists lift
-    // recall@5 0.66/0.61 → 0.72/0.72) — candidate selection is all
-    // sign tests + BIGINT arithmetic, so the oracle value-checks the
-    // full approximate result (the k-means ivfTopK stays as the
-    // spec-gated quality path).
-    "q44_emb_ann_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") % 50 === 0)
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val bits = Similarity.autoQuantBits(probeCount(e), 64)
-      // fraction-denominated probe budget (r11, ADVICE): 375 ‰ of the
-      // lists = the pinned 48-of-128 at every gated scale; holds the
-      // probed fraction as autoQuantBits grows the list count
-      Similarity.signIvfTopK(queries, e, k = 5, dim = 64, bits = bits,
-          nProbe = Similarity.probeBudget(bits))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // multimodal frame sampling: video-typed payloads → every 2nd
-    // 64-byte pseudo-frame (real frame extraction swaps into the same
-    // operator position; see Multimodal scaladoc).
-    "q43_multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.fromText(s, t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 0), "doc_id", "text")
-        .map(r => r.copy(media_type = "video"))(
-          org.apache.spark.sql.Encoders.product[Multimodal.MediaRecord])
-      Multimodal.sampleFrames(media, frameBytes = 64, stride = 2)
-        .select(col("media_id"), col("frame_no"),
-          length(col("frame_payload")).cast("long").as("frame_bytes"))
-        .orderBy(col("media_id"), col("frame_no"))
-    }),
-
-    // edit-distance fuzzy match: single-typo near-dup keys that token/
-    // shingle dedup misses — prefix-blocked (never all-pairs), Spark's
-    // thresholded levenshtein band-limits the DP. Key = normalized
-    // first 24 chars (whitespace collapsed), so planted near-dup docs
-    // with small leading edits pair up.
-    "q128_docs_fuzzy_match" -> ((s, dir) => {
-      val keyed = t(s, dir, "documents")
-        .withColumn("fkey",
-          substring(regexp_replace(lower(col("text")), "\\s+", " "), 1, 24))
-      // neighborCap = 8 (r9): near-duplicate corpora make hot prefix
-      // blocks the norm — uncapped, a block of m same-key docs emits
-      // m²/2 pairs (the sf1.0 sweep measured 46× sf0.1 cost); capped,
-      // each doc pairs with its next 8 in-block neighbors (O(m·cap),
-      // chains keep clusters connected for component resolution)
-      Dedup.fuzzyPairs(keyed, "doc_id", "fkey", maxDist = 3, prefixLen = 6,
-          neighborCap = Some(8))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // small-file compaction round-trip: a 64-file fragmented zone
-    // (micro-batch appends) rewritten to 4 range-clustered files, then
-    // aggregated FROM THE COMPACTED COPY. Oracle = the same aggregate
-    // over the original events — layout maintenance must be invisible
-    // to every reader (the q116/q117 discipline). That the file count
-    // actually dropped is spec-asserted via dataFileCount.
-    "q129_events_compaction" -> ((s, dir) => {
-      val frag = scratchDir("graft_frag")
-      val compacted = scratchDir("graft_compact")
-      t(s, dir, "events").repartition(64)
-        .write.mode("overwrite").parquet(frag)
-      PartitionedLake.compact(s.read.parquet(frag), compacted, targetFiles = 4,
-        "ts", "event_id")
-      s.read.parquet(compacted)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("floor(value * 100 + 0.5)").cast("long")).as("value_cents"),
-          min(col("event_id")).as("min_event_id"),
-          max(col("event_id")).as("max_event_id"))
-        .orderBy(col("event_type"))
-    }),
-
-    // snapshot composition drift (PSI-style): per-language ppm shares
-    // of two corpus snapshots and the absolute delta — exact integer
-    // floor division, full-outer so one-sided categories survive.
-    "q130_corpus_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Quality.snapshotDrift(
-          docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 === 1), "lang")
-        .orderBy(col("lang"))
-    }),
-
-    // multimodal audio with a REAL second codec: text bytes → valid
-    // RIFF/WAVE 16-bit mono PCM (WavCodec.encode) → actual chunk-walk
-    // header parse + LE sample decode → exact integer amplitude stats.
-    // The oracle recomputes them from the source bytes (sample i =
-    // (byte_i − 128)·256).
-    "q131_audio_stats" -> ((s, dir) => {
-      val media = Multimodal.wavFromText(s, assertAscii(t(s, dir, "documents")),
-        "doc_id", "text", sampleRate = 8000)
-      Multimodal.audioStats(media).toDF()
-        .select(col("media_id"), col("n_samples"), col("sample_rate"),
-          col("duration_ms"), col("sum_abs"), col("peak_abs"), col("zero_cross"))
-        .orderBy(col("media_id"))
-    }),
-
-    // first-order event transitions (Markov view): what follows what,
-    // per user sequence — one LAG window + a count over the tiny
-    // (from, to) matrix. Σ n reconciles to the event count via the
-    // synthetic "(start)" state.
-    "q132_event_transitions" -> ((s, dir) => {
-      Funnel.transitions(t(s, dir, "events"), "user_id", "ts", "event_id",
-          "event_type")
-        .orderBy(col("from_type"), col("to_type"))
-    }),
-
-    // LM-style quality scoring: per-doc coverage of the corpus's
-    // top-200 bigram vocabulary, in exact ppm — the integer-arithmetic
-    // proxy for the perplexity filters LLM pipelines run (a doc whose
-    // bigrams rarely appear in the corpus LM's head is an outlier).
-    // One explode + one global top-k (broadcast-small) + one per-doc
-    // agg; the q122 bigram construction, so both engines tokenize
-    // identically.
-    "q133_docs_lm_coverage" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val ws = split(trim(col("text")), "\\s+")
-      val bigrams = when(size(col("ws")) >= 2,
-        expr("transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i+1]))"))
-        .otherwise(expr("array()").cast("array<string>"))
-      val exploded = docs.withColumn("ws", ws)
-        .select(col("doc_id"), explode(bigrams).as("bigram"))
-      val vocab = exploded.groupBy(col("bigram"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("bigram")).limit(200)
-        .select(col("bigram"), lit(1L).as("__hit"))
-      val perDoc = exploded
-        .join(broadcast(vocab), Seq("bigram"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_in_vocab"))
-      docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("n_bigrams", "n_in_vocab"))
-        .withColumn("coverage_ppm",
-          when(col("n_bigrams") === 0L, 0L)
-            .otherwise(expr("CAST((n_in_vocab * 1000000L) DIV n_bigrams AS BIGINT)")))
-        .orderBy(col("doc_id"))
-    }),
-
-    // incremental ANN index maintenance: build the sign-IVF index on
-    // two thirds of the corpus, APPEND the rest batch-wise (structural
-    // quantizer → assignment never drifts, lists only gain files),
-    // then serve. Oracle = the one-shot full-corpus sign-IVF oracle:
-    // maintenance must be invisible to queries.
-    "q134_emb_ann_ivf_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratchDir("graft_ivf_app")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val bits = Similarity.autoQuantBits(probeCount(e), 64)
-      Similarity.buildSignIvfIndex(e.filter(col("vec_id") % 3 =!= 0), path,
-        dim = 64, bits = bits)
-      Similarity.appendSignIvfIndex(e.filter(col("vec_id") % 3 === 0), path,
-        batchId = "b1", dim = 64, bits = bits)
-      val queries = e.filter(col("vec_id") % 50 === 0)
-      Similarity.querySignIvfIndex(s, path, queries, k = 5, dim = 64,
-          bits = bits, nProbe = Similarity.probeBudget(bits))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // bag-of-words canonical dedup: docs grouped by their sorted
-    // distinct-token set — catches the permuted/reordered boilerplate
-    // that byte-exact dedup (q23) misses while staying fully
-    // deterministic (no hashing, no banding; the canonical string IS
-    // the key). One window over the canonical key.
-    "q135_docs_bow_dedup" -> ((s, dir) => {
-      val bow = concat_ws(" ",
-        array_sort(array_distinct(split(trim(lower(col("text"))), "\\s+"))))
-      val w = Window.partitionBy(col("bow_key"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), bow.as("bow_key"))
-        .withColumn("group_size", count(lit(1)).over(w))
-        .withColumn("keep_id", min(col("doc_id")).over(w))
-        .select(col("doc_id"), col("group_size"), col("keep_id"),
-          when(col("doc_id") === col("keep_id"), 0L).otherwise(1L).as("is_dup"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // compression-ratio quality signal (Gopher/FineWeb heuristic):
-    // deflate-per-mille per doc — repetitive machine text compresses
-    // far below prose. The Deflater stays REAL on the Spark side; the
-    // oracle grades it through a planted two-class design (the q26/q37
-    // pattern): %10==0 docs (length ≥ 100 for non-degenerate seeds)
-    // are re-planted as their own first 24 chars repeated 40×.
-    // Measured separation on the seed-42 corpus: planted-rep ratio
-    // ≤ 42‰ (36‰ deflate body + ~6‰ zlib framing), natural-prose
-    // ratio ≥ 370‰ at every SF (sf0.001/0.01/0.1, exhaustive python-
-    // zlib sweep, r7) vs the 200‰ gate — >4× margin on both sides, so
-    // the per-class rates and the strict rep<prose ordering are
-    // engine-independent facts DuckDB can assert without a SQL zlib.
-    "q136_docs_compress_ratio" -> ((s, dir) => {
-      val base = t(s, dir, "documents")
-        .filter(length(col("text")) >= 100)
-        .select(col("doc_id"), col("text"))
-      val off = plantOffset(base, "doc_id") // collision-free at any scale (r11)
-      val planted = base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + off).as("doc_id"),
-          concat_ws(" ", array_repeat(substring(col("text"), 1, 24), lit(40)))
-            .as("text"))
-      val sig = Quality
-        .compressionSignals(base.unionByName(planted), "doc_id", "text")
-        .withColumn("doc_class",
-          when(col("doc_id") >= off, lit("planted_rep"))
-            .otherwise(lit("prose")))
-      val stats = sig.groupBy(col("doc_class")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("ratio_permille") < 200, 1L).otherwise(0L))
-          .as("n_below_200"),
-        min(col("ratio_permille")).as("mn"),
-        max(col("ratio_permille")).as("mx"))
-      val sep = stats.agg(
-        max(when(col("doc_class") === "planted_rep", col("mx"))).as("rep_mx"),
-        min(when(col("doc_class") === "prose", col("mn"))).as("prose_mn"))
-      stats.crossJoin(broadcast(sep))
-        .select(col("doc_class"), col("n_docs"), col("n_below_200"),
-          when(col("rep_mx") < col("prose_mn"), 1L).otherwise(0L)
-            .as("strictly_separated"))
-        .orderBy(col("doc_class"))
-    }),
-
-    // composition drift over time: daily event-type ppm shares and the
-    // signed day-over-day delta — the continuous-monitoring form of
-    // q130 (which compares two static snapshots). All integer floor
-    // division; first day's delta is NULL on both engines.
-    "q137_events_type_drift" -> ((s, dir) => {
-      val day = date_format(col("ts"), "yyyy-MM-dd")
-      val wDay = Window.partitionBy(col("day"))
-      val wSeries = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      t(s, dir, "events")
-        .select(day.as("day"), col("event_type"))
-        .groupBy(col("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("day_total", sum(col("n")).over(wDay))
-        .withColumn("ppm", expr("CAST((n * 1000000L) DIV day_total AS BIGINT)"))
-        .withColumn("delta_ppm", col("ppm") - lag(col("ppm"), 1).over(wSeries))
-        .select(col("day"), col("event_type"), col("n"), col("ppm"),
-          col("delta_ppm"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    // robust anomaly detection: median-absolute-deviation screen over
-    // daily event-type volumes — the ops-monitoring twin of the
-    // z-score screen (q100), immune to the outliers it hunts. The
-    // rational medians are carried SCALED to integers (med2 = 2·median
-    // of ints, mad4 = 4·MAD — exact in both engines since interpolated
-    // medians are half-/quarter-integers), and the 3σ-equivalent test
-    // |n−med| > 3·MAD is cross-multiplied to 2·dev2 > 3·mad4 — zero
-    // IEEE comparisons anywhere near a boundary.
-    "q138_events_anomaly_mad" -> ((s, dir) => {
-      val day = date_format(col("ts"), "yyyy-MM-dd")
-      val daily = t(s, dir, "events")
-        .groupBy(day.as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val med = daily.groupBy(col("event_type"))
-        .agg(expr("CAST(2 * percentile(n, 0.5D) AS BIGINT)").as("med2"))
-      val withDev = daily.join(broadcast(med), Seq("event_type"))
-        .withColumn("dev2", abs(col("n") * 2 - col("med2")))
-      val mad = withDev.groupBy(col("event_type"))
-        .agg(expr("CAST(2 * percentile(dev2, 0.5D) AS BIGINT)").as("mad4"))
-      withDev.join(broadcast(mad), Seq("event_type"))
-        .select(col("day"), col("event_type"), col("n"), col("dev2"),
-          col("mad4"),
-          when(col("dev2") * 2 > col("mad4") * 3, 1L).otherwise(0L)
-            .as("is_anomaly"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    // dedup-report analytics: the cluster-size DISTRIBUTION of exact
-    // duplicates (how much of the corpus is 1×, 2×, k×-replicated) —
-    // the number a curation run reports before dropping anything.
-    // Duplicates planted by re-keying every 25th doc (the q37
-    // discipline: the base corpus is exact-dup-free). Clusters keyed
-    // by the text itself (no hash-function parity to defend); two
-    // stacked aggs, both shuffle (key, count) pairs only.
-    "q139_docs_cluster_sizes" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val dupes = d.filter(col("doc_id") % 25 === 0)
-        .withColumn("doc_id", col("doc_id") + plantOffset(d, "doc_id"))
-      d.unionByName(dupes)
-        .groupBy(col("text"))
-        .agg(count(lit(1)).as("cluster_size"))
-        .groupBy(col("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .orderBy(col("cluster_size"))
-    }),
-
-    // sequence/path mining: the global top-10 3-step behavior paths —
-    // per-user ordered event-type trigrams via two LAGs (the q132
-    // transition matrix extended one step), then one count and a
-    // deterministic (n desc, path) top-k.
-    "q140_events_paths" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(
-          lag(col("event_type"), 2).over(w).as("s0"),
-          lag(col("event_type"), 1).over(w).as("s1"),
-          col("event_type").as("s2"))
-        .filter(col("s0").isNotNull)
-        .select(concat_ws(">", col("s0"), col("s1"), col("s2")).as("path"))
-        .groupBy(col("path"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("path"))
-        .limit(10)
-    }),
-
-    // backfill detection: partition-level reconciliation between a
-    // source and a derived copy with a PLANTED gap (1997-06 missing) —
-    // the audit that tells an incremental pipeline which partitions to
-    // recompute, without comparing any row content. Emits only the
-    // stale partitions; both sides aggregate to |partitions| rows
-    // before the full-outer diff.
-    "q141_partition_reconcile" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      def counts(df: DataFrame, n: String) =
-        df.groupBy(year(col("l_shipdate")).cast("long").as("ship_year"),
-            month(col("l_shipdate")).cast("long").as("ship_month"))
-          .agg(count(lit(1)).as(n))
-      val src = counts(li, "n_src")
-      val cur = counts(li.filter(
-        !(year(col("l_shipdate")) === 1997 && month(col("l_shipdate")) === 6)),
-        "n_cur")
-      src.join(cur, Seq("ship_year", "ship_month"), "full_outer")
-        .na.fill(0L, Seq("n_src", "n_cur"))
-        .filter(col("n_src") =!= col("n_cur"))
-        .select(col("ship_year"), col("ship_month"), col("n_src"), col("n_cur"),
-          (col("n_src") - col("n_cur")).as("missing_rows"))
-        .orderBy(col("ship_year"), col("ship_month"))
-    }),
-
-    // atomic versioned publish: v1 is a mid-backfill partial state, v2
-    // the complete aggregate; readers resolve the pointer and must see
-    // exactly v2 — the oracle is the direct aggregate, so a reader
-    // glimpsing v1 (or a half-written directory) hash-fails. Crash
-    // isolation and time travel are spec-gated (VersionedTableSpec).
-    "q142_versioned_publish" -> ((s, dir) => {
-      val root = scratchDir("graft_vt_q")
-      val li = t(s, dir, "lineitem")
-      def agg(df: DataFrame) = df
-        .groupBy(col("l_returnflag"), year(col("l_shipdate")).cast("long").as("ship_year"))
-        .agg(sum(floor(col("l_quantity")).cast("long")).as("sum_qty"),
-          sum(expr("floor(l_extendedprice * 100 + 0.5)").cast("long")).as("sum_ep_cents"),
-          count(lit(1)).as("n_lines"))
-      VersionedTable.publish(agg(li.filter(year(col("l_shipdate")) < 1997)), root)
-      VersionedTable.publish(agg(li), root)
-      VersionedTable.read(s, root)
-        .orderBy(col("l_returnflag"), col("ship_year"))
-    }),
-
-    // CDC apply with DELETE tombstones: the event stream read as a
-    // change log — per user the latest change wins, and a winning
-    // 'error' event is the tombstone that removes the key. The half of
-    // CDC the reference's upsert-only merge cannot express. One window
-    // shuffle on the key, (ts, event_id)-total-ordered.
-    "q143_cdc_apply" -> ((s, dir) => {
-      RawLayer.applyCdcLatest(
-          t(s, dir, "events"),
-          keyCols = Seq("user_id"),
-          orderCols = Seq(col("ts"), col("event_id")),
-          deleteCol = col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"),
-          expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("last_value_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    // scalable dense global ids: 0..n−1 in doc_id order WITHOUT the
-    // single-partition global-sort window — value-bucketed offsets +
-    // per-bucket ranks (see Ids scaladoc). The oracle is the naive
-    // ROW_NUMBER formulation, proving the parallel plan computes the
-    // identical total order.
-    "q144_docs_global_ids" -> ((s, dir) => {
-      Ids.denseIds(t(s, dir, "documents").select(col("doc_id"), col("lang")),
-          "doc_id", bucketWidth = 100L)
-        .select(col("doc_id"), col("lang"), col("global_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // null-safe equality join (<=>): NULL keys MATCH each other — the
-    // semantics dedup on nullable keys needs (a plain equi-join
-    // silently drops every NULL-keyed row into the void via 3VL).
-    // Gap-filled sparse values (click rows carry NULL) joined
-    // null-safely against a per-user reference; the NULL bucket rows
-    // survive with a match where = would discard them.
-    "q145_null_safe_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val sparse = ev.select(col("user_id"), col("event_id"),
-        when(col("event_type") =!= "click",
-          expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("v_cents"))
-      val refValues = sparse.groupBy(col("user_id").as("r_user"), col("v_cents").as("r_v"))
-        .agg(count(lit(1)).as("n_ref"))
-      sparse.join(refValues,
-          col("user_id") === col("r_user") && col("v_cents") <=> col("r_v"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_matched"),
-          sum(when(col("v_cents").isNull, col("n_ref")).otherwise(0L))
-            .as("null_bucket_weight"))
-        .orderBy(col("user_id"))
-    }),
-
-    // unpivot (wide → long): the inverse of q51's pivot — per-user
-    // event-type count columns melted back to (user, type, n) rows via
-    // Spark's native unpivot operator; the round-trip discipline for
-    // feature tables that must feed both BI (wide) and training (long).
-    "q146_unpivot" -> ((s, dir) => {
-      val wide = t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-      wide.unpivot(
-          ids = Array(col("user_id")),
-          values = Array(col("click"), col("view"), col("purchase")),
-          variableColumnName = "event_type",
-          valueColumnName = "n")
-        .filter(col("n") > 0)
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // multimodal resize: REAL decode → nearest-neighbor 16→8 downsample
-    // (integer source indexing) → re-encode as a valid BMP → stats from
-    // a SECOND real decode of the resized payload. The oracle
-    // recomputes the sampled-byte sum from the source text (even source
-    // columns only), so the whole decode/resample/encode/decode chain
-    // is value-checked end to end.
-    "q147_multimodal_resize" -> ((s, dir) => {
-      import org.apache.spark.sql.Encoders
-      val media = Multimodal.bmpFromText(s, assertAscii(t(s, dir, "documents")),
-        "doc_id", "text", width = 16)
-      val resized = Multimodal.resizeNearest(media, outWidth = 8)
-        .map(r => Multimodal.MediaRecord(r.media_id, "image", r.payload,
-          r.out_width, r.out_height, 0L))(
-          Encoders.product[Multimodal.MediaRecord])
-      Multimodal.imageStats(resized).toDF()
-        .select(col("media_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("n_pixels"),
-          (col("sum_b") + col("sum_g") + col("sum_r")).as("sum_bytes"))
-        .orderBy(col("media_id"))
-    }),
-
-    // end-to-end curation chain, every stage deterministic and the
-    // WHOLE composition value-checked: planted-dup corpus → exact
-    // dedup (min-id per md5) → integer quality gate (q38 thresholds)
-    // → per-lang deterministic quota (q77 ordering) → token chunking
-    // (q66 geometry) → per-lang report. The composability proof: the
-    // stages that pass individually also pass stacked.
-    "q148_curation_e2e" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val corpus = d.unionByName(d.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + plantOffset(d, "doc_id")))
-      val keep = corpus
-        .groupBy(md5(col("text").cast("binary")).as("h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-      val deduped = corpus.join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
-      val toks = when(length(trim(col("text"))) === 0, 0)
-        .otherwise(size(split(trim(col("text")), "\\s+")))
-      val gated = deduped
-        .withColumn("len", length(col("text")).cast("long"))
-        .withColumn("alpha_chars",
-          length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long"))
-        .withColumn("n_tokens", toks.cast("long"))
-        .filter(col("len") >= 100 &&
-          col("alpha_chars") * 100 >= col("len") * 55 &&
-          col("n_tokens") >= 10)
-      val sampled = Sampling.stratifiedQuota(gated, "lang", "doc_id", n = 30)
-      val chunks = Chunking.chunkByTokens(
-        sampled.select(col("doc_id"), col("text")), "doc_id", "text",
-        maxTokens = 200)
-      sampled.select(col("doc_id"), col("lang"))
-        .join(chunks, Seq("doc_id"))
-        .groupBy(col("lang"))
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_chunks"),
-          sum(col("n_tokens")).as("sum_chunk_tokens"))
-        .orderBy(col("lang"))
-    }),
-
-    // join-skew diagnosis: the report you run BEFORE deciding to salt
-    // (q90) — top keys by row count with exact ppm share and the
-    // integer ×100 ratio vs the mean key. All floor division.
-    "q149_skew_report" -> ((s, dir) => {
-      ScaleJoins.skewReport(t(s, dir, "events"), "user_id", topK = 10)
-        .orderBy(col("n").desc, col("user_id"))
-    }),
-
-    // MERGE INTO (lakehouse upsert verb): a source batch of price
-    // updates, deletes, and brand-new keys applied to the part
-    // snapshot in one pass — matched+delete removes, matched replaces,
-    // unmatched source inserts, unmatched target survives. Built on
-    // the CDC reducer (one keyed window), so both verbs share one
-    // tested path. Emitted as a per-status reconciliation.
-    "q150_merge_upsert" -> ((s, dir) => {
-      val part = t(s, dir, "part")
-      val cents = expr("CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)")
-      val target = part.select(col("p_partkey"), cents.as("price_cents"),
-        lit("current").as("status"), lit(false).as("is_del"))
-      val updates = part.filter(col("p_partkey") % 10 === 0)
-        .select(col("p_partkey"), (cents + 1000L).as("price_cents"),
-          lit("updated").as("status"), (col("p_partkey") % 30 === 0).as("is_del"))
-      val inserts = part.filter(col("p_partkey") % 7 === 0)
-        .select((col("p_partkey") + plantOffset(part, "p_partkey")).as("p_partkey"),
-          lit(9999L).as("price_cents"), lit("new").as("status"),
-          lit(false).as("is_del"))
-      RawLayer.mergeInto(target, updates.unionByName(inserts),
-          Seq("p_partkey"), deleteCond = col("is_del"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("price_cents")).as("sum_cents"),
-          min(col("p_partkey")).as("min_key"), max(col("p_partkey")).as("max_key"))
-        .orderBy(col("status"))
-    }),
-
-    // SFT data prep: render each doc into a chat-templated training
-    // string and compute the loss-mask boundary (prompt-token count) —
-    // the step between a curated corpus and a fine-tune. The full
-    // rendered string is emitted and value-checked, so template drift
-    // between engines can't hide.
-    "q151_docs_sft_format" -> ((s, dir) => {
-      Chunking.sftFormat(t(s, dir, "documents"), "doc_id", "text",
-          instruction = "Summarize the following passage: ", promptChars = 120)
-        .orderBy(col("doc_id"))
-    }),
-
-    // dedup-threshold calibration: the pair-count-per-threshold curve
-    // a curation run consults BEFORE picking its near-dup cutoff —
-    // over the q70 bounded exact subset (planted mutations), with the
-    // Jaccard test cross-multiplied to integers (inter·100 ≥ t·union)
-    // so every bucket boundary is engine-exact. Hashed shingle sets
-    // stand in for literal grams (same sizes — the q70-proven
-    // no-collision regime).
-    "q152_dedup_calibration" -> ((s, dir) => {
-      val d = assertAscii(t(s, dir, "documents")).filter(col("doc_id") < 100)
-        .select(col("doc_id"), col("text"))
-      val mutated = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 200000L).as("doc_id"),
-          concat(col("text"), lit(" tail token")).as("text"))
-      val sets = d.unionByName(mutated)
-        .select(col("doc_id"),
-          graft.expressions.GraftFunctions.shingleSet(col("text"), 3, charLevel = false).as("sh"))
-        .filter(size(col("sh")) > 0)
-      // deliberate bounded all-pairs calibration sweep (banded twins:
-      // q26/q28/q128) — hard-stop before the cross join can silently
-      // go quadratic on grown testdata.
-      val nDocs = sets.count()
-      require(nDocs <= 10000,
-        s"q152 exact calibration baseline is bounded to 10K docs (got $nDocs); " +
-          "use the banded near-dup operators for larger inputs")
-      val a = sets.select(col("doc_id").as("doc_a"), col("sh").as("sha"),
-        size(col("sh")).cast("long").as("na"))
-      val b = sets.select(col("doc_id").as("doc_b"), col("sh").as("shb"),
-        size(col("sh")).cast("long").as("nb"))
-      a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
-        .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("long"))
-        .withColumn("uni", col("na") + col("nb") - col("inter"))
-        .withColumn("threshold_pct",
-          explode(array(Seq(30, 50, 70, 90).map(lit): _*)))
-        .filter(col("inter") * 100 >= col("threshold_pct") * col("uni"))
-        .groupBy(col("threshold_pct").cast("long").as("threshold_pct"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("threshold_pct"))
-    }),
-
-    // per-source corpus health scorecard: the one-row-per-source daily
-    // report a data team reads — volume, exact-dup rate, short-doc and
-    // low-alpha rates (the q38 gate criteria as RATES, not filters),
-    // and average length. Every rate is integer ppm; dups planted per
-    // the q139 discipline so the dup column is non-degenerate.
-    // n_dup_docs = n_docs − COUNT(DISTINCT text), computed inside the
-    // ONE aggregation (identical to sum(n_copies−1) per source, no
-    // second scan + join; COUNT(DISTINCT) ignores nulls the same way
-    // on both engines).
-    "q153_source_scorecard" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val corpus = d.unionByName(d.filter(col("doc_id") % 25 === 0)
-        .withColumn("doc_id", col("doc_id") + plantOffset(d, "doc_id")))
-      corpus
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          (count(lit(1)) - countDistinct(col("text"))).as("n_dup_docs"),
-          sum(when(length(col("text")) < 100, 1L).otherwise(0L)).as("n_short"),
-          sum(when(length(regexp_replace(col("text"), "[^A-Za-z]", "")) * 100 <
-            length(col("text")) * 55, 1L).otherwise(0L)).as("n_low_alpha"),
-          sum(length(col("text")).cast("long")).as("sum_len"))
-        .select(col("source"), col("n_docs"),
-          expr("CAST((n_dup_docs * 1000000L) DIV n_docs AS BIGINT)").as("dup_ppm"),
-          expr("CAST((n_short * 1000000L) DIV n_docs AS BIGINT)").as("short_ppm"),
-          expr("CAST((n_low_alpha * 1000000L) DIV n_docs AS BIGINT)").as("low_alpha_ppm"),
-          expr("CAST((sum_len * 100L) DIV n_docs AS BIGINT)").as("avg_len_x100"))
-        .orderBy(col("source"))
-    }),
-
-    // cross-source contamination matrix: which PAIRS of sources share
-    // identical documents (the "did vendor B resell vendor A's crawl"
-    // question a corpus team asks before weighting sources). Join key
-    // is the md5 digest, not the text — at 100 TB the shuffle carries
-    // 32-byte digests instead of documents, and the distinct
-    // (source, digest) projection collapses within-source copies
-    // before the self-join so a heavily-duplicated source cannot
-    // inflate pair counts. Overlaps planted (doc_id%10 clones pushed
-    // into a source derived by integer arithmetic); the matrix counts
-    // planted AND natural cross-source dups together (sf0.1 has a
-    // handful of natural ones; sf0.001/sf0.01 none). A clone whose
-    // derived source equals its origin source is deliberately
-    // collapsed by the distinct — within-source copies are q153's
-    // metric, not this one's.
-    "q154_source_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + plantOffset(d, "doc_id")).as("doc_id"),
-          concat(lit("src"), (col("doc_id") % 7).cast("string")).as("source"),
-          col("text"))
-      val corpus = d.select(col("doc_id"), col("source"), col("text"))
-        .unionByName(planted)
-      val keys = corpus.select(col("source"), md5(col("text")).as("digest"))
-        .distinct()
-      keys.select(col("source").as("source_a"), col("digest"))
-        .join(keys.select(col("source").as("source_b"), col("digest")),
-          Seq("digest"))
-        .filter(col("source_a") < col("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-
-    // per-group central moments with ZERO doubles: emit the exact
-    // integer numerators (n·Σx² − (Σx)², n·Σxy − ΣxΣy) and n rather
-    // than dividing — variance = var_num/n², covariance = cov_num/n²
-    // are the caller's one division, and the hashed columns stay
-    // engine-exact BIGINTs (the q38/q55 lesson applied to second
-    // moments; x = floor(quantity), y = linenumber, so every sum is
-    // exact and the numerators stay ≲1e16 even at sf1 — no overflow
-    // headroom games). One map-side-combined aggregation, no joins.
-    "q155_moment_stats" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          floor(col("l_quantity")).cast("long").as("q"),
-          col("l_linenumber").cast("long").as("ln"))
-      li.groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("q")).as("sum_q"),
-          sum(col("q") * col("q")).as("sum_q2"),
-          sum(col("ln")).as("sum_ln"),
-          sum(col("q") * col("ln")).as("sum_qln"))
-        .select(col("l_returnflag"), col("n"), col("sum_q"),
-          (col("n") * col("sum_q2") - col("sum_q") * col("sum_q")).as("var_num"),
-          (col("n") * col("sum_qln") - col("sum_q") * col("sum_ln")).as("cov_num"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // referential-integrity audit: one row per FK edge with child
-    // volume and dangling-key count — the pre-publish DQ gate that
-    // catches a partial dimension load before it fans out as silent
-    // inner-join row loss. Each edge is ONE left-anti join against the
-    // (broadcast-small) parent's key projection; TPC-H data is
-    // consistent, so violations are planted by thinning each parent
-    // (key % 50 = 0 removed) — integer-arithmetic thinning, exact on
-    // both engines.
-    // Each edge is ONE lazy left join + aggregation — child volume
-    // and dangling count come out of the same scan (no eager count()
-    // jobs; an audit that pre-scans the fact table once per edge
-    // would double its own cost at 100 TB).
-    "q156_fk_audit" -> ((s, dir) => {
-      def edge(rel: String, child: DataFrame, key: String,
-          parent: DataFrame, pkey: String): DataFrame = {
-        val thinned = parent.filter(col(pkey) % 50 =!= 0)
-          .select(col(pkey).as(key)).distinct()
-          .withColumn("fk_present", lit(1))
-        child.select(col(key)).join(thinned, Seq(key), "left")
-          .agg(count(lit(1)).as("n_child"),
-            sum(when(col("fk_present").isNull, 1L).otherwise(0L))
-              .as("n_dangling"))
-          .select(lit(rel).as("relation"), col("n_child"), col("n_dangling"))
-      }
-      val orders = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem")
-      edge("lineitem.partkey->part", li, "l_partkey", t(s, dir, "part"), "p_partkey")
-        .unionByName(edge("lineitem.suppkey->supplier", li, "l_suppkey",
-          t(s, dir, "supplier"), "s_suppkey"))
-        .unionByName(edge("orders.custkey->customer", orders, "o_custkey",
-          t(s, dir, "customer"), "c_custkey"))
-        .orderBy(col("relation"))
-    }),
-
-    // right-to-be-forgotten cascade: a deletion set seeded on the
-    // customer table propagates through orders to lineitem via
-    // semi-joins, and the query reports kept/deleted volumes per
-    // table — the audit artifact a deletion job must emit. The
-    // cascade never materializes deleted rows: each hop is a
-    // semi/anti join on the parent's key set (broadcast-small here;
-    // shuffle-join at scale), so the 100 TB shape is two key-set
-    // joins, not a rewrite of the fact table in the query itself.
-    // Each table's row is ONE lazy left-join-flag aggregation —
-    // total and deleted counts come from the same scan, with no
-    // eager count() actions embedding literals (three extra
-    // full-table scans at 100 TB just to print totals).
-    "q157_cascade_delete" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val orders = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem")
-      val delCust = cust.filter(col("c_custkey") % 100 === 0)
-        .select(col("c_custkey"))
-      val delOrders = orders.join(
-        delCust.withColumnRenamed("c_custkey", "o_custkey"),
-        Seq("o_custkey"), "left_semi").select(col("o_orderkey"))
-      def row(table: String, flagged: DataFrame): DataFrame =
-        flagged.agg(count(lit(1)).as("n_total"),
-            sum(col("del")).as("n_deleted"))
-          .select(lit(table).as("table_name"), col("n_total"),
-            col("n_deleted"),
-            (col("n_total") - col("n_deleted")).as("n_kept"))
-      def flag(child: DataFrame, key: String, keys: DataFrame): DataFrame =
-        child.select(col(key))
-          .join(keys.withColumn("m", lit(1)), Seq(key), "left")
-          .select(when(col("m").isNotNull, 1L).otherwise(0L).as("del"))
-      row("customer", cust.select(
-          when(col("c_custkey") % 100 === 0, 1L).otherwise(0L).as("del")))
-        .unionByName(row("orders", flag(orders, "o_custkey",
-          delCust.withColumnRenamed("c_custkey", "o_custkey"))))
-        .unionByName(row("lineitem", flag(li, "l_orderkey",
-          delOrders.withColumnRenamed("o_orderkey", "l_orderkey"))))
-        .orderBy(col("table_name"))
-    }),
-
-    // quality-weighted deterministic downsampling: band documents by
-    // the integer alpha-ratio gate, target a keep-rate per band in
-    // basis points, and draw with a Knuth multiplicative hash of
-    // doc_id instead of rand() — the sample is bitwise reproducible
-    // across retries, partitionings, and engines (a rand() sample
-    // can't be oracle-checked and silently changes under speculative
-    // re-execution on a cluster). Per-band candidate/sampled/char
-    // counts let the caller confirm the realized rate tracks the
-    // target. Per-row arithmetic only; one map-side-combined agg.
-    // Band gates sit at the corpus's alpha-ratio quartiles (the
-    // generator emits a tight 79–86% range, so the q38-style 55%
-    // gate would put every doc in one band): ≥82.50% high,
-    // ≥81.75% mid — exact ×10000 integer comparisons, no ratios.
-    "q158_weighted_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          (length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long")
-            * 10000L).as("alpha10k"),
-          length(col("text")).cast("long").as("len"))
-      d.select(col("doc_id"), col("len"),
-          when(col("alpha10k") >= col("len") * 8250L, lit("high"))
-            .when(col("alpha10k") >= col("len") * 8175L, lit("mid"))
-            .otherwise(lit("low")).as("band"),
-          when(col("alpha10k") >= col("len") * 8250L, lit(10000L))
-            .when(col("alpha10k") >= col("len") * 8175L, lit(5000L))
-            .otherwise(lit(1000L)).as("keep_bp"))
-        // 31-bit fold before the multiply (the q61/q62 idiom): keeps
-        // the product in Long range for ANY doc_id — without it, ids
-        // past ~3.47e9 wrap negative in Spark (draw always < keep_bp)
-        // and overflow-error in DuckDB.
-        .withColumn("draw",
-          ((col("doc_id") % 2147483648L) * 2654435761L) % 10000L)
-        .groupBy(col("band"))
-        .agg(count(lit(1)).as("n_candidates"),
-          sum(when(col("draw") < col("keep_bp"), 1L).otherwise(0L))
-            .as("n_sampled"),
-          sum(when(col("draw") < col("keep_bp"), col("len").cast("long"))
-            .otherwise(0L)).as("chars_sampled"))
-        .orderBy(col("band"))
-    }),
-
-    // per-source language-balance report: one row per source with its
-    // language cardinality, dominant language, and the dominant
-    // share in integer ppm — the multilingual-mix audit run before
-    // reweighting a pretraining corpus. Shape at scale: the corpus
-    // collapses to a (source, lang) count agg FIRST (map-side
-    // combined), and every window runs over that tiny matrix
-    // (≤|sources|·|langs| rows), never over documents. Dominance
-    // ties break on (count desc, lang asc) — deterministic on both
-    // engines; no doubles anywhere.
-    "q159_lang_balance" -> ((s, dir) => {
-      val counts = t(s, dir, "documents")
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n"))
-      val bySource = Window.partitionBy(col("source"))
-      val dominance = Window.partitionBy(col("source"))
-        .orderBy(col("n").desc, col("lang").asc)
-      counts
-        .withColumn("n_docs", sum(col("n")).over(bySource))
-        .withColumn("n_langs", count(lit(1)).over(bySource))
-        .withColumn("rn", row_number().over(dominance))
-        .filter(col("rn") === 1)
-        .select(col("source"), col("n_docs"), col("n_langs"),
-          col("lang").as("dominant_lang"),
-          expr("CAST((n * 1000000L) DIV n_docs AS BIGINT)")
-            .as("dominant_ppm"))
-        .orderBy(col("source"))
-    }),
-
-    // ---------------------------------------------------------------
-    // q160–q165: stage-isolating diagnostics for the q38/q55–q57
-    // driver divergence (r4 verdict task 1). Each isolates ONE shared
-    // primitive of the failing four so CORRECTNESS_r05 localizes any
-    // residual mismatch even without driver access: cents pipeline →
-    // fan-out → tokenization → dedup keep-set → aggregation → hashing.
-    // Every output column is BIGINT or VARCHAR, and every oracle
-    // wraps integer aggregates in CAST(... AS BIGINT) so DuckDB never
-    // emits a HUGEINT output (the r5 root-cause finding).
-    // ---------------------------------------------------------------
-
-    // (a) the cents pipeline alone: global stats of up_cents as the
-    // Spark pipeline carries it (DECIMAL(10,2) dollars × 100, the
-    // claimed bijection) vs the oracle's floor-based BIGINT cents.
-    "q160_diag_cents_global" -> ((s, dir) => {
-      val inv = synthInventory(s, dir)
-        .withColumn("up_cents", (col("unit_price") * 100).cast("long"))
-      inv.agg(
-        sum(col("up_cents")).cast("long").as("sum_cents"),
-        countDistinct(col("up_cents")).cast("long").as("n_distinct_cents"),
-        min(col("up_cents")).cast("long").as("min_cents"),
-        max(col("up_cents")).cast("long").as("max_cents"),
-        count(lit(1)).cast("long").as("n_rows"))
-    }),
-
-    // (b) the dim_product fan-out alone: histogram of price-variant
-    // counts per product. q55's SUM is weighted by exactly these
-    // multiplicities, so any fan-out disagreement shows here first.
-    "q161_diag_fanout_hist" -> ((s, dir) => {
-      synthInventory(s, dir)
-        .select(col("product_id"), col("product_category"), col("unit_price"))
-        .distinct()
-        .groupBy(col("product_id"))
-        .agg(count(lit(1)).as("n_variants"))
-        .groupBy(col("n_variants"))
-        .agg(count(lit(1)).cast("long").as("n_products"))
-        .select(col("n_variants").cast("long").as("n_variants"), col("n_products"))
-        .orderBy(col("n_variants"))
-    }),
-
-    // (c) q38's tokenization alone: unfiltered global sums over raw
-    // documents — TextFunctions.alphaChars/tokenCount vs the oracle's
-    // regexp_replace/regexp_split_to_array.
-    "q162_diag_text_sums" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(
-          length(col("text")).cast("long").as("len"),
-          TextFunctions.alphaChars(col("text")).cast("long").as("alpha"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("toks"))
-        .agg(
-          sum(col("len")).cast("long").as("sum_len"),
-          sum(col("alpha")).cast("long").as("sum_alpha"),
-          sum(col("toks")).cast("long").as("sum_tokens"),
-          count(lit(1)).cast("long").as("n_docs"))
-    }),
-
-    // (d) q38's dedup keep-set alone: per-source size and id-sum of
-    // the exact-dedup survivors (sum pins the exact id SET, not just
-    // its cardinality).
-    "q163_diag_dedup_keep" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val dupes = d.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + plantOffset(d, "doc_id"))
-      val all = d.unionByName(dupes)
-      val keepIds = Dedup.exact(all, "doc_id", "text").select(col("keep_id").as("doc_id"))
-      all.join(keepIds, Seq("doc_id"), "left_semi")
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).cast("long").as("n_kept"),
-          min(col("doc_id")).cast("long").as("min_keep_id"),
-          max(col("doc_id")).cast("long").as("max_keep_id"),
-          sum(col("doc_id")).cast("long").as("sum_keep_ids"))
-        .orderBy(col("source"))
-    }),
-
-    // (e) q55 collapsed to a single global row: if per-product rows
-    // diverge but this passes, the defect is in the driver's hash of
-    // the 1974-row result, not the arithmetic.
-    "q164_diag_q55_total" -> ((s, dir) => {
-      dashboardServe(s, dir, graft.etl.DashboardQueries.q2(1995))
-        .agg(
-          sum(col("total_quantity_sold")).cast("long").as("grand_total"),
-          count(lit(1)).cast("long").as("n_groups"))
-    }),
-
-    // (f) q55 regrouped at category grain (7 rows): the middle rung
-    // between (e)'s global row and q55's 1974 product rows.
-    "q165_diag_q55_bycat" -> ((s, dir) => {
-      dashboardServe(s, dir, graft.etl.DashboardQueries.q2(1995))
-        .groupBy(col("product_category"))
-        .agg(sum(col("total_quantity_sold")).cast("long").as("total_quantity_sold"))
-        .orderBy(col("product_category"))
-    }),
-
-    // keyless point-in-interval range join: lineitems shipped inside
-    // the 30-day window after each urgent order, summed per order
-    // month. No equi-key exists between the sides — a bare inequality
-    // join would plan as a nested loop; RangeJoin buckets the day
-    // domain (w = window length) into an ordinary shuffled equi-join.
-    // Points are pre-collapsed to (ship_day, count) rows so the join
-    // scales with DISTINCT days, not lineitem rows — the pattern for
-    // any small-value-domain range join at 100 TB. Day numbers are
-    // exact integers (datediff from epoch); midnight timestamps make
-    // day arithmetic ≡ the oracle's timestamp BETWEEN.
-    "q166_range_join_shipments" -> ((s, dir) => {
-      val days = t(s, dir, "lineitem")
-        .select(datediff(col("l_shipdate"), lit("1970-01-01")).cast("long").as("ship_day"))
-        .groupBy(col("ship_day")).agg(count(lit(1)).as("n_ship"))
-      val wins = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("lo"))
-        .withColumn("hi", col("lo") + 30L)
-      graft.operators.RangeJoin.pointInInterval(days, "ship_day", wins, "lo", "hi",
-          bucketWidth = 30L)
-        .groupBy(col("order_month"))
-        .agg(sum(col("n_ship")).as("n_shipped_30d"))
-        .orderBy(col("order_month"))
-    }),
-
-    // keyless interval-overlap join: 7-day windows after urgent orders
-    // × 7-day windows after low-priority orders, overlap pairs counted
-    // per urgent month. Both sides collapse to (start_day, weight)
-    // first — the overlap join runs on ~2.5K distinct days per side
-    // regardless of order count, and pair multiplicity is recovered as
-    // sum(wa·wb). Each overlapping pair is emitted from exactly one
-    // bucket (the one containing max(lo_a, lo_b)) — dedup by
-    // construction, no distinct shuffle.
-    "q167_interval_overlap" -> ((s, dir) => {
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("lo_a"))
-        .groupBy(col("order_month"), col("lo_a"))
-        .agg(count(lit(1)).as("wa"))
-        .withColumn("hi_a", col("lo_a") + 7L)
-      val low = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "5-LOW")
-        .select(datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("lo_b"))
-        .groupBy(col("lo_b")).agg(count(lit(1)).as("wb"))
-        .withColumn("hi_b", col("lo_b") + 7L)
-      graft.operators.RangeJoin.intervalOverlap(urgent, "lo_a", "hi_a",
-          low, "lo_b", "hi_b", bucketWidth = 7L)
-        .groupBy(col("order_month"))
-        .agg(sum(col("wa") * col("wb")).as("n_overlap_pairs"))
-        .orderBy(col("order_month"))
-    }),
-
-    // as-of join with tolerance (kdb/pandas merge_asof semantics):
-    // q41's enrichment, but a purchase older than 1 hour is too stale
-    // to attribute — the match is masked back to null. The mask is a
-    // post-window projection on the carried right time: zero extra
-    // shuffles over the plain as-of join.
-    "q168_asof_tolerance" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.asofJoin(ev, purchases, "user_id", "ts", "ts", Seq("value"),
-          tolerance = Some(expr("INTERVAL 1 HOUR")))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // corpus-frequent span removal (C4-style boilerplate scrub): an
-    // 8-token banner of out-of-vocabulary words is planted onto every
-    // sixth doc; its internal 5-grams hit df = nDocs/6. Three measured
-    // df bands must separate: natural content grams (max 4 at every
-    // scale), banner→content BOUNDARY grams — "…theta <w>" is shared
-    // by every planted doc whose text starts with the same word, so
-    // its df reaches nPlanted × max-first-word-share ≈ nDocs/24
-    // (measured 6/7/37 per scale — a fixed minDf = 6 clips content!)
-    // — and the banner internals at nDocs/6. minDf = nDocs/12 sits in
-    // the gap by construction (½ of banner, 2× boundary), so the
-    // oracle states the outcome from first principles: planted docs
-    // come back as their ORIGINAL text with n_removed = 8, untouched
-    // docs pass through whole.
-    "q169_docs_boilerplate_scrub" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val banner = "alpha beta gamma delta epsilon zeta eta theta"
-      val planted = d.filter(col("doc_id") % 6 === 0)
-        .select(col("doc_id"), concat(lit(banner + " "), col("text")).as("text"))
-      val all = d.filter(col("doc_id") % 6 =!= 0).unionByName(planted)
-      val minDf = math.max(6L, probeCount(d) / 12L)
-      Dedup.removeFrequentSpans(all, "doc_id", "text", n = 5, minDf = minDf)
-        .orderBy(col("doc_id"))
-    }),
-
-    // multimodal via the JDK's javax.imageio plugins: text bytes → a
-    // REAL compressed PNG (zlib-deflated scanlines, not a raw-pixel
-    // container like q33's BMP) → ImageIO decode → exact per-channel
-    // pixel sums. PNG is lossless, so the oracle recomputes the sums
-    // from the source bytes exactly as q33 does — the compressed-
-    // format half of the multimodal decode story (JPEG rides the same
-    // codec, spec-gated because it's lossy).
-    "q170_multimodal_png" -> ((s, dir) => {
-      // codec work is CPU-bound: fan out past the source's splits (the
-      // q117/q172 discipline — the r9 sf3 sweep measured the JPEG twin
-      // at 12× on a 2-split source: 30 idle cores)
-      val media = Multimodal.pngFromText(s,
-        t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism),
-        "doc_id", "text", width = 16)
-      Multimodal.imageIoStats(media).toDF()
-        .select(col("media_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))
-        .orderBy(col("media_id"))
-    }),
-
-    // the lossy half of the imageio story: text bytes → REAL JPEG
-    // (DCT-quantized) → ImageIO decode. Geometry (width/height/
-    // n_pixels) survives lossy compression EXACTLY, so it is oracle-
-    // checked from the byte length alone (the q33/q170 height
-    // arithmetic); channel values are approximate by design and stay
-    // spec-gated (MultimodalSpec bounds the per-channel drift), never
-    // oracle-compared.
-    "q171_multimodal_jpeg" -> ((s, dir) => {
-      // CPU-bound codec: explicit fan-out, see q170
-      val media = Multimodal.jpegFromText(s,
-        assertAscii(t(s, dir, "documents"))
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id", "text", width = 16)
-      Multimodal.imageIoStats(media).toDF()
-        .select(col("media_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("n_pixels"))
-        .orderBy(col("media_id"))
-    }),
-
-    // CSV round-trip with explicit schema (S6's load path, upgraded
-    // from spec-only to a driver value check; q117 does the same for
-    // ORC): the FULL-WIDTH lineitem serialized to text and read back.
-    // Doubles survive because Java's Double.toString/parseDouble pair
-    // is round-trip exact; timestamps keep micros via an explicit
-    // 6-digit-fraction format. Oracle = the same aggregate over the
-    // parquet source, so any corruption in quoting, header handling,
-    // or numeric parsing flips the hash.
-    "q172_lineitem_csv_roundtrip" -> ((s, dir) => {
-      val path = scratchDir("graft_csv") + "/lineitem"
-      val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      // text encode/parse is CPU-bound: fan the write out past the
-      // source scan's 1-3 splits so both the serialize and the
-      // re-parse run wide; width from the session (r16, see q117)
-      t(s, dir, "lineitem").repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite")
-        .option("header", "true").option("timestampFormat", tsFmt)
-        .csv(path)
-      s.read
-        .schema("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
-          "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
-          "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
-          "l_linestatus STRING, l_shipdate TIMESTAMP")
-        .option("header", "true").option("timestampFormat", tsFmt)
-        .csv(path)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum2(col("l_quantity")).as("sum_qty"),
-          dsum2(col("l_extendedprice")).as("sum_price"),
-          count(lit(1)).as("n_rows"),
-          max(col("l_orderkey")).as("max_orderkey"),
-          date_format(max(col("l_shipdate")), "yyyy-MM-dd HH:mm:ss").as("max_ship"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // NDJSON round-trip (the reference's raw-events interchange shape):
-    // events serialized as JSON lines and read back with an explicit
-    // schema. The props column is itself a JSON-ish string, so the
-    // length aggregate catches any escaping/unescaping asymmetry; the
-    // epoch-second max catches timestamp drift.
-    "q173_events_json_roundtrip" -> ((s, dir) => {
-      val path = scratchDir("graft_json") + "/events"
-      val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      t(s, dir, "events").write.mode("overwrite")
-        .option("timestampFormat", tsFmt).json(path)
-      s.read
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-          "event_type STRING, value DOUBLE, props STRING")
-        .option("timestampFormat", tsFmt).json(path)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n_rows"),
-          dsum2(col("value")).as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"),
-          max(col("ts").cast("long")).as("max_ts_sec"),
-          max(length(col("props"))).cast("long").as("max_props_len"))
-        .orderBy(col("event_type"))
-    }),
-
-    // product-quantization ANN with ADC scoring — the memory-bounded
-    // serving path (codes + codebook lookups instead of stored floats;
-    // FAISS's IVFADC distance half). Sign-pattern sub-quantizers keep
-    // the whole pipeline integer-exact, so the oracle reproduces
-    // codes, codebooks, lookup tables, the ADC ranking, AND the
-    // re-rank — the PQ counterpart of the q44/q72/q134 sign-IVF gate.
-    // Measured recall@5 vs brute force: 1.00/0.93/0.88 at
-    // sf0.001/0.01/0.1 (rerank = 64 of 2000 corpus vectors at sf0.1).
-    "q174_emb_ann_pq_adc" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.pqAdcTopK(e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, m = 8, rerank = 64)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVFADC, residual-encoded (the canonical FAISS composition, r9):
-    // centroid-probed lists cut the candidates sub-linearly, PQ/ADC
-    // scores that cut in the compressed domain with corpus codes
-    // trained on RESIDUALS against each list's centroid — the ADC
-    // score is exact-⟨q, c_L⟩ plus quantized-residual lookups — and
-    // exact cosine re-ranks the top 96. Oracle = the probe chain's own
-    // CTEs extended with the residual codebook arithmetic. Residual
-    // codes track the probe ceiling closely: recall@5 0.96/0.94/0.825
-    // at sf0.001/0.01/0.1 vs sign-IVF's 0.835 at the same 56-list
-    // budget (r8 raw-vector codes: 0.77 at 48 lists).
-    "q175_emb_ann_ivfadc" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val n = probeCount(e)
-      val bits = Similarity.autoQuantBits(n, 64)
-      // occupancy-scaled exact-rerank cut (r10): 96 at every gated
-      // scale (the pinned oracle budget), ~n/100 beyond — a fixed cut
-      // starves ADC recall as the corpus grows (SCALING.md)
-      val rerank = Similarity.autoAdcRerank(n)
-      // fraction-denominated probe budget (r11, ADVICE): 438 ‰ of the
-      // lists = the pinned 56-of-128 at every gated scale (437 ‰
-      // floors to 55 — integer arithmetic); the probed fraction stays
-      // flat as autoQuantBits grows the list count
-      Similarity.ivfAdcTopK(e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, bits = bits,
-          nProbe = Similarity.probeBudget(bits, 438), m = 8, rerank = rerank)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // PQ serving path: persist codes (8 bytes/vector) + codebook, serve
-    // with floats fetched from the lake only for re-rank survivors.
-    // Shares q174's oracle at identical parameters, so index-serving
-    // ≡ in-flight is itself the driver-checked assertion (the q44/q72
-    // pattern applied to PQ).
-    "q176_emb_ann_pq_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratchDir("graft_pq_idx")
-      Similarity.buildPqIndex(e, path, dim = 64, m = 8)
-      Similarity.queryPqIndex(s, path, e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, m = 8, rerank = 64)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Recall-vs-nProbe calibration (VERDICT r8 #8): the tuning curve a
-    // serving team reads to pick a probe budget — recall@5 of sign-IVF
-    // and residual IVFADC at 8/24/56 probed lists, against brute-force
-    // ground truth, as exact integer hits/n_pairs. One probe ranking +
-    // one ADC pass serve all grid points (everything below the budget
-    // cut is nProbe-independent), so the sweep costs ~one IVFADC run.
-    "q177_ann_recall_calibration" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val n = probeCount(e)
-      val bits = Similarity.autoQuantBits(n, 64)
-      // occupancy-scaled exact-rerank cut (r10): 96 at every gated
-      // scale (the pinned oracle budget), ~n/100 beyond — a fixed cut
-      // starves ADC recall as the corpus grows (SCALING.md)
-      val rerank = Similarity.autoAdcRerank(n)
-      // fraction-denominated probe grid (r11, ADVICE): 63/188/438 ‰
-      // reproduce the pinned 8/24/56-of-128 at every gated scale and
-      // keep each grid point a constant list FRACTION as autoQuantBits
-      // grows the lists (8 of 512 is a different operating point than
-      // 8 of 128; 6.25 % of the lists is the same one)
-      Similarity.recallProbeCurve(e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, bits = bits,
-          probeGrid = Seq(63, 188, 438).map(Similarity.probeBudget(bits, _)),
-          m = 8, rerank = rerank)
-        .orderBy(col("family"), col("n_probe"))
-    }),
-
-    // q199 (r12): the SAMPLED calibration sweep — q177's exact twin
-    // with maxQueries = 24, the production tuning posture: ground
-    // truth (the sweep's dominant cost, |Q|·n) runs over a fixed
-    // hash-priority query sample, so calibration stays ~linear in n
-    // as the corpus grows (657 s of pinned full truth at sf10 was the
-    // r11 sweep's slowest green query). The sample priority is md5 of
-    // the id string — the one hash both engines compute identically —
-    // so the sampled sweep is value-checked end to end, not just the
-    // full one. At sf ≤ 0.01 the 24-query bound exceeds |Q| and the
-    // sample IS the full set (spec-pinned law); sf0.1's 40 queries
-    // make it a genuine sample inside the driver gate.
-    "q199_ann_recall_sampled" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val n = probeCount(e)
-      val bits = Similarity.autoQuantBits(n, 64)
-      val rerank = Similarity.autoAdcRerank(n)
-      Similarity.recallProbeCurve(e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, bits = bits,
-          probeGrid = Seq(63, 188, 438).map(Similarity.probeBudget(bits, _)),
-          m = 8, rerank = rerank, maxQueries = Some(24))
-        .orderBy(col("family"), col("n_probe"))
-    }),
-
-    // Persisted IVFADC index (r9): the full FAISS serving shape on
-    // disk — centroids (probe table), residual codes partitioned by
-    // list_id (the probe cut becomes partition pruning), residual
-    // codebook; floats stay in the lake, fetched only for re-rank
-    // survivors. Shares q175's oracle at identical parameters, so
-    // index-serving ≡ in-flight is driver-checked (the q72/q176
-    // pattern applied to the composition).
-    "q178_emb_ann_ivfadc_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratchDir("graft_ivfadc_idx")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val n = probeCount(e)
-      val bits = Similarity.autoQuantBits(n, 64)
-      // occupancy-scaled exact-rerank cut (r10): 96 at every gated
-      // scale (the pinned oracle budget), ~n/100 beyond — a fixed cut
-      // starves ADC recall as the corpus grows (SCALING.md)
-      val rerank = Similarity.autoAdcRerank(n)
-      Similarity.buildIvfAdcIndex(e, path, dim = 64, bits = bits, m = 8)
-      Similarity.queryIvfAdcIndex(s, path, e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, bits = bits,
-          nProbe = Similarity.probeBudget(bits, 438), m = 8, rerank = rerank)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVFADC incremental maintenance (r9): build on two thirds, append
-    // the rest against the FROZEN coarse quantizer (the FAISS
-    // posture — centroids never retrain on append; codebook SUMS merge
-    // associatively; new-list vectors encode against the zero centroid
-    // and stay unprobeable until a rebuild, exactly like a frozen
-    // k-means quantizer). Oracle = the q175 generator with the
-    // centroid population restricted to the build subset, so the whole
-    // frozen-quantizer serving arithmetic is value-checked; the
-    // append-associativity invariant (append(B);append(C) ≡
-    // append(B∪C)) is spec-pinned.
-    "q179_emb_ann_ivfadc_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratchDir("graft_ivfadc_app")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val n = probeCount(e)
-      val bits = Similarity.autoQuantBits(n, 64)
-      // occupancy-scaled exact-rerank cut (r10): 96 at every gated
-      // scale (the pinned oracle budget), ~n/100 beyond — a fixed cut
-      // starves ADC recall as the corpus grows (SCALING.md)
-      val rerank = Similarity.autoAdcRerank(n)
-      Similarity.buildIvfAdcIndex(e.filter(col("vec_id") % 3 =!= 0), path,
-        dim = 64, bits = bits, m = 8)
-      Similarity.appendIvfAdcIndex(e.filter(col("vec_id") % 3 === 0), path,
-        batchId = "b1", dim = 64, bits = bits, m = 8)
-      Similarity.queryIvfAdcIndex(s, path, e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, bits = bits,
-          nProbe = Similarity.probeBudget(bits, 438), m = 8, rerank = rerank)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Frozen-quantizer servability audit (r10, VERDICT r9 #4): q179's
-    // build/append split, then the operational report a serving team
-    // watches to decide when the retrain is due — per list: build-time
-    // rows, appended rows, and whether the probe can reach the list at
-    // all (a stored centroid with direction exists; appends into lists
-    // the build never saw are unprobeable until rebuild). The audit
-    // reads ONLY the index (codes partitions + the tiny centroids
-    // table); the oracle recomputes the same report from the corpus
-    // with the frozen-quantizer arithmetic — so index-on-disk ≡
-    // corpus-derived is itself driver-checked.
-    "q180_ann_ivfadc_servability" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratchDir("graft_ivfadc_aud")
-      // occupancy-tuned quantizer width (r10): 7 bits (128 lists) at
-      // every driver-gated scale — the layout the pinned oracle
-      // encodes — growing toward nlist ≈ √n beyond (sweep scales),
-      // where fixed bits made probed candidate pools grow ∝ n
-      val bits = Similarity.autoQuantBits(probeCount(e), 64)
-      Similarity.buildIvfAdcIndex(e.filter(col("vec_id") % 3 =!= 0), path,
-        dim = 64, bits = bits, m = 8)
-      Similarity.appendIvfAdcIndex(e.filter(col("vec_id") % 3 === 0), path,
-        batchId = "b1", dim = 64, bits = bits, m = 8)
-      Similarity.ivfAdcServabilityAudit(s, path)
-        .orderBy(col("list_id"))
-    }),
-
-    // Index compaction proven invisible (r10): q179's build + append,
-    // then compactIvfAdcIndex folds the per-append generations to one
-    // file per list partition + one codebook shard, then serve. Shares
-    // q179's oracle at identical parameters — the q129/q90 "the
-    // optimization must be invisible" discipline applied to the whole
-    // r10 maintenance loop, driver-checked.
-    "q181_ann_ivfadc_compacted" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratchDir("graft_ivfadc_cmp")
-      val n = probeCount(e)
-      val bits = Similarity.autoQuantBits(n, 64)
-      val rerank = Similarity.autoAdcRerank(n)
-      Similarity.buildIvfAdcIndex(e.filter(col("vec_id") % 3 =!= 0), path,
-        dim = 64, bits = bits, m = 8)
-      Similarity.appendIvfAdcIndex(e.filter(col("vec_id") % 3 === 0), path,
-        batchId = "b1", dim = 64, bits = bits, m = 8)
-      Similarity.compactIvfAdcIndex(s, path, bits = bits)
-      Similarity.queryIvfAdcIndex(s, path, e.filter(col("vec_id") % 50 === 0), e,
-          k = 5, dim = 64, bits = bits,
-          nProbe = Similarity.probeBudget(bits, 438), m = 8, rerank = rerank)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Semantic decontamination (r10) — the embedding twin of q67's
-    // 13-gram screen, for the paraphrased leakage n-grams miss:
-    // benchmark side broadcast, corpus scanned once, threshold on the
-    // 1e-6 cosine grid. Train side carries planted byte-identical
-    // copies of the benchmark rows (cosine ≈ 1 ≫ 0.95 on any engine),
-    // so the flagged set is non-trivially populated at every scale;
-    // the operator is exact brute force, so the oracle value-checks
-    // the FULL result, plants and natural matches alike.
-    "q182_emb_decontaminate" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val bench = e.filter(col("vec_id") % 37 === 0)
-      // plants live on NEGATIVE ids (r11, ADVICE): -id - 1 is disjoint
-      // from the natural non-negative id space at any corpus size — a
-      // fixed +600000 offset silently collided with real train ids
-      // once a scaled corpus crossed 600 k
-      val train = e.filter(col("vec_id") % 37 =!= 0)
-        .unionByName(bench.withColumn("vec_id", -col("vec_id") - 1L))
-      Similarity.semanticDecontaminate(train, bench, thresholdE6 = 950000L)
-        .orderBy(col("train_id"))
-    }),
-
-    // q182's scale path (r10): benchmark sets too large to broadcast
-    // join the corpus on the sign-quantizer list id instead — a
-    // blocked similarity join, shuffle on list_id. Approximate by the
-    // quantizer's nature, but candidate generation is pure sign tests,
-    // so the oracle reproduces the approximate result EXACTLY (the
-    // q31/q44 discipline); byte-identical plants always share a list.
-    "q183_emb_decontaminate_blocked" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val bench = e.filter(col("vec_id") % 37 === 0)
-      // plants on negative ids — see q182
-      val train = e.filter(col("vec_id") % 37 =!= 0)
-        .unionByName(bench.withColumn("vec_id", -col("vec_id") - 1L))
-      Similarity.semanticDecontaminateBlocked(train, bench,
-          thresholdE6 = 950000L, dim = 64,
-          bits = Similarity.autoQuantBits(probeCount(e), 64))
-        .orderBy(col("train_id"))
-    }),
-
-    // corpus-trained bigram-LM fluency scoring (the CCNet/KenLM
-    // perplexity filter, r10): train the add-one bigram LM on the
-    // doc_id % 5 != 0 slice, score EVERY document — exact-integer ppm
-    // form so the driver hashes it; the true log2 cross-entropy twin
-    // is spec-grounded (LanguageModelSpec). Model = count frames
-    // joined by token keys, never broadcast — the 100 TB posture.
-    "q184_docs_lm_fluency" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val lm = LanguageModel.train(
-        docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-      LanguageModel.scoreFluencyPpm(docs, lm, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // retrieval-ranking eval (r10): reciprocal rank of the brute-force
-    // true NN inside the sign-IVF top-10 — recall (q177) says whether
-    // truth was retrieved, this says how far down it sat, the number
-    // that decides a RAG serving cut. Ground truth is the documented
-    // quadratic baseline over the query sample (the q177 posture:
-    // sample queries at scale, corpus side stays indexed).
-    "q185_ann_retrieval_mrr" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // bounded eval set (r15): past 4 096 queries the MRR measurement
-      // hash-samples — identity at every gated scale AND at sf10
-      // (|Q| = 4 000), so the standing digests are byte-stable; at
-      // sf30+ this is what turns the eval's |Q|·n quadratic back into
-      // cap·n (the sf30 probe measured 6.6× at 3× without it)
-      val queries = Similarity.evalQuerySample(
-        e.filter(col("vec_id") % 50 === 0))
-      val bits = Similarity.autoQuantBits(probeCount(e), 64)
-      val ann = Similarity.signIvfTopK(queries, e, k = 10, dim = 64,
-        bits = bits, nProbe = Similarity.probeBudget(bits))
-      val truth = Similarity.bruteForceTopK(queries, e, k = 1)
-      Similarity.retrievalMrr(ann, truth.select(col("query_id"), col("neighbor_id")))
-        .orderBy(col("query_id"))
-    }),
-
-    // collocation mining (r10): word2phrase/PMI lift over adjacent
-    // token pairs — the phrase-discovery pass before tokenizer
-    // training or phrase-aware dedup. Integer lift with the delta-1
-    // rare-pair discount; products in DECIMAL(38,0)/HUGEINT.
-    "q186_docs_collocations" -> ((s, dir) => {
-      TermStats.collocations(t(s, dir, "documents"), "doc_id", "text",
-          minCount = 5L, topK = 100)
-        .orderBy(col("lift_e6").desc, col("w1"), col("w2"))
-    }),
-
-    // stupid-backoff trigram fluency (r11, VERDICT r10 #3): the
-    // higher-order LM screen — counts-only backoff (Brants 2007)
-    // needs no renormalization, the published at-scale choice; the
-    // α = 2/5 ppm arithmetic is all-BIGINT so the driver hashes the
-    // full result. Same train/score split as q184; model = three
-    // count frames joined by token keys, never broadcast.
-    "q187_docs_lm_trigram" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val lm = LanguageModel.trainTrigram(
-        docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-      LanguageModel.scoreFluency3Ppm(docs, lm, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // perceptual image dedup (r11, VERDICT r10 #4): dHash over REAL
-    // decoded pixels, Hamming-banded pair join — catches the
-    // resized/re-encoded copies byte-exact dedup (q23) misses. Plants:
-    // factor-2 nearest resizes (re-encoded BMPs at the new geometry,
-    // negative ids — the q182 convention) hash identically because the
-    // 8×8 sample grid lands on the same source pixels (see
-    // Multimodal.perceptualHashes); the oracle recomputes the full
-    // hash/band/Hamming chain from the source bytes, so the
-    // approximate result is value-checked exactly (q31/q44 style).
-    "q188_image_phash_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal.bmpFromText(s, t(s, dir, "documents"),
-        "doc_id", "text", width = 16)
-      val plants = Multimodal.resizeNearest(
-          media.filter(_.media_id % 9 == 0), outWidth = 8)
-        .map(r => Multimodal.MediaRecord(-r.media_id - 1L, "image", r.payload,
-          r.out_width, r.out_height, 0L))
-      val hashes = Multimodal.perceptualHashes(media.union(plants))
-      Multimodal.perceptualPairs(hashes.toDF(), "dhash", maxHamming = 3)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("long").as("hamming"))
-        .orderBy(col("media_a"), col("media_b"))
-    }),
-
-    // contrastive importance selection (r11): the DSIR / CCNet
-    // data-selection loop — score every document against a TARGET-
-    // domain LM (trained on the lang='en' slice) and a RAW-pool LM
-    // (trained on the doc_id % 3 hash sample), keep the top 300‰ by
-    // the integer contrast. One corpus explode scores both models
-    // (scoreContrastPpm); the cut is exact top-m by (contrast DESC,
-    // doc_id) via the bounded score-histogram (selectTopPermille) —
-    // no global row sort at 100 TB.
-    "q189_docs_importance_select" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val lmT = LanguageModel.train(
-        docs.filter(col("lang") === "en"), "doc_id", "text")
-      val lmR = LanguageModel.train(
-        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
-      val scored = LanguageModel.scoreContrastPpm(
-        docs, lmT, lmR, "doc_id", "text")
-      Sampling.selectTopPermille(scored, "contrast_ppm", "doc_id", 300)
-        .select(col("doc_id"), col("n_bigrams"), col("target_ppm"),
-          col("raw_ppm"), col("contrast_ppm"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // trained quality classifier (r11): the fastText-style "resembles
-    // the reference corpus" screen as fixed-point logistic regression
-    // — hard-sigmoid link, integer micro-unit weights, three batch-GD
-    // passes over the doc_id % 2 labeled slice (label: lang = 'en'),
-    // then EVERY document scored. All divisions floor on both engines
-    // (Classifier.fdiv), gradients sum in DECIMAL(38,0)/HUGEINT, so
-    // training and inference hash identically.
-    "q190_docs_quality_classifier" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val feat = Classifier.docFeatures(
-        docs.withColumn("label", (col("lang") === "en").cast("long")),
-        "doc_id", "text", keep = Seq("label"))
-      val model = Classifier.trainLogistic(
-        feat.filter(col("doc_id") % 2 === 0),
-        Seq("x0", "x1", "x2", "x3"), "label", iters = 3)
-      Classifier.scoreLogistic(feat, model, Seq("x0", "x1", "x2", "x3"))
-        .select(col("doc_id"), col("label"), col("score_ppm"),
-          col("predicted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // distributed BPE merge training (r11): tokenizer induction as a
-    // data-parallel loop — the corpus touched ONCE (word-frequency
-    // groupBy), then every merge iteration runs on the vocabulary-
-    // sized word table; only the winning pair crosses the driver per
-    // iteration. The wrapped-symbol-string representation makes each
-    // merge a single codegen'd literal replace with the same greedy
-    // left-to-right semantics in both engines (see Bpe scaladoc), so
-    // the six learned rules AND the post-merge symbol totals hash
-    // bit-for-bit against the unrolled-CTE oracle.
-    "q191_docs_bpe_merges" -> ((s, dir) => {
-      val words = Bpe.wordCounts(t(s, dir, "documents"), "text")
-      Bpe.trainDf(s, words, nMerges = 6).orderBy(col("merge_rank"))
-    }),
-
-    // BPE encoding under the learned rules (r11): the replace chain
-    // applied to the word TABLE (never re-scanning the corpus),
-    // exploded symbols weighted by word count — the top of the learned
-    // vocabulary with exact weighted frequencies.
-    "q192_docs_bpe_encode" -> ((s, dir) => {
-      // one corpus pass total: the vocab-sized word table feeds both
-      // the merge loop and the final encode from local blocks
-      val words = Bpe.wordCounts(t(s, dir, "documents"), "text")
-        .localCheckpoint()
-      val rules = Bpe.train(words, nMerges = 6)
-      Bpe.encode(words, rules.map(r => (r.left_sym, r.right_sym)))
-        .orderBy(col("tcount").desc, col("token")).limit(50)
-    }),
-
-    // maximal repeated-span mining (r11): the ExactSubstr dedup shape
-    // (Lee et al. 2022) — per document, the maximal token runs whose
-    // every 10-token window occurs >= 2 times anywhere in the corpus
-    // (cross-document or within-document). Plants: the 30-token
-    // prefix of every doc_id % 11 == 0 document re-issued as a new
-    // document (span-derived collision-free ids), guaranteeing
-    // cross-document verbatim runs the miner must recover exactly.
-    // The engine exchanges only (doc_id, pos, 64-bit gram hash); the
-    // oracle recomputes with literal gram strings — equal absent
-    // 64-bit collisions (the fingerprints precedent).
-    "q193_docs_repeated_spans" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val plants = d.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + off).as("doc_id"),
-          expr("array_join(slice(filter(split(trim(text), '\\\\s+'), " +
-            "x -> x != ''), 1, 30), ' ')").as("text"))
-      val all = d.select(col("doc_id"), col("text")).unionByName(plants)
-      Dedup.repeatedSpans(all, "doc_id", "text", w = 10)
-        .orderBy(col("doc_id"), col("span_start"))
-    }),
-
-    // deterministic corpus shuffle + shard assignment (r11): every
-    // document gets a pseudorandom reproducible position (md5 order)
-    // and an equal-count shard; the global index is computed with the
-    // Ids split (hex-prefix buckets + within-bucket rank) so no
-    // corpus-sized single-partition window exists. Output: the exact
-    // assignment on a deterministic sample slice.
-    "q194_docs_shuffle_shards" -> ((s, dir) => {
-      val assigned = Sharding.shuffleShards(
-        t(s, dir, "documents"), "doc_id", "text", nShards = 8)
-      assigned.filter(col("doc_id") % 37 === 0)
-        .select(col("doc_id"), col("global_idx"), col("shard_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // shard balance audit (r11): what equal-COUNT sharding does to
-    // TOKEN balance — per-shard doc and token totals, the number the
-    // training loop actually feeds on.
-    "q195_docs_shard_balance" -> ((s, dir) => {
-      val assigned = Sharding.shuffleShards(
-        t(s, dir, "documents"), "doc_id", "text", nShards = 8)
-      Sharding.shardBalance(assigned).orderBy(col("shard_id"))
-    }),
-
-    // exact-substring dedup, keep-first (r11): the removal mode of
-    // Lee et al. 2022 over q193's windowed construction — every token
-    // position covered by a NON-first occurrence of a repeated
-    // 10-window is dropped (first = globally smallest (doc_id, pos)),
-    // documents rebuilt from survivors. The planted prefix copies
-    // (higher ids than their originals) must vanish entirely while
-    // the originals survive verbatim.
-    "q197_docs_exact_substring_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val off = plantOffset(d, "doc_id") // collision-free at any scale (r11)
-      val plants = d.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + off).as("doc_id"),
-          expr("array_join(slice(filter(split(trim(text), '\\\\s+'), " +
-            "x -> x != ''), 1, 30), ' ')").as("text"))
-      val all = d.select(col("doc_id"), col("text")).unionByName(plants)
-      Dedup.removeRepeatedSpans(all, "doc_id", "text", w = 10)
-        .orderBy(col("doc_id"))
-    }),
-
-    // end-to-end pretraining preprocessing (r11): the full pipeline a
-    // training run actually executes, composed from the catalog's own
-    // operators and verified as ONE artifact — exact dedup (keep-min
-    // per md5), quality screen (>= 10 tokens), target domain mixture
-    // (40/30/20/10 via mixToTarget's maximal-total quota), then
-    // deterministic shuffle-sharding; output is the training manifest:
-    // per (shard, source) document and token totals. Every stage is
-    // individually oracle-checked elsewhere (q23/q24/q103/q194) — this
-    // pins their COMPOSITION, where stage-boundary drift would hide.
-    "q198_docs_pretrain_pipeline" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val kept = d.join(
-        Dedup.exact(d, "doc_id", "text").select(col("keep_id").as("doc_id")),
-        Seq("doc_id"), "left_semi")
-      val quality = kept.filter(
-        expr("size(filter(split(trim(text), '\\\\s+'), x -> x != ''))") >= 10)
-      val mixed = Sampling.mixToTarget(quality, "source", "doc_id",
-        Map("src0" -> 400000L, "src1" -> 300000L,
-          "src2" -> 200000L, "src3" -> 100000L))
-      val assigned = Sharding.shuffleShards(mixed, "doc_id", "text", nShards = 4)
-      assigned.join(mixed.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .groupBy(col("shard_id"), col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-        .orderBy(col("shard_id"), col("source"))
-    }),
-
-    // trained char-trigram language ID (r11): the Cavnar-Trenkle rank
-    // profile classifier — profiles induced from the doc_id % 2 = 0
-    // labeled slice, every document scored by the integer out-of-place
-    // distance, argmin with (dist, lang) tie-break. The TRAINED twin
-    // of the heuristic lang-id (q22 family); profiles are bounded at
-    // languages x k rows, the one legitimately-broadcast side.
-    "q196_docs_langid_trained" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val profiles = LangId.trainProfiles(
-        d.filter(col("doc_id") % 2 === 0), "lang", "doc_id", "text", k = 64)
-      LangId.classify(d, profiles, "doc_id", "text", docTopN = 32, k = 64)
-        .orderBy(col("doc_id"))
-    }),
-
-    // multimodal curation e2e (r14, the q198-style composition for the
-    // image side): synthesize BMPs from text (q33's corpus), plant
-    // factor-2 resized copies (q188's plant set), perceptual-dedup on
-    // banded dhash pairs — greedy drop of every media_b, so the
-    // smaller id of a near-pair survives (plants' negative ids beat
-    // their sources) — then an integer brightness gate on the DECODED
-    // stats (mean byte ≥ 90, cross-multiplied: Σbytes ≥ 3·n_pixels·90
-    // — no division), resize the keepers to width 8 (q147 geometry;
-    // identity for the already-8-wide plants) and manifest per-image
-    // integer sums. Every stage is oracle-proven alone
-    // (q33/q188/q147); this row pins the COMPOSITION, like q198 does
-    // for the text side. Payloads never shuffle except as dedup
-    // survivors; every hash/sum/gate is integer-exact on both engines.
-    "q200_multimodal_curation_e2e" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal.bmpFromText(s, t(s, dir, "documents"),
-        "doc_id", "text", width = 16)
-      val plants = Multimodal.resizeNearest(
-          media.filter(_.media_id % 9 == 0), outWidth = 8)
-        .map(r => Multimodal.MediaRecord(-r.media_id - 1L, "image", r.payload,
-          r.out_width, r.out_height, 0L))
-      val corpus = media.union(plants)
-      val dropped = Multimodal.perceptualPairs(
-          Multimodal.perceptualHashes(corpus).toDF(), "dhash", maxHamming = 3)
-        .select(col("media_b").as("media_id")).distinct()
-      val survivors = corpus.toDF()
-        .join(dropped, Seq("media_id"), "left_anti")
-        .as[Multimodal.MediaRecord]
-      val bright = Multimodal.imageStats(survivors).toDF()
-        .filter(col("sum_b") + col("sum_g") + col("sum_r")
-          >= col("n_pixels") * (3L * 90L))
-        .select(col("media_id"))
-      val gated = survivors.toDF()
-        .join(bright, Seq("media_id"), "left_semi")
-        .as[Multimodal.MediaRecord]
-      Multimodal.imageStats(
-          Multimodal.resizeNearest(gated, outWidth = 8)
-            .map(r => Multimodal.MediaRecord(r.media_id, "image", r.payload,
-              r.out_width, r.out_height, 0L)))
-        .toDF()
-        .select(col("media_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("n_pixels"),
-          (col("sum_b") + col("sum_g") + col("sum_r")).as("sum_bytes"))
-        .orderBy(col("media_id"))
-    }),
-  )
-
-  // ---------------------------------------------------------------
-  // DuckDB oracles. Omitted only where the op is not expressible in
-  // portable SQL (MinHash/SimHash/LSH/ANN/multimodal) → driver records
-  // rows-only checks; the list is at the end of this map. Exact
-  // cosine ranking IS expressible (q29/q30 via list_cosine_similarity).
-  // ---------------------------------------------------------------
-
-  /** Bounded exact all-pairs token-3-gram Jaccard (q70/q73): docs with
-    * id < 100 plus planted near-copies (id+200000, " tail token"
-    * appended). Returns (all docs, pairs ≥ 0.5). Shingle-hash sets
-    * stand in for literal gram sets — 64-bit collision odds are
-    * negligible at this cardinality, so sizes/intersections/quotients
-    * agree with the oracle's literal grams exactly.
-    */
-  private def exactJaccardPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val d = t(s, dir, "documents").filter(col("doc_id") < 100)
-      .select(col("doc_id"), col("text"))
-    val mutated = d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 200000L).as("doc_id"),
-        concat(col("text"), lit(" tail token")).as("text"))
-    val all = d.unionByName(mutated)
-    val sets = all
-      .select(col("doc_id"),
-        graft.expressions.GraftFunctions.shingleSet(col("text"), 3, charLevel = false).as("sh"))
-      .filter(size(col("sh")) > 0)
-    // Deliberate bounded all-pairs baseline — the banded twins
-    // (q26/q28, Dedup.minHashNearDups) are the scale path. Hard-stop
-    // if a future testdata change grows the bounded subset, so the
-    // cross join can't silently go quadratic.
-    val nDocs = all.count()
-    require(nDocs <= 10000,
-      s"exact all-pairs Jaccard baseline is bounded to 10K docs (got $nDocs); " +
-        "use the banded near-dup operators for larger inputs")
-    val a = sets.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
-    val pairs = a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
-      .withColumn("jaccard",
-        graft.expressions.GraftFunctions.jaccardSorted(col("sha"), col("shb")))
-      .filter(col("jaccard") >= 0.5)
-    (all, pairs)
-  }
-
-  /** Shared by q44 (in-flight), q72 (persisted index), and q134
-    * (append-maintained index): identical parameters ⇒ identical
-    * results, so one oracle value-checks all three — the index ≡
-    * in-flight equivalence becomes part of the driver gate. The SQL is
-    * GENERATED from the same `Similarity.quantDims` the operator uses
-    * (1-indexed sign tests), so the quantizer dims, probe ranking, and
-    * probe budget cannot drift between engine and oracle. Probe rule
-    * (r7, replacing multi-probe flip costs): lists rank by cosine
-    * proximity of the query to each list's integer centroid —
-    * component means of ⌊v·10⁴⌋ by exact floor division, score
-    * s2/√t2 compared via sign cases + cross-multiplied squares in
-    * HUGEINT (mirrors Spark's DECIMAL(38,0)), zero-centroid lists
-    * excluded, list_id breaking exact ties. Same 48-of-128 probe
-    * budget as r6; measured recall@5 0.72 → 0.86/0.79 at sf0.01/sf0.1.
-    */
-  /** q190's oracle: the fixed-point logistic-regression training loop
-    * (Classifier.trainLogistic) unrolled to `iters` CTE pairs. Every
-    * arithmetic step mirrors the engine exactly — ppm features with
-    * truncating divisions, hard-sigmoid clamp, HUGEINT gradient sums (the
-    * DECIMAL(38,0) twin), and DuckDB's `//`, which truncates toward
-    * zero on signed operands just like the engine's tdiv/BigInt
-    * convention.
-    */
-  private def logisticOracleSql(iters: Int): String = {
-    val fs = Seq("x0", "x1", "x2", "x3")
-    def g(alias: String) = fs.map(c => s"g_$c").mkString(", ")
-    def zOf(w: String) = fs.map(c => s"$w.w_$c * $c").mkString(" + ")
-    def sigma(w: String) =
-      s"GREATEST(0, LEAST(1000000, 500000 + ((${zOf(w)}) // 1000000) // 4))"
-    val sb = new StringBuilder
-    sb.append(
-      """WITH f AS (
-        |  SELECT doc_id,
-        |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        |         CAST(1000000 AS BIGINT) AS x0,
-        |         CAST(stop * 1000000 // GREATEST(ntok, 1) AS BIGINT) AS x1,
-        |         CAST(alpha * 1000000 // GREATEST(len, 1) AS BIGINT) AS x2,
-        |         CAST(LEAST(len, 2000) * 500 AS BIGINT) AS x3
-        |  FROM (
-        |    SELECT doc_id, lang, length(text) AS len,
-        |           length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-        |           CASE WHEN length(trim(text)) = 0 THEN 0
-        |                ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |           len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-        |               x -> list_contains(['the','a','and','of','to','in','is','that','it','for'], x))) AS stop
-        |    FROM documents)
-        |), tr AS (SELECT * FROM f WHERE doc_id % 2 = 0
-        |), n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tr
-        |), g1 AS (
-        |  SELECT """.stripMargin)
-    sb.append(fs.map(c =>
-      s"SUM(CAST(500000 - y * 1000000 AS HUGEINT) * $c) AS g_$c").mkString(",\n         "))
-    sb.append("\n  FROM tr\n), w1 AS (\n  SELECT ")
-    sb.append(fs.map(c =>
-      s"0 - (4 * g_$c) // (n.n * 1000000) AS w_$c").mkString(",\n         "))
-    sb.append("\n  FROM g1, n\n)")
-    for (t <- 2 to iters) {
-      val prev = s"w${t - 1}"
-      sb.append(s", e$t AS (\n")
-      sb.append(s"  SELECT tr.*, CAST(${sigma(prev)} - y * 1000000 AS HUGEINT) AS err\n")
-      sb.append(s"  FROM tr, $prev\n), g$t AS (\n  SELECT ")
-      sb.append(fs.map(c => s"SUM(err * $c) AS g_$c").mkString(",\n         "))
-      sb.append(s"\n  FROM e$t\n), w$t AS (\n  SELECT ")
-      sb.append(fs.map(c =>
-        s"$prev.w_$c - (4 * g_$c) // (n.n * 1000000) AS w_$c").mkString(",\n         "))
-      sb.append(s"\n  FROM g$t, $prev, n\n)")
-    }
-    val wf = s"w$iters"
-    sb.append(
-      s"""
-         |SELECT doc_id, label, score_ppm,
-         |       CAST(CASE WHEN score_ppm >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS predicted
-         |FROM (
-         |  SELECT f.doc_id, CAST(f.y AS BIGINT) AS label,
-         |         CAST(${sigma(wf)} AS BIGINT) AS score_ppm
-         |  FROM f, $wf)
-         |ORDER BY doc_id""".stripMargin)
-    sb.toString
-  }
-
-  /** The BPE merge loop unrolled as chained CTEs (q191/q192): w{i} is
-    * the word table after i merges in the engine's wrapped-symbol
-    * representation, p{i} the weighted adjacent-pair counts, m{i} the
-    * deterministic argmax (count DESC, pair ASC), and the merge
-    * application is DuckDB's literal `replace` — which scans left to
-    * right, non-overlapping, exactly like Spark's `StringReplace`, so
-    * the greedy BPE semantics match by construction (see Bpe
-    * scaladoc). `encode = false` emits the six rules with post-merge
-    * symbol totals; `encode = true` applies all rules and emits the
-    * top-50 learned vocabulary with exact weighted counts.
-    */
-  private def bpeOracleSql(nMerges: Int, encode: Boolean): String = {
-    val sb = new StringBuilder
-    sb.append(
-      """WITH tok AS (
-        |  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents
-        |), wc AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS wcount
-        |  FROM tok WHERE word <> '' GROUP BY 1
-        |), w0 AS (
-        |  SELECT left(s, length(s) - 1) AS sym, wcount
-        |  FROM (SELECT ' ' || regexp_replace(word, '(.)', '\1  ', 'g') AS s,
-        |               wcount
-        |        FROM wc)
-        |)""".stripMargin)
-    for (i <- 0 until nMerges) {
-      sb.append(s""", p$i AS (
-        |  SELECT a[j] AS l, a[j+1] AS r, CAST(SUM(wcount) AS BIGINT) AS cnt
-        |  FROM (SELECT string_split(trim(sym), '  ') AS a, wcount FROM w$i),
-        |       UNNEST(generate_series(1, len(a) - 1)) AS t(j)
-        |  GROUP BY 1, 2
-        |), m$i AS (
-        |  SELECT l, r, cnt FROM p$i ORDER BY cnt DESC, l, r LIMIT 1
-        |), w${i + 1} AS (
-        |  SELECT replace(sym, ' ' || m.l || '  ' || m.r || ' ',
-        |                 ' ' || m.l || m.r || ' ') AS sym, wcount
-        |  FROM w$i, m$i m
-        |)""".stripMargin)
-      if (!encode) sb.append(s""", s${i + 1} AS (
-        |  SELECT CAST(SUM(wcount * len(string_split(trim(sym), '  '))) AS BIGINT) AS st
-        |  FROM w${i + 1}
-        |)""".stripMargin)
-    }
-    if (encode) {
-      sb.append(s"""
-        |SELECT token, tcount FROM (
-        |  SELECT token, CAST(SUM(wcount) AS BIGINT) AS tcount
-        |  FROM (SELECT unnest(string_split(trim(sym), '  ')) AS token, wcount
-        |        FROM w$nMerges)
-        |  GROUP BY 1)
-        |ORDER BY tcount DESC, token LIMIT 50""".stripMargin)
-    } else {
-      val rows = (0 until nMerges).map(i =>
-        s"""  SELECT CAST(${i + 1} AS BIGINT) AS merge_rank, m$i.l AS left_sym,
-           |         m$i.r AS right_sym, m$i.cnt AS pair_count, s${i + 1}.st AS symbol_total
-           |  FROM m$i, s${i + 1}""".stripMargin)
-      sb.append("\nSELECT * FROM (\n")
-      sb.append(rows.mkString("\n  UNION ALL\n"))
-      sb.append("\n)\nORDER BY merge_rank")
-    }
-    sb.toString
-  }
-
-  /** The ANN auto-budget params as ONE SQL CTE (`ap`), mirroring
-    * `Similarity.autoQuantBits` / `probeBudget` / `autoAdcRerank`
-    * exactly: the ENGINE side of every ANN catalog query derives its
-    * quantizer width, probe count and rerank cut from the corpus
-    * count, so a FIXED-constant oracle only matches at driver scales
-    * (n ≤ 2 000 ⇒ bits 7 — the r13 sf10 sweep caught exactly this:
-    * q134 hash-FAILed at n = 200 000 where the engine runs 512 lists
-    * / 192 probes against a 128/48 oracle). This CTE recomputes the
-    * same integers from `COUNT(*) OVER embeddings`:
-    *   bl   = ceil(log2 n)            (floor(log2(n-1))+1; exact —
-    *                                   log2 of a power of two is
-    *                                   IEEE-exact, so no FP edge)
-    *   bits = min(max(7, (bl+1)//2), 16)           [autoQuantBits]
-    *   np_P = max(1, (1<<bits)·P // 1000)          [probeBudget @ P‰]
-    *   rk   = min(max(96, n//100), 1024)           [autoAdcRerank]
-    * All four catalog permilles (63/188/375/438) are emitted so one
-    * shape serves every caller; scalar subqueries on `ap` fold to
-    * constants in DuckDB.
-    */
-  /** The probe permilles `annParamsCte` emits `np_P` columns for.
-    * `signIvfProbeCtes` / `recallCalibrationOracleSql` interpolate
-    * `np_$p` column names from their arguments, so a permille outside
-    * this set would generate SQL referencing a nonexistent column —
-    * a binder error at oracle RUN time, far from the call site. Both
-    * generators `require` membership instead (fail at CATALOG-BUILD
-    * time, at the offending call).
-    */
-  private val annPermilles: Seq[Int] = Seq(63, 188, 375, 438)
-
-  private val annParamsCte: String = {
-    val nps = annPermilles.map(p =>
-      s"       GREATEST(1, ((CAST(1 AS BIGINT) << bits) * $p) // 1000) AS np_$p").mkString(",\n")
-    s"""ap AS (
-       |  SELECT n, bits,
-       |$nps,
-       |       LEAST(GREATEST(96, n // 100), 1024) AS rk
-       |  FROM (
-       |    SELECT n, CAST(LEAST(GREATEST(7,
-       |        ((CASE WHEN n <= 1 THEN 0
-       |          ELSE CAST(floor(log2(CAST(n - 1 AS DOUBLE))) AS BIGINT) + 1
-       |          END) + 1) // 2), 16) AS INTEGER) AS bits
-       |    FROM (SELECT COUNT(*) AS n FROM embeddings) t0) t1
-       |)""".stripMargin
-  }
-
-  /** The sign-quantizer list id as a bits-ADAPTIVE expression: one
-    * generated branch per realizable `autoQuantBits` value (7 → n ≤
-    * 8 192 … 10 → n ≤ 1 048 576, each branch's plane positions from
-    * the same `Similarity.quantDims` the engine strides), switched on
-    * `ap.bits` at runtime. Beyond the generated branches the CASE
-    * falls to a CAST that raises — a corpus past ~1M vectors fails
-    * LOUDLY rather than bucketing with a silently wrong layout (the
-    * engine itself has no such limit; regenerate with more branches).
-    */
-  private def adaptiveBucket(v: String, dim: Int): String = {
-    val branches = (7 to 10).map { bits =>
-      val expr = Similarity.quantDims(dim, bits).zipWithIndex.map {
-        case (d, j) => s"(CASE WHEN $v[$d] > 0 THEN ${1L << j} ELSE 0 END)"
-      }.mkString("\n         + ")
-      s"""       WHEN (SELECT bits FROM ap) = $bits THEN
-         |           $expr""".stripMargin
-    }.mkString("\n")
-    s"""(CASE
-       |$branches
-       |       ELSE CAST('graft oracle: corpus needs quantizer bits > 10 (n > ~1M); regenerate adaptiveBucket with more branches' AS INTEGER)
-       |       END)""".stripMargin
-  }
-
-  /** The sign-IVF probe as a reusable CTE chain (ap, q, c, cl, …,
-    * probe): `signIvfOracleSql` closes it with the exact-cosine
-    * ranking; `ivfAdcOracleSql` (q175) splices the PQ CTEs between the
-    * probe and its own ranking. One generator, so the probe arithmetic
-    * cannot drift between the two oracles. Quantizer width and probe
-    * count come from the `ap` params CTE (scale-adaptive — see
-    * [[annParamsCte]]); `permille` picks which probe fraction the cut
-    * uses (375 for the sign-IVF family, 438 for ADC).
-    */
-  private[graft] def signIvfProbeCtes(
-      dim: Int, permille: Int,
-      centroidWhere: String = "", queryLimit: Option[Int] = None): String = {
-    require(annPermilles.contains(permille),
-      s"signIvfProbeCtes: permille=$permille has no np_$permille column in " +
-        s"annParamsCte (emitted set: ${annPermilles.mkString(",")}) — add it " +
-        "there or the oracle SQL binds against a nonexistent column")
-    val scale = Similarity.centroidScale
-    def bucket(v: String) = adaptiveBucket(v, dim)
-    // `centroidWhere` restricts the POPULATION the centroids are
-    // computed from (q179's frozen-at-build-time coarse quantizer);
-    // empty = centroids over the whole corpus (q44/q72/q134/q175...).
-    val cw = if (centroidWhere.isEmpty) "" else s"\n  WHERE $centroidWhere"
-    // q199's sampled sweep: hash-priority sample of the query set —
-    // md5 of the id STRING is the one priority hash both engines
-    // compute identically (Spark has xxhash64, DuckDB does not)
-    val ql = queryLimit
-      .map(mq => s"\n  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id\n  LIMIT $mq")
-      .getOrElse("")
-    s"""$annParamsCte, q AS (
-       |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-       |  FROM embeddings WHERE vec_id % 50 = 0$ql
-       |), c AS (
-       |  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-       |), cl AS (
-       |  SELECT neighbor_id, cv,
-       |         ${bucket("cv")} AS list_id
-       |  FROM c
-       |), cs AS (
-       |  SELECT list_id, pos,
-       |         SUM(CAST(floor(cv[CAST(pos AS INTEGER)] * $scale) AS BIGINT)) AS s,
-       |         COUNT(*) AS cnt
-       |  FROM cl CROSS JOIN generate_series(1, $dim) AS g(pos)$cw
-       |  GROUP BY list_id, pos
-       |), cm AS (
-       |  SELECT list_id, pos, (s - ((s % cnt) + cnt) % cnt) // cnt AS m FROM cs
-       |), ct AS (
-       |  SELECT list_id, SUM(m * m) AS t2 FROM cm GROUP BY list_id
-       |  HAVING SUM(m * m) > 0
-       |), qi AS (
-       |  SELECT query_id, pos,
-       |         CAST(floor(qv[CAST(pos AS INTEGER)] * $scale) AS BIGINT) AS qx
-       |  FROM q CROSS JOIN generate_series(1, $dim) AS g(pos)
-       |), sc AS (
-       |  SELECT qi.query_id, cm.list_id,
-       |         SUM(qi.qx * cm.m) AS s2, ANY_VALUE(ct.t2) AS t2
-       |  FROM qi JOIN cm ON qi.pos = cm.pos
-       |  JOIN ct ON cm.list_id = ct.list_id
-       |  GROUP BY qi.query_id, cm.list_id
-       |), pr AS (
-       |  SELECT a.query_id, a.list_id,
-       |         SUM(CASE
-       |           WHEN b.s2 >= 0 AND a.s2 < 0 THEN 1
-       |           WHEN b.s2 < 0 AND a.s2 >= 0 THEN 0
-       |           WHEN b.s2 >= 0 AND a.s2 >= 0
-       |                AND CAST(b.s2 AS HUGEINT) * b.s2 * a.t2
-       |                  > CAST(a.s2 AS HUGEINT) * a.s2 * b.t2 THEN 1
-       |           WHEN b.s2 < 0 AND a.s2 < 0
-       |                AND CAST(b.s2 AS HUGEINT) * b.s2 * a.t2
-       |                  < CAST(a.s2 AS HUGEINT) * a.s2 * b.t2 THEN 1
-       |           WHEN (b.s2 >= 0) = (a.s2 >= 0)
-       |                AND CAST(b.s2 AS HUGEINT) * b.s2 * a.t2
-       |                  = CAST(a.s2 AS HUGEINT) * a.s2 * b.t2
-       |                AND b.list_id < a.list_id THEN 1
-       |           ELSE 0 END) AS nbetter
-       |  FROM sc a JOIN sc b ON a.query_id = b.query_id
-       |  GROUP BY a.query_id, a.list_id
-       |), probe AS (
-       |  SELECT query_id, list_id FROM pr WHERE nbetter < (SELECT np_$permille FROM ap)
-       |)""".stripMargin
-  }
-
-  // simd precomputes the narrow sort key BELOW the window so DuckDB's
-  // window sort carries (query_id, neighbor_id, simk) instead of the
-  // two dim-double arrays per candidate row — at sf10 (|Q| = 4 000,
-  // ~300 M candidate rows) the inline form sorts ~300 GB and OOMs the
-  // sandbox; this form runs in ~40 s with zero spill. Same integers.
-  private def signIvfOracleSql(dim: Int, k: Int): String =
-    s"""WITH ${signIvfProbeCtes(dim, permille = 375)}, simd AS (
-       |  SELECT probe.query_id, cl.neighbor_id,
-       |         floor(list_cosine_similarity(q.qv, cl.cv) * 1000000) AS simk
-       |  FROM probe
-       |  JOIN q ON probe.query_id = q.query_id
-       |  JOIN cl USING (list_id)
-       |  WHERE probe.query_id <> cl.neighbor_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY simk DESC, neighbor_id) AS rank
-       |  FROM simd
-       |)
-       |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  private val signIvfOracle: String = signIvfOracleSql(dim = 64, k = 5)
-
-  /** q174: PQ/ADC emulation. GENERATED from the same
-    * `Similarity.pqBlocks` the operator uses, so sub-vector layout,
-    * sign codes, integer codebooks (floor-scaled sums, positive-
-    * remainder floor division), the per-query lookup table, ADC
-    * ranking (ties on neighbor_id), the rerank-boundary cut, and the
-    * 1e-6-grid cosine re-rank cannot drift between engine and oracle.
-    * All products live in BIGINT (|qx·mc| ≤ 10⁸, summed over ≤ 64
-    * positions); DuckDB's SUM widens to HUGEINT harmlessly.
-    */
-  /** The PQ arithmetic as a reusable CTE chain (pcodes → pcs → pcm →
-    * pqi → psc), referencing the q/c CTEs the caller's WITH already
-    * defines. Names are p-prefixed so the chain composes with the
-    * sign-IVF probe chain (q175) without collisions.
-    */
-  private def pqCtes(dim: Int, m: Int): String = {
-    val blocks = Similarity.pqBlocks(dim, m)
-    val w = dim / m
-    val scale = Similarity.centroidScale
-    def codeExpr(v: String, b: Seq[Int]) = b.zipWithIndex.map { case (d, j) =>
-      s"(CASE WHEN $v[$d] > 0 THEN ${1L << j} ELSE 0 END)"
-    }.mkString("\n         + ")
-    val codeBranches = blocks.zipWithIndex.map { case (b, j) =>
-      s"""  SELECT neighbor_id, cv, $j AS sub,
-         |         ${codeExpr("cv", b)} AS code
-         |  FROM c""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    s"""pcodes AS (
-       |$codeBranches
-       |), pcs AS (
-       |  SELECT sub, code, pp,
-       |         SUM(CAST(floor(cv[CAST(sub * $w + pp AS INTEGER)] * $scale) AS BIGINT)) AS s,
-       |         COUNT(*) AS cnt
-       |  FROM pcodes CROSS JOIN generate_series(1, $w) AS g(pp)
-       |  GROUP BY sub, code, pp
-       |), pcm AS (
-       |  SELECT sub, code, pp, (s - ((s % cnt) + cnt) % cnt) // cnt AS mc FROM pcs
-       |), pqi AS (
-       |  SELECT query_id, sub, pp,
-       |         CAST(floor(qv[CAST(sub * $w + pp AS INTEGER)] * $scale) AS BIGINT) AS qx
-       |  FROM q
-       |  CROSS JOIN generate_series(0, ${m - 1}) AS sg(sub)
-       |  CROSS JOIN generate_series(1, $w) AS g(pp)
-       |), psc AS (
-       |  SELECT query_id, sub, code, SUM(qx * mc) AS sjc
-       |  FROM pqi JOIN pcm USING (sub, pp)
-       |  GROUP BY query_id, sub, code
-       |)""".stripMargin
-  }
-
-  /** Shared ADC→re-rank oracle tail: rank `adc` (query_id,
-    * neighbor_id, adc), cut at `rerankSql` (a literal for the pinned
-    * PQ baselines, `(SELECT rk FROM ap)` for the auto-scaled IVFADC
-    * family), exact-cosine re-rank to k. The rsim CTE keeps the
-    * re-rank window's sort input narrow (ids + integer key, not the
-    * two dim-double arrays — the q134/sf10 OOM lesson). The topr cut
-    * happens in two steps: a CONSTANT `r <= 1024` first (1024 =
-    * autoAdcRerank's cap, so always a superset of the real cut) —
-    * DuckDB's streaming top-N-through-window optimization only fires
-    * on constant comparands, and without it the window SORTS the full
-    * candidate stream (~350 M rows / >70 GB of spill at sf10); the
-    * adaptive `rerankSql` filter then runs on ≤ 1024·|Q| rows.
-    */
-  private def adcRerankSql(rerankSql: String, k: Int): String =
-    s"""topr AS (
-       |  SELECT query_id, neighbor_id, r FROM (
-       |    SELECT query_id, neighbor_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |             ORDER BY adc DESC, neighbor_id) AS r
-       |    FROM adc)
-       |  WHERE r <= 1024
-       |), rsim AS (
-       |  SELECT t.query_id, t.neighbor_id,
-       |         floor(list_cosine_similarity(q.qv, c.cv) * 1000000) AS simk
-       |  FROM topr t
-       |  JOIN q ON t.query_id = q.query_id
-       |  JOIN c ON t.neighbor_id = c.neighbor_id
-       |  WHERE t.r <= $rerankSql
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY simk DESC, neighbor_id) AS rank
-       |  FROM rsim
-       |)
-       |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
-
-  private lazy val pqAdcOracle: String =
-    pqAdcOracleSql(dim = 64, m = 8, rerank = 64, k = 5)
-
-  // The ADC score as a dense per-query LUT ARRAY indexed per row — the
-  // SQL mirror of the engine's ScatterLut/AdcLookupSum kernel: the
-  // (sub, code)-keyed join + |Q|·n-group SUM materializes |pairs|·m
-  // rows through a giant hash aggregate (~140 GB of agg/spill state at
-  // sf10 — it exhausted RAM + disk in the r13 sweep, the same cliff
-  // the ENGINE hit and fixed in r11). Here each query folds its
-  // per-(sub, code) sjc into one m·2^w array, each neighbor its m
-  // codes into one array, and the score is m in-row lookups — the only
-  // large relation is the narrow (query_id, neighbor_id, adc) stream.
-  // Semantics identical: every neighbor code exists in the codebook by
-  // construction, so the join matched all m subs; COALESCE(0) only
-  // fills grid cells no neighbor can hit.
-  private def pqAdcOracleSql(dim: Int, m: Int, rerank: Int, k: Int): String = {
-    val w = dim / m
-    val cCount = 1L << w
-    val adcSum = (0 until m).map(s =>
-      s"lt[${s * cCount} + cds[${s + 1}] + 1]").mkString("\n       + ")
-    s"""WITH q AS (
-       |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-       |  FROM embeddings WHERE vec_id % 50 = 0
-       |), c AS (
-       |  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-       |), ${pqCtes(dim, m)}, lutd AS (
-       |  SELECT q.query_id, sg.sub, cg.code, COALESCE(psc.sjc, 0) AS sjc
-       |  FROM q
-       |  CROSS JOIN generate_series(0, ${m - 1}) AS sg(sub)
-       |  CROSS JOIN generate_series(0, ${cCount - 1}) AS cg(code)
-       |  LEFT JOIN psc ON psc.query_id = q.query_id
-       |              AND psc.sub = sg.sub AND psc.code = cg.code
-       |), lut AS (
-       |  SELECT query_id, list(sjc ORDER BY sub * $cCount + code) AS lt
-       |  FROM lutd GROUP BY query_id
-       |), ncodes AS (
-       |  SELECT neighbor_id, list(code ORDER BY sub) AS cds
-       |  FROM pcodes GROUP BY neighbor_id
-       |), adc AS (
-       |  SELECT lut.query_id, ncodes.neighbor_id,
-       |         $adcSum AS adc
-       |  FROM lut CROSS JOIN ncodes
-       |  WHERE lut.query_id <> ncodes.neighbor_id
-       |), ${adcRerankSql(rerank.toString, k)}""".stripMargin
-  }
-
-  /** q175: residual-encoded IVFADC (canonical FAISS composition, r9).
-    * The q44 probe CTEs select the candidate lists; corpus vectors are
-    * PQ-coded as integer RESIDUALS against their own list centroid
-    * (`cm` — the UNFILTERED per-(list, pos) centroid the probe chain
-    * already computes); the ADC score decomposes the inner product as
-    * exact-list-constant + quantized-residual: ⟨q, c_L⟩ (the `lc` CTE,
-    * exact integer dot) + Σⱼ⟨q_j, r̂_code_j⟩ (residual-codebook
-    * lookups). Every piece reuses the probe chain's own CTEs, so the
-    * composition cannot drift from its parents; all arithmetic is
-    * integer-exact (|rx| ≤ 2·10⁴, products ≤ 4·10⁸, sums ≤ 2·10¹⁰ —
-    * BIGINT everywhere, HUGEINT only inside DuckDB SUMs).
-    */
-  /** The residual-PQ arithmetic as a reusable CTE chain (rres →
-    * rcodes → rcb → rcm → rsc), referencing the probe chain's cl/cm/qi
-    * CTEs. Shared by q175 (IVFADC) and q177 (calibration sweep) so the
-    * residual codebook arithmetic cannot drift between them.
-    */
-  private def residualPqCtes(dim: Int, m: Int): String = {
-    val w = dim / m
-    val scale = Similarity.centroidScale
-    s"""rres AS (
-       |  SELECT cl.neighbor_id, cl.list_id, g.pos,
-       |         CAST(floor(cl.cv[CAST(g.pos AS INTEGER)] * $scale) AS BIGINT)
-       |           - COALESCE(cm.m, 0) AS rx
-       |  FROM cl CROSS JOIN generate_series(1, $dim) AS g(pos)
-       |  LEFT JOIN cm ON cm.list_id = cl.list_id AND cm.pos = g.pos
-       |), rcodes AS (
-       |  SELECT neighbor_id, list_id, CAST((pos - 1) // $w AS INTEGER) AS sub,
-       |         SUM(CASE WHEN rx > 0
-       |             THEN (CAST(1 AS BIGINT) << CAST((pos - 1) % $w AS INTEGER))
-       |             ELSE 0 END) AS code
-       |  FROM rres GROUP BY 1, 2, 3
-       |), rcb AS (
-       |  SELECT rc.sub, rc.code, CAST((rr.pos - 1) % $w AS INTEGER) + 1 AS pp,
-       |         SUM(rr.rx) AS s, COUNT(*) AS cnt
-       |  FROM rres rr
-       |  JOIN rcodes rc ON rc.neighbor_id = rr.neighbor_id
-       |   AND rc.sub = CAST((rr.pos - 1) // $w AS INTEGER)
-       |  GROUP BY 1, 2, 3
-       |), rcm AS (
-       |  SELECT sub, code, pp, (s - ((s % cnt) + cnt) % cnt) // cnt AS mc FROM rcb
-       |), rsc AS (
-       |  SELECT qi.query_id, rcm.sub, rcm.code, SUM(qi.qx * rcm.mc) AS sjc
-       |  FROM qi JOIN rcm ON rcm.sub = CAST((qi.pos - 1) // $w AS INTEGER)
-       |                  AND rcm.pp = CAST((qi.pos - 1) % $w AS INTEGER) + 1
-       |  GROUP BY 1, 2, 3
-       |)""".stripMargin
-  }
-
-  /** The residual-ADC LUT pair (rlut + rncodes CTEs, in-row sum expr)
-    * — the dense-array scoring shared by the IVFADC oracle and the
-    * calibration sweep, same rationale as [[pqAdcOracleSql]]'s LUT:
-    * the (sub, code) join + candidate-grouped SUM is the memory cliff
-    * at sf10; m in-row array lookups per candidate are not.
-    */
-  private def residualAdcLut(dim: Int, m: Int): (String, String) = {
-    val w = dim / m
-    val cCount = 1L << w
-    val ctes =
-      s"""rlutd AS (
-         |  SELECT q.query_id, sg.sub, cg.code, COALESCE(rsc.sjc, 0) AS sjc
-         |  FROM q
-         |  CROSS JOIN generate_series(0, ${m - 1}) AS sg(sub)
-         |  CROSS JOIN generate_series(0, ${cCount - 1}) AS cg(code)
-         |  LEFT JOIN rsc ON rsc.query_id = q.query_id
-         |              AND rsc.sub = sg.sub AND rsc.code = cg.code
-         |), rlut AS (
-         |  SELECT query_id, list(sjc ORDER BY sub * $cCount + code) AS rlt
-         |  FROM rlutd GROUP BY query_id
-         |), rncodes AS (
-         |  SELECT neighbor_id, list(code ORDER BY sub) AS rcds
-         |  FROM rcodes GROUP BY neighbor_id
-         |)""".stripMargin
-    val sumExpr = (0 until m).map(s =>
-      s"rlt[CAST(${s * cCount} + rcds[${s + 1}] + 1 AS BIGINT)]").mkString("\n       + ")
-    (ctes, sumExpr)
-  }
-
-  private def ivfAdcOracleSql(
-      dim: Int, m: Int, k: Int,
-      centroidWhere: String = ""): String = {
-    val (rlutCtes, rSum) = residualAdcLut(dim, m)
-    s"""WITH ${signIvfProbeCtes(dim, permille = 438, centroidWhere)}, ${residualPqCtes(dim, m)}, $rlutCtes, lc AS (
-       |  SELECT probe.query_id, probe.list_id, SUM(qi.qx * cm.m) AS lc
-       |  FROM probe
-       |  JOIN qi ON qi.query_id = probe.query_id
-       |  JOIN cm ON cm.list_id = probe.list_id AND cm.pos = qi.pos
-       |  GROUP BY 1, 2
-       |), cand AS (
-       |  SELECT probe.query_id, cl.neighbor_id, cl.list_id
-       |  FROM probe JOIN cl USING (list_id)
-       |  WHERE probe.query_id <> cl.neighbor_id
-       |), adcr AS (
-       |  SELECT cand.query_id, cand.neighbor_id, cand.list_id,
-       |         $rSum AS rs
-       |  FROM cand
-       |  JOIN rlut ON rlut.query_id = cand.query_id
-       |  JOIN rncodes ON rncodes.neighbor_id = cand.neighbor_id
-       |), adc AS (
-       |  SELECT adcr.query_id, adcr.neighbor_id, adcr.rs + lc.lc AS adc
-       |  FROM adcr JOIN lc ON lc.query_id = adcr.query_id AND lc.list_id = adcr.list_id
-       |), ${adcRerankSql("(SELECT rk FROM ap)", k)}""".stripMargin
-  }
-
-  /** q180: the frozen-quantizer servability audit, recomputed from the
-    * corpus. Bucket arithmetic and centroid t2 test are GENERATED from
-    * the same `Similarity.quantDims`/`centroidScale` the operator
-    * uses; `baseWhere` is the build-subset predicate (q179's split).
-    */
-  private def ivfAdcServabilityOracleSql(
-      dim: Int, baseWhere: String): String = {
-    val scale = Similarity.centroidScale
-    val bucket = adaptiveBucket("cv", dim)
-    s"""WITH $annParamsCte, c AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-       |), cl AS (
-       |  SELECT vec_id,
-       |         $bucket AS list_id,
-       |         ($baseWhere) AS is_base
-       |  FROM c
-       |), counts AS (
-       |  SELECT list_id,
-       |         CAST(SUM(CASE WHEN is_base THEN 1 ELSE 0 END) AS BIGINT) AS built_rows,
-       |         CAST(SUM(CASE WHEN NOT is_base THEN 1 ELSE 0 END) AS BIGINT) AS appended_rows
-       |  FROM cl GROUP BY list_id
-       |), cs AS (
-       |  SELECT cl.list_id, pos,
-       |         SUM(CAST(floor(c.cv[CAST(pos AS INTEGER)] * $scale) AS BIGINT)) AS s,
-       |         COUNT(*) AS cnt
-       |  FROM cl JOIN c USING (vec_id)
-       |  CROSS JOIN generate_series(1, $dim) AS g(pos)
-       |  WHERE cl.is_base
-       |  GROUP BY 1, 2
-       |), cm AS (
-       |  SELECT list_id, pos, (s - ((s % cnt) + cnt) % cnt) // cnt AS m FROM cs
-       |), ct AS (
-       |  SELECT list_id FROM cm GROUP BY list_id HAVING SUM(m * m) > 0
-       |)
-       |SELECT counts.list_id, built_rows, appended_rows,
-       |       (ct.list_id IS NOT NULL) AS servable
-       |FROM counts LEFT JOIN ct ON counts.list_id = ct.list_id
-       |ORDER BY counts.list_id""".stripMargin
-  }
-
-  /** q183: the blocked decontamination screen recomputed with the same
-    * sign-bucket arithmetic (generated from `Similarity.quantDims`, so
-    * engine and oracle cannot drift) — the approximate result is
-    * value-checked exactly, q31/q44-style.
-    */
-  private def decontaminateBlockedOracleSql(
-      dim: Int, thresholdE6: Long): String = {
-    def bucket(v: String) = adaptiveBucket(v, dim)
-    s"""WITH $annParamsCte, bl AS (
-       |  SELECT CAST(embedding AS DOUBLE[]) AS bv,
-       |         ${bucket("CAST(embedding AS DOUBLE[])")} AS list_id
-       |  FROM embeddings WHERE vec_id % 37 = 0
-       |), tr AS (
-       |  SELECT vec_id AS train_id, CAST(embedding AS DOUBLE[]) AS tv
-       |  FROM embeddings WHERE vec_id % 37 <> 0
-       |  UNION ALL
-       |  SELECT -vec_id - 1, CAST(embedding AS DOUBLE[])
-       |  FROM embeddings WHERE vec_id % 37 = 0
-       |), tl AS (
-       |  SELECT train_id, tv, ${bucket("tv")} AS list_id FROM tr
-       |)
-       |SELECT train_id, CAST(COUNT(*) AS BIGINT) AS n_bench_matches
-       |FROM tl JOIN bl USING (list_id)
-       |WHERE floor(list_cosine_similarity(tv, bv) * 1000000) >= $thresholdE6
-       |GROUP BY train_id
-       |ORDER BY train_id""".stripMargin
-  }
-
-  /** q177: the recall-vs-nProbe calibration sweep. One probe chain at
-    * the WIDEST grid budget (its `pr` CTE carries the cut-free
-    * `nbetter` rank) plus one residual-PQ chain serve every grid
-    * point; each point is a filter + window. Ground truth is q29's
-    * brute-force ranking. Everything integer: hits and n_pairs are
-    * counts, so the whole curve hashes exactly.
-    *
-    * ADC scoring here uses the SPARSE (sub, code)-keyed join
-    * (cand × rcodes × rsc, |cand|·m rows), NOT the dense rlut list of
-    * [[residualAdcLut]]: this generator's |Q| is bounded by design
-    * (q199 samples 24 queries; q177 runs only at driver scales), so
-    * |cand|·m stays ~17 M at sf10 — while DuckDB's plan for the dense
-    * list joined into the candidate stream under the sampled TOP_N
-    * query set degraded to a cross product that materialized the
-    * 16 KB per-query LUT per candidate row: >77 GB of spill, the r14
-    * sweep's only oracle death. The dense LUT remains the right shape
-    * for the big-|Q| family oracles (q174/q175/q178/q179/q181), where
-    * |cand|·m is ~2.8 B and the sparse join is the thing that dies.
-    */
-  private[graft] def recallCalibrationOracleSql(
-      dim: Int, gridPermilles: Seq[Int], m: Int, k: Int,
-      queryLimit: Option[Int] = None): String = {
-    require(gridPermilles.nonEmpty && gridPermilles.forall(annPermilles.contains),
-      s"recallCalibrationOracleSql: gridPermilles ${gridPermilles.mkString(",")} " +
-        s"must all have np_ columns in annParamsCte (emitted set: " +
-        s"${annPermilles.mkString(",")})")
-    // grid points are probe FRACTIONS (permille of the list count) —
-    // the denomination the engine sweeps (probeBudget(bits, p)); the
-    // absolute probe counts come from the adaptive `ap` CTE so the
-    // sweep's x-axis scales with the quantizer exactly as the engine's
-    val maxP = gridPermilles.max
-    val pointCtes = gridPermilles.map { p =>
-      s"""s_p$p AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY ck DESC, neighbor_id) AS rank
-         |    FROM cand WHERE nbetter < (SELECT np_$p FROM ap))
-         |  WHERE rank <= $k
-         |), asurv_p$p AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY adc DESC, neighbor_id) AS r
-         |    FROM adca WHERE nbetter < (SELECT np_$p FROM ap))
-         |  WHERE r <= (SELECT rk FROM ap)
-         |), atop_p$p AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT a.query_id, a.neighbor_id,
-         |           row_number() OVER (PARTITION BY a.query_id
-         |             ORDER BY cand.ck DESC, a.neighbor_id) AS rank
-         |    FROM asurv_p$p a
-         |    JOIN cand ON cand.query_id = a.query_id
-         |             AND cand.neighbor_id = a.neighbor_id)
-         |  WHERE rank <= $k
-         |)""".stripMargin
-    }.mkString(", ")
-    val pointRows = gridPermilles.flatMap { p =>
-      Seq(
-        s"""SELECT 'sign_ivf' AS family, CAST((SELECT np_$p FROM ap) AS INTEGER) AS n_probe,
-           |  (SELECT COUNT(*) FROM s_p$p JOIN truth USING (query_id, neighbor_id)) AS hits,
-           |  (SELECT n_pairs FROM npairs) AS n_pairs""".stripMargin,
-        s"""SELECT 'ivfadc' AS family, CAST((SELECT np_$p FROM ap) AS INTEGER) AS n_probe,
-           |  (SELECT COUNT(*) FROM atop_p$p JOIN truth USING (query_id, neighbor_id)) AS hits,
-           |  (SELECT n_pairs FROM npairs) AS n_pairs""".stripMargin)
-    }.mkString("\nUNION ALL\n")
-    s"""WITH ${signIvfProbeCtes(dim, permille = maxP, queryLimit = queryLimit)}, ${residualPqCtes(dim, m)}, tsim AS (
-       |  SELECT query_id, neighbor_id,
-       |         floor(list_cosine_similarity(qv, cv) * 1000000) AS simk
-       |  FROM q CROSS JOIN c WHERE query_id <> neighbor_id
-       |), truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |             ORDER BY simk DESC, neighbor_id) AS rank
-       |    FROM tsim)
-       |  WHERE rank <= $k
-       |), npairs AS (
-       |  SELECT COUNT(*) AS n_pairs FROM truth
-       |), cand AS (
-       |  SELECT pr.query_id, cl.neighbor_id, cl.list_id, pr.nbetter,
-       |         floor(list_cosine_similarity(q.qv, cl.cv) * 1000000) AS ck
-       |  FROM pr
-       |  JOIN q ON q.query_id = pr.query_id
-       |  JOIN cl ON cl.list_id = pr.list_id
-       |  WHERE pr.nbetter < (SELECT np_$maxP FROM ap) AND pr.query_id <> cl.neighbor_id
-       |), lc AS (
-       |  SELECT pr.query_id, pr.list_id, SUM(qi.qx * cm.m) AS lc
-       |  FROM pr
-       |  JOIN qi ON qi.query_id = pr.query_id
-       |  JOIN cm ON cm.list_id = pr.list_id AND cm.pos = qi.pos
-       |  WHERE pr.nbetter < (SELECT np_$maxP FROM ap)
-       |  GROUP BY 1, 2
-       |), adcr AS (
-       |  SELECT cand.query_id, cand.neighbor_id, cand.list_id, cand.nbetter,
-       |         CAST(SUM(COALESCE(rsc.sjc, 0)) AS BIGINT) AS rs
-       |  FROM cand
-       |  JOIN rcodes rc ON rc.neighbor_id = cand.neighbor_id
-       |  LEFT JOIN rsc ON rsc.query_id = cand.query_id
-       |              AND rsc.sub = rc.sub AND rsc.code = rc.code
-       |  GROUP BY 1, 2, 3, 4
-       |), adca AS (
-       |  SELECT adcr.query_id, adcr.neighbor_id, adcr.nbetter, adcr.rs + lc.lc AS adc
-       |  FROM adcr JOIN lc ON lc.query_id = adcr.query_id AND lc.list_id = adcr.list_id
-       |), $pointCtes
-       |$pointRows
-       |ORDER BY family, n_probe""".stripMargin
-  }
-
-  /** SQL emulation of the compiled hash kernels
-    * (`graft.expressions.Kernels`): FNV-1a 64 over bytes + a splitmix64
-    * finalizer, reproduced in DuckDB as HUGEINT mod-2^64 arithmetic.
-    * 64-bit wrap-around multiply doesn't exist in SQL, so each multiply
-    * is staged: for the 41-bit FNV prime the direct HUGEINT product
-    * stays under 2^105 and a single `% 2^64` suffices; for the two
-    * 64-bit splitmix constants the product is split 32/32
-    * (`a*c mod 2^64 = a*c_lo + ((a mod 2^32)*c_hi mod 2^32)*2^32`,
-    * every term < 2^97 — safely inside HUGEINT). mix64 references its
-    * argument twice per stage, so stages are materialized as CTE
-    * COLUMNS (single-use chains — vectorized, no duplicated subtrees:
-    * the lambda-per-byte formulation of the same oracle ran 66 s at
-    * sf0.01; this one runs ~3 s). All constants are EMBEDDED FROM THE
-    * KERNEL'S OWN VALUES at SQL-generation time, so engine and oracle
-    * cannot drift. Engine comparisons are on SIGNED longs, so values
-    * convert to signed before any MIN/MAX.
-    */
-  private object HashOracleSql {
-    private val M = "18446744073709551616" // 2^64
-    private val HALF = "9223372036854775808" // 2^63
-    private def u(x: Long): BigInt = BigInt(java.lang.Long.toUnsignedString(x))
-    private val FnvPrime = u(0x100000001B3L)
-    private val FnvInit = u(0xCBF29CE484222325L)
-    // (FNV_INIT * FNV_PRIME) mod 2^64 — the first multiply of the
-    // token-shingle combine, pre-folded (Long wrap ≡ mod 2^64).
-    private val FnvInitTimesPrime = u(0xCBF29CE484222325L * 0x100000001B3L)
-
-    /** One CTE column computing (v * c) mod 2^64. */
-    private def mulmod(v: String, c: BigInt, out: String): String = {
-      val cLo = c & 0xFFFFFFFFL
-      val cHi = c >> 32
-      if (cHi == 0) s"(($v) * $cLo) % $M AS $out"
-      else s"((($v) * $cLo + (($v) % 4294967296) * $cHi % 4294967296 * 4294967296) % $M) AS $out"
-    }
-
-    /** CTE chain applying mix64 to `invar` of CTE `src`; the result
-      * column is `out` on CTE `<prefix>5`. `//` is the unsigned shift
-      * (values are nonnegative HUGEINTs).
-      */
-    private def mix64Stages(src: String, invar: String, prefix: String, out: String): String =
-      s"""${prefix}1 AS (SELECT *, xor($invar, $invar // 1073741824) AS ${prefix}z1 FROM $src),
-         |${prefix}2 AS (SELECT *, ${mulmod(s"${prefix}z1", u(0xBF58476D1CE4E5B9L), s"${prefix}z2")} FROM ${prefix}1),
-         |${prefix}3 AS (SELECT *, xor(${prefix}z2, ${prefix}z2 // 134217728) AS ${prefix}z3 FROM ${prefix}2),
-         |${prefix}4 AS (SELECT *, ${mulmod(s"${prefix}z3", u(0x94D049BB133111EBL), s"${prefix}z4")} FROM ${prefix}3),
-         |${prefix}5 AS (SELECT *, xor(${prefix}z4, ${prefix}z4 // 2147483648) AS $out FROM ${prefix}4)""".stripMargin
-
-    private def toSigned(v: String): String =
-      s"CAST(CASE WHEN $v >= $HALF THEN $v - $M ELSE $v END AS BIGINT)"
-
-    /** FNV-1a over the k bytes at positions i..i+k-1 of doc column
-      * `cs` (HUGEINT byte codes), UNROLLED — one single-use expression
-      * chain per step, fully vectorized.
-      */
-    private def fnvUnrolled(k: Int): String = {
-      var h = s"CAST($FnvInit AS HUGEINT)"
-      for (j <- 0 until k) h = s"(xor($h, cs[i + $j]) * $FnvPrime) % $M"
-      h
-    }
-
-    /** q32: winnowing fingerprint stats (Kernels.winnow, k-gram size
-      * `k`, window `w`). Output (n, min, max) over the selected window
-      * minima is ORDER-FREE, so the first-occurrence-order dedup of
-      * the engine's fingerprint array doesn't need reproducing — only
-      * the selected SET, via a signed windowed MIN.
-      */
-    def winnowStats(k: Int, w: Int): String =
-      s"""WITH d AS (
-         |  SELECT doc_id, text, length(text) AS len FROM documents
-         |), codes AS (
-         |  SELECT doc_id, len,
-         |         list_transform(generate_series(1, len),
-         |           j -> CAST(ord(substr(text, CAST(j AS INTEGER), 1)) AS HUGEINT)) AS cs
-         |  FROM d
-         |), pos AS (
-         |  SELECT doc_id, cs, unnest(generate_series(1, len - ${k - 1})) AS i FROM codes
-         |), f0 AS (
-         |  SELECT doc_id, i, ${fnvUnrolled(k)} AS h FROM pos
-         |), ${mix64Stages("f0", "h", "f", "ghu")},
-         |g AS (
-         |  SELECT doc_id, i, ${toSigned("ghu")} AS gh FROM f5
-         |), cnt AS (
-         |  SELECT doc_id, COUNT(*) AS ng FROM g GROUP BY doc_id
-         |), wm AS (
-         |  SELECT g.doc_id, g.i, c.ng,
-         |         MIN(gh) OVER (PARTITION BY g.doc_id ORDER BY g.i
-         |                       ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS m
-         |  FROM g JOIN cnt c ON g.doc_id = c.doc_id
-         |), sel AS (
-         |  SELECT doc_id, m FROM wm WHERE ng >= $w AND i <= ng - ${w - 1}
-         |  UNION ALL
-         |  SELECT doc_id, MIN(gh) AS m
-         |  FROM g JOIN cnt USING (doc_id) WHERE ng < $w GROUP BY doc_id
-         |), fp AS (
-         |  SELECT doc_id, COUNT(DISTINCT m) AS n, MIN(m) AS mn, MAX(m) AS mx
-         |  FROM sel GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(COALESCE(fp.n, 0) AS BIGINT) AS n_fingerprints,
-         |       fp.mn AS min_fp, fp.mx AS max_fp
-         |FROM d LEFT JOIN fp USING (doc_id) ORDER BY doc_id""".stripMargin
-
-    /** q49: per-(source, lane) MinHash-union signature values
-      * (Kernels.minhash token n-grams + MinHashUnion elementwise min).
-      * Token hashes are computed once per DISTINCT token (the corpus
-      * vocabulary is small), then joined back to positions; lane seeds
-      * are `Kernels.permSeed(j)` verbatim. The group lane value is the
-      * signed min over every shingle of every member doc; a group with
-      * no shingles keeps the Long.MaxValue sentinel.
-      */
-    def minhashUnionLanes(n: Int, k: Int): String = {
-      val seedRows = (0 until k).map { j =>
-        s"SELECT $j AS lane, CAST(${u(graft.expressions.Kernels.permSeed(j))} AS HUGEINT) AS seed"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH d AS (
-         |  SELECT doc_id, source, text FROM documents
-         |), tk AS (
-         |  SELECT doc_id, source,
-         |         list_filter(string_split_regex(text, '[ \\t\\n\\r\\f]+'), x -> x <> '') AS toks
-         |  FROM d
-         |), tp AS (
-         |  SELECT doc_id, source, toks, unnest(generate_series(1, len(toks))) AS t FROM tk
-         |), tpos AS (
-         |  SELECT doc_id, source, t, toks[t] AS tok FROM tp
-         |), vocab AS (
-         |  SELECT DISTINCT tok FROM tpos
-         |), v0 AS (
-         |  SELECT tok, list_reduce(list_prepend(CAST($FnvInit AS HUGEINT),
-         |           list_transform(generate_series(1, length(tok)),
-         |             j -> CAST(ord(substr(tok, CAST(j AS INTEGER), 1)) AS HUGEINT))),
-         |           (h, b) -> (xor(h, b) * $FnvPrime) % $M) AS hv
-         |  FROM vocab
-         |), ${mix64Stages("v0", "hv", "v", "th")},
-         |tokh AS (
-         |  SELECT doc_id, source, t, th FROM tpos JOIN v5 USING (tok)
-         |), sh0 AS (
-         |  SELECT doc_id, source, t, th,
-         |         ${(1 until n).map(j => s"LEAD(th, $j) OVER (PARTITION BY doc_id ORDER BY t) AS th$j").mkString(",\n         ")}
-         |  FROM tokh
-         |), sh1 AS (
-         |  SELECT doc_id, source,
-         |         ${(1 until n).foldLeft(s"xor(CAST($FnvInitTimesPrime AS HUGEINT), th)") {
-                      (acc, j) => s"xor(($acc * $FnvPrime) % $M, th$j)"
-                    }} AS hs
-         |  FROM sh0 WHERE th${n - 1} IS NOT NULL
-         |), ${mix64Stages("sh1", "hs", "s", "sh")},
-         |lanes AS (
-         |  $seedRows
-         |), p0 AS (
-         |  SELECT source, lane, xor(sh, seed) AS hp FROM s5 CROSS JOIN lanes
-         |), ${mix64Stages("p0", "hp", "p", "pm")},
-         |gm AS (
-         |  SELECT source, lane, MIN(${toSigned("pm")}) AS msig
-         |  FROM p5 GROUP BY source, lane
-         |), nd AS (
-         |  SELECT source, COUNT(*) AS n_docs FROM d GROUP BY source
-         |)
-         |SELECT nd.source, CAST(l.lane AS BIGINT) AS lane,
-         |       COALESCE(gm.msig, 9223372036854775807) AS sig,
-         |       CAST(nd.n_docs AS BIGINT) AS n_docs
-         |FROM nd CROSS JOIN lanes l
-         |LEFT JOIN gm ON gm.source = nd.source AND gm.lane = l.lane
-         |ORDER BY nd.source, lane""".stripMargin
-    }
-  }
-
-  /** Shared by q33 (hand-rolled BMP codec) and q170 (javax.imageio
-    * PNG): both pack text byte i into pixel channel i mod 3 (B,G,R
-    * interleaved, zero-padded to 16-px rows) inside a REAL image
-    * container, and both formats are lossless — so one oracle states
-    * the geometry and exact per-channel sums for either codec, and a
-    * q33/q170 hash match doubles as a BmpCodec ≡ JDK-decoder
-    * cross-check at the driver.
-    */
-  /** q172 (full-width CSV round-trip): a lossless format round-trip
-    * must leave every aggregate unchanged, so the oracle is this
-    * aggregate over the parquet source.
-    */
-  private val lineitemRoundtripOracle: String =
-    """SELECT l_returnflag, l_linestatus,
-      |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-      |       COUNT(*) AS n_rows,
-      |       MAX(l_orderkey) AS max_orderkey,
-      |       strftime(MAX(l_shipdate), '%Y-%m-%d %H:%M:%S') AS max_ship
-      |FROM lineitem
-      |GROUP BY l_returnflag, l_linestatus
-      |ORDER BY l_returnflag, l_linestatus""".stripMargin
-
-  private val pixelSumsOracle: String =
-    """WITH d AS (
-      |  SELECT doc_id, text, length(text) AS len FROM documents
-      |), bytes AS (
-      |  SELECT doc_id, i, ord(substr(text, CAST(i AS INTEGER), 1)) AS v
-      |  FROM (SELECT doc_id, text, unnest(generate_series(1, len)) AS i FROM d)
-      |), sums AS (
-      |  SELECT doc_id,
-      |         SUM(CASE WHEN (i - 1) % 3 = 0 THEN v ELSE 0 END) AS sum_b,
-      |         SUM(CASE WHEN (i - 1) % 3 = 1 THEN v ELSE 0 END) AS sum_g,
-      |         SUM(CASE WHEN (i - 1) % 3 = 2 THEN v ELSE 0 END) AS sum_r
-      |  FROM bytes GROUP BY doc_id
-      |)
-      |SELECT d.doc_id AS media_id,
-      |       CAST(16 AS BIGINT) AS width,
-      |       CAST(GREATEST((d.len + 47) // 48, 1) AS BIGINT) AS height,
-      |       CAST(16 * GREATEST((d.len + 47) // 48, 1) AS BIGINT) AS n_pixels,
-      |       CAST(COALESCE(s.sum_b, 0) AS BIGINT) AS sum_b,
-      |       CAST(COALESCE(s.sum_g, 0) AS BIGINT) AS sum_g,
-      |       CAST(COALESCE(s.sum_r, 0) AS BIGINT) AS sum_r
-      |FROM d LEFT JOIN sums s USING (doc_id)
-      |ORDER BY media_id""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    "q44_emb_ann_ivf" -> signIvfOracle,
-    "q72_emb_ann_ivf_index" -> signIvfOracle,
-    // q32/q49: hash-kernel emulation oracles — FNV-1a + splitmix64 as
-    // HUGEINT mod-2^64 SQL, constants generated from the kernels
-    // themselves (HashOracleSql). Every fingerprint/signature VALUE is
-    // checked, not just row counts.
-    "q32_docs_fingerprint" -> HashOracleSql.winnowStats(k = 8, w = 4),
-    "q49_minhash_union_agg" -> HashOracleSql.minhashUnionLanes(n = 3, k = 16),
-    // lang-id: same stopword tables, same argmax/tiebreak order
-    // (en > fr > es > de, 'und' when nothing hits, CJK ⇒ zh); hits are
-    // DISTINCT stopwords present (Spark array_intersect semantics),
-    // en_stop_tokens is the multiset count.
-    "q25_docs_lang_id" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |         regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |  FROM documents
-        |), h AS (
-        |  SELECT doc_id, text, toks,
-        |    len(list_filter(['the','a','and','of','to','in','is','that','it','for'], s -> list_contains(toks, s))) AS he,
-        |    len(list_filter(['le','la','les','de','et','un','une','est','que','pour'], s -> list_contains(toks, s))) AS hf,
-        |    len(list_filter(['el','la','los','de','y','un','una','es','que','para'], s -> list_contains(toks, s))) AS hs,
-        |    len(list_filter(['der','die','das','und','ein','eine','ist','zu','den','von'], s -> list_contains(toks, s))) AS hd
-        |  FROM t
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g')) > 0 THEN 'zh'
-        |       WHEN he >= hf AND he >= hs AND he >= hd AND he > 0 THEN 'en'
-        |       WHEN hf >= he AND hf >= hs AND hf >= hd AND hf > 0 THEN 'fr'
-        |       WHEN hs >= he AND hs >= hf AND hs >= hd AND hs > 0 THEN 'es'
-        |       WHEN hd >= he AND hd >= hf AND hd >= hs AND hd > 0 THEN 'de'
-        |       ELSE 'und' END AS detected_lang,
-        |  CAST(len(list_filter(toks, x -> list_contains(['the','a','and','of','to','in','is','that','it','for'], x))) AS BIGINT) AS en_stop_tokens,
-        |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(toks) END AS BIGINT) AS n_tokens
-        |FROM h ORDER BY doc_id""".stripMargin,
-    // q33: the documents text is ASCII (verified across all SFs), so
-    // ord(substr(text, i, 1)) IS the payload byte; the BMP encoder
-    // places byte i (0-based) in channel i mod 3 (B,G,R) and pads the
-    // last row with zeros, which add nothing to the sums.
-    "q33_multimodal_features" -> pixelSumsOracle,
-    "q170_multimodal_png" -> pixelSumsOracle,
-    // q171: JPEG is lossy in VALUES but exact in GEOMETRY — the decoder
-    // returns precisely the encoded raster dimensions, which are pure
-    // integer arithmetic over the payload byte length (16-px rows of
-    // 3-byte pixels, zero-padded, minimum one row).
-    "q171_multimodal_jpeg" ->
-      """SELECT doc_id AS media_id,
-        |       CAST(16 AS BIGINT) AS width,
-        |       CAST(GREATEST((length(text) + 47) // 48, 1) AS BIGINT) AS height,
-        |       CAST(16 * GREATEST((length(text) + 47) // 48, 1) AS BIGINT) AS n_pixels
-        |FROM documents
-        |ORDER BY media_id""".stripMargin,
-    // q172/q173: a lossless round-trip through another format must not
-    // change any aggregate, so the oracle is simply the same aggregate
-    // over the parquet source — a value mismatch isolates a defect in
-    // the tested writer/reader pair, not in the aggregate.
-    "q172_lineitem_csv_roundtrip" -> lineitemRoundtripOracle,
-    "q173_events_json_roundtrip" ->
-      """SELECT event_type,
-        |       COUNT(*) AS n_rows,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |       COUNT(DISTINCT user_id) AS n_users,
-        |       CAST(floor(epoch(MAX(ts))) AS BIGINT) AS max_ts_sec,
-        |       CAST(MAX(length(props)) AS BIGINT) AS max_props_len
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "q174_emb_ann_pq_adc" -> pqAdcOracle,
-    "q175_emb_ann_ivfadc" ->
-      ivfAdcOracleSql(dim = 64, m = 8, k = 5),
-    // q176 ≡ q174 at equal parameters by construction — one oracle
-    // value-checks both, making the equivalence itself part of the gate
-    "q176_emb_ann_pq_index" -> pqAdcOracle,
-    "q177_ann_recall_calibration" ->
-      recallCalibrationOracleSql(dim = 64, gridPermilles = Seq(63, 188, 438),
-        m = 8, k = 5),
-    // q199 ≡ q177 restricted to the md5-priority 24-query sample —
-    // same generator, one LIMIT: the sampled production-tuning path
-    // is value-checked by the same arithmetic as the exact twin
-    "q199_ann_recall_sampled" ->
-      recallCalibrationOracleSql(dim = 64, gridPermilles = Seq(63, 188, 438),
-        m = 8, k = 5, queryLimit = Some(24)),
-    // q178 ≡ q175 at equal parameters by construction — one oracle
-    // value-checks both, making the equivalence itself driver-checked
-    "q178_emb_ann_ivfadc_index" ->
-      ivfAdcOracleSql(dim = 64, m = 8, k = 5),
-    // q179: the SAME generator with the centroid population restricted
-    // to the build subset — the frozen-coarse-quantizer serving
-    // arithmetic (codes/codebook over everything, centroids from the
-    // build two-thirds) value-checked end to end
-    "q179_emb_ann_ivfadc_append" ->
-      ivfAdcOracleSql(dim = 64, m = 8, k = 5,
-        centroidWhere = "neighbor_id % 3 <> 0"),
-    // q180: the servability report recomputed from the corpus with the
-    // frozen-quantizer arithmetic (build = vec_id % 3 <> 0, q179's
-    // split) — index-on-disk ≡ corpus-derived is the checked claim
-    "q180_ann_ivfadc_servability" ->
-      ivfAdcServabilityOracleSql(dim = 64,
-        baseWhere = "vec_id % 3 <> 0"),
-    // q181 ≡ q179 with compaction in between — one oracle checks both,
-    // making compaction-invisibility itself driver-checked
-    "q181_ann_ivfadc_compacted" ->
-      ivfAdcOracleSql(dim = 64, m = 8, k = 5,
-        centroidWhere = "neighbor_id % 3 <> 0"),
-    // q182: exact brute-force screen, so the full flagged set is
-    // value-checked (cosines stay internal — only threshold-crossing
-    // counts are compared, stable far from the grid boundary)
-    "q182_emb_decontaminate" ->
-      """WITH b AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS bv
-        |  FROM embeddings WHERE vec_id % 37 = 0
-        |), tr AS (
-        |  SELECT vec_id AS train_id, CAST(embedding AS DOUBLE[]) AS tv
-        |  FROM embeddings WHERE vec_id % 37 <> 0
-        |  UNION ALL
-        |  SELECT -vec_id - 1, CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id % 37 = 0
-        |)
-        |SELECT train_id, CAST(COUNT(*) AS BIGINT) AS n_bench_matches
-        |FROM tr CROSS JOIN b
-        |WHERE floor(list_cosine_similarity(tv, bv) * 1000000) >= 950000
-        |GROUP BY train_id
-        |ORDER BY train_id""".stripMargin,
-    // q183: the same screen through the sign-bucket block join — the
-    // approximate candidate cut is pure sign tests, reproduced exactly
-    "q183_emb_decontaminate_blocked" ->
-      decontaminateBlockedOracleSql(dim = 64, thresholdE6 = 950000L),
-    // q184: add-one bigram LM trained on the doc_id % 5 <> 0 slice —
-    // every value is integer floor arithmetic (per-bigram ppm floored
-    // BEFORE the sum, the sum floored by the bigram count), so both
-    // engines agree on every boundary.
-    "q184_docs_lm_fluency" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |  FROM documents
-        |), b AS (
-        |  SELECT doc_id, ws[i] AS w1, ws[i] || ' ' || ws[i+1] AS bigram
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |), tb AS (
-        |  SELECT * FROM b WHERE doc_id % 5 <> 0
-        |), cb AS (
-        |  SELECT bigram, CAST(count(*) AS BIGINT) AS c_bigram FROM tb GROUP BY 1
-        |), cp AS (
-        |  SELECT w1, CAST(count(*) AS BIGINT) AS c_prefix FROM tb GROUP BY 1
-        |), v AS (
-        |  SELECT CAST(count(DISTINCT w) AS BIGINT) AS vs
-        |  FROM (SELECT unnest(ws) AS w FROM d WHERE doc_id % 5 <> 0)
-        |), sc AS (
-        |  SELECT b.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_bigrams,
-        |         CAST(SUM(CASE WHEN cb.c_bigram IS NULL THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS n_oov,
-        |         SUM((COALESCE(cb.c_bigram, 0) + 1) * 1000000
-        |             // (COALESCE(cp.c_prefix, 0) + vs)) AS ppm_sum
-        |  FROM b LEFT JOIN cb USING (bigram) LEFT JOIN cp USING (w1), v
-        |  GROUP BY 1
-        |)
-        |SELECT d.doc_id,
-        |       COALESCE(sc.n_bigrams, 0) AS n_bigrams,
-        |       COALESCE(sc.n_oov, 0) AS n_oov,
-        |       CASE WHEN COALESCE(sc.n_bigrams, 0) = 0 THEN 0
-        |            ELSE CAST(sc.ppm_sum // sc.n_bigrams AS BIGINT)
-        |       END AS fluency_ppm
-        |FROM d LEFT JOIN sc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // q185: the sign-IVF ranked CTE at k=10 (same probe chain as q44's
-    // oracle) joined against the brute-force true NN — per-query
-    // integer reciprocal rank, the ranking-quality twin of q177.
-    "q185_ann_retrieval_mrr" ->
-      s"""WITH ${signIvfProbeCtes(dim = 64, permille = 375)}, simd AS (
-         |  SELECT probe.query_id, cl.neighbor_id,
-         |         floor(list_cosine_similarity(q.qv, cl.cv) * 1000000) AS simk
-         |  FROM probe
-         |  JOIN q ON probe.query_id = q.query_id
-         |  JOIN cl USING (list_id)
-         |  WHERE probe.query_id <> cl.neighbor_id
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY simk DESC, neighbor_id) AS rank
-         |  FROM simd
-         |), ann AS (
-         |  SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
-         |), bsim AS (
-         |  SELECT q.query_id, c.neighbor_id,
-         |         floor(list_cosine_similarity(q.qv, c.cv) * 1000000) AS simk
-         |  FROM q CROSS JOIN c
-         |  WHERE q.query_id <> c.neighbor_id
-         |), bf AS (
-         |  SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY simk DESC, neighbor_id) AS tr
-         |  FROM bsim
-         |), truth AS (
-         |  SELECT query_id, neighbor_id FROM bf WHERE tr = 1
-         |), m AS (
-         |  SELECT t.query_id, CAST(COUNT(*) AS BIGINT) AS n_relevant,
-         |         MIN(a.rank) AS best
-         |  FROM truth t LEFT JOIN ann a USING (query_id, neighbor_id)
-         |  GROUP BY 1
-         |)
-         |SELECT query_id, n_relevant,
-         |       CAST(CASE WHEN best IS NULL THEN 0 ELSE 1 END AS BIGINT) AS found,
-         |       CAST(CASE WHEN best IS NULL THEN 0 ELSE 1000000 // best END AS BIGINT) AS rr_ppm
-         |FROM m ORDER BY query_id""".stripMargin,
-    // q186: word2phrase lift, all-integer with the delta-1 discount;
-    // the (lift DESC, w1, w2) total order makes the top-100 cut
-    // engine-stable.
-    "q186_docs_collocations" ->
-      """WITH d AS (
-        |  SELECT regexp_split_to_array(trim(text), '\s+') AS ws FROM documents
-        |), uni AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS c
-        |  FROM (SELECT unnest(ws) AS w FROM d) GROUP BY 1
-        |), tt AS (
-        |  SELECT CAST(SUM(c) AS BIGINT) AS t_tokens FROM uni
-        |), big AS (
-        |  SELECT ws[i] AS w1, ws[i+1] AS w2, CAST(count(*) AS BIGINT) AS c12
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= 5
-        |)
-        |SELECT big.w1, big.w2, big.c12,
-        |       CAST((CAST(big.c12 - 1 AS HUGEINT) * tt.t_tokens * 1000000)
-        |            // (CAST(c1.c AS HUGEINT) * c2.c) AS BIGINT) AS lift_e6
-        |FROM big
-        |JOIN uni c1 ON c1.w = big.w1
-        |JOIN uni c2 ON c2.w = big.w2
-        |CROSS JOIN tt
-        |ORDER BY lift_e6 DESC, big.w1, big.w2
-        |LIMIT 100""".stripMargin,
-    // q187: stupid-backoff trigram fluency — per-position score is the
-    // first live backoff level, floored before the per-doc sum, the
-    // sum floored by the trigram count; α = 2/5 exactly, so the three
-    // branches are ·10⁶, ·400000, ·160000 integer forms. A seen
-    // trigram implies its context bigram was seen and a seen backoff
-    // bigram implies c(w2) ≥ 1, so no branch divides by NULL.
-    "q187_docs_lm_trigram" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |  FROM documents
-        |), tp AS (
-        |  SELECT doc_id,
-        |         ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS tri,
-        |         ws[i] || ' ' || ws[i+1] AS ctx,
-        |         ws[i+1] || ' ' || ws[i+2] AS bi,
-        |         ws[i+1] AS w2, ws[i+2] AS w3
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 2)) AS t(i)
-        |), bp AS (
-        |  SELECT ws[i] || ' ' || ws[i+1] AS bigram
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE doc_id % 5 <> 0
-        |), up AS (
-        |  SELECT unnest(ws) AS w FROM d WHERE doc_id % 5 <> 0
-        |), c3 AS (
-        |  SELECT tri AS trigram, CAST(count(*) AS BIGINT) AS c_tri
-        |  FROM tp WHERE doc_id % 5 <> 0 GROUP BY 1
-        |), c2 AS (
-        |  SELECT bigram, CAST(count(*) AS BIGINT) AS c_bi FROM bp GROUP BY 1
-        |), c1 AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS c_uni FROM up GROUP BY 1
-        |), nn AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n FROM up
-        |), sc AS (
-        |  SELECT tp.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_trigrams,
-        |         CAST(SUM(CASE WHEN c3.c_tri IS NULL AND cb.c_bi IS NOT NULL
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_bo_bi,
-        |         CAST(SUM(CASE WHEN c3.c_tri IS NULL AND cb.c_bi IS NULL
-        |                        AND u3.c_uni IS NOT NULL
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_bo_uni,
-        |         CAST(SUM(CASE WHEN c3.c_tri IS NULL AND cb.c_bi IS NULL
-        |                        AND u3.c_uni IS NULL
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        |         SUM(CASE WHEN c3.c_tri IS NOT NULL
-        |                  THEN c3.c_tri * 1000000 // cx.c_bi
-        |                  WHEN cb.c_bi IS NOT NULL
-        |                  THEN cb.c_bi * 400000 // u2.c_uni
-        |                  WHEN u3.c_uni IS NOT NULL
-        |                  THEN u3.c_uni * 160000 // nn.n
-        |                  ELSE 0 END) AS ppm_sum
-        |  FROM tp
-        |  LEFT JOIN c3 ON tp.tri = c3.trigram
-        |  LEFT JOIN c2 cx ON tp.ctx = cx.bigram
-        |  LEFT JOIN c2 cb ON tp.bi = cb.bigram
-        |  LEFT JOIN c1 u2 ON tp.w2 = u2.w
-        |  LEFT JOIN c1 u3 ON tp.w3 = u3.w
-        |  CROSS JOIN nn
-        |  GROUP BY 1
-        |)
-        |SELECT d.doc_id,
-        |       COALESCE(sc.n_trigrams, 0) AS n_trigrams,
-        |       COALESCE(sc.n_bo_bi, 0) AS n_bo_bi,
-        |       COALESCE(sc.n_bo_uni, 0) AS n_bo_uni,
-        |       COALESCE(sc.n_oov, 0) AS n_oov,
-        |       CASE WHEN COALESCE(sc.n_trigrams, 0) = 0 THEN 0
-        |            ELSE CAST(sc.ppm_sum // sc.n_trigrams AS BIGINT)
-        |       END AS fluency3_ppm
-        |FROM d LEFT JOIN sc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // q188: the dHash chain recomputed from source bytes — BMP content
-    // is the text bytes zero-padded (the q33 byte-access pattern), the
-    // 8×8 grid samples pixel (2·gx, gy·h//8), grays are 3-byte sums,
-    // dhash bits compare horizontal neighbors. Plants (doc_id % 9 = 0,
-    // media_id = -doc_id-1) reuse the original's bits: the factor-2
-    // nearest resize samples the identical source pixels (engine
-    // scaladoc proves the index arithmetic), so this IS the plant's
-    // hash, not an assumption about it. MEMORY-FLAT SHAPE (r14): the
-    // 56 bit rows pack into ONE BIGINT per media (dh), Hamming is
-    // bit_count(xor) inline in the band join — never a 56-row-per-side
-    // reconstruction join — the Hamming filter runs BEFORE any dedup,
-    // and each pair is emitted only from its CANONICAL (first-
-    // matching) band, so no DISTINCT materializes the raw pair stream.
-    // At sf10 the padding-dominated top band holds a 30 k-image bucket
-    // (~1.7 B raw pairs): the prior shape OOM-killed DuckDB at 64 GB +
-    // 59 GB of spill; this one streams it. Same pair set (the engine
-    // mirrors the same canonical-band gate).
-    "q188_image_phash_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id, text, length(text) AS len,
-        |         GREATEST((length(text) + 47) // 48, 1) AS h
-        |  FROM documents
-        |), gi AS (
-        |  SELECT unnest(generate_series(0, 7)) AS i
-        |), grid AS (
-        |  SELECT d.doc_id, gy.i AS gy, gx.i AS gx,
-        |         (CASE WHEN ((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 1 <= d.len
-        |               THEN ord(substr(d.text, CAST(((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 1 AS INTEGER), 1)) ELSE 0 END)
-        |       + (CASE WHEN ((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 2 <= d.len
-        |               THEN ord(substr(d.text, CAST(((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 2 AS INTEGER), 1)) ELSE 0 END)
-        |       + (CASE WHEN ((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 3 <= d.len
-        |               THEN ord(substr(d.text, CAST(((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 3 AS INTEGER), 1)) ELSE 0 END)
-        |         AS g
-        |  FROM d CROSS JOIN gi gy CROSS JOIN gi gx
-        |), bits AS (
-        |  SELECT a.doc_id, a.gy * 7 + a.gx AS bit_idx,
-        |         CASE WHEN a.g > b.g THEN 1 ELSE 0 END AS bit
-        |  FROM grid a JOIN grid b
-        |    ON a.doc_id = b.doc_id AND a.gy = b.gy AND b.gx = a.gx + 1
-        |  WHERE a.gx < 7
-        |), dh AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(SUM(bit * (CAST(1 AS BIGINT) << bit_idx)) AS BIGINT) AS ph
-        |  FROM bits GROUP BY 1
-        |), media_hash AS (
-        |  SELECT media_id, ph FROM dh
-        |  UNION ALL
-        |  SELECT -media_id - 1, ph FROM dh WHERE media_id % 9 = 0
-        |), bands AS (
-        |  SELECT media_id, ph, t.b AS band,
-        |         (ph >> (t.b * 16)) & 65535 AS bh
-        |  FROM media_hash CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) t
-        |)
-        |SELECT l.media_id AS media_a, r.media_id AS media_b,
-        |       CAST(bit_count(xor(l.ph, r.ph)) AS BIGINT) AS hamming
-        |FROM bands l JOIN bands r
-        |  ON l.band = r.band AND l.bh = r.bh AND l.media_id < r.media_id
-        |WHERE bit_count(xor(l.ph, r.ph)) <= 3
-        |  AND l.band = (CASE WHEN (xor(l.ph, r.ph) & 65535) = 0 THEN 0
-        |                     WHEN ((xor(l.ph, r.ph) >> 16) & 65535) = 0 THEN 1
-        |                     WHEN ((xor(l.ph, r.ph) >> 32) & 65535) = 0 THEN 2
-        |                     ELSE 3 END)
-        |ORDER BY media_a, media_b""".stripMargin,
-    // q200: the q188 dhash-pair chain (verbatim CTEs) feeding a greedy
-    // drop of every media_b, then the brightness gate and the resized
-    // manifest — both from ONE byte-sum CTE: an original's gate total
-    // is all its bytes, a plant's gate total AND every survivor's
-    // resized sum are the EVEN-COLUMN bytes (factor-2 nearest resize
-    // samples cols 0,2,..,14, and resizing the already-8-wide plant is
-    // the identity — engine scaladoc proves the index arithmetic).
-    "q200_multimodal_curation_e2e" ->
-      """WITH d AS (
-        |  SELECT doc_id, text, length(text) AS len,
-        |         GREATEST((length(text) + 47) // 48, 1) AS h
-        |  FROM documents
-        |), gi AS (
-        |  SELECT unnest(generate_series(0, 7)) AS i
-        |), grid AS (
-        |  SELECT d.doc_id, gy.i AS gy, gx.i AS gx,
-        |         (CASE WHEN ((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 1 <= d.len
-        |               THEN ord(substr(d.text, CAST(((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 1 AS INTEGER), 1)) ELSE 0 END)
-        |       + (CASE WHEN ((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 2 <= d.len
-        |               THEN ord(substr(d.text, CAST(((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 2 AS INTEGER), 1)) ELSE 0 END)
-        |       + (CASE WHEN ((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 3 <= d.len
-        |               THEN ord(substr(d.text, CAST(((gy.i * d.h // 8) * 16 + 2 * gx.i) * 3 + 3 AS INTEGER), 1)) ELSE 0 END)
-        |         AS g
-        |  FROM d CROSS JOIN gi gy CROSS JOIN gi gx
-        |), bits AS (
-        |  SELECT a.doc_id, a.gy * 7 + a.gx AS bit_idx,
-        |         CASE WHEN a.g > b.g THEN 1 ELSE 0 END AS bit
-        |  FROM grid a JOIN grid b
-        |    ON a.doc_id = b.doc_id AND a.gy = b.gy AND b.gx = a.gx + 1
-        |  WHERE a.gx < 7
-        |), dh AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(SUM(bit * (CAST(1 AS BIGINT) << bit_idx)) AS BIGINT) AS ph
-        |  FROM bits GROUP BY 1
-        |), media_hash AS (
-        |  SELECT media_id, ph FROM dh
-        |  UNION ALL
-        |  SELECT -media_id - 1, ph FROM dh WHERE media_id % 9 = 0
-        |), bands AS (
-        |  SELECT media_id, ph, t.b AS band,
-        |         (ph >> (t.b * 16)) & 65535 AS bh
-        |  FROM media_hash CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) t
-        |), dropped AS (
-        |  SELECT DISTINCT r.media_id
-        |  FROM bands l JOIN bands r
-        |    ON l.band = r.band AND l.bh = r.bh AND l.media_id < r.media_id
-        |  WHERE bit_count(xor(l.ph, r.ph)) <= 3
-        |), bytes AS (
-        |  SELECT doc_id, ord(substr(text, CAST(i AS INTEGER), 1)) AS v,
-        |         ((i - 1) // 3) % 16 AS colx
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, len)) AS i FROM d)
-        |), sums AS (
-        |  SELECT doc_id, SUM(v) AS total,
-        |         SUM(CASE WHEN colx % 2 = 0 THEN v ELSE 0 END) AS even_total
-        |  FROM bytes GROUP BY doc_id
-        |), media AS (
-        |  SELECT doc_id AS media_id, doc_id, 16 AS w FROM d
-        |  UNION ALL
-        |  SELECT -doc_id - 1, doc_id, 8 FROM d WHERE doc_id % 9 = 0
-        |), kept AS (
-        |  SELECT m.media_id, m.doc_id, d.h
-        |  FROM media m
-        |  JOIN d USING (doc_id)
-        |  LEFT JOIN sums s USING (doc_id)
-        |  WHERE m.media_id NOT IN (SELECT media_id FROM dropped)
-        |    AND (CASE WHEN m.w = 16 THEN COALESCE(s.total, 0)
-        |              ELSE COALESCE(s.even_total, 0) END)
-        |        >= m.w * d.h * 270
-        |)
-        |SELECT k.media_id,
-        |       CAST(8 AS BIGINT) AS width,
-        |       CAST(k.h AS BIGINT) AS height,
-        |       CAST(8 * k.h AS BIGINT) AS n_pixels,
-        |       CAST(COALESCE(s.even_total, 0) AS BIGINT) AS sum_bytes
-        |FROM kept k LEFT JOIN sums s USING (doc_id)
-        |ORDER BY media_id""".stripMargin,
-    // q189: the q184 integer-ppm scoring form against BOTH models
-    // (target = lang='en' slice, raw = doc_id % 3 sample), contrast =
-    // difference of the two floored means; the 300‰ cut is top-m by
-    // (contrast DESC, doc_id) with m = count·300 // 1000 — the
-    // engine's histogram selection computes exactly that set.
-    "q189_docs_importance_select" ->
-      """WITH d AS (
-        |  SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS ws
-        |  FROM documents
-        |), b AS (
-        |  SELECT doc_id, ws[i] AS w1, ws[i] || ' ' || ws[i+1] AS bigram
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |), tb AS (
-        |  SELECT b.* FROM b JOIN d USING (doc_id) WHERE d.lang = 'en'
-        |), rb AS (
-        |  SELECT * FROM b WHERE doc_id % 3 = 0
-        |), cbt AS (
-        |  SELECT bigram, CAST(count(*) AS BIGINT) AS c_bt FROM tb GROUP BY 1
-        |), cpt AS (
-        |  SELECT w1, CAST(count(*) AS BIGINT) AS c_pt FROM tb GROUP BY 1
-        |), cbr AS (
-        |  SELECT bigram, CAST(count(*) AS BIGINT) AS c_br FROM rb GROUP BY 1
-        |), cpr AS (
-        |  SELECT w1, CAST(count(*) AS BIGINT) AS c_pr FROM rb GROUP BY 1
-        |), vt AS (
-        |  SELECT CAST(count(DISTINCT w) AS BIGINT) AS vs
-        |  FROM (SELECT unnest(ws) AS w FROM d WHERE lang = 'en')
-        |), vr AS (
-        |  SELECT CAST(count(DISTINCT w) AS BIGINT) AS vs
-        |  FROM (SELECT unnest(ws) AS w FROM d WHERE doc_id % 3 = 0)
-        |), sc AS (
-        |  SELECT b.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_bigrams,
-        |         SUM((COALESCE(cbt.c_bt, 0) + 1) * 1000000
-        |             // (COALESCE(cpt.c_pt, 0) + vt.vs)) AS sum_t,
-        |         SUM((COALESCE(cbr.c_br, 0) + 1) * 1000000
-        |             // (COALESCE(cpr.c_pr, 0) + vr.vs)) AS sum_r
-        |  FROM b LEFT JOIN cbt USING (bigram) LEFT JOIN cbr USING (bigram)
-        |         LEFT JOIN cpt USING (w1) LEFT JOIN cpr USING (w1), vt, vr
-        |  GROUP BY 1
-        |), scored AS (
-        |  SELECT d.doc_id,
-        |         COALESCE(sc.n_bigrams, 0) AS n_bigrams,
-        |         CASE WHEN COALESCE(sc.n_bigrams, 0) = 0 THEN 0
-        |              ELSE CAST(sc.sum_t // sc.n_bigrams AS BIGINT) END AS target_ppm,
-        |         CASE WHEN COALESCE(sc.n_bigrams, 0) = 0 THEN 0
-        |              ELSE CAST(sc.sum_r // sc.n_bigrams AS BIGINT) END AS raw_ppm
-        |  FROM d LEFT JOIN sc USING (doc_id)
-        |), m AS (
-        |  SELECT count(*) * 300 // 1000 AS m FROM scored
-        |)
-        |SELECT doc_id, n_bigrams, target_ppm, raw_ppm,
-        |       target_ppm - raw_ppm AS contrast_ppm
-        |FROM scored
-        |QUALIFY row_number() OVER (
-        |  ORDER BY target_ppm - raw_ppm DESC, doc_id) <= (SELECT m FROM m)
-        |ORDER BY doc_id""".stripMargin,
-    // q190: the fixed-point logistic training loop unrolled — each
-    // iteration is one CTE pair (gradient sums in HUGEINT, weight
-    // update with DuckDB's `//`, which truncates toward zero exactly
-    // like the engine's tdiv/BigInt convention on signed operands).
-    // Iteration 1 is closed-form (zero weights ⇒ σ = 500000
-    // everywhere).
-    "q190_docs_quality_classifier" -> logisticOracleSql(iters = 3),
-    // q191/q192: the BPE merge loop unrolled — merge application is
-    // literal replace on the wrapped symbol string, identical greedy
-    // semantics in both engines (see bpeOracleSql).
-    "q191_docs_bpe_merges" -> bpeOracleSql(nMerges = 6, encode = false),
-    "q192_docs_bpe_encode" -> bpeOracleSql(nMerges = 6, encode = true),
-    // q197: keep-first exact-substring dedup — literal grams, the
-    // first-occurrence cut via a rank window per gram, coverage from
-    // rank >= 2 occurrences only, rebuild by ordered string_agg.
-    "q197_docs_exact_substring_dedup" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_id,
-        |         array_to_string(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |                                     x -> x <> '')[1:30], ' ') AS text
-        |  FROM documents WHERE doc_id % 11 = 0
-        |), d AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM base WHERE length(trim(text)) > 0
-        |), g AS (
-        |  SELECT doc_id, i AS pos, array_to_string(toks[i:i+9], ' ') AS gram
-        |  FROM d, UNNEST(generate_series(1, len(toks) - 9)) AS t(i)
-        |), occ AS (
-        |  SELECT doc_id, pos,
-        |         row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-        |  FROM g
-        |), cov AS (
-        |  SELECT DISTINCT doc_id, p
-        |  FROM (SELECT doc_id, pos FROM occ WHERE rn >= 2),
-        |       UNNEST(generate_series(pos, pos + 9)) AS t(p)
-        |), tp AS (
-        |  SELECT doc_id, i AS p, toks[i] AS tok
-        |  FROM d, UNNEST(generate_series(1, len(toks))) AS t(i)
-        |), kept AS (
-        |  SELECT tp.doc_id,
-        |         string_agg(tp.tok, ' ' ORDER BY tp.p) AS cleaned,
-        |         CAST(count(*) AS BIGINT) AS n_kept
-        |  FROM tp ANTI JOIN cov ON tp.doc_id = cov.doc_id AND tp.p = cov.p
-        |  GROUP BY 1
-        |)
-        |SELECT d.doc_id, COALESCE(kept.cleaned, '') AS cleaned,
-        |       CAST(len(d.toks) - COALESCE(kept.n_kept, 0) AS BIGINT) AS n_removed
-        |FROM d LEFT JOIN kept USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // q198: the four stages chained in SQL — md5 keep-min dedup,
-    // token floor, the q103 quota mixture, the q194 md5-order shard
-    // cut — same integer arithmetic at every boundary.
-    "q198_docs_pretrain_pipeline" ->
-      """WITH kept AS (
-        |  SELECT d.* FROM documents d
-        |  JOIN (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)) k
-        |  USING (doc_id)
-        |), qf AS (
-        |  SELECT * FROM (
-        |    SELECT doc_id, source,
-        |           CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |                                x -> x <> '')) AS BIGINT) AS ntok
-        |    FROM kept)
-        |  WHERE ntok >= 10
-        |), t(source, parts) AS (
-        |  VALUES ('src0', 400000), ('src1', 300000),
-        |         ('src2', 200000), ('src3', 100000)
-        |), counts AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM qf GROUP BY source
-        |), tot AS (
-        |  SELECT MIN(n * 1000000 // parts) AS total
-        |  FROM counts JOIN t USING (source)
-        |), qq AS (
-        |  SELECT source, (SELECT total FROM tot) * parts // 1000000 AS quota FROM t
-        |), ranked AS (
-        |  SELECT doc_id, source, ntok,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296,
-        |                    doc_id) AS rn
-        |  FROM qf
-        |), mixed AS (
-        |  SELECT doc_id, source, ntok
-        |  FROM ranked JOIN qq USING (source) WHERE rn <= quota
-        |), i AS (
-        |  SELECT source, ntok,
-        |         row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS gi,
-        |         (SELECT count(*) FROM mixed) AS c
-        |  FROM mixed
-        |)
-        |SELECT CAST((gi * 4) // c AS BIGINT) AS shard_id, source,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(SUM(ntok) AS BIGINT) AS n_tokens
-        |FROM i GROUP BY 1, 2
-        |ORDER BY shard_id, source""".stripMargin,
-    // q196: the rank-profile classifier end-to-end in SQL — same
-    // trigram windows, same (count DESC, tri) rank ties, same
-    // out-of-place sum and (dist, lang) argmin.
-    "q196_docs_langid_trained" ->
-      """WITH t0 AS (
-        |  SELECT doc_id, lang, lower(trim(text)) AS t FROM documents
-        |), tg AS (
-        |  SELECT doc_id, lang, substr(t, i, 3) AS tri
-        |  FROM t0, UNNEST(generate_series(1, length(t) - 2)) AS ti(i)
-        |  WHERE length(t) >= 3
-        |), dc AS (
-        |  SELECT doc_id, tri, CAST(count(*) AS BIGINT) AS c FROM tg GROUP BY 1, 2
-        |), lc AS (
-        |  SELECT lang, tri, CAST(count(*) AS BIGINT) AS c
-        |  FROM tg WHERE doc_id % 2 = 0 GROUP BY 1, 2
-        |), lp AS (
-        |  SELECT lang, tri, rp FROM (
-        |    SELECT lang, tri,
-        |           row_number() OVER (PARTITION BY lang ORDER BY c DESC, tri) AS rp
-        |    FROM lc)
-        |  WHERE rp <= 64
-        |), dn AS (
-        |  SELECT doc_id, tri, rd FROM (
-        |    SELECT doc_id, tri,
-        |           row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, tri) AS rd
-        |    FROM dc)
-        |  WHERE rd <= 32
-        |), langs AS (SELECT DISTINCT lang FROM lp
-        |), d2 AS (
-        |  SELECT dn.doc_id, langs.lang,
-        |         CAST(SUM(CASE WHEN lp.rp IS NULL THEN 64
-        |                       ELSE abs(dn.rd - lp.rp) END) AS BIGINT) AS dist
-        |  FROM dn CROSS JOIN langs
-        |  LEFT JOIN lp ON lp.lang = langs.lang AND lp.tri = dn.tri
-        |  GROUP BY 1, 2
-        |), best AS (
-        |  SELECT doc_id, lang AS pred_lang, dist
-        |  FROM d2
-        |  QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY dist, lang) = 1
-        |)
-        |SELECT d.doc_id, COALESCE(b.pred_lang, 'und') AS pred_lang,
-        |       COALESCE(b.dist, CAST(-1 AS BIGINT)) AS dist
-        |FROM (SELECT DISTINCT doc_id FROM documents) d
-        |LEFT JOIN best b USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // q194/q195: md5 order is engine-identical (same lowercase hex of
-    // the decimal id string), so the dense rank, the arithmetic shard
-    // cut, and the per-shard totals all hash-check exactly.
-    "q194_docs_shuffle_shards" ->
-      """WITH a AS (
-        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
-        |  FROM documents
-        |), i AS (
-        |  SELECT doc_id,
-        |         row_number() OVER (ORDER BY h, doc_id) - 1 AS gi,
-        |         (SELECT count(*) FROM a) AS c
-        |  FROM a
-        |)
-        |SELECT doc_id, CAST(gi AS BIGINT) AS global_idx,
-        |       CAST((gi * 8) // c AS BIGINT) AS shard_id
-        |FROM i WHERE doc_id % 37 = 0
-        |ORDER BY doc_id""".stripMargin,
-    "q195_docs_shard_balance" ->
-      """WITH a AS (
-        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-        |         CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |                              x -> x <> '')) AS BIGINT) AS ntok
-        |  FROM documents
-        |), i AS (
-        |  SELECT ntok,
-        |         row_number() OVER (ORDER BY h, doc_id) - 1 AS gi,
-        |         (SELECT count(*) FROM a) AS c
-        |  FROM a
-        |)
-        |SELECT CAST((gi * 8) // c AS BIGINT) AS shard_id,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(SUM(ntok) AS BIGINT) AS n_tokens
-        |FROM i GROUP BY 1
-        |ORDER BY shard_id""".stripMargin,
-    // q193: repeated windows by literal gram text (the engine hashes
-    // them — equal absent 64-bit collisions), islands via the
-    // p − row_number() run-grouping identity.
-    "q193_docs_repeated_spans" ->
-      s"""WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + ${plantOffsetSql("documents", "doc_id")} AS doc_id,
-        |         array_to_string(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-        |                                     x -> x <> '')[1:30], ' ') AS text
-        |  FROM documents WHERE doc_id % 11 = 0
-        |), d AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS toks
-        |  FROM base WHERE length(trim(text)) > 0
-        |), g AS (
-        |  SELECT doc_id, i AS pos, array_to_string(toks[i:i+9], ' ') AS gram
-        |  FROM d, UNNEST(generate_series(1, len(toks) - 9)) AS t(i)
-        |), rep AS (
-        |  SELECT gram FROM g GROUP BY 1 HAVING count(*) >= 2
-        |), cov AS (
-        |  SELECT DISTINCT doc_id, p
-        |  FROM (SELECT g.doc_id, g.pos FROM g JOIN rep USING (gram)),
-        |       UNNEST(generate_series(pos, pos + 9)) AS t(p)
-        |), isl AS (
-        |  SELECT doc_id, p,
-        |         p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS grp
-        |  FROM cov
-        |)
-        |SELECT doc_id, CAST(MIN(p) AS BIGINT) AS span_start,
-        |       CAST(COUNT(*) AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin,
-    // q43: frame sampling is pure integer arithmetic over the payload
-    // byte length — every 2nd complete 64-byte chunk.
-    "q43_multimodal_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id, length(text) AS blen FROM documents WHERE doc_id % 3 = 0
-        |)
-        |SELECT doc_id AS media_id, CAST(f AS INTEGER) AS frame_no,
-        |       CAST(64 AS BIGINT) AS frame_bytes
-        |FROM (SELECT doc_id, unnest(generate_series(0, blen // 64 - 1, 2)) AS f FROM d)
-        |ORDER BY media_id, frame_no""".stripMargin,
-    "q74_emb_quantize_int8" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-        |), q AS (
-        |  SELECT vec_id, qv,
-        |         list_transform(qv,
-        |           x -> GREATEST(-128, LEAST(127, floor(x * 127)))) AS codes
-        |  FROM v
-        |)
-        |SELECT vec_id, CAST(len(qv) AS BIGINT) AS n_dims,
-        |       CAST(list_sum(codes) AS BIGINT) AS sum_q8,
-        |       CAST(list_aggregate(codes, 'min') AS BIGINT) AS min_q8,
-        |       CAST(list_aggregate(codes, 'max') AS BIGINT) AS max_q8
-        |FROM q ORDER BY vec_id""".stripMargin,
-    "q75_sample_priority" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source FROM documents
-        |  ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id
-        |  LIMIT 200
-        |) t ORDER BY doc_id""".stripMargin,
-    "q81_docs_pack_sequences" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE length(regexp_split_to_array(trim(text), '\s+')) END
-        |           AS BIGINT) AS n_tokens
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         SUM(COALESCE(n_tokens, 0)) OVER (PARTITION BY source ORDER BY doc_id
-        |           ROWS UNBOUNDED PRECEDING) - COALESCE(n_tokens, 0) AS bef
-        |  FROM d
-        |)
-        |SELECT doc_id, source, n_tokens,
-        |       CAST(bef // 2048 AS BIGINT) AS pack_id,
-        |       CAST(bef % 2048 AS BIGINT) AS pack_offset
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q89_events_funnel_reach" ->
-      """WITH s0 AS (
-        |  SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id
-        |), s1 AS (
-        |  SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s0 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts >= s0.t GROUP BY e.user_id
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts >= s1.t GROUP BY e.user_id
-        |)
-        |SELECT user_id, stage, stage_idx,
-        |       strftime(date_trunc('second', t), '%Y-%m-%d %H:%M:%S') AS reach_ts
-        |FROM (
-        |  SELECT user_id, 'view' AS stage, CAST(0 AS BIGINT) AS stage_idx, t FROM s0
-        |  UNION ALL
-        |  SELECT user_id, 'click', CAST(1 AS BIGINT), t FROM s1
-        |  UNION ALL
-        |  SELECT user_id, 'purchase', CAST(2 AS BIGINT), t FROM s2
-        |)
-        |ORDER BY user_id, stage_idx""".stripMargin,
-    "q87_events_histogram" ->
-      """SELECT event_type, CAST(floor(value / 50.0) AS BIGINT) AS bucket,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin,
-    "q88_events_retention" ->
-      """WITH a AS (
-        |  SELECT DISTINCT user_id,
-        |         CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 604800 AS wk
-        |  FROM events
-        |), c AS (SELECT user_id, min(wk) AS cohort_period FROM a GROUP BY user_id)
-        |SELECT cohort_period, wk - cohort_period AS period_offset,
-        |       CAST(count(*) AS BIGINT) AS n_users
-        |FROM a JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q90_skew_salted_join" ->
-      """SELECT s_name, CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY s_name""".stripMargin,
-    "q91_emb_signed_projection" ->
-      """WITH q AS (
-        |  SELECT vec_id, i - 1 AS pos,
-        |         CAST(GREATEST(-128, LEAST(127,
-        |           floor(CAST(embedding[i] AS DOUBLE) * 127))) AS BIGINT) AS qc
-        |  FROM (SELECT vec_id, embedding,
-        |               unnest(range(1, len(embedding) + 1)) AS i
-        |        FROM embeddings)
-        |)
-        |SELECT vec_id, plane,
-        |       CAST(SUM(qc * CASE WHEN ((pos * 8 + plane) * 2654435761 // 65536) % 2 = 0
-        |                          THEN 1 ELSE -1 END) AS BIGINT) AS proj
-        |FROM q, (SELECT unnest(range(0, 8)) AS plane)
-        |GROUP BY vec_id, plane ORDER BY vec_id, plane""".stripMargin,
-    "q92_heavy_hitters_cms" ->
-      """WITH hp(d, a) AS (VALUES (CAST(0 AS BIGINT), CAST(2654435761 AS BIGINT)),
-        |                         (1, 2246822519), (2, 3266489917), (3, 668265263)),
-        |cells AS (
-        |  SELECT d, ((user_id % 2147483648) * a % 2147483648) % 64 AS cell,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events, hp GROUP BY 1, 2
-        |),
-        |est AS (
-        |  SELECT k.user_id, min(c.cnt) AS cms_est
-        |  FROM (SELECT DISTINCT user_id FROM events) k, hp
-        |  JOIN cells c ON c.d = hp.d
-        |    AND c.cell = ((k.user_id % 2147483648) * hp.a % 2147483648) % 64
-        |  GROUP BY k.user_id
-        |)
-        |SELECT user_id, CAST(x.exact_n AS BIGINT) AS exact_n, e.cms_est
-        |FROM est e
-        |JOIN (SELECT user_id, count(*) AS exact_n FROM events GROUP BY 1) x
-        |  USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    "q93_tpch_q6" ->
-      """SELECT CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |                CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |         AS revenue_c4,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q94_tpch_q19" ->
-      """SELECT CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |                (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))) AS BIGINT)
-        |         AS revenue_c4,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#21' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity BETWEEN 10 AND 30)
-        |   OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 35
-        |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-    "q96_bloom_semi_join" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem
-        |WHERE l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_acctbal > 5000)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q97_zorder_key" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |       CAST(list_sum(list_transform(range(0, 16),
-        |         i -> ((((l_suppkey % 65536) >> i) & 1) << (2*i + 1))
-        |            + ((((l_partkey % 65536) >> i) & 1) << (2*i)))) AS BIGINT) AS zval
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q98_full_outer_join" ->
-      """WITH s AS (
-        |  SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
-        |         CAST(count(*) AS BIGINT) AS n_signups
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1
-        |), e AS (
-        |  SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
-        |         CAST(count(*) AS BIGINT) AS n_errors
-        |  FROM events WHERE event_type = 'error' GROUP BY 1
-        |)
-        |SELECT hour, n_signups, n_errors
-        |FROM s FULL OUTER JOIN e USING (hour) ORDER BY hour""".stripMargin,
-    "q99_rank_functions" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |       l_returnflag,
-        |       CAST(rank() OVER w AS BIGINT) AS rnk,
-        |       CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-        |       percent_rank() OVER w AS prnk,
-        |       cume_dist() OVER w AS cdist
-        |FROM lineitem
-        |WINDOW w AS (PARTITION BY l_returnflag
-        |             ORDER BY CAST(floor(l_quantity) AS BIGINT))
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q100_value_outliers" ->
-      """WITH x AS (
-        |  SELECT event_id, event_type,
-        |         CAST(floor(value * 100 + 0.5) AS HUGEINT) AS xc
-        |  FROM events
-        |), st AS (
-        |  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-        |         SUM(xc) AS s, SUM(xc * xc) AS ss
-        |  FROM x GROUP BY event_type
-        |)
-        |SELECT event_id, event_type
-        |FROM x JOIN st USING (event_type)
-        |WHERE (n * xc - s) * (n * xc - s) > 9 * (n * ss - s * s)
-        |ORDER BY event_id""".stripMargin,
-    "q101_docs_redact_pii" ->
-      """WITH seeded AS (
-        |  SELECT doc_id,
-        |         text || ' reach me at user' || CAST(doc_id AS VARCHAR)
-        |              || '@mail' || CAST(doc_id % 7 AS VARCHAR) || '.com or 10.'
-        |              || CAST(doc_id % 256 AS VARCHAR) || '.0.'
-        |              || CAST((doc_id * 7) % 256 AS VARCHAR) || ' tel 555-010-'
-        |              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS text
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       md5(regexp_replace(regexp_replace(regexp_replace(text,
-        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<email>', 'g'),
-        |         '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<ip>', 'g'),
-        |         '\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\b', '<phone>', 'g')) AS redacted_md5,
-        |       CAST(len(regexp_extract_all(text,
-        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |       CAST(len(regexp_extract_all(text,
-        |         '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS BIGINT) AS n_ips,
-        |       CAST(len(regexp_extract_all(text,
-        |         '\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\b')) AS BIGINT) AS n_phones
-        |FROM seeded ORDER BY doc_id""".stripMargin,
-    "q102_hll_registers" ->
-      """WITH h1 AS (
-        |  SELECT ((user_id % 2147483648) * 2654435761) % 2147483648 AS h
-        |  FROM events
-        |), h2 AS (
-        |  SELECT (xor(h, h >> 16) * 2246822519) % 2147483648 AS h FROM h1
-        |), hf AS (
-        |  SELECT xor(h, h >> 13) AS h FROM h2
-        |), br AS (
-        |  SELECT h % 256 AS bucket, h // 256 AS rem FROM hf
-        |)
-        |SELECT bucket,
-        |       CAST(MAX(CASE WHEN rem = 0 THEN 24
-        |                     ELSE 24 - length(bin(rem)) END) AS BIGINT) AS register
-        |FROM br GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q103_docs_mix_domains" ->
-      """WITH t(source, parts) AS (
-        |  VALUES ('src0', 400000), ('src1', 300000),
-        |         ('src2', 200000), ('src3', 100000)
-        |), counts AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY source
-        |), tot AS (
-        |  SELECT MIN(n * 1000000 // parts) AS total
-        |  FROM counts JOIN t USING (source)
-        |), q AS (
-        |  SELECT source, (SELECT total FROM tot) * parts // 1000000 AS quota FROM t
-        |), ranked AS (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296,
-        |                    doc_id) AS rn
-        |  FROM documents
-        |)
-        |SELECT doc_id, source
-        |FROM ranked JOIN q USING (source)
-        |WHERE rn <= quota ORDER BY doc_id""".stripMargin,
-    "q104_events_skipping" ->
-      """SELECT event_id, user_id, event_type,
-        |       CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec
-        |FROM events
-        |WHERE CAST(floor(epoch(ts)) AS BIGINT) BETWEEN 1704844800 AND 1705017599
-        |ORDER BY event_id""".stripMargin,
-    "q105_value_quantiles" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(floor(value / 5.0) AS BIGINT) AS bucket,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
-        |), c AS (
-        |  SELECT event_type, bucket,
-        |         CAST(SUM(n) OVER (PARTITION BY event_type
-        |                           ORDER BY bucket) AS BIGINT) AS cum,
-        |         CAST(SUM(n) OVER (PARTITION BY event_type) AS BIGINT) AS total
-        |  FROM h
-        |)
-        |SELECT event_type, CAST(pct AS BIGINT) AS pct,
-        |       MIN(bucket) AS q_bucket
-        |FROM c CROSS JOIN (VALUES (50), (90), (99)) p(pct)
-        |WHERE cum >= GREATEST(1, (total * pct + 99) // 100)
-        |GROUP BY 1, 2 ORDER BY event_type, pct""".stripMargin,
-    "q106_incremental_agg" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |         AS sum_cents
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q107_attribution" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type,
-        |         CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec
-        |  FROM events
-        |), k AS (
-        |  SELECT *,
-        |         MAX(CASE WHEN event_type = 'click'
-        |                  THEN ts_sec * 1000000000 + event_id END)
-        |           OVER (PARTITION BY user_id ORDER BY ts_sec
-        |                 RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW) AS tk
-        |  FROM e
-        |)
-        |SELECT user_id, event_id AS conv_id, ts_sec AS conv_ts_sec,
-        |       tk % 1000000000 AS touch_id,
-        |       tk // 1000000000 AS touch_ts_sec,
-        |       ts_sec - tk // 1000000000 AS secs_since_touch
-        |FROM k WHERE event_type = 'purchase' ORDER BY conv_id""".stripMargin,
-    "q95_cube_grouping" ->
-      """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q84_tpch_q18" ->
-      """SELECT c_name, c_custkey, o_orderkey,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       o_totalprice, sum_qty
-        |FROM (
-        |  SELECT l_orderkey,
-        |         CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING SUM(CAST(floor(l_quantity) AS BIGINT)) > 150
-        |) b
-        |JOIN orders ON o_orderkey = b.l_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q85_tpch_q14" ->
-      """WITH l AS (
-        |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |           (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS rev,
-        |         p_type
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |)
-        |SELECT CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS BIGINT)
-        |         AS promo_rev_c4,
-        |       CAST(SUM(rev) AS BIGINT) AS total_rev_c4,
-        |       CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) * 100 AS DOUBLE)
-        |         / CAST(SUM(rev) AS DOUBLE) AS promo_pct
-        |FROM l""".stripMargin,
-    "q86_tpch_q12" ->
-      """SELECT l_returnflag,
-        |       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                     THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q108_tpch_q13" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM (
-        |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        |  GROUP BY c_custkey
-        |) c_orders
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q109_tpch_q17" ->
-      """WITH per AS (
-        |  SELECT l_partkey AS ap_partkey,
-        |         CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT)
-        |           AS part_sum_qty,
-        |         CAST(count(*) AS BIGINT) AS part_n
-        |  FROM lineitem GROUP BY 1
-        |)
-        |SELECT CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-        |         AS BIGINT) AS rev_cents,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_brand = 'Brand#23'
-        |JOIN per ON l_partkey = ap_partkey
-        |WHERE CAST(floor(l_quantity) AS BIGINT) * 5 * part_n < part_sum_qty""".stripMargin,
-    "q110_tpch_q22" ->
-      """WITH pos AS (
-        |  SELECT CAST(SUM(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |           AS pos_sum_c,
-        |         CAST(count(*) AS BIGINT) AS pos_n
-        |  FROM customer WHERE c_acctbal > 0
-        |)
-        |SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-        |       CAST(count(*) AS BIGINT) AS numcust,
-        |       CAST(SUM(acct_c) AS BIGINT) AS totacctbal_c
-        |FROM (
-        |  SELECT c_custkey, c_nationkey,
-        |         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS acct_c
-        |  FROM customer
-        |) c, pos
-        |WHERE acct_c * pos_n > pos_sum_c
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "q111_tpch_q11" ->
-      """WITH natlines AS (
-        |  SELECT l_partkey,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS val_c
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (
-        |    SELECT s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |    WHERE n_name = 'NATION_8')
-        |), total AS (SELECT CAST(SUM(val_c) AS BIGINT) AS total_c FROM natlines)
-        |SELECT l_partkey, CAST(SUM(val_c) AS BIGINT) AS part_value_c
-        |FROM natlines, total
-        |GROUP BY l_partkey, total_c
-        |HAVING CAST(SUM(val_c) AS BIGINT) * 1000 > total_c
-        |ORDER BY part_value_c DESC, l_partkey""".stripMargin,
-    "q112_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |              (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-        |           AS BIGINT) AS total_rev_u
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-        |  GROUP BY l_suppkey
-        |)
-        |SELECT s_suppkey, s_name, total_rev_u
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev_u = (SELECT MAX(total_rev_u) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q113_tpch_q4" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-07-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q114_tpch_q21" ->
-      """WITH late AS (
-        |  SELECT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 180 DAY
-        |)
-        |SELECT s_suppkey, s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM (
-        |  SELECT DISTINCT l1.l_orderkey, l1.l_suppkey
-        |  FROM late l1
-        |  WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |                WHERE l2.l_orderkey = l1.l_orderkey
-        |                  AND l2.l_suppkey <> l1.l_suppkey)
-        |    AND NOT EXISTS (SELECT 1 FROM late l3
-        |                    WHERE l3.l_orderkey = l1.l_orderkey
-        |                      AND l3.l_suppkey <> l1.l_suppkey)
-        |) w
-        |JOIN supplier ON w.l_suppkey = s_suppkey
-        |GROUP BY s_suppkey, s_name
-        |ORDER BY numwait DESC, s_suppkey
-        |LIMIT 50""".stripMargin,
-    "q115_tpch_q2" ->
-      """WITH offers AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         MIN(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |             // CAST(greatest(floor(l_quantity), 1) AS BIGINT)) AS supp_min_c
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey
-        |), best AS (
-        |  SELECT l_partkey AS mp_partkey, MIN(supp_min_c) AS part_min_c
-        |  FROM offers GROUP BY 1
-        |)
-        |SELECT p_partkey, p_brand, s_suppkey, s_name, supp_min_c
-        |FROM offers
-        |JOIN best ON l_partkey = mp_partkey AND supp_min_c = part_min_c
-        |JOIN part ON l_partkey = p_partkey AND p_size = 10 AND p_type = 'LARGE'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
-    "q116_partitioned_prune" ->
-      """SELECT CAST(month(l_shipdate) AS BIGINT) AS ship_month,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem WHERE year(l_shipdate) = 1997
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q117_orc_roundtrip" ->
-      """SELECT l_returnflag, CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-        |         AS BIGINT) AS sum_ep_cents,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem GROUP BY l_returnflag, ship_year
-        |ORDER BY l_returnflag, ship_year""".stripMargin,
-    "q118_tpch_q7" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |       CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |            (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-        |         AS BIGINT) AS revenue_u
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND ((sn.n_name = 'NATION_3' AND cn.n_name = 'NATION_14')
-        |    OR (sn.n_name = 'NATION_14' AND cn.n_name = 'NATION_3'))
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q119_tpch_q8" ->
-      """WITH l AS (
-        |  SELECT year(o_orderdate) AS o_year, sn.n_name AS supp_nation,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |           (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS rev_u
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  WHERE c_nationkey IN (
-        |    SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey
-        |    WHERE r_name = 'EUROPE')
-        |)
-        |SELECT CAST(o_year AS BIGINT) AS o_year,
-        |       CAST(SUM(CASE WHEN supp_nation = 'NATION_7' THEN rev_u ELSE 0 END)
-        |         AS BIGINT) AS nation_rev_u,
-        |       CAST(SUM(rev_u) AS BIGINT) AS total_rev_u,
-        |       CAST(SUM(CASE WHEN supp_nation = 'NATION_7' THEN rev_u ELSE 0 END)
-        |           AS DOUBLE) / CAST(SUM(rev_u) AS DOUBLE) AS mkt_share
-        |FROM l GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q120_tpch_q9" ->
-      """SELECT n_name AS nation, CAST(year(l_shipdate) AS BIGINT) AS o_year,
-        |       CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-        |              (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-        |            - CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) *
-        |              CAST(floor(l_quantity) AS BIGINT) * 100)
-        |         AS BIGINT) AS profit_u
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%bolt%'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2 DESC""".stripMargin,
-    "q127_variant_extract" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |         AS BIGINT) AS sum_k,
-        |       CAST(MIN(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |         AS BIGINT) AS min_k,
-        |       CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |         AS BIGINT) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q124_tpch_q16" ->
-      """SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
-        |       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-        |  AND p_size IN (5, 10, 15, 20, 25)
-        |  AND l_suppkey NOT IN (
-        |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q125_tpch_q20" ->
-      """WITH pair AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT)
-        |           AS total_qty,
-        |         CAST(SUM(CASE WHEN year(l_shipdate) = 1997
-        |                  THEN CAST(floor(l_quantity) AS BIGINT)
-        |                  ELSE 0 END) AS BIGINT) AS qty97
-        |  FROM lineitem GROUP BY 1, 2
-        |)
-        |SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM pair
-        |  WHERE qty97 * 2 > total_qty
-        |    AND l_partkey IN (
-        |      SELECT p_partkey FROM part WHERE p_name LIKE 'red%'))
-        |ORDER BY s_suppkey""".stripMargin,
-    "q126_map_roundtrip" ->
-      """SELECT user_id,
-        |       CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-        |       CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) > 0
-        |            THEN CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |                 AS BIGINT)
-        |            ELSE NULL END AS purchase_n
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q123_interval_left_outer" ->
-      """SELECT l.user_id, COUNT(*) AS n_rows,
-        |       CAST(SUM(CASE WHEN r.ts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_matched,
-        |       CAST(SUM(CAST(r.value AS DECIMAL(18,4))) AS DOUBLE) AS purchase_value
-        |FROM events l
-        |LEFT OUTER JOIN events r ON l.user_id = r.user_id
-        |  AND r.event_type = 'purchase'
-        |  AND r.ts >= l.ts - INTERVAL 1 HOUR AND r.ts <= l.ts
-        |WHERE l.event_type = 'click'
-        |GROUP BY l.user_id ORDER BY l.user_id""".stripMargin,
-    "q121_typed_flag_stats" ->
-      """WITH l AS (
-        |  SELECT l_returnflag AS flag,
-        |         CAST(floor(l_quantity) AS BIGINT) AS qty,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS ep
-        |  FROM lineitem
-        |)
-        |SELECT flag, CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(SUM(qty) AS BIGINT) AS sum_qty,
-        |       CAST(SUM(ep) AS BIGINT) AS sum_ep_cents,
-        |       CAST(MAX(ep) AS BIGINT) AS max_line_cents
-        |FROM l WHERE qty > 5 GROUP BY flag ORDER BY flag""".stripMargin,
-    "q122_docs_bigrams" ->
-      """WITH d AS (
-        |  SELECT source, regexp_split_to_array(trim(text), '\s+') AS ws
-        |  FROM documents
-        |), b AS (
-        |  SELECT source, ws[i] || ' ' || ws[i+1] AS bigram
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |), c AS (
-        |  SELECT source, bigram, CAST(count(*) AS BIGINT) AS n
-        |  FROM b GROUP BY 1, 2
-        |), r AS (
-        |  SELECT *, CAST(row_number() OVER (
-        |    PARTITION BY source ORDER BY n DESC, bigram) AS BIGINT) AS rk
-        |  FROM c
-        |)
-        |SELECT source, bigram, n, rk FROM r WHERE rk <= 5
-        |ORDER BY source, rk""".stripMargin,
-    "q83_docs_incremental_exact" ->
-      """WITH hist AS (SELECT DISTINCT md5(text) AS h FROM documents),
-        |batch AS (
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_id, text FROM documents
-        |  WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2 * (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents), reverse(text) FROM documents
-        |  WHERE doc_id % 13 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 3 * (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents), reverse(text) FROM documents
-        |  WHERE doc_id % 13 = 0
-        |), fresh AS (
-        |  SELECT b.doc_id, md5(b.text) AS h FROM batch b
-        |  WHERE NOT EXISTS (SELECT 1 FROM hist WHERE hist.h = md5(b.text))
-        |)
-        |SELECT MIN(doc_id) AS doc_id FROM fresh GROUP BY h
-        |ORDER BY doc_id""".stripMargin,
-    "q82_docs_quality_deciles" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE length(regexp_split_to_array(trim(text), '\s+')) END
-        |           AS BIGINT) AS n_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, source, n_tokens,
-        |       CAST(ntile(10) OVER (PARTITION BY source
-        |         ORDER BY n_tokens DESC, doc_id) AS BIGINT) AS decile
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "q76_docs_normalize" ->
-      """SELECT doc_id,
-        |       md5(trim(regexp_replace(
-        |         regexp_replace(lower(text), '[0-9]+', '<num>', 'g'),
-        |         '\s+', ' ', 'g'))) AS norm_hash,
-        |       CAST(length(trim(regexp_replace(
-        |         regexp_replace(lower(text), '[0-9]+', '<num>', 'g'),
-        |         '\s+', ' ', 'g'))) AS BIGINT) AS norm_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q77_sample_lang_quota" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang, row_number() OVER (
-        |    PARTITION BY lang
-        |    ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS rk
-        |  FROM documents
-        |) t WHERE rk <= 30 ORDER BY doc_id""".stripMargin,
-    "q78_docs_profile" ->
-      """SELECT source,
-        |       CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_text,
-        |       CAST(count(DISTINCT lang) AS BIGINT) AS distinct_lang,
-        |       min(n_chars) AS min_n_chars,
-        |       max(n_chars) AS max_n_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q79_docs_tfidf" ->
-      """WITH tf AS (
-        |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf FROM (
-        |    SELECT doc_id,
-        |           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS word
-        |    FROM documents WHERE length(trim(text)) > 0
-        |  ) t WHERE length(word) >= 3 GROUP BY doc_id, word
-        |), dfreq AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word
-        |), total AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.word,
-        |         CAST(tf.tf * ((total.n_docs * 1000000) // dfreq.df) AS BIGINT) AS score
-        |  FROM tf JOIN dfreq USING(word) CROSS JOIN total
-        |), ranked AS (
-        |  SELECT doc_id, word, score, CAST(row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY score DESC, word) AS BIGINT) AS rank
-        |  FROM scored
-        |)
-        |SELECT doc_id, rank, word, score FROM ranked
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q80_events_funnel" ->
-      """WITH s0 AS (
-        |  SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id
-        |), s1 AS (
-        |  SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s0 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts >= s0.t GROUP BY e.user_id
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts >= s1.t GROUP BY e.user_id
-        |)
-        |SELECT * FROM (
-        |  SELECT 'view' AS stage, CAST(0 AS BIGINT) AS stage_idx,
-        |         CAST((SELECT count(*) FROM s0) AS BIGINT) AS n_users
-        |  UNION ALL
-        |  SELECT 'click', CAST(1 AS BIGINT),
-        |         CAST((SELECT count(*) FROM s1) AS BIGINT)
-        |  UNION ALL
-        |  SELECT 'purchase', CAST(2 AS BIGINT),
-        |         CAST((SELECT count(*) FROM s2) AS BIGINT)
-        |) ORDER BY stage_idx""".stripMargin,
-    // q73: same pair construction as q70, then components as the
-    // minimum reachable label via a recursive reachability CTE —
-    // UNION-dedup guarantees termination; min over reached nodes is
-    // the component id on the symmetric closure.
-    "q73_components_exact" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 100
-        |  UNION ALL
-        |  SELECT doc_id + 200000, text || ' tail token' FROM documents
-        |  WHERE doc_id < 100 AND doc_id % 7 = 0
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM docs WHERE length(trim(text)) > 0
-        |), grams AS (
-        |  SELECT DISTINCT doc_id,
-        |         t[CAST(i AS INTEGER)] || ' ' || t[CAST(i+1 AS INTEGER)] || ' ' || t[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i FROM toks)
-        |), sets AS (
-        |  SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT doc_a, doc_b FROM inter i
-        |  JOIN sets sa ON i.doc_a = sa.doc_id
-        |  JOIN sets sb ON i.doc_b = sb.doc_id
-        |  WHERE CAST(i.ninter AS DOUBLE) / (sa.n + sb.n - i.ninter) >= 0.5
-        |), edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), walk(node, reached) AS (
-        |  SELECT doc_id, doc_id FROM docs
-        |  UNION
-        |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reached
-        |)
-        |SELECT node AS doc_id, MIN(reached) AS component
-        |FROM walk GROUP BY node ORDER BY doc_id""".stripMargin,
-    // q58: the FULL near-dup resolution keep list, value-checked. The
-    // oracle rebuilds the exact j >= 0.5 token-3-gram pair graph over
-    // the whole q58 corpus (original + last-2-tokens-dropped plants),
-    // resolves it with the q73 recursive-reachability walk, and
-    // aggregates cluster sizes. The 0.5 gate is integer
-    // cross-multiplication (2·∩ >= ∪); measured at every scale the
-    // weakest pair has j = 0.6 and [0.4, 0.5) is EMPTY, so the exact
-    // graph is engine-invariant (see the q58 query comment for the
-    // banding-recall argument on the Spark side).
-    // q58 EVALUATION NOTE (r14): the exact gram-intersection join runs
-    // over DISTINCT texts only. Identical texts pair by definition
-    // whenever they have ≥1 gram (equal sets, 2n ≥ n), so collapsing
-    // each exact-text group to its min-id representative and
-    // re-attaching members as star edges yields the SAME components —
-    // while the naive all-docs join squares with the duplication
-    // factor (the sf10 corpus is 100 verbatim copies of every text:
-    // its gram join spilled >70 GB and killed the r14 sweep pass;
-    // distinct texts keep it sf0.1-sized forever). Gram-less (<3
-    // token) texts never pair in the exact semantics, so their copies
-    // stay singletons: the member edge requires the rep to be in
-    // `sets`.
-    "q58_docs_neardup_resolve" ->
-      """WITH RECURSIVE base AS (SELECT doc_id, text FROM documents),
-        |docs AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents),
-        |         array_to_string(t[1:CAST(GREATEST(len(t) - 2, 1) AS BIGINT)], ' ')
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |        FROM base WHERE doc_id % 7 = 0)
-        |), grp AS (
-        |  SELECT text, MIN(doc_id) AS rep FROM docs GROUP BY text
-        |), tg AS (
-        |  SELECT d.doc_id, g.rep FROM docs d JOIN grp g ON g.text = d.text
-        |), toks AS (
-        |  SELECT rep AS doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM grp WHERE length(trim(text)) > 0
-        |), grams AS (
-        |  SELECT DISTINCT doc_id,
-        |         t[CAST(i AS INTEGER)] || ' ' || t[CAST(i+1 AS INTEGER)] || ' ' || t[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i FROM toks)
-        |), sets AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ni
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT doc_a, doc_b FROM inter i
-        |  JOIN sets sa ON i.doc_a = sa.doc_id
-        |  JOIN sets sb ON i.doc_b = sb.doc_id
-        |  WHERE 2 * i.ni >= sa.n + sb.n - i.ni
-        |), members AS (
-        |  SELECT t.doc_id AS src, t.rep AS dst
-        |  FROM tg t JOIN sets s ON s.doc_id = t.rep
-        |  WHERE t.doc_id <> t.rep
-        |), edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |  UNION SELECT src, dst FROM members
-        |  UNION SELECT dst, src FROM members
-        |), walk(node, reached) AS (
-        |  SELECT doc_id, doc_id FROM docs
-        |  UNION
-        |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reached
-        |)
-        |SELECT keep_id, COUNT(*) AS cluster_size FROM (
-        |  SELECT node, MIN(reached) AS keep_id FROM walk GROUP BY node
-        |) GROUP BY keep_id ORDER BY keep_id""".stripMargin,
-    // q60: the embedding resolution keep list from first principles —
-    // max natural pairwise cosine is 0.60 at sf0.1 (exhaustively
-    // measured, vs the 0.95 gate) so the only clusters are the planted
-    // identical copies, which pair with probability 1 (q37's argument).
-    "q60_emb_neardup_resolve" ->
-      """SELECT vec_id AS keep_id,
-        |       CAST(CASE WHEN vec_id % 25 = 0 THEN 2 ELSE 1 END AS BIGINT) AS cluster_size
-        |FROM embeddings ORDER BY keep_id""".stripMargin,
-    // decontamination: join on literal 13-token grams — equivalent to
-    // the Spark side's join on 64-bit gram hashes (collision odds
-    // negligible; the same argument value-grounds q70).
-    "q67_docs_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0
-        |), grams AS (
-        |  SELECT DISTINCT doc_id,
-        |         array_to_string(t[CAST(i AS INTEGER):CAST(i + 12 AS INTEGER)], ' ') AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 12)) AS i FROM toks)
-        |), bench AS (
-        |  SELECT DISTINCT g FROM grams WHERE doc_id % 40 = 0
-        |)
-        |SELECT gr.doc_id, COUNT(*) AS n_matching_ngrams
-        |FROM grams gr JOIN bench b ON gr.g = b.g
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |       COUNT(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00' AND l_quantity >= 48
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q03_derived_columns" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charge,
-        |       CASE WHEN l_quantity < 10 THEN 'LOW'
-        |            WHEN l_quantity < 40 THEN 'MID'
-        |            ELSE 'HIGH' END AS qty_class,
-        |       l_discount > 0.05 AS high_discount
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q04_distinct_projected" ->
-      """SELECT DISTINCT o_orderstatus, o_orderpriority
-        |FROM orders ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    "q05_dup_detect" ->
-      """SELECT r_regionkey, r_name, COUNT(*) AS count
-        |FROM (SELECT * FROM region UNION ALL SELECT * FROM region) t
-        |GROUP BY r_regionkey, r_name
-        |HAVING COUNT(*) > 1
-        |ORDER BY r_regionkey""".stripMargin,
-    "q06_join_3way_agg" ->
-      """SELECT n_name,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue,
-        |       COUNT(*) AS n_orders
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q07_join_left_fillna" ->
-      """SELECT c_custkey, c_name, COALESCE(n_orders, 0) AS n_orders
-        |FROM customer
-        |LEFT JOIN (SELECT o_custkey, COUNT(*) AS n_orders FROM orders GROUP BY o_custkey) o
-        |  ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-    "q08_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q09_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (
-        |  SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q10_scd2_reference" -> (scdSqlInputs +
-      """, changes AS (
-        |  SELECT n.s_suppkey, n.s_name, n.acct
-        |  FROM newbatch n LEFT JOIN existing e ON n.s_suppkey = e.s_suppkey
-        |  WHERE (n.s_name <> e.s_name) OR (n.acct <> e.acct)
-        |), result AS (
-        |  SELECT e.s_suppkey, e.s_name, e.acct, e.start_date,
-        |         TIMESTAMP '2024-01-01 00:00:00' AS end_date, FALSE AS is_current
-        |  FROM existing e
-        |  WHERE NOT EXISTS (SELECT 1 FROM changes c WHERE c.s_suppkey = e.s_suppkey)
-        |  UNION ALL
-        |  SELECT s_suppkey, s_name, acct, TIMESTAMP '2024-01-01 00:00:00',
-        |         CAST(NULL AS TIMESTAMP), TRUE
-        |  FROM changes
-        |)
-        |SELECT s_suppkey, s_name, acct,
-        |       strftime(start_date, '%Y-%m-%d') AS start_date,
-        |       strftime(end_date, '%Y-%m-%d') AS end_date,
-        |       is_current
-        |FROM result ORDER BY s_suppkey, is_current, start_date""".stripMargin),
-    "q11_scd2_corrected" -> (scdSqlInputs +
-      """, joined AS (
-        |  SELECT n.s_suppkey AS k, n.s_name AS nn, n.acct AS na,
-        |         e.s_suppkey AS ek, e.s_name AS en, e.acct AS ea
-        |  FROM newbatch n LEFT JOIN existing e
-        |    ON n.s_suppkey = e.s_suppkey AND e.is_current
-        |), newkeys AS (
-        |  SELECT k AS s_suppkey, nn AS s_name, na AS acct FROM joined WHERE ek IS NULL
-        |), changednew AS (
-        |  SELECT k AS s_suppkey, nn AS s_name, na AS acct FROM joined
-        |  WHERE ek IS NOT NULL
-        |    AND ((nn IS DISTINCT FROM en) OR (na IS DISTINCT FROM ea))
-        |), result AS (
-        |  SELECT e.s_suppkey, e.s_name, e.acct, e.start_date, e.end_date, e.is_current
-        |  FROM existing e
-        |  WHERE e.is_current
-        |    AND NOT EXISTS (SELECT 1 FROM changednew c WHERE c.s_suppkey = e.s_suppkey)
-        |  UNION ALL
-        |  SELECT e.s_suppkey, e.s_name, e.acct, e.start_date,
-        |         TIMESTAMP '2024-01-01 00:00:00', FALSE
-        |  FROM existing e
-        |  WHERE e.is_current
-        |    AND EXISTS (SELECT 1 FROM changednew c WHERE c.s_suppkey = e.s_suppkey)
-        |  UNION ALL
-        |  SELECT s_suppkey, s_name, acct, TIMESTAMP '2024-01-01 00:00:00',
-        |         CAST(NULL AS TIMESTAMP), TRUE
-        |  FROM (SELECT * FROM changednew UNION ALL SELECT * FROM newkeys) u
-        |)
-        |SELECT s_suppkey, s_name, acct,
-        |       strftime(start_date, '%Y-%m-%d') AS start_date,
-        |       strftime(end_date, '%Y-%m-%d') AS end_date,
-        |       is_current
-        |FROM result ORDER BY s_suppkey, is_current, start_date""".stripMargin),
-    "q12_incremental_merge" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders
-        |FROM (
-        |  SELECT DISTINCT * FROM (
-        |    SELECT * FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-        |    UNION ALL
-        |    SELECT * FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00') u
-        |) m
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q13_window_topk" ->
-      """SELECT o_orderstatus, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_orderstatus, o_orderkey, o_totalprice,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-        |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_orderstatus, rn""".stripMargin,
-    "q14_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |            OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |         AS running_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q15_dim_date" ->
-      """SELECT DISTINCT strftime(o_orderdate, '%Y-%m-%d') AS date_id,
-        |       year(o_orderdate) AS year, month(o_orderdate) AS month,
-        |       day(o_orderdate) AS day
-        |FROM orders ORDER BY date_id""".stripMargin,
-    "q16_sales_by_month" ->
-      """SELECT year(o_orderdate) AS year, month(o_orderdate) AS month,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_sales
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q17_qty_by_brand" ->
-      """SELECT p_brand,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_quantity_sold
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE year(l_shipdate) = 1998
-        |GROUP BY p_brand
-        |ORDER BY total_quantity_sold DESC, p_brand""".stripMargin,
-    "q18_supplier_part_stats" ->
-      """SELECT s_name, p_brand,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_sold,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN part ON l_partkey = p_partkey
-        |GROUP BY s_name, p_brand ORDER BY s_name, p_brand""".stripMargin,
-    "q19_store_product_sums" ->
-      """SELECT s_name, p_brand,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_quantity,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_sales
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN part ON l_partkey = p_partkey
-        |GROUP BY s_name, p_brand
-        |ORDER BY total_sales DESC, s_name, p_brand""".stripMargin,
-    "q20_events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
-        |       event_type, COUNT(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q21_events_sessionize" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts, value,
-        |         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                   < INTERVAL 30 MINUTE
-        |              THEN 0 ELSE 1 END AS new_session
-        |  FROM events
-        |), sess AS (
-        |  SELECT user_id, ts, value,
-        |         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |                                ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM marked
-        |)
-        |SELECT user_id, strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |       COUNT(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS session_value
-        |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "q22_docs_token_count" ->
-      """SELECT doc_id,
-        |       CASE WHEN length(trim(text)) = 0 THEN 0
-        |            ELSE length(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q23_docs_dedup_exact" ->
-      """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_id, text FROM documents WHERE doc_id % 10 = 0) u
-        |GROUP BY md5(text) ORDER BY text_hash""".stripMargin,
-    "q24_docs_quality" ->
-      """SELECT doc_id, length(text) AS len_chars,
-        |       CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-        |         / GREATEST(length(text), 1) AS alpha_ratio,
-        |       CAST(length(text) - length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
-        |         / GREATEST(length(text), 1) AS space_ratio,
-        |       CAST(length(regexp_replace(trim(text), '\s+', '', 'g')) AS DOUBLE)
-        |         / GREATEST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                         ELSE length(regexp_split_to_array(trim(text), '\s+')) END, 1)
-        |         AS mean_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // cosine ranks compare exactly: both sides accumulate dot/norms in
-    // double over the same float values (Kernels.cosineF vs DuckDB
-    // list_cosine_similarity on DOUBLE[]), and only the rank order —
-    // not the float itself — reaches the hash. Ties break on
-    // neighbor_id on both sides.
-    "q29_emb_cosine_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id % 50 = 0
-        |), c AS (
-        |  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-        |), bsim AS (
-        |  SELECT query_id, neighbor_id,
-        |         floor(list_cosine_similarity(qv, cv) * 1000000) AS simk
-        |  FROM q CROSS JOIN c WHERE query_id <> neighbor_id
-        |), ranked AS (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |           ORDER BY simk DESC, neighbor_id) AS rank
-        |  FROM bsim
-        |)
-        |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-    "q30_emb_knn_label" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id % 50 = 0
-        |), c AS (
-        |  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-        |), bsim AS (
-        |  SELECT query_id, neighbor_id,
-        |         floor(list_cosine_similarity(qv, cv) * 1000000) AS simk
-        |  FROM q CROSS JOIN c WHERE query_id <> neighbor_id
-        |), topk AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |           row_number() OVER (PARTITION BY query_id
-        |             ORDER BY simk DESC, neighbor_id) AS rank
-        |    FROM bsim) t
-        |  WHERE rank <= 5
-        |), votes AS (
-        |  SELECT t.query_id, e.label AS nlabel, COUNT(*) AS votes
-        |  FROM topk t JOIN embeddings e ON t.neighbor_id = e.vec_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT query_id, nlabel AS predicted_label, votes FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, nlabel) AS rn
-        |  FROM votes) v
-        |WHERE rn = 1 ORDER BY query_id""".stripMargin,
-    // q31/q44/q72: the approximate result IS value-checked — candidate
-    // generation is pure sign tests + BIGINT arithmetic (see
-    // Similarity.signLshTopK / signIvfTopK), so the oracle reproduces
-    // the identical candidate sets and the exact-cosine ranking is the
-    // same q29-proven list_cosine_similarity comparison.
-    // q31 is regime-dispatched on the ENGINE side (annTopK): inside
-    // the LSH regime (n <= 1600*dim = 102 400) it runs the pinned
-    // (4 planes x 8 tables) axis-LSH plan; past it, sign-IVF at the
-    // adaptive budgets. The oracle mirrors BOTH legs, switched on the
-    // same corpus count (the ap CTE): the LSH leg is guarded to the
-    // n <= 2 000 band where autoLshPlan still returns the pinned
-    // (4, 8) — at n = 2 001 tables grows to 9 (buckets > 16 at
-    // targetOccupancy 125), so in the 2k..102.4k band (no oracle
-    // gate runs there: sf0.1 is exactly n = 2 000, sf10 is 200 000)
-    // it raises loudly rather than encoding a stale plan whose
-    // candidate pool is silently smaller than the engine's. Windows
-    // sort narrow (ids + integer key) on both legs.
-    "q31_emb_ann_lsh" ->
-      s"""WITH ${signIvfProbeCtes(dim = 64, permille = 375)}, qb AS (
-         |  SELECT query_id, t AS tbl,
-         |         CASE WHEN (SELECT n FROM ap) > 2000
-         |           THEN CAST('q31 oracle: autoLshPlan grows past the pinned 4x8 at n=2001 (tables 9+); sign-IVF leg starts at n=102401' AS INTEGER)
-         |           ELSE
-         |         (CASE WHEN qv[t*4+1] > 0 THEN 1 ELSE 0 END)
-         |       + (CASE WHEN qv[t*4+2] > 0 THEN 2 ELSE 0 END)
-         |       + (CASE WHEN qv[t*4+3] > 0 THEN 4 ELSE 0 END)
-         |       + (CASE WHEN qv[t*4+4] > 0 THEN 8 ELSE 0 END) END AS bucket
-         |  FROM q CROSS JOIN generate_series(0, 7) AS ts(t)
-         |  WHERE (SELECT n FROM ap) <= 102400
-         |), cb AS (
-         |  SELECT neighbor_id, t AS tbl,
-         |         CASE WHEN (SELECT n FROM ap) > 2000
-         |           THEN CAST('q31 oracle: autoLshPlan grows past the pinned 4x8 at n=2001 (tables 9+); sign-IVF leg starts at n=102401' AS INTEGER)
-         |           ELSE
-         |         (CASE WHEN cv[t*4+1] > 0 THEN 1 ELSE 0 END)
-         |       + (CASE WHEN cv[t*4+2] > 0 THEN 2 ELSE 0 END)
-         |       + (CASE WHEN cv[t*4+3] > 0 THEN 4 ELSE 0 END)
-         |       + (CASE WHEN cv[t*4+4] > 0 THEN 8 ELSE 0 END) END AS bucket
-         |  FROM c CROSS JOIN generate_series(0, 7) AS ts(t)
-         |  WHERE (SELECT n FROM ap) <= 102400
-         |), lcand AS (
-         |  SELECT DISTINCT query_id, neighbor_id
-         |  FROM qb JOIN cb ON qb.tbl = cb.tbl AND qb.bucket = cb.bucket
-         |  WHERE query_id <> neighbor_id
-         |), lsim AS (
-         |  SELECT lcand.query_id, lcand.neighbor_id,
-         |         floor(list_cosine_similarity(q.qv, c.cv) * 1000000) AS simk
-         |  FROM lcand JOIN q ON q.query_id = lcand.query_id
-         |             JOIN c ON c.neighbor_id = lcand.neighbor_id
-         |), lranked AS (
-         |  SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY simk DESC, neighbor_id) AS rank
-         |  FROM lsim
-         |), isim AS (
-         |  SELECT probe.query_id, cl.neighbor_id,
-         |         floor(list_cosine_similarity(q.qv, cl.cv) * 1000000) AS simk
-         |  FROM probe
-         |  JOIN q ON probe.query_id = q.query_id
-         |  JOIN cl USING (list_id)
-         |  WHERE probe.query_id <> cl.neighbor_id
-         |    AND (SELECT n FROM ap) > 102400
-         |), iranked AS (
-         |  SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY simk DESC, neighbor_id) AS rank
-         |  FROM isim
-         |)
-         |SELECT query_id, neighbor_id, rank FROM lranked WHERE rank <= 5
-         |UNION ALL
-         |SELECT query_id, neighbor_id, rank FROM iranked WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-    "q34_distinct_agg" ->
-      """SELECT l_returnflag,
-        |       COUNT(DISTINCT l_suppkey) AS n_suppliers,
-        |       COUNT(DISTINCT l_partkey) AS n_parts,
-        |       COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q35_set_ops" ->
-      """WITH recent AS (
-        |  SELECT o_custkey FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |), big AS (
-        |  SELECT o_custkey FROM orders WHERE o_totalprice > 200000
-        |), labeled AS (
-        |  SELECT o_custkey, 'both' AS bucket FROM (SELECT * FROM recent INTERSECT SELECT * FROM big) t1
-        |  UNION ALL
-        |  SELECT o_custkey, 'recent_only' AS bucket FROM (SELECT * FROM recent EXCEPT SELECT * FROM big) t2
-        |)
-        |SELECT bucket, COUNT(*) AS n_customers
-        |FROM labeled GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q36_rollup" ->
-      """SELECT year(o_orderdate) AS year, o_orderstatus,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        |       COUNT(*) AS n_orders
-        |FROM orders
-        |GROUP BY ROLLUP(year(o_orderdate), o_orderstatus)
-        |ORDER BY year ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST""".stripMargin,
-    "q38_docs_curation" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents), text, source FROM documents WHERE doc_id % 10 = 0
-        |), keep AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM all_docs GROUP BY md5(text)
-        |), kept AS (
-        |  SELECT a.* FROM all_docs a JOIN keep k ON a.doc_id = k.doc_id
-        |), scored AS (
-        |  SELECT source,
-        |         CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS alpha_chars,
-        |         CAST(length(text) AS BIGINT) AS len,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE length(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-        |  FROM kept
-        |)
-        |SELECT source, COUNT(*) AS n_docs,
-        |       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-        |       CAST(SUM((alpha_chars * 10000 + len // 2) // len) AS BIGINT) AS sum_alpha_q
-        |FROM scored
-        |WHERE len >= 100 AND alpha_chars * 100 >= 55 * len AND n_tokens >= 10
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q39_events_sliding" ->
-      """SELECT strftime(w, '%Y-%m-%d %H:%M') AS window_start, event_type,
-        |       COUNT(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM (
-        |  SELECT make_timestamp(CAST((floor(epoch(ts)/1800)*1800 - s.shift) * 1000000 AS BIGINT)) AS w,
-        |         ts, event_type, value
-        |  FROM events CROSS JOIN (VALUES (0), (1800)) s(shift)
-        |) t
-        |WHERE ts < w + INTERVAL 1 HOUR
-        |GROUP BY w, event_type ORDER BY window_start, event_type""".stripMargin,
-    "q40_pipeline_dashboard" ->
-      """WITH inv AS (
-        |  SELECT l_shipdate AS date,
-        |         'LOC' || CAST(l_suppkey % 20 AS VARCHAR) AS store_location,
-        |         CAST(round(l_extendedprice, 2) AS DECIMAL(15,2)) AS total_sales
-        |  FROM lineitem
-        |)
-        |SELECT year(date) AS year, month(date) AS month, store_location,
-        |       CAST(SUM(total_sales) AS DOUBLE) AS total_sales
-        |FROM inv
-        |GROUP BY 1, 2, 3
-        |ORDER BY 1, 2, 3""".stripMargin,
-    // r5 ROOT CAUSE of the four-round q38/q55–q57 driver hash-fail:
-    // these four oracles were the ONLY ones (of 147) whose OUTPUT
-    // columns were raw integer SUMs, and DuckDB types SUM(INTEGER/
-    // BIGINT) as HUGEINT (int128). Python fetchall() materializes
-    // HUGEINT as exact ints (local gate green all four rounds), but a
-    // pandas/arrow materialization renders int128 differently (e.g.
-    // float64 "4161.0" vs "4161"), so the driver's value hash diverged
-    // while rows and schema matched — exactly the observed signature.
-    // Every integer aggregate an oracle RETURNS must therefore be
-    // wrapped CAST(... AS BIGINT); OracleLintSpec enforces this by
-    // typechecking every oracle against DuckDB-JDBC and failing on any
-    // HUGEINT output column.
-    //
-    // q55–q57: the dashboard queries join dim_product, which is distinct
-    // over (product_id, product_category, unit_price) — unit_price is
-    // NOT a function of product_id, so the join fans out per price
-    // variant. The oracle reproduces the fan-out over the BIGINT cents
-    // value (bijective with the DECIMAL(10,2) dollars the Spark
-    // pipeline carries): exact cents from the cents-exact stored
-    // double, then `//` integer division — no IEEE division anywhere
-    // that a DuckDB version could evaluate differently.
-    "q55_pipeline_dash_q2" ->
-      """WITH inv AS (
-        |  SELECT 'P' || CAST(l_partkey AS VARCHAR) AS product_id,
-        |         'CAT' || CAST(l_partkey % 7 AS VARCHAR) AS product_category,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents,
-        |         CAST(floor(l_quantity) AS INTEGER) AS quantity_sold,
-        |         l_shipdate AS date
-        |  FROM lineitem
-        |), dim_product AS (
-        |  SELECT DISTINCT product_id, product_category, up_cents FROM inv
-        |)
-        |SELECT p.product_id, p.product_category,
-        |       CAST(SUM(f.quantity_sold) AS BIGINT) AS total_quantity_sold
-        |FROM inv f JOIN dim_product p ON f.product_id = p.product_id
-        |WHERE year(f.date) = 1995
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q56_pipeline_dash_q3" ->
-      """WITH inv AS (
-        |  SELECT 'LOC' || CAST(l_suppkey % 20 AS VARCHAR) AS store_location,
-        |         'P' || CAST(l_partkey AS VARCHAR) AS product_id,
-        |         'CAT' || CAST(l_partkey % 7 AS VARCHAR) AS product_category,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents,
-        |         CAST(floor(l_quantity) AS INTEGER) AS quantity_sold,
-        |         CAST((l_suppkey * 7) % 100 AS INTEGER) AS stock_level
-        |  FROM lineitem
-        |), dim_product AS (
-        |  SELECT DISTINCT product_id, product_category, up_cents FROM inv
-        |)
-        |SELECT f.store_location, p.product_category,
-        |       CAST(SUM(f.quantity_sold) AS BIGINT) AS total_sold,
-        |       CAST((SUM(CAST(f.stock_level AS BIGINT)) * 1000) // COUNT(*) AS BIGINT) AS avg_stock_x1000
-        |FROM inv f JOIN dim_product p ON f.product_id = p.product_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q57_pipeline_dash_q4" ->
-      """WITH inv AS (
-        |  SELECT 'LOC' || CAST(l_suppkey % 20 AS VARCHAR) AS store_location,
-        |         'P' || CAST(l_partkey AS VARCHAR) AS product_id,
-        |         'CAT' || CAST(l_partkey % 7 AS VARCHAR) AS product_category,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents,
-        |         CAST(floor(l_quantity) AS INTEGER) AS quantity_sold,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS sales_cents
-        |  FROM lineitem
-        |), dim_product AS (
-        |  SELECT DISTINCT product_id, product_category, up_cents FROM inv
-        |)
-        |SELECT f.store_location, p.product_category,
-        |       CAST(SUM(f.quantity_sold) AS BIGINT) AS total_quantity,
-        |       CAST(SUM(f.sales_cents) AS BIGINT) AS sales_cents
-        |FROM inv f JOIN dim_product p ON f.product_id = p.product_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q61/q62: the sampling decision is ((key mod 2^31)*2654435761)
-    // mod 10000 — pure integer arithmetic, identical on both engines
-    // (keys are non-negative so % and pmod agree); the 31-bit fold
-    // keeps the product in Long range for any key.
-    "q61_sample_deterministic" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE ((doc_id % 2147483648) * 2654435761) % 10000 < 2000
-        |ORDER BY doc_id""".stripMargin,
-    "q62_sample_stratified" ->
-      """SELECT event_type, COUNT(*) AS n_sampled
-        |FROM events
-        |WHERE ((event_id % 2147483648) * 2654435761) % 10000 <
-        |  CASE WHEN event_type = 'purchase' THEN 10000
-        |       WHEN event_type = 'click' THEN 1000
-        |       ELSE 500 END
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q63: distinct char n-grams per doc — the Spark side counts
-    // distinct 64-bit gram hashes (collision odds ~1e-14/doc), the
-    // oracle counts the grams themselves; all-ASCII corpus keeps byte
-    // and character grams identical.
-    "q63_docs_repetition" ->
-      """WITH g AS (
-        |  SELECT doc_id, text, unnest(generate_series(1, length(text) - 9)) AS i FROM documents
-        |), r10 AS (
-        |  SELECT doc_id, 1.0 - CAST(COUNT(DISTINCT substr(text, CAST(i AS INTEGER), 10)) AS DOUBLE) / COUNT(*) AS r
-        |  FROM g GROUP BY doc_id
-        |), g5 AS (
-        |  SELECT doc_id, text, unnest(generate_series(1, length(text) - 4)) AS i FROM documents
-        |), r5 AS (
-        |  SELECT doc_id, 1.0 - CAST(COUNT(DISTINCT substr(text, CAST(i AS INTEGER), 5)) AS DOUBLE) / COUNT(*) AS r
-        |  FROM g5 GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, COALESCE(r10.r, 0.0) AS dup10_ratio, COALESCE(r5.r, 0.0) AS dup5_ratio
-        |FROM documents d LEFT JOIN r10 ON d.doc_id = r10.doc_id LEFT JOIN r5 ON d.doc_id = r5.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q64: both engines order and range the window on floor-of-second
-    // epoch, so sub-second timestamps bucket identically.
-    "q64_events_trailing" ->
-      """SELECT event_id, user_id,
-        |       COUNT(*) OVER w AS n_events_1h,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS value_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    // chunk count = ceil(max(len - overlap, 1) / stride): a tail that
-    // is entirely overlap of the previous window is not emitted.
-    "q66_docs_chunks" ->
-      """SELECT doc_id, i AS chunk_id,
-        |       substr(text, CAST(i * 450 + 1 AS INTEGER), 500) AS chunk_text
-        |FROM (
-        |  SELECT doc_id, text,
-        |         unnest(generate_series(0,
-        |           CAST(floor((GREATEST(length(text) - 50, 1) - 1) / 450.0) AS INTEGER))) AS i
-        |  FROM documents WHERE length(text) > 0
-        |)
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    "q71_events_gap_fill" ->
-      """SELECT event_id, user_id,
-        |       CAST(last_value(CASE WHEN event_type <> 'click'
-        |                            THEN CAST(value AS DECIMAL(18,4)) END IGNORE NULLS)
-        |         OVER (PARTITION BY user_id
-        |               ORDER BY CAST(epoch(date_trunc('second', ts)) AS BIGINT), event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS filled_value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q70_docs_jaccard_exact" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 100
-        |  UNION ALL
-        |  SELECT doc_id + 200000, text || ' tail token' FROM documents
-        |  WHERE doc_id < 100 AND doc_id % 7 = 0
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM docs WHERE length(trim(text)) > 0
-        |), grams AS (
-        |  SELECT DISTINCT doc_id,
-        |         t[CAST(i AS INTEGER)] || ' ' || t[CAST(i+1 AS INTEGER)] || ' ' || t[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i FROM toks)
-        |), sets AS (
-        |  SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT i.doc_a, i.doc_b,
-        |       CAST(i.ninter AS DOUBLE) / (sa.n + sb.n - i.ninter) AS jaccard
-        |FROM inter i
-        |JOIN sets sa ON i.doc_a = sa.doc_id
-        |JOIN sets sb ON i.doc_b = sb.doc_id
-        |WHERE CAST(i.ninter AS DOUBLE) / (sa.n + sb.n - i.ninter) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q69_events_lag_lead" ->
-      """SELECT event_id, user_id,
-        |       CAST(CAST(value AS DECIMAL(18,4))
-        |            - lag(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS value_delta,
-        |       lead(event_type) OVER w AS next_event_type,
-        |       CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-        |         - lag(CAST(epoch(date_trunc('second', ts)) AS BIGINT)) OVER w AS secs_since_prev
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(epoch(date_trunc('second', ts)) AS BIGINT), event_id)
-        |ORDER BY event_id""".stripMargin,
-    "q65_emb_class_centroids" ->
-      """WITH e AS (
-        |  SELECT label, i - 1 AS pos,
-        |         CAST(FLOOR(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE) * 1000000) AS BIGINT) AS xq
-        |  FROM (SELECT label, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
-        |)
-        |SELECT label, pos, CAST(SUM(xq) AS DOUBLE) / COUNT(*) AS centroid_e6
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q41_asof_join" ->
-      """SELECT l.event_id, l.user_id, l.event_type, r.value AS asof_value
-        |FROM events l
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-        |) r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    "q42_json_extract" ->
-      """SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k,
-        |       COUNT(*) AS n_events
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q52_percentiles" ->
-      """SELECT l_returnflag,
-        |       quantile_cont(l_quantity, 0.5) AS median_qty,
-        |       quantile_cont(l_quantity, 0.9) AS p90_qty,
-        |       MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
-        |       COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q53_array_agg" ->
-      """SELECT o_orderstatus,
-        |       list_aggregate(list_sort(list(o_orderkey)), 'string_agg', ',') AS big_orders,
-        |       COUNT(*) AS n
-        |FROM orders WHERE o_totalprice > 400000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q54_string_funcs" ->
-      """SELECT c_custkey, upper(c_name) AS upper_name,
-        |       substring(c_name, 1, 8) AS prefix8,
-        |       length(replace(c_name, '_', '-')) AS len_translated,
-        |       lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded_key,
-        |       levenshtein(c_name, c_mktsegment) AS edit_dist
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q50_word_count" ->
-      """SELECT word, COUNT(*) AS n FROM (
-        |  SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS word
-        |  FROM documents WHERE length(trim(text)) > 0
-        |) t
-        |WHERE length(word) >= 3
-        |GROUP BY word ORDER BY n DESC, word LIMIT 50""".stripMargin,
-    "q51_pivot" ->
-      """SELECT user_id,
-        |       COUNT(*) FILTER (WHERE event_type = 'click') AS click,
-        |       COUNT(*) FILTER (WHERE event_type = 'view') AS view,
-        |       COUNT(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        |       COUNT(*) FILTER (WHERE event_type = 'signup') AS signup,
-        |       COUNT(*) FILTER (WHERE event_type = 'error') AS error
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q48_interval_join" ->
-      """SELECT l.user_id, COUNT(*) AS n_pairs,
-        |       CAST(SUM(CAST(r.value AS DECIMAL(18,4))) AS DOUBLE) AS purchase_value
-        |FROM events l
-        |JOIN events r ON l.user_id = r.user_id
-        |  AND r.event_type = 'purchase'
-        |  AND r.ts >= l.ts - INTERVAL 1 HOUR AND r.ts <= l.ts
-        |WHERE l.event_type = 'click'
-        |GROUP BY l.user_id ORDER BY l.user_id""".stripMargin,
-    "q45_tpch_q3" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       o_orderpriority, round(revenue, 2) AS revenue
-        |FROM (
-        |  SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |         CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |  FROM customer
-        |  JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |  WHERE c_mktsegment = 'BUILDING'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |    AND l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-        |  GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |  ORDER BY revenue DESC, l_orderkey LIMIT 20
-        |) t ORDER BY revenue DESC, l_orderkey""".stripMargin,
-    "q46_tpch_q5" ->
-      """SELECT n_name, round(revenue, 2) AS revenue
-        |FROM (
-        |  SELECT n_name,
-        |         CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |  FROM region
-        |  JOIN nation ON r_regionkey = n_regionkey
-        |  JOIN customer ON n_nationkey = c_nationkey
-        |  JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |  WHERE r_name = 'ASIA'
-        |  GROUP BY n_name
-        |) t ORDER BY revenue DESC, n_name""".stripMargin,
-    "q47_tpch_q10" ->
-      """SELECT c_custkey, c_name, n_name, round(revenue, 2) AS revenue
-        |FROM (
-        |  SELECT c_custkey, c_name, n_name,
-        |         CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |  FROM customer
-        |  JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  WHERE l_returnflag = 'R'
-        |  GROUP BY c_custkey, c_name, n_name
-        |  ORDER BY revenue DESC, c_custkey LIMIT 20
-        |) t ORDER BY revenue DESC, c_custkey""".stripMargin,
-    // q128: same normalize → prefix/suffix-block → rank-capped
-    // neighbor join (cap 8, r9) → thresholded levenshtein. DuckDB's
-    // regexp_replace needs the 'g' flag (Spark replaces all matches by
-    // default); its levenshtein has no threshold arg, so the filter
-    // does the banding. The cap is deterministic (rank by doc_id
-    // inside each block), so it reproduces exactly.
-    "q128_docs_fuzzy_match" ->
-      """WITH keyed AS (
-        |  SELECT doc_id,
-        |         substr(regexp_replace(lower(text), '\s+', ' ', 'g'), 1, 24) AS fkey
-        |  FROM documents WHERE text IS NOT NULL
-        |), blocks AS (
-        |  SELECT doc_id, fkey, 'p:' || substr(fkey, 1, 6) AS blk FROM keyed
-        |  UNION ALL
-        |  SELECT doc_id, fkey, 's:' || right(fkey, 6) AS blk FROM keyed
-        |), ranked AS (
-        |  SELECT doc_id, fkey, blk,
-        |         row_number() OVER (PARTITION BY blk ORDER BY doc_id) AS rn
-        |  FROM blocks
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |         l.fkey AS lk, r.fkey AS rk
-        |  FROM ranked l JOIN ranked r
-        |    ON l.blk = r.blk AND r.rn > l.rn AND r.rn <= l.rn + 8
-        |   AND abs(length(l.fkey) - length(r.fkey)) <= 3
-        |)
-        |SELECT doc_a, doc_b, CAST(levenshtein(lk, rk) AS BIGINT) AS dist
-        |FROM cand WHERE levenshtein(lk, rk) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // q129: the compacted copy must answer exactly like the original.
-    "q129_events_compaction" ->
-      """SELECT event_type, COUNT(*) AS n_events,
-        |       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |         AS value_cents,
-        |       MIN(event_id) AS min_event_id,
-        |       MAX(event_id) AS max_event_id
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q130: integer ppm shares (floor division) per snapshot + delta.
-    "q130_corpus_drift" ->
-      """WITH a AS (
-        |  SELECT lang, COUNT(*) AS n_prev FROM documents
-        |  WHERE doc_id % 2 = 0 GROUP BY lang
-        |), b AS (
-        |  SELECT lang, COUNT(*) AS n_cur FROM documents
-        |  WHERE doc_id % 2 = 1 GROUP BY lang
-        |), sh AS (
-        |  SELECT COALESCE(a.lang, b.lang) AS lang,
-        |         COALESCE(a.n_prev, 0) AS n_prev,
-        |         COALESCE(b.n_cur, 0) AS n_cur,
-        |         CAST(COALESCE(a.n_prev, 0) * 1000000
-        |              // (SELECT SUM(n_prev) FROM a) AS BIGINT) AS ppm_prev,
-        |         CAST(COALESCE(b.n_cur, 0) * 1000000
-        |              // (SELECT SUM(n_cur) FROM b) AS BIGINT) AS ppm_cur
-        |  FROM a FULL OUTER JOIN b USING (lang)
-        |)
-        |SELECT lang, n_prev, ppm_prev, n_cur, ppm_cur,
-        |       abs(ppm_cur - ppm_prev) AS drift_ppm
-        |FROM sh ORDER BY lang""".stripMargin,
-    // q131: WAV sample i = (byte_i − 128)·256; all stats are integer
-    // consequences of the source bytes (zero crossings via LAG over
-    // the sign test byte < 128). Zero-length docs keep all-zero rows
-    // through the LEFT JOIN.
-    "q131_audio_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id, text, length(text) AS len FROM documents
-        |), bytes AS (
-        |  SELECT doc_id, i, ord(substr(text, CAST(i AS INTEGER), 1)) AS v
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, len)) AS i FROM d)
-        |), stats AS (
-        |  SELECT doc_id,
-        |         SUM(abs(v - 128)) * 256 AS sum_abs,
-        |         MAX(abs(v - 128)) * 256 AS peak_abs
-        |  FROM bytes GROUP BY doc_id
-        |), flips AS (
-        |  SELECT doc_id,
-        |         SUM(CASE WHEN prev_neg IS NOT NULL
-        |                   AND (v < 128) <> prev_neg THEN 1 ELSE 0 END) AS zc
-        |  FROM (SELECT doc_id, v,
-        |               LAG(v < 128) OVER (PARTITION BY doc_id ORDER BY i) AS prev_neg
-        |        FROM bytes)
-        |  GROUP BY doc_id
-        |)
-        |SELECT d.doc_id AS media_id,
-        |       CAST(d.len AS BIGINT) AS n_samples,
-        |       CAST(8000 AS BIGINT) AS sample_rate,
-        |       CAST(d.len * 1000 // 8000 AS BIGINT) AS duration_ms,
-        |       CAST(COALESCE(s.sum_abs, 0) AS BIGINT) AS sum_abs,
-        |       CAST(COALESCE(s.peak_abs, 0) AS BIGINT) AS peak_abs,
-        |       CAST(COALESCE(f.zc, 0) AS BIGINT) AS zero_cross
-        |FROM d LEFT JOIN stats s USING (doc_id) LEFT JOIN flips f USING (doc_id)
-        |ORDER BY media_id""".stripMargin,
-    // q132: LAG over the same (ts, event_id) ordering — engine-
-    // independent even on tied timestamps.
-    "q132_event_transitions" ->
-      """SELECT COALESCE(prev, '(start)') AS from_type,
-        |       event_type AS to_type, COUNT(*) AS n
-        |FROM (SELECT event_type,
-        |             LAG(event_type) OVER (PARTITION BY user_id
-        |                                   ORDER BY ts, event_id) AS prev
-        |      FROM events)
-        |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin,
-    // q133: q122's bigram construction; top-200 vocabulary with the
-    // same (count desc, bigram asc) deterministic boundary; integer
-    // ppm coverage.
-    "q133_docs_lm_coverage" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |  FROM documents
-        |), b AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bigram
-        |  FROM d, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |), v AS (
-        |  SELECT bigram FROM (
-        |    SELECT bigram, count(*) AS n FROM b GROUP BY 1
-        |  ) ORDER BY n DESC, bigram LIMIT 200
-        |), pd AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |         CAST(SUM(CASE WHEN bigram IN (SELECT bigram FROM v)
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_in_vocab
-        |  FROM b GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |       COALESCE(pd.n_bigrams, 0) AS n_bigrams,
-        |       COALESCE(pd.n_in_vocab, 0) AS n_in_vocab,
-        |       CASE WHEN COALESCE(pd.n_bigrams, 0) = 0 THEN 0
-        |            ELSE CAST(pd.n_in_vocab * 1000000 // pd.n_bigrams AS BIGINT)
-        |       END AS coverage_ppm
-        |FROM d LEFT JOIN pd USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // q134: build(two thirds) + append(rest) must serve exactly like
-    // the one-shot full-corpus index.
-    "q134_emb_ann_ivf_append" -> signIvfOracle,
-    // q135: the canonical sorted-distinct-token string is the group
-    // key on both engines (binary sort order on ASCII tokens).
-    "q135_docs_bow_dedup" ->
-      """WITH k AS (
-        |  SELECT doc_id,
-        |         array_to_string(list_sort(list_distinct(
-        |           regexp_split_to_array(trim(lower(text)), '\s+'))), ' ')
-        |           AS bow_key
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CAST(COUNT(*) OVER (PARTITION BY bow_key) AS BIGINT) AS group_size,
-        |       CAST(MIN(doc_id) OVER (PARTITION BY bow_key) AS BIGINT) AS keep_id,
-        |       CAST(CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY bow_key)
-        |                 THEN 0 ELSE 1 END AS BIGINT) AS is_dup
-        |FROM k ORDER BY doc_id""".stripMargin,
-    // q137: same integer ppm shares as q130, LAG'd per type across days.
-    "q137_events_type_drift" ->
-      """WITH c AS (
-        |  SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-        |         CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
-        |), s AS (
-        |  SELECT day, event_type, n,
-        |         CAST(n * 1000000 // SUM(n) OVER (PARTITION BY day) AS BIGINT)
-        |           AS ppm
-        |  FROM c
-        |)
-        |SELECT day, event_type, n, ppm,
-        |       ppm - LAG(ppm) OVER (PARTITION BY event_type ORDER BY day)
-        |         AS delta_ppm
-        |FROM s ORDER BY day, event_type""".stripMargin,
-    // q138: interpolated medians of integers are half-integers (exact
-    // doubles); scaling to med2/mad4 BIGINTs before anything is
-    // compared or hashed keeps both engines bit-identical.
-    "q138_events_anomaly_mad" ->
-      """WITH c AS (
-        |  SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-        |         CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
-        |), m AS (
-        |  SELECT event_type, CAST(2 * quantile_cont(n, 0.5) AS BIGINT) AS med2
-        |  FROM c GROUP BY 1
-        |), d AS (
-        |  SELECT c.day, c.event_type, c.n,
-        |         CAST(abs(2 * c.n - m.med2) AS BIGINT) AS dev2
-        |  FROM c JOIN m USING (event_type)
-        |), md AS (
-        |  SELECT event_type, CAST(2 * quantile_cont(dev2, 0.5) AS BIGINT) AS mad4
-        |  FROM d GROUP BY 1
-        |)
-        |SELECT d.day, d.event_type, d.n, d.dev2, md.mad4,
-        |       CAST(CASE WHEN 2 * d.dev2 > 3 * md.mad4 THEN 1 ELSE 0 END
-        |         AS BIGINT) AS is_anomaly
-        |FROM d JOIN md USING (event_type)
-        |ORDER BY day, event_type""".stripMargin,
-    "q139_docs_cluster_sizes" ->
-      """SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
-        |FROM (
-        |  SELECT text, CAST(COUNT(*) AS BIGINT) AS cluster_size
-        |  FROM (
-        |    SELECT text FROM documents
-        |    UNION ALL
-        |    SELECT text FROM documents WHERE doc_id % 25 = 0
-        |  ) GROUP BY text
-        |)
-        |GROUP BY cluster_size ORDER BY cluster_size""".stripMargin,
-    // q140: two LAGs over the same engine-independent (ts, event_id)
-    // ordering as q132.
-    "q140_events_paths" ->
-      """SELECT path, n FROM (
-        |  SELECT s0 || '>' || s1 || '>' || s2 AS path,
-        |         CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM (
-        |    SELECT LAG(event_type, 2) OVER w AS s0,
-        |           LAG(event_type, 1) OVER w AS s1,
-        |           event_type AS s2
-        |    FROM events
-        |    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |  )
-        |  WHERE s0 IS NOT NULL
-        |  GROUP BY 1
-        |  ORDER BY n DESC, path LIMIT 10
-        |) t ORDER BY n DESC, path""".stripMargin,
-    "q141_partition_reconcile" ->
-      """WITH src AS (
-        |  SELECT CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS ship_year,
-        |         CAST(EXTRACT(month FROM l_shipdate) AS BIGINT) AS ship_month,
-        |         CAST(COUNT(*) AS BIGINT) AS n_src
-        |  FROM lineitem GROUP BY 1, 2
-        |), cur AS (
-        |  SELECT CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS ship_year,
-        |         CAST(EXTRACT(month FROM l_shipdate) AS BIGINT) AS ship_month,
-        |         CAST(COUNT(*) AS BIGINT) AS n_cur
-        |  FROM lineitem
-        |  WHERE NOT (EXTRACT(year FROM l_shipdate) = 1997
-        |             AND EXTRACT(month FROM l_shipdate) = 6)
-        |  GROUP BY 1, 2
-        |)
-        |SELECT COALESCE(src.ship_year, cur.ship_year) AS ship_year,
-        |       COALESCE(src.ship_month, cur.ship_month) AS ship_month,
-        |       COALESCE(n_src, 0) AS n_src,
-        |       COALESCE(n_cur, 0) AS n_cur,
-        |       COALESCE(n_src, 0) - COALESCE(n_cur, 0) AS missing_rows
-        |FROM src FULL OUTER JOIN cur
-        |  ON src.ship_year = cur.ship_year AND src.ship_month = cur.ship_month
-        |WHERE COALESCE(n_src, 0) <> COALESCE(n_cur, 0)
-        |ORDER BY ship_year, ship_month""".stripMargin,
-    // q142: the pointer-resolved read must equal the direct aggregate.
-    "q142_versioned_publish" ->
-      """SELECT l_returnflag,
-        |       CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS ship_year,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       CAST(SUM(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-        |         AS BIGINT) AS sum_ep_cents,
-        |       CAST(COUNT(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |GROUP BY 1, 2
-        |ORDER BY l_returnflag, ship_year""".stripMargin,
-    // q143: latest change per key, tombstone removes the key.
-    "q143_cdc_apply" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-        |       CAST(floor(value * 100 + 0.5) AS BIGINT) AS last_value_cents
-        |FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |                               ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events
-        |)
-        |WHERE rn = 1 AND event_type <> 'error'
-        |ORDER BY user_id""".stripMargin,
-    // q144: the naive single-partition formulation IS the oracle — the
-    // parallel plan must reproduce it exactly.
-    "q144_docs_global_ids" ->
-      """SELECT doc_id, lang,
-        |       CAST(ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS BIGINT)
-        |         AS global_id
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q145: IS NOT DISTINCT FROM is SQL's spelling of <=>.
-    "q145_null_safe_join" ->
-      """WITH sparse AS (
-        |  SELECT user_id, event_id,
-        |         CASE WHEN event_type <> 'click'
-        |              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS v_cents
-        |  FROM events
-        |), refv AS (
-        |  SELECT user_id AS r_user, v_cents AS r_v,
-        |         CAST(COUNT(*) AS BIGINT) AS n_ref
-        |  FROM sparse GROUP BY 1, 2
-        |)
-        |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_matched,
-        |       CAST(SUM(CASE WHEN v_cents IS NULL THEN n_ref ELSE 0 END)
-        |         AS BIGINT) AS null_bucket_weight
-        |FROM sparse JOIN refv
-        |  ON user_id = r_user AND v_cents IS NOT DISTINCT FROM r_v
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q146: melt the pivoted counts back to long form.
-    "q146_unpivot" ->
-      """WITH wide AS (
-        |  SELECT user_id,
-        |         CAST(COUNT(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
-        |         CAST(COUNT(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view,
-        |         CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
-        |           AS purchase
-        |  FROM events GROUP BY user_id
-        |)
-        |SELECT user_id, event_type, n FROM (
-        |  SELECT user_id, 'click' AS event_type, click AS n FROM wide
-        |  UNION ALL
-        |  SELECT user_id, 'view', view FROM wide
-        |  UNION ALL
-        |  SELECT user_id, 'purchase', purchase FROM wide
-        |)
-        |WHERE n > 0
-        |ORDER BY user_id, event_type""".stripMargin,
-    // q147: a source byte at 0-based position i sits in pixel i//3,
-    // source column (i//3) % 16; the 16→8 nearest-neighbor downsample
-    // keeps even columns only. Padding bytes are zero and drop out.
-    "q147_multimodal_resize" ->
-      """WITH d AS (
-        |  SELECT doc_id, text, length(text) AS len FROM documents
-        |), bytes AS (
-        |  SELECT doc_id, i, ord(substr(text, CAST(i AS INTEGER), 1)) AS v
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, len)) AS i FROM d)
-        |), s AS (
-        |  SELECT doc_id,
-        |         SUM(CASE WHEN (((i - 1) // 3) % 16) % 2 = 0 THEN v ELSE 0 END)
-        |           AS sum_bytes
-        |  FROM bytes GROUP BY doc_id
-        |)
-        |SELECT d.doc_id AS media_id,
-        |       CAST(8 AS BIGINT) AS width,
-        |       CAST(GREATEST((d.len + 47) // 48, 1) AS BIGINT) AS height,
-        |       CAST(8 * GREATEST((d.len + 47) // 48, 1) AS BIGINT) AS n_pixels,
-        |       CAST(COALESCE(s.sum_bytes, 0) AS BIGINT) AS sum_bytes
-        |FROM d LEFT JOIN s USING (doc_id)
-        |ORDER BY media_id""".stripMargin,
-    // q148: the q38/q77/q66 oracle pieces stacked. With zero overlap,
-    // per-doc chunk tokens sum back to the doc's token count, so the
-    // chunk stage needs no explode here: n_chunks = ceil(ntok/200).
-    "q148_curation_e2e" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text, lang FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents), text, lang FROM documents WHERE doc_id % 10 = 0
-        |), keep AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM all_docs GROUP BY md5(text)
-        |), deduped AS (
-        |  SELECT a.* FROM all_docs a JOIN keep USING (doc_id)
-        |), gated AS (
-        |  SELECT doc_id, lang,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE length(regexp_split_to_array(trim(text), '\s+')) END
-        |           AS n_tokens
-        |  FROM deduped
-        |  WHERE length(text) >= 100
-        |    AND length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 100
-        |        >= 55 * length(text)
-        |    AND (CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE length(regexp_split_to_array(trim(text), '\s+')) END) >= 10
-        |), sampled AS (
-        |  SELECT doc_id, lang, n_tokens FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY lang
-        |      ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296,
-        |               doc_id) AS rk
-        |    FROM gated
-        |  ) t WHERE rk <= 30
-        |)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(SUM((n_tokens + 199) // 200) AS BIGINT) AS n_chunks,
-        |       CAST(SUM(n_tokens) AS BIGINT) AS sum_chunk_tokens
-        |FROM sampled GROUP BY lang ORDER BY lang""".stripMargin,
-    "q149_skew_report" ->
-      """WITH c AS (
-        |  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY 1
-        |), s AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS total,
-        |         CAST(COUNT(*) AS BIGINT) AS nkeys FROM c
-        |)
-        |SELECT user_id, n,
-        |       CAST((n * 1000000) // total AS BIGINT) AS share_ppm,
-        |       CAST((n * 100 * nkeys) // total AS BIGINT) AS vs_mean_x100
-        |FROM c, s
-        |ORDER BY n DESC, user_id LIMIT 10""".stripMargin,
-    // q150: merged state expressed directly — deletes are matched
-    // keys with p_partkey % 30 = 0; updated keys (% 10, not deleted)
-    // carry price+1000; inserts are shifted keys; everything else
-    // survives unchanged.
-    "q150_merge_upsert" ->
-      """WITH merged AS (
-        |  SELECT p_partkey,
-        |         CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) + 1000
-        |           AS price_cents,
-        |         'updated' AS status
-        |  FROM part
-        |  WHERE p_partkey % 10 = 0 AND p_partkey % 30 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey,
-        |         CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT),
-        |         'current'
-        |  FROM part WHERE p_partkey % 10 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey + (SELECT (max(p_partkey) // 1000000 + 1) * 1000000 FROM part), 9999, 'new'
-        |  FROM part WHERE p_partkey % 7 = 0
-        |)
-        |SELECT status, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(price_cents) AS BIGINT) AS sum_cents,
-        |       MIN(p_partkey) AS min_key, MAX(p_partkey) AS max_key
-        |FROM merged GROUP BY status ORDER BY status""".stripMargin,
-    // q151: same template (whitespace-guarded assistant tag → mask
-    // alignment is structural), same whitespace token counts.
-    "q151_docs_sft_format" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |         '<|user|>' || 'Summarize the following passage: '
-        |           || substr(text, 1, 120) || ' <|assistant|>' AS prompt_region,
-        |         substr(text, 121) AS completion
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       prompt_region || ' ' || completion AS rendered,
-        |       CAST(length(prompt_region || ' ' || completion) AS BIGINT)
-        |         AS n_chars,
-        |       CAST(CASE WHEN length(trim(prompt_region)) = 0 THEN 0
-        |            ELSE length(regexp_split_to_array(trim(prompt_region), '\s+'))
-        |            END AS BIGINT) AS n_prompt_tokens,
-        |       CAST(CASE WHEN length(trim(completion)) = 0 THEN 0
-        |            ELSE length(regexp_split_to_array(trim(completion), '\s+'))
-        |            END AS BIGINT) AS n_completion_tokens,
-        |       CAST(CASE WHEN length(trim(prompt_region)) = 0 THEN 0
-        |            ELSE length(regexp_split_to_array(trim(prompt_region), '\s+'))
-        |            END AS BIGINT) AS mask_from
-        |FROM f ORDER BY doc_id""".stripMargin,
-    // q152: the q70 literal-gram machinery, bucketed by integer
-    // cross-multiplied thresholds.
-    "q152_dedup_calibration" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 100
-        |  UNION ALL
-        |  SELECT doc_id + 200000, text || ' tail token' FROM documents
-        |  WHERE doc_id < 100 AND doc_id % 7 = 0
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM docs WHERE length(trim(text)) > 0
-        |), grams AS (
-        |  SELECT DISTINCT doc_id,
-        |         t[CAST(i AS INTEGER)] || ' ' || t[CAST(i+1 AS INTEGER)] || ' ' || t[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i FROM toks)
-        |), sets AS (
-        |  SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), uni AS (
-        |  SELECT i.ninter, sa.n + sb.n - i.ninter AS u
-        |  FROM inter i
-        |  JOIN sets sa ON i.doc_a = sa.doc_id
-        |  JOIN sets sb ON i.doc_b = sb.doc_id
-        |)
-        |SELECT CAST(t.threshold_pct AS BIGINT) AS threshold_pct,
-        |       CAST(COUNT(*) AS BIGINT) AS n_pairs
-        |FROM uni, (VALUES (30), (50), (70), (90)) t(threshold_pct)
-        |WHERE ninter * 100 >= t.threshold_pct * u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q153: same planted corpus, same gate criteria as rates.
-    "q153_source_scorecard" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, source, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents), source, text FROM documents
-        |  WHERE doc_id % 25 = 0
-        |), stats AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |         CAST(COUNT(*) - COUNT(DISTINCT text) AS BIGINT)
-        |           AS n_dup_docs,
-        |         CAST(SUM(CASE WHEN length(text) < 100 THEN 1 ELSE 0 END)
-        |           AS BIGINT) AS n_short,
-        |         CAST(SUM(CASE WHEN
-        |             length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 100
-        |             < length(text) * 55 THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_low_alpha,
-        |         CAST(SUM(length(text)) AS BIGINT) AS sum_len
-        |  FROM corpus GROUP BY source
-        |)
-        |SELECT source, n_docs,
-        |       CAST(n_dup_docs * 1000000 // n_docs AS BIGINT) AS dup_ppm,
-        |       CAST(n_short * 1000000 // n_docs AS BIGINT) AS short_ppm,
-        |       CAST(n_low_alpha * 1000000 // n_docs AS BIGINT)
-        |         AS low_alpha_ppm,
-        |       CAST(sum_len * 100 // n_docs AS BIGINT) AS avg_len_x100
-        |FROM stats
-        |ORDER BY source""".stripMargin,
-    // q154: same planted clones; md5-digest self-join over DISTINCT
-    // (source, digest).
-    "q154_source_overlap" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, source, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents),
-        |         'src' || CAST(doc_id % 7 AS VARCHAR) AS source, text
-        |  FROM documents WHERE doc_id % 10 = 0
-        |), keys AS (
-        |  SELECT DISTINCT source, md5(text) AS digest FROM corpus
-        |)
-        |SELECT a.source AS source_a, b.source AS source_b,
-        |       CAST(COUNT(*) AS BIGINT) AS n_shared
-        |FROM keys a JOIN keys b USING (digest)
-        |WHERE a.source < b.source
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    // q155: exact integer moment numerators — no division anywhere.
-    "q155_moment_stats" ->
-      """WITH s AS (
-        |  SELECT l_returnflag,
-        |         CAST(COUNT(*) AS BIGINT) AS n,
-        |         CAST(SUM(q) AS BIGINT) AS sum_q,
-        |         CAST(SUM(q * q) AS BIGINT) AS sum_q2,
-        |         CAST(SUM(ln) AS BIGINT) AS sum_ln,
-        |         CAST(SUM(q * ln) AS BIGINT) AS sum_qln
-        |  FROM (SELECT l_returnflag,
-        |               CAST(floor(l_quantity) AS BIGINT) AS q,
-        |               CAST(l_linenumber AS BIGINT) AS ln
-        |        FROM lineitem)
-        |  GROUP BY l_returnflag
-        |)
-        |SELECT l_returnflag, n, sum_q,
-        |       CAST(n * sum_q2 - sum_q * sum_q AS BIGINT) AS var_num,
-        |       CAST(n * sum_qln - sum_q * sum_ln AS BIGINT) AS cov_num
-        |FROM s ORDER BY l_returnflag""".stripMargin,
-    // q156: same thinned parents, same anti-join counts.
-    "q156_fk_audit" ->
-      """SELECT relation, n_child, n_dangling FROM (
-        |  SELECT 'lineitem.partkey->part' AS relation,
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem) AS n_child,
-        |         CAST((SELECT COUNT(*) FROM lineitem
-        |               WHERE l_partkey NOT IN (
-        |                 SELECT p_partkey FROM part WHERE p_partkey % 50 <> 0))
-        |           AS BIGINT) AS n_dangling
-        |  UNION ALL
-        |  SELECT 'lineitem.suppkey->supplier',
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-        |         CAST((SELECT COUNT(*) FROM lineitem
-        |               WHERE l_suppkey NOT IN (
-        |                 SELECT s_suppkey FROM supplier WHERE s_suppkey % 50 <> 0))
-        |           AS BIGINT)
-        |  UNION ALL
-        |  SELECT 'orders.custkey->customer',
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM orders),
-        |         CAST((SELECT COUNT(*) FROM orders
-        |               WHERE o_custkey NOT IN (
-        |                 SELECT c_custkey FROM customer WHERE c_custkey % 50 <> 0))
-        |           AS BIGINT)
-        |)
-        |ORDER BY relation""".stripMargin,
-    // q157: same cascade via IN-subqueries.
-    "q157_cascade_delete" ->
-      """WITH del_cust AS (
-        |  SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0
-        |), del_orders AS (
-        |  SELECT o_orderkey FROM orders
-        |  WHERE o_custkey IN (SELECT c_custkey FROM del_cust)
-        |)
-        |SELECT table_name, n_total, n_deleted, n_total - n_deleted AS n_kept
-        |FROM (
-        |  SELECT 'customer' AS table_name,
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM customer) AS n_total,
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM del_cust) AS n_deleted
-        |  UNION ALL
-        |  SELECT 'orders',
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM orders),
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM del_orders)
-        |  UNION ALL
-        |  SELECT 'lineitem',
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-        |         (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
-        |          WHERE l_orderkey IN (SELECT o_orderkey FROM del_orders))
-        |)
-        |ORDER BY table_name""".stripMargin,
-    // q158: same bands, same multiplicative-hash draw.
-    "q158_weighted_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 10000
-        |           AS alpha10k,
-        |         length(text) AS len
-        |  FROM documents
-        |), banded AS (
-        |  SELECT doc_id, len,
-        |         CASE WHEN alpha10k >= len * 8250 THEN 'high'
-        |              WHEN alpha10k >= len * 8175 THEN 'mid'
-        |              ELSE 'low' END AS band,
-        |         CASE WHEN alpha10k >= len * 8250 THEN 10000
-        |              WHEN alpha10k >= len * 8175 THEN 5000
-        |              ELSE 1000 END AS keep_bp,
-        |         ((doc_id % 2147483648) * 2654435761) % 10000 AS draw
-        |  FROM d
-        |)
-        |SELECT band, CAST(COUNT(*) AS BIGINT) AS n_candidates,
-        |       CAST(SUM(CASE WHEN draw < keep_bp THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_sampled,
-        |       CAST(SUM(CASE WHEN draw < keep_bp THEN len ELSE 0 END)
-        |         AS BIGINT) AS chars_sampled
-        |FROM banded GROUP BY band ORDER BY band""".stripMargin,
-    // q159: same (source, lang) matrix, same dominance tie-break.
-    "q159_lang_balance" ->
-      """WITH counts AS (
-        |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY source, lang
-        |), ranked AS (
-        |  SELECT source, lang, n,
-        |         SUM(n) OVER (PARTITION BY source) AS n_docs,
-        |         COUNT(*) OVER (PARTITION BY source) AS n_langs,
-        |         ROW_NUMBER() OVER (PARTITION BY source
-        |                            ORDER BY n DESC, lang ASC) AS rn
-        |  FROM counts
-        |)
-        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-        |       CAST(n_langs AS BIGINT) AS n_langs,
-        |       lang AS dominant_lang,
-        |       CAST(n * 1000000 // n_docs AS BIGINT) AS dominant_ppm
-        |FROM ranked WHERE rn = 1 ORDER BY source""".stripMargin,
-    // q160–q165: divergence diagnostics — every integer aggregate is
-    // CAST(... AS BIGINT) at the output so DuckDB's HUGEINT sum type
-    // never reaches the driver's hash (the r5 root-cause finding).
-    "q160_diag_cents_global" ->
-      """WITH inv AS (
-        |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents
-        |  FROM lineitem
-        |)
-        |SELECT CAST(SUM(up_cents) AS BIGINT) AS sum_cents,
-        |       CAST(COUNT(DISTINCT up_cents) AS BIGINT) AS n_distinct_cents,
-        |       CAST(MIN(up_cents) AS BIGINT) AS min_cents,
-        |       CAST(MAX(up_cents) AS BIGINT) AS max_cents,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM inv""".stripMargin,
-    "q161_diag_fanout_hist" ->
-      """WITH inv AS (
-        |  SELECT 'P' || CAST(l_partkey AS VARCHAR) AS product_id,
-        |         'CAT' || CAST(l_partkey % 7 AS VARCHAR) AS product_category,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents
-        |  FROM lineitem
-        |), dim AS (
-        |  SELECT DISTINCT product_id, product_category, up_cents FROM inv
-        |), per AS (
-        |  SELECT product_id, CAST(COUNT(*) AS BIGINT) AS n_variants
-        |  FROM dim GROUP BY product_id
-        |)
-        |SELECT n_variants, CAST(COUNT(*) AS BIGINT) AS n_products
-        |FROM per GROUP BY n_variants ORDER BY n_variants""".stripMargin,
-    "q162_diag_text_sums" ->
-      """SELECT CAST(SUM(CAST(length(text) AS BIGINT)) AS BIGINT) AS sum_len,
-        |       CAST(SUM(CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT)) AS BIGINT) AS sum_alpha,
-        |       CAST(SUM(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                     ELSE length(regexp_split_to_array(trim(text), '\s+')) END) AS BIGINT) AS sum_tokens,
-        |       CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM documents""".stripMargin,
-    "q163_diag_dedup_keep" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents), text, source FROM documents WHERE doc_id % 10 = 0
-        |), keep AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM all_docs GROUP BY md5(text)
-        |), kept AS (
-        |  SELECT a.doc_id, a.source FROM all_docs a JOIN keep k ON a.doc_id = k.doc_id
-        |)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-        |       CAST(MIN(doc_id) AS BIGINT) AS min_keep_id,
-        |       CAST(MAX(doc_id) AS BIGINT) AS max_keep_id,
-        |       CAST(SUM(doc_id) AS BIGINT) AS sum_keep_ids
-        |FROM kept GROUP BY source ORDER BY source""".stripMargin,
-    "q164_diag_q55_total" ->
-      """WITH inv AS (
-        |  SELECT 'P' || CAST(l_partkey AS VARCHAR) AS product_id,
-        |         'CAT' || CAST(l_partkey % 7 AS VARCHAR) AS product_category,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents,
-        |         CAST(floor(l_quantity) AS INTEGER) AS quantity_sold,
-        |         l_shipdate AS date
-        |  FROM lineitem
-        |), dim_product AS (
-        |  SELECT DISTINCT product_id, product_category, up_cents FROM inv
-        |), grouped AS (
-        |  SELECT p.product_id, p.product_category,
-        |         CAST(SUM(f.quantity_sold) AS BIGINT) AS tq
-        |  FROM inv f JOIN dim_product p ON f.product_id = p.product_id
-        |  WHERE year(f.date) = 1995
-        |  GROUP BY 1, 2
-        |)
-        |SELECT CAST(SUM(tq) AS BIGINT) AS grand_total,
-        |       CAST(COUNT(*) AS BIGINT) AS n_groups
-        |FROM grouped""".stripMargin,
-    "q165_diag_q55_bycat" ->
-      """WITH inv AS (
-        |  SELECT 'P' || CAST(l_partkey AS VARCHAR) AS product_id,
-        |         'CAT' || CAST(l_partkey % 7 AS VARCHAR) AS product_category,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-        |           // CAST(GREATEST(floor(l_quantity), 1) AS BIGINT) AS up_cents,
-        |         CAST(floor(l_quantity) AS INTEGER) AS quantity_sold,
-        |         l_shipdate AS date
-        |  FROM lineitem
-        |), dim_product AS (
-        |  SELECT DISTINCT product_id, product_category, up_cents FROM inv
-        |)
-        |SELECT p.product_category,
-        |       CAST(SUM(f.quantity_sold) AS BIGINT) AS total_quantity_sold
-        |FROM inv f JOIN dim_product p ON f.product_id = p.product_id
-        |WHERE year(f.date) = 1995
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q166/q167: the oracles state the range predicates directly on
-    // timestamps (midnight-aligned, so day-number arithmetic on the
-    // Spark side is exactly equivalent); DuckDB plans them as IEJoin.
-    "q166_range_join_shipments" ->
-      """WITH days AS (
-        |  SELECT l_shipdate AS d, COUNT(*) AS n FROM lineitem GROUP BY 1
-        |), wins AS (
-        |  SELECT strftime(o_orderdate, '%Y-%m') AS order_month, o_orderdate AS lo
-        |  FROM orders WHERE o_orderpriority = '1-URGENT'
-        |)
-        |SELECT order_month, CAST(SUM(n) AS BIGINT) AS n_shipped_30d
-        |FROM wins JOIN days ON d >= lo AND d < lo + INTERVAL 30 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q167_interval_overlap" ->
-      """WITH ua AS (
-        |  SELECT strftime(o_orderdate, '%Y-%m') AS order_month, o_orderdate AS lo,
-        |         COUNT(*) AS w
-        |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1, 2
-        |), lb AS (
-        |  SELECT o_orderdate AS lo, COUNT(*) AS w
-        |  FROM orders WHERE o_orderpriority = '5-LOW' GROUP BY 1
-        |)
-        |SELECT ua.order_month, CAST(SUM(ua.w * lb.w) AS BIGINT) AS n_overlap_pairs
-        |FROM ua JOIN lb ON ua.lo < lb.lo + INTERVAL 7 DAY
-        |              AND lb.lo < ua.lo + INTERVAL 7 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q168: native ASOF JOIN picks the same match as q41; the
-    // tolerance is a post-mask on the matched time, exactly as the
-    // engine applies it.
-    "q168_asof_tolerance" ->
-      """SELECT l.event_id, l.user_id, l.event_type,
-        |       CASE WHEN r.ts >= l.ts - INTERVAL 1 HOUR THEN r.value END AS asof_value
-        |FROM events l
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-        |) r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    // q169: the planted-banner outcome stated from first principles —
-    // the banner's internal grams are the only ones reaching
-    // minDf = nDocs/12 (measured bands: natural ≤ 4, boundary ≤
-    // nDocs/24, banner = nDocs/6), so cleaned text == the pre-plant
-    // original everywhere. Text is single-spaced in the testdata, so
-    // whitespace-normalized reconstruction is identity.
-    "q169_docs_boilerplate_scrub" ->
-      """SELECT doc_id, text AS cleaned,
-        |       CAST(CASE WHEN doc_id % 6 = 0 THEN 8 ELSE 0 END AS BIGINT) AS n_removed
-        |FROM documents
-        |WHERE length(trim(text)) > 0
-        |ORDER BY doc_id""".stripMargin,
-    // q136: planted-class compression oracle — membership is a pure
-    // doc_id/length predicate, class rates follow from it, and the
-    // strict planted_rep < prose ratio ordering is a measured-
-    // separation fact (rep ≤ 42‰ vs prose ≥ 370‰ at every SF against
-    // the 200‰ gate), so every output cell is SQL-computable even
-    // though the deflate itself is not.
-    "q136_docs_compress_ratio" ->
-      """WITH base AS (
-        |  SELECT doc_id FROM documents WHERE length(text) >= 100
-        |)
-        |SELECT doc_class, n_docs, n_below_200,
-        |       CAST(1 AS BIGINT) AS strictly_separated
-        |FROM (
-        |  SELECT 'planted_rep' AS doc_class,
-        |         CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |         CAST(COUNT(*) AS BIGINT) AS n_below_200
-        |  FROM base WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT 'prose', CAST(COUNT(*) AS BIGINT), CAST(0 AS BIGINT)
-        |  FROM base
-        |)
-        |ORDER BY doc_class""".stripMargin,
-    // q26: planted last-2-tokens-dropped pairs with exact word-3-gram
-    // counts. The oracle rebuilds both token arrays (the mutation is a
-    // pure array slice) and the gram sets in SQL, and applies the 0.5
-    // Jaccard gate by integer cross-multiplication (2·∩ ≥ ∪) — the
-    // exact-rational equivalent of the engine's double compare at
-    // every reachable rational (set sizes ≤ ~10³ keep adjacent
-    // rationals ~1e-4 apart, 12 orders above double rounding).
-    "q26_docs_minhash_neardup" ->
-      """WITH orig AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE doc_id % 7 = 0 AND length(trim(text)) > 0
-        |), pairs AS (
-        |  SELECT doc_id, t AS ta,
-        |         t[1:CAST(GREATEST(len(t) - 2, 1) AS BIGINT)] AS tb
-        |  FROM orig
-        |), grams_a AS (
-        |  SELECT DISTINCT doc_id,
-        |         ta[CAST(i AS INTEGER)] || ' ' || ta[CAST(i+1 AS INTEGER)] || ' ' || ta[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, ta, unnest(generate_series(1, len(ta) - 2)) AS i FROM pairs)
-        |), grams_b AS (
-        |  SELECT DISTINCT doc_id,
-        |         tb[CAST(i AS INTEGER)] || ' ' || tb[CAST(i+1 AS INTEGER)] || ' ' || tb[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, tb, unnest(generate_series(1, len(tb) - 2)) AS i FROM pairs)
-        |), sa AS (SELECT doc_id, COUNT(*) AS n FROM grams_a GROUP BY doc_id),
-        |sb AS (SELECT doc_id, COUNT(*) AS n FROM grams_b GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id, COUNT(*) AS ni
-        |  FROM grams_a a JOIN grams_b b ON a.doc_id = b.doc_id AND a.g = b.g
-        |  GROUP BY a.doc_id
-        |)
-        |SELECT sa.doc_id AS doc_a, sa.doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_b,
-        |       CAST(sa.n AS BIGINT) AS n_grams_a,
-        |       CAST(sb.n AS BIGINT) AS n_grams_b,
-        |       CAST(COALESCE(i.ni, 0) AS BIGINT) AS n_shared
-        |FROM sa JOIN sb ON sa.doc_id = sb.doc_id
-        |LEFT JOIN inter i ON sa.doc_id = i.doc_id
-        |WHERE 2 * COALESCE(i.ni, 0) >= sa.n + sb.n - COALESCE(i.ni, 0)
-        |ORDER BY doc_a""".stripMargin,
-    // q27: exact copies pair at Hamming 0 by construction; reversed
-    // plants never reach the ≤ 3 gate (measured signature distance
-    // ≥ 13 at every scale), so the planted-copy set IS the output.
-    "q27_docs_simhash" ->
-      """SELECT doc_id AS doc_a, doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_b,
-        |       CAST(0 AS BIGINT) AS hamming
-        |FROM documents WHERE doc_id % 7 = 0
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // q28: planted appended-tail pairs with exact char-6-gram counts
-    // (substr windows; ASCII testdata keeps byte and char grams
-    // identical) and the 0.8 gate as 5·∩ ≥ 4·∪.
-    "q28_docs_ngram_jaccard" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 9 = 0
-        |), ab AS (
-        |  SELECT doc_id, text AS ta, text || ' appended tail' AS tb FROM docs
-        |), grams_a AS (
-        |  SELECT DISTINCT doc_id, substr(ta, CAST(i AS INTEGER), 6) AS g
-        |  FROM (SELECT doc_id, ta, unnest(generate_series(1, length(ta) - 5)) AS i FROM ab)
-        |), grams_b AS (
-        |  SELECT DISTINCT doc_id, substr(tb, CAST(i AS INTEGER), 6) AS g
-        |  FROM (SELECT doc_id, tb, unnest(generate_series(1, length(tb) - 5)) AS i FROM ab)
-        |), sa AS (SELECT doc_id, COUNT(*) AS n FROM grams_a GROUP BY doc_id),
-        |sb AS (SELECT doc_id, COUNT(*) AS n FROM grams_b GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id, COUNT(*) AS ni
-        |  FROM grams_a a JOIN grams_b b ON a.doc_id = b.doc_id AND a.g = b.g
-        |  GROUP BY a.doc_id
-        |)
-        |SELECT sa.doc_id AS doc_a, sa.doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_b,
-        |       CAST(sa.n AS BIGINT) AS n_grams_a,
-        |       CAST(sb.n AS BIGINT) AS n_grams_b,
-        |       CAST(COALESCE(i.ni, 0) AS BIGINT) AS n_shared
-        |FROM sa JOIN sb ON sa.doc_id = sb.doc_id
-        |LEFT JOIN inter i ON sa.doc_id = i.doc_id
-        |WHERE 5 * COALESCE(i.ni, 0) >= 4 * (sa.n + sb.n - COALESCE(i.ni, 0))
-        |ORDER BY doc_a""".stripMargin,
-    // q37: identical-vector plants land in identical LSH buckets and
-    // verify at cosine ≈ 1 ≫ 0.95, so the planted set is exact.
-    "q37_emb_neardup" ->
-      """SELECT vec_id AS id_a, vec_id + (SELECT (max(vec_id) // 1000000 + 1) * 1000000 FROM embeddings) AS id_b
-        |FROM embeddings WHERE vec_id % 40 = 0
-        |ORDER BY id_a""".stripMargin,
-    // q59: every planted 200-char-prefix copy shares ≥ 12 winnowing
-    // fingerprints with its source at every tested scale (gate: ≥ 3),
-    // so the planted containment set is exact.
-    "q59_docs_fingerprint_overlap" ->
-      """SELECT doc_id AS doc_a, doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_b
-        |FROM documents WHERE doc_id % 5 = 0
-        |ORDER BY doc_a""".stripMargin,
-    // q68: survivors from first principles — exact copies and near-dup
-    // mutations die; reversed docs survive except non-minimal members
-    // of within-batch j ≥ 0.5 components, recomputed exactly here over
-    // the reversed texts (q70 gram pattern + q73 reachability CTE).
-    "q68_docs_incremental_dedup" ->
-      """WITH RECURSIVE rev AS (
-        |  SELECT doc_id + 3 * (SELECT (max(doc_id) // 1000000 + 1) * 1000000 FROM documents) AS doc_id, reverse(text) AS text
-        |  FROM documents WHERE doc_id % 13 = 0
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM rev WHERE length(trim(text)) > 0
-        |), grams AS (
-        |  SELECT DISTINCT doc_id,
-        |         t[CAST(i AS INTEGER)] || ' ' || t[CAST(i+1 AS INTEGER)] || ' ' || t[CAST(i+2 AS INTEGER)] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i FROM toks)
-        |), sets AS (
-        |  SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT doc_a, doc_b FROM inter i
-        |  JOIN sets sa ON i.doc_a = sa.doc_id
-        |  JOIN sets sb ON i.doc_b = sb.doc_id
-        |  WHERE 2 * i.ninter >= sa.n + sb.n - i.ninter
-        |), edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), walk(node, reached) AS (
-        |  SELECT doc_id, doc_id FROM rev
-        |  UNION
-        |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reached
-        |)
-        |SELECT node AS doc_id
-        |FROM walk GROUP BY node HAVING node = MIN(reached)
-        |ORDER BY doc_id""".stripMargin,
-  )
-  // Every catalog query now carries an oracle (r7): the last rows-only
-  // entry, q136 deflate ratio, was closed with a planted-class design —
-  // per-doc deflate values stay spec-grounded (no SQL zlib exists), but
-  // the class rates and strict ordering the signal exists to produce
-  // are oracle-checked.
+  /** Family name per query (the per-family cost column of QSweep). */
+  val familyOf: Map[String, String] = registry.map { case (f, e) => e.name -> f }.toMap
 }

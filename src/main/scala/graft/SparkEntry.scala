@@ -16,9 +16,8 @@ object SparkEntry {
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] = QueryCatalog.queries
 
-  /** DuckDB-runnable oracle SQL per query; omitted entries are
-    * non-SQL-expressible ops → rows-only checks (list at the end of
-    * [[QueryCatalog.oracleSql]]).
+  /** DuckDB-runnable oracle SQL per query, one for every entry of
+    * [[queries]].
     */
   def oracleSql: Map[String, String] = QueryCatalog.oracleSql
 }

@@ -64,7 +64,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // keys sorted, as in queries.json: identical catalogs write
+    // identical bytes
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // full declared-query list so the gate can detect queries that

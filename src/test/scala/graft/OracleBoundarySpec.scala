@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.catalog.AnnQueries
 import graft.operators.Similarity
 
 /** Pins the ANN oracles' LOUD-REFUSAL boundaries against a real
@@ -107,14 +108,14 @@ class OracleBoundarySpec extends AnyFunSuite {
 
   test("signIvfProbeCtes refuses a permille with no np_ column at catalog-build time") {
     val e = intercept[IllegalArgumentException] {
-      QueryCatalog.signIvfProbeCtes(dim = 64, permille = 500)
+      AnnQueries.signIvfProbeCtes(dim = 64, permille = 500)
     }
     assert(e.getMessage.contains("np_500"))
   }
 
   test("recallCalibrationOracleSql refuses an out-of-set grid permille") {
     val e = intercept[IllegalArgumentException] {
-      QueryCatalog.recallCalibrationOracleSql(
+      AnnQueries.recallCalibrationOracleSql(
         dim = 64, gridPermilles = Seq(63, 999), m = 8, k = 5)
     }
     assert(e.getMessage.contains("999"))

@@ -74,21 +74,11 @@ class OracleLintSpec extends AnyFunSuite {
     }
   }
 
-  test("oracle map stays wired to the full catalog") {
-    // every oracle key must name a catalog query, and the rows-only
-    // remainder must stay the small documented set — a broken Map
-    // edit (dropped key, typo) shows up here, not at the driver.
-    val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet -- qs
-    assert(orphans.isEmpty, s"oracle entries with no catalog query: $orphans")
-    val rowsOnly = (qs -- SparkEntry.oracleSql.keySet).map(_.takeWhile(_ != '_'))
-    // r7: q136 converted to a planted-class oracle (exact class rates +
-    // strict rep<prose ordering; the deflate VALUES stay spec-graded) —
-    // the rows-only remainder is now empty and must stay that way.
-    val documented = Set.empty[String]
-    assert(rowsOnly == documented,
-      s"rows-only set drifted from the documented remainder $documented: " +
-        s"${rowsOnly.toSeq.sorted} — a dropped/typo'd oracle Map key silently " +
-        "downgrades a query to rows-only at the driver")
+  test("registry: every family has a name and at least one entry") {
+    val fams = QueryCatalog.families
+    assert(fams.map(_.name).distinct.size === fams.size)
+    val empty = fams.filter(f => f.name.trim.isEmpty || f.entries.isEmpty).map(_.name)
+    assert(empty.isEmpty, s"families without a name or entries: $empty")
+    assert(QueryCatalog.familyOf.keySet === SparkEntry.queries.keySet)
   }
 }

@@ -2,17 +2,38 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Smoke: every declared query runs on sf0.001 and yields rows, and
-  * every oracle entry points at a declared query. Value-level
-  * correctness is the driver's DuckDB gate (tools/local_verify.py).
+/** The registry's shape, and smoke: every declared query runs on
+  * sf0.001 and yields rows. Value-level correctness is the DuckDB
+  * oracle gate (tools/local_verify.py).
   */
 class QueryCatalogSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("oracleSql keys ⊆ queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("registry: 200 uniquely named entries, each with a non-blank oracle") {
+    val entries = QueryCatalog.families.flatMap(_.entries)
+    assert(entries.size === 200)
+    assert(entries.map(_.name).distinct.size === entries.size)
+    assert(SparkEntry.queries.keySet === entries.map(_.name).toSet)
+    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+    val blank = entries.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"entries with a blank oracle: $blank")
+  }
+
+  test("registering a query name twice throws") {
+    val e = QueryCatalog.families.head.entries.head
+    val twice = new catalog.Family {
+      val name = "twice"
+      val entries = Seq(e, e.copy(oracle = "SELECT 1"))
+    }
+    val err = intercept[IllegalArgumentException](QueryCatalog.register(Seq(twice)))
+    assert(err.getMessage.contains(e.name))
+  }
+
+  test("Bench warmup and BareSmoke query names all resolve in the catalog") {
+    val names = Bench.warmupQueries ++ tools.BareSmoke.queries.map(_._2)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: $unknown")
   }
 
   test("every query returns rows on sf0.001") {

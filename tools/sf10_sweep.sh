@@ -56,11 +56,19 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"
 
-# catalog-order query names: first occurrence per name in QueryCatalog
-# (each name appears in both the queries and oracleSql maps)
-mapfile -t NAMES < <(grep -oE '"q[0-9]+[a-z0-9_]*" ->' \
-    "$REPO/src/main/scala/graft/QueryCatalog.scala" \
-  | sed 's/" ->//; s/"//' | awk '!seen[$0]++')
+# query names in catalog-number order: one `Entry("qNN...", run, oracle)`
+# per query in the family modules under graft/catalog/. Every Entry( must
+# yield a name, so an entry written in another shape stops the sweep
+# instead of silently leaving its query out of the gate.
+CATALOG=$(cat "$REPO"/src/main/scala/graft/catalog/*.scala | grep -v 'case class Entry(')
+mapfile -t NAMES < <(grep -oE 'Entry\("q[0-9]+[a-z0-9_]*"' <<< "$CATALOG" \
+  | sed 's/^Entry("//; s/"$//' | sort -uV)
+N_ENTRIES=$(grep -oE '\bEntry\(' <<< "$CATALOG" | wc -l)
+if [ "${#NAMES[@]}" -eq 0 ] || [ "${#NAMES[@]}" -ne "$N_ENTRIES" ]; then
+  echo "[sweep] read ${#NAMES[@]} query names from $N_ENTRIES Entry( registrations" \
+       "in graft/catalog/; refusing to run a partial gate" >&2
+  exit 1
+fi
 
 # apply EXCLUDE prefixes up front so chunks carry only real work
 IFS=',' read -ra EXCL <<< "$EXCLUDE"

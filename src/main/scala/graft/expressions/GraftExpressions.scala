@@ -9,14 +9,14 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the hot paths of the dedup /
-  * similarity operators. Spark's higher-order functions (`transform`,
-  * `aggregate`, `zip_with`) fall back to interpreted evaluation, which
-  * makes per-token work the bottleneck at scale; these expressions run
-  * one compiled kernel call per row (whole-stage codegen emits a direct
-  * static call into [[Kernels]]), so per-element cost is a primitive
-  * loop, not an expression-tree walk.
-  */
+// Custom Catalyst expressions for the hot paths of the dedup /
+// similarity operators. Spark's higher-order functions (`transform`,
+// `aggregate`, `zip_with`) fall back to interpreted evaluation, which
+// makes per-token work the bottleneck at scale; these expressions run
+// one compiled kernel call per row (whole-stage codegen emits a direct
+// static call into Kernels), so per-element cost is a primitive loop,
+// not an expression-tree walk.
+
 /** MinHash signature of a text column: array<long> of length k. */
 case class MinHashSig(child: Expression, shingleSize: Int, k: Int, charLevel: Boolean)
   extends UnaryExpression {

@@ -26,30 +26,23 @@ import org.apache.spark.sql.DataFrame
 private[operators] object Rebalance {
 
   /** `df` repartitioned to the session's default parallelism iff it
-    * currently has fewer partitions.
-    *
-    * CONTRACT (asserted, r17): the input must be SCAN-LEVEL — a leaf
-    * relation under only Filter/Project/alias nodes. The partition
-    * probe materializes `df.rdd`, and under AQE doing that on a plan
-    * containing exchanges eagerly EXECUTES the upstream shuffle stages
-    * as real jobs whose lineage is then discarded (`repartition`
-    * re-plans from the logical plan). Scan-level plans have no
-    * exchanges, so the probe costs only physical planning.
+    * is SCAN-LEVEL — a leaf relation under only Filter/Project/alias/
+    * Union nodes — and currently has fewer partitions; any other input
+    * is returned unchanged. The partition probe materializes `df.rdd`,
+    * and under AQE doing that on a plan containing exchanges eagerly
+    * EXECUTES the upstream shuffle stages as real jobs whose lineage is
+    * then discarded (`repartition` re-plans from the logical plan).
+    * Scan-level plans have no exchanges, so the probe costs only
+    * physical planning. Skipping the step is always safe: results do
+    * not depend on it.
     */
   def toParallelism(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project, SubqueryAlias, Union}
-    val offending = df.queryExecution.analyzed.collectFirst {
-      case p if !(p.isInstanceOf[Project] || p.isInstanceOf[Filter] ||
-        p.isInstanceOf[LeafNode] || p.isInstanceOf[SubqueryAlias] ||
-        p.isInstanceOf[Union]) => p.nodeName
-    }
-    require(offending.isEmpty,
-      s"Rebalance.toParallelism requires a scan-level input " +
-        s"(leaf/Filter/Project/Union only — all exchange-free) — got a " +
-        s"plan containing ${offending.getOrElse("?")}; probing .rdd on an " +
-        "exchange-bearing plan would eagerly execute its shuffle stages " +
-        "and discard them")
+    val scanLevel = df.queryExecution.analyzed.find {
+      case _: Project | _: Filter | _: LeafNode | _: SubqueryAlias | _: Union => false
+      case _ => true
+    }.isEmpty
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    if (scanLevel && df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 }

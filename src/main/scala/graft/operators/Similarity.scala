@@ -251,66 +251,6 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("label"), transform(col("pm"), p => p.getField("m")).as("centroid"))
 
-  /** Persist an IVF index: corpus vectors written as parquet
-    * PARTITIONED BY their coarse-quantizer list id (plus the trained
-    * centroids as a side table). At query time only the `nProbe`
-    * probed lists' partition directories are read — the scan prunes
-    * at the FILE level, so per-query I/O is nProbe/nLists of the
-    * corpus regardless of corpus size. This is the serving-path
-    * counterpart of [[ivfTopK]] (which indexes in-flight each call).
-    */
-  def buildIvfIndex(
-      corpus: DataFrame, path: String, nLists: Int = 32, trainIters: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val centroids = trainCentroids(corpus, nLists, trainIters,
-      idCol = idCol, vecCol = vecCol)
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__sim").desc, col("cid"))
-    // concurrent independent writes (r16, [[BatchedIndex.inParallel]])
-    BatchedIndex.inParallel(
-      corpus.select(col(idCol), col(vecCol))
-        .crossJoin(broadcast(centroids))
-        .withColumn("__sim", VectorFunctions.cosine(col(vecCol), col("cv")))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") === 1)
-        .select(col(idCol), col(vecCol), col("cid").as("list_id"))
-        // explicit partition count: one file per list, not per
-        // (task × list). A keys-only repartition(col(...)) is an
-        // AQE-coalescible exchange: on a small build AQE folds it to ONE
-        // partition and a single task writes every list directory
-        // sequentially (~25 ms of parquet open/commit per directory —
-        // measured 3.1 s vs 0.9 s for the 128-list sign index). Width
-        // capped by the session shuffle width (r16): see
-        // [[BatchedIndex.writeWidth]].
-        .repartition(BatchedIndex.writeWidth(corpus.sparkSession, nLists), col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists"),
-      centroids.write.mode("overwrite").parquet(s"$path/centroids"))
-  }
-
-  /** Query a persisted IVF index: rank centroids per query, then scan
-    * ONLY the probed list partitions (`list_id IN (...)` reaches the
-    * scan as a partition filter — directories outside the probe set
-    * are never opened). Same ranking/tie-break semantics as
-    * [[ivfTopK]].
-    */
-  def queryIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int, nProbe: Int = 12,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("cid"))
-    val probed = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("__sim", VectorFunctions.cosine(col("qv"), col("cv")))
-      .withColumn("__rk", row_number().over(wProbe))
-      .filter(col("__rk") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cid").as("list_id"))
-    val lists = spark.read.parquet(s"$path/lists")
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"), col("list_id"))
-    rankTopK(probed.join(lists, Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv2"))), k)
-  }
-
   /** Semantic (embedding-space) benchmark decontamination — the
     * embedding twin of [[Chunking.flagContaminated]]'s 13-gram
     * containment: flag every training vector whose cosine against ANY
@@ -448,62 +388,22 @@ object Similarity {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Sign-bit LSH top-k: table t buckets on the sign pattern of
-    * components [t·planesPerTable+1, …] — candidates share a bucket in
-    * ≥1 table, then exact cosine ranks them. Deterministic end to end;
-    * the DuckDB oracle reproduces the same buckets with CASE on array
-    * elements (q31).
-    */
-  /** Occupancy-tuned plane count for [[signLshTopK]]: enough sign
-    * planes that expected bucket occupancy n/2^planes stays near
-    * `targetOccupancy`, clamped to [4, dim/nTables]. With a FIXED
-    * plane count, LSH silently degrades to a full scan as the corpus
-    * grows (at 10× sf0.1 the 4-plane buckets hold ~1250 vectors each
-    * and every query scans most of the corpus — the r9 sf1.0 sweep
-    * measured q31 at 21× its sf0.1 cost from exactly this); growing
-    * planes with log2(n) is the standard LSH posture. At every
-    * driver-gated scale (n ≤ 2000) this returns 4, so the oracle's
-    * pinned 4-plane SQL stays exact where it is checked.
-    */
-  def autoPlanesPerTable(
-      n: Long, nTables: Int = 8, dim: Int = 64,
-      targetOccupancy: Int = 125): Int = {
-    // pure integer arithmetic (r10): needed = ceil(log2(ceil(n/occ)))
-    // as the bit length of ceil(n/occ) − 1. The earlier FP form sat on
-    // a double-edged boundary — ceil(log(16)/log(2)) had to evaluate
-    // to exactly 4.0 for the sf0.1 oracle's pinned 4-plane SQL, one
-    // ULP of libm drift away from flipping to 5 — and bit length
-    // cannot drift.
-    // SUPERSEDED for the q31 path by [[autoLshPlan]] (r10): pure
-    // occupancy-chasing plane growth silently collapses RECALL — the
-    // organic sf1.0 corpus measured 0.214 recall@5 at the 8 planes
-    // this returns for n = 20000 (each extra plane multiplies the
-    // per-table match probability by p < 1, and the twins sweeps that
-    // validated the r9 growth could not see it: twins recall is
-    // trivially 1.0). Kept for callers that tune tables themselves.
-    val buckets = (n + targetOccupancy - 1) / targetOccupancy
-    val needed =
-      if (buckets <= 1) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)
-    math.min(math.max(4, needed), dim / nTables)
-  }
-
-  /** Joint (planesPerTable, nTables) plan for [[signLshTopK]] — the
-    * r10 organic-recall correction to [[autoPlanesPerTable]]. LSH
+  /** Joint (planesPerTable, nTables) plan for [[signLshTopK]]. LSH
     * theory says holding recall while shrinking buckets requires
     * growing TABLES alongside planes (per-table match probability
     * p^planes falls exponentially; tables recover it linearly), and
     * the axis-sampled sign scheme caps tables · planes at `dim` — so
     * this plan grows planes at QUARTER rate (one per 16× corpus
     * growth) and spends the saved dim budget on tables. Measured on
-    * the n = 20000 organic corpus (recall@5 / wall): the r9 plan
-    * (8 planes × 8 tables) 0.214/1.4 s — fast but useless; this plan
-    * (5 × 12) 0.780/5.2 s; the r8 fixed plan (4 × 8) 0.820/6.8 s but
-    * degrading toward a full scan as n grows. Pinned (4, 8) at every
-    * driver-gated scale (n ≤ 2000), so q31's oracle stays exact.
-    * Past n ≈ 10⁵ per 64 dims the wall binds and recall degrades by
-    * necessity — the centroid-probed sign-IVF/IVFADC family (organic
-    * 0.82–0.85 at its budgets) is the documented scale path there.
+    * the n = 20000 organic corpus (recall@5 / wall): occupancy-chasing
+    * plane growth (8 planes × 8 tables) 0.214/1.4 s — fast but
+    * useless; this plan (5 × 12) 0.780/5.2 s; a fixed plan (4 × 8)
+    * 0.820/6.8 s but degrading toward a full scan as n grows. Pinned
+    * (4, 8) at every oracle-gated scale (n ≤ 2000), so q31's oracle
+    * stays exact. Past n ≈ 10⁵ per 64 dims the wall binds and recall
+    * degrades by necessity — the centroid-probed sign-IVF/IVFADC
+    * family (organic 0.82–0.85 at its budgets) is the documented scale
+    * path there.
     */
   def autoLshPlan(
       n: Long, dim: Int = 64, targetOccupancy: Int = 125): (Int, Int) = {
@@ -531,61 +431,101 @@ object Similarity {
     */
   def lshRegimeMax(dim: Int): Long = 1600L * dim
 
-  /** Which family [[annTopK]] will run: `"sign-lsh"` inside the LSH
-    * regime, `"sign-ivf"` past it. Split out so specs (and capacity
-    * planning) can pin the boundary without executing a query.
+  /** Which ANN family [[annTopK]] runs, with the budgets it runs at.
+    * Each case carries exactly the values its family takes, so callers,
+    * capacity planning and specs read the plan instead of re-deriving
+    * it.
     */
-  def annRoute(n: Long, dim: Int): String =
-    if (n <= lshRegimeMax(dim)) "sign-lsh" else "sign-ivf"
+  sealed abstract class AnnPlan(val family: String)
+  /** The families with a persisted-index form ([[buildAnnServeIndex]]). */
+  sealed abstract class IndexPlan(family: String) extends AnnPlan(family)
+  /** [[signLshTopK]] under the joint [[autoLshPlan]]. */
+  final case class SignLsh(planes: Int, tables: Int) extends AnnPlan("sign-lsh")
+  /** [[signIvfTopK]] at [[autoQuantBits]] lists and [[probeBudget]] probes. */
+  final case class SignIvf(bits: Int, nProbe: Int) extends IndexPlan("sign-ivf")
+  /** [[ivfAdcTopK]] at the sign-IVF budgets plus [[adcCodeBudget]]
+    * codes and an [[autoAdcRerank]] exact rerank.
+    */
+  final case class IvfAdc(bits: Int, nProbe: Int, m: Int, rerank: Int)
+    extends IndexPlan("ivf-adc")
 
-  /** ANN top-k with the regime dispatch made EXECUTABLE (r11): inside
-    * the LSH regime this is [[signLshTopK]] under the joint
-    * [[autoLshPlan]]; past [[lshRegimeMax]] it routes to
-    * [[signIvfTopK]] under the occupancy-tuned
-    * [[autoQuantBits]]/[[probeBudget]] budgets — the measured 50×
-    * cliff (1,055 s vs ~20 s at n = 200 000) that a scaladoc pointer
-    * alone let callers walk into. Both routes are deterministic
-    * sign-test candidate generation + exact-cosine ranking, so the
-    * result stays oracle-reproducible whichever side of the boundary
-    * a corpus lands on; at every driver-gated scale (n ≤ 2000) the
-    * route is the pinned (4, 8) LSH plan the q31 oracle encodes.
+  /** The ANN plan for `n` corpus vectors of `dim` components under a
+    * per-vector serving-memory budget. Two boundaries decide it:
+    *
+    *  - Memory: a full-precision vector is 4·dim bytes (float32, the
+    *    canonical embedding storage). A memory-bounded deployment (the
+    *    reason PQ exists: serve 100 TB of vectors from RAM-sized
+    *    executors) states its budget in bytes per corpus vector. Below
+    *    4·dim the only family that fits is IVFADC — codes are one byte
+    *    per subquantizer (m bytes/vector, 32× smaller at dim 64 / m 8),
+    *    and the float I/O that remains is the bounded rerank read.
+    *  - Corpus regime, when full vectors fit: sign-LSH inside
+    *    [[lshRegimeMax]], sign-IVF past it — the measured 50× cliff
+    *    (1,055 s vs ~20 s at n = 200 000) that a scaladoc pointer alone
+    *    let callers walk into.
+    *
+    * The default budget holds full vectors. At every oracle-gated scale
+    * (n ≤ 2000) that plan is the pinned SignLsh(4, 8) the q31 oracle
+    * encodes.
+    */
+  def annPlan(n: Long, dim: Int, maxBytesPerVector: Int = Int.MaxValue): AnnPlan = {
+    require(maxBytesPerVector >= 1,
+      s"maxBytesPerVector out of range: $maxBytesPerVector")
+    if (maxBytesPerVector < 4 * dim) {
+      val SignIvf(bits, nProbe) = signIvfPlan(n, dim)
+      IvfAdc(bits, nProbe, adcCodeBudget(dim, maxBytesPerVector), autoAdcRerank(n))
+    } else if (n <= lshRegimeMax(dim)) {
+      val (planes, tables) = autoLshPlan(n, dim)
+      SignLsh(planes, tables)
+    } else signIvfPlan(n, dim)
+  }
+
+  private def signIvfPlan(n: Long, dim: Int): SignIvf = {
+    val bits = autoQuantBits(n, dim)
+    SignIvf(bits, probeBudget(bits))
+  }
+
+  /** [[annPlan]] for the persisted-index pair. The LSH regime is
+    * in-flight-only: its "index" would be the hash tables, corpus-sized
+    * in full vectors, and at LSH-regime corpus sizes (n ≤ 1600·dim)
+    * there is nothing to save by persisting. A SignLsh plan is
+    * therefore served from the sign-IVF index at that corpus's sign-IVF
+    * budgets; the other plans are unchanged.
+    */
+  private[operators] def indexPlan(n: Long, dim: Int, maxBytesPerVector: Int): IndexPlan =
+    annPlan(n, dim, maxBytesPerVector) match {
+      case p: IndexPlan => p
+      case _: SignLsh => signIvfPlan(n, dim)
+    }
+
+  /** ANN top-k under [[annPlan]]: sign-LSH or sign-IVF by corpus regime
+    * when full-precision vectors fit the per-vector memory budget,
+    * IVFADC when they do not. Every family is deterministic sign-test
+    * candidate generation plus exact-cosine ranking, so the result
+    * stays oracle-reproducible whichever plan a corpus lands on.
     * `corpusCount` lets callers that already know n (or specs pinning
-    * the dispatch) skip the count job.
+    * the plan) skip the count job; `checkpointDir` is the durable
+    * truncation option of the sign-IVF and IVFADC families.
     */
   def annTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int = 64,
+      maxBytesPerVector: Int = Int.MaxValue,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      corpusCount: Long = -1L): DataFrame = {
+      corpusCount: Long = -1L,
+      checkpointDir: Option[String] = None): DataFrame = {
     val n = if (corpusCount >= 0L) corpusCount else corpus.count()
-    if (annRoute(n, dim) == "sign-lsh") {
-      val (planes, tables) = autoLshPlan(n, dim)
-      signLshTopK(queries, corpus, k, nTables = tables,
-        planesPerTable = planes, idCol = idCol, vecCol = vecCol, dim = dim)
-    } else {
-      val bits = autoQuantBits(n, dim)
-      signIvfTopK(queries, corpus, k, dim = dim, bits = bits,
-        nProbe = probeBudget(bits), idCol = idCol, vecCol = vecCol)
+    annPlan(n, dim, maxBytesPerVector) match {
+      case SignLsh(planes, tables) =>
+        signLshTopK(queries, corpus, k, nTables = tables,
+          planesPerTable = planes, idCol = idCol, vecCol = vecCol, dim = dim)
+      case SignIvf(bits, nProbe) =>
+        signIvfTopK(queries, corpus, k, dim = dim, bits = bits, nProbe = nProbe,
+          idCol = idCol, vecCol = vecCol, checkpointDir = checkpointDir)
+      case IvfAdc(bits, nProbe, m, rerank) =>
+        ivfAdcTopK(queries, corpus, k, dim = dim, bits = bits, nProbe = nProbe,
+          m = m, rerank = rerank, idCol = idCol, vecCol = vecCol,
+          checkpointDir = checkpointDir)
     }
-  }
-
-  /** Which family [[annServeTopK]] will run under a per-vector memory
-    * budget — the serving-plan route (VERDICT r11 #6): [[annTopK]]'s
-    * dispatcher picks by corpus REGIME (LSH inside 1600·dim, sign-IVF
-    * past it), but both of those serve from full-precision vectors —
-    * 4·dim bytes each (float32, the canonical embedding storage). A
-    * memory-bounded deployment (the reason PQ exists: serve 100 TB of
-    * vectors from RAM-sized executors) states its budget as bytes per
-    * corpus vector; when the budget can't hold full vectors the only
-    * family that fits is IVFADC — codes are one byte per subquantizer
-    * (m bytes/vector, 32× smaller at dim 64 / m 8), and the float I/O
-    * that remains is the bounded rerank read, not the index. Split out
-    * from the executable form so specs and capacity planning can pin
-    * the route without running a query.
-    */
-  def annServePlan(n: Long, dim: Int, maxBytesPerVector: Int): String = {
-    require(maxBytesPerVector >= 1,
-      s"maxBytesPerVector out of range: $maxBytesPerVector")
-    if (maxBytesPerVector >= 4 * dim) annRoute(n, dim) else "ivf-adc"
   }
 
   /** Subquantizer count the byte budget buys: codes are one byte each,
@@ -604,74 +544,25 @@ object Similarity {
     m
   }
 
-  /** ANN top-k under a per-vector serving-memory budget — the
-    * [[annTopK]] discipline extended to the compressed-domain family:
-    * budgets that hold full-precision vectors route to [[annTopK]]
-    * (regime-dispatched LSH/sign-IVF, exact-cosine ranking); tighter
-    * budgets route to [[ivfAdcTopK]] at the occupancy-tuned auto
-    * budgets ([[autoQuantBits]] lists, [[probeBudget]] probes,
-    * [[adcCodeBudget]] codes, [[autoAdcRerank]] exact rerank). Callers
-    * wanting memory-bounded serving previously chose the family and
-    * its five budgets manually; this makes the 32×-smaller-index path
-    * one parameter: the bytes the deployment can spend per vector.
-    */
-  def annServeTopK(
-      queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-      maxBytesPerVector: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      corpusCount: Long = -1L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val n = if (corpusCount >= 0L) corpusCount else corpus.count()
-    annServePlan(n, dim, maxBytesPerVector) match {
-      case "ivf-adc" =>
-        val bits = autoQuantBits(n, dim)
-        ivfAdcTopK(queries, corpus, k, dim = dim, bits = bits,
-          nProbe = probeBudget(bits), m = adcCodeBudget(dim, maxBytesPerVector),
-          rerank = autoAdcRerank(n), idCol = idCol, vecCol = vecCol,
-          checkpointDir = checkpointDir)
-      case _ =>
-        annTopK(queries, corpus, k, dim = dim, idCol = idCol,
-          vecCol = vecCol, corpusCount = n)
-    }
-  }
-
-  /** Which PERSISTED index family the memory budget buys (VERDICT r12
-    * #4): the [[annServePlan]] discipline restricted to the two
-    * families that have an on-disk form — budgets that hold
-    * full-precision vectors (≥ 4·dim B/vec) serve from the sign-IVF
-    * index, tighter budgets from the 32×-smaller IVFADC index. The
-    * LSH regime is in-flight-only (its "index" would be the hash
-    * tables, corpus-sized in full vectors — at LSH-regime corpus sizes
-    * (n ≤ 1600·dim) there is nothing to save by persisting), so both
-    * full-precision routes collapse to "sign-ivf" here; the compressed
-    * route is byte-identical to [[annServePlan]]'s.
-    */
-  def annServeIndexPlan(n: Long, dim: Int, maxBytesPerVector: Int): String =
-    if (annServePlan(n, dim, maxBytesPerVector) == "ivf-adc") "ivf-adc"
-    else "sign-ivf"
-
-  /** Build the serving index [[annServeFromIndex]] reads — family AND
-    * geometry derived from the same budgets as the in-flight
-    * dispatcher ([[annServeIndexPlan]] family, [[autoQuantBits]]
-    * lists, [[adcCodeBudget]] codes), so the build/serve pair agrees
-    * by construction instead of by five manually repeated parameters.
-    * Returns the family built, for logging/spec pinning. A deployment
-    * that changes its budget (or whose corpus outgrows its quantizer)
-    * rebuilds; [[annServeFromIndex]]'s geometry check fails loudly on
-    * a budget/index mismatch rather than serving wrong ADC scores.
+  /** Build the serving index [[annServeFromIndex]] reads, with family
+    * and geometry from the same [[annPlan]] (a SignLsh plan persists as
+    * the sign-IVF index), so the build/serve pair agrees by
+    * construction. Returns the plan built. A deployment that changes
+    * its budget (or whose corpus outgrows its quantizer) rebuilds;
+    * [[annServeFromIndex]]'s geometry check fails loudly on a
+    * budget/index mismatch rather than serving wrong ADC scores.
     */
   def buildAnnServeIndex(
       corpus: DataFrame, path: String, dim: Int, maxBytesPerVector: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      corpusCount: Long = -1L): String = {
+      corpusCount: Long = -1L): IndexPlan = {
     val n = if (corpusCount >= 0L) corpusCount else corpus.count()
-    val bits = autoQuantBits(n, dim)
-    val plan = annServeIndexPlan(n, dim, maxBytesPerVector)
+    val plan = indexPlan(n, dim, maxBytesPerVector)
     plan match {
-      case "ivf-adc" =>
-        buildIvfAdcIndex(corpus, path, dim, bits = bits,
-          m = adcCodeBudget(dim, maxBytesPerVector), idCol = idCol, vecCol = vecCol)
-      case _ =>
+      case IvfAdc(bits, _, m, _) =>
+        buildIvfAdcIndex(corpus, path, dim, bits = bits, m = m,
+          idCol = idCol, vecCol = vecCol)
+      case SignIvf(bits, _) =>
         buildSignIvfIndex(corpus, path, dim, bits = bits,
           idCol = idCol, vecCol = vecCol)
     }
@@ -679,27 +570,25 @@ object Similarity {
   }
 
   /** Serve ANN top-k under a per-vector memory budget FROM A PERSISTED
-    * index (VERDICT r12 #4): [[annServeTopK]] rebuilds its quantizer
-    * in-flight on every call — fine for a pipeline stage, wrong for a
-    * deployment, which builds once ([[buildAnnServeIndex]]) and serves
-    * queries against the stored artifact. Routes under the same plan
-    * as the in-flight form: full-vector budgets →
-    * [[querySignIvfIndex]] (exact-cosine over probed stored lists),
-    * tighter budgets → [[queryIvfAdcIndex]] (compressed-domain ADC
-    * over probed code partitions + bounded float rerank from
-    * `vectors`, the lake table). Route ≡ family is spec-pinned both
-    * sides, and each route is value-identical to its in-flight
-    * counterpart at the same auto budgets (the q72/q178 guarantee,
-    * inherited structurally from the query functions it calls).
+    * index: [[annTopK]] rebuilds its quantizer in-flight on every call
+    * — fine for a pipeline stage, wrong for a deployment, which builds
+    * once ([[buildAnnServeIndex]]) and serves queries against the
+    * stored artifact. A SignIvf plan serves through
+    * [[querySignIvfIndex]] (exact cosine over probed stored lists), an
+    * IvfAdc plan through [[queryIvfAdcIndex]] (compressed-domain ADC
+    * over probed code partitions + bounded float rerank from `vectors`,
+    * the lake table). Each is value-identical to its in-flight
+    * counterpart at the same budgets (the q72/q178 guarantee, inherited
+    * structurally from the query functions it calls).
     *
     * `vectors` is the full-precision lake table the index was built
-    * from: the ADC route reads only its `rerank` survivors per query;
-    * the sign route never touches it (lists store the vectors). Both
-    * routes inherit the torn-index batch checks of their query
-    * functions; additionally the ADC route asserts the stored code
-    * width matches the budget's [[adcCodeBudget]] — a stale index
-    * built under a different budget would otherwise score with a
-    * mis-sliced lookup table.
+    * from: the ADC plan reads only its `rerank` survivors per query;
+    * the sign plan never touches it (lists store the vectors). Both
+    * inherit the torn-index batch checks of their query functions;
+    * additionally the ADC plan asserts the stored code width matches
+    * the budget's [[adcCodeBudget]] — a stale index built under a
+    * different budget would otherwise score with a mis-sliced lookup
+    * table.
     */
   def annServeFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -708,10 +597,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       corpusCount: Long = -1L): DataFrame = {
     val n = if (corpusCount >= 0L) corpusCount else vectors.count()
-    val bits = autoQuantBits(n, dim)
-    annServeIndexPlan(n, dim, maxBytesPerVector) match {
-      case "ivf-adc" =>
-        val m = adcCodeBudget(dim, maxBytesPerVector)
+    indexPlan(n, dim, maxBytesPerVector) match {
+      case IvfAdc(bits, nProbe, m, rerank) =>
         // loud geometry check: one partition-pruned row, not a scan
         val stored = spark.read.parquet(s"$path/codes")
           .select(size(col("codes")).as("m")).limit(1).collect()
@@ -723,27 +610,26 @@ object Similarity {
               "the current budget")
         }
         queryIvfAdcIndex(spark, path, queries, vectors, k, dim,
-          bits = bits, nProbe = probeBudget(bits), m = m,
-          rerank = autoAdcRerank(n), idCol = idCol, vecCol = vecCol)
-      case _ =>
+          bits = bits, nProbe = nProbe, m = m,
+          rerank = rerank, idCol = idCol, vecCol = vecCol)
+      case SignIvf(bits, nProbe) =>
         querySignIvfIndex(spark, path, queries, k, dim,
-          bits = bits, nProbe = probeBudget(bits), idCol = idCol, vecCol = vecCol)
+          bits = bits, nProbe = nProbe, idCol = idCol, vecCol = vecCol)
     }
   }
 
   /** Occupancy-tuned coarse-quantizer width for the sign-IVF/IVFADC
-    * family — the [[autoPlanesPerTable]] posture applied to `bits`:
-    * grow the list count toward nlist ≈ √n (bits = ⌈log2(n)/2⌉, the
-    * classic IVF sizing rule — per-query work ∝ nlist + n/nlist
-    * minimizes at √n), floored at 7 so every driver-gated scale
-    * (n ≤ 2000 ⇒ ⌈11/2⌉ = 6 < 7) keeps the exact 128-list layout the
-    * pinned q44/q72/q134/q175/q177/q178/q179 oracles encode. With
-    * `bits` FIXED, list occupancy grows ∝ n and the probed candidate
-    * pool with it — the r9 sf3.0 sweep measured q175 super-linear
-    * (16.5× for 3×) from exactly this. Pure integer arithmetic (bit
-    * length), no FP-ceil boundary; capped at min(16, dim) — quantDims
-    * needs dim ≥ bits, and 2^16 lists is already past any corpus this
-    * library meets per partition.
+    * family: grow the list count toward nlist ≈ √n (bits =
+    * ⌈log2(n)/2⌉, the classic IVF sizing rule — per-query work ∝
+    * nlist + n/nlist minimizes at √n), floored at 7 so every
+    * oracle-gated scale (n ≤ 2000 ⇒ ⌈11/2⌉ = 6 < 7) keeps the exact
+    * 128-list layout the pinned q44/q72/q134/q175/q177/q178/q179
+    * oracles encode. With `bits` FIXED, list occupancy grows ∝ n and
+    * the probed candidate pool with it — the r9 sf3.0 sweep measured
+    * q175 super-linear (16.5× for 3×) from exactly this. Pure integer
+    * arithmetic (bit length), no FP-ceil boundary; capped at
+    * min(16, dim) — quantDims needs dim ≥ bits, and 2^16 lists is
+    * already past any corpus this library meets per partition.
     */
   def autoQuantBits(n: Long, dim: Int, floorBits: Int = 7): Int = {
     val bl = if (n <= 1L) 0
@@ -786,6 +672,12 @@ object Similarity {
     math.max(1L, (1L << bits) * fractionPermille / 1000L).toInt
   }
 
+  /** Sign-bit LSH top-k: table t buckets on the sign pattern of
+    * components [t·planesPerTable+1, …] — candidates share a bucket in
+    * ≥1 table, then exact cosine ranks them. Deterministic end to end;
+    * the DuckDB oracle reproduces the same buckets with CASE on array
+    * elements (q31).
+    */
   def signLshTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nTables: Int = 8, planesPerTable: Int = 4,
@@ -836,6 +728,19 @@ object Similarity {
     */
   val centroidScale: Int = 10000
 
+  /** ⌊x·[[centroidScale]]⌋ as a long: the fixed-point map every integer
+    * probe, codebook and lookup table in this file is built on.
+    */
+  private def scaled(x: Column): Column =
+    floor(x.cast("double") * centroidScale).cast("long")
+
+  /** [[scaled]] applied to every component of a vector column. */
+  private def scaledVec(vec: Column): Column = transform(vec, x => scaled(x))
+
+  /** Integer IVFADC residual rv = ⌊v·scale⌋ − centroid, per component. */
+  private def residual(vec: Column, centroid: Column): Column =
+    zip_with(scaledVec(vec), centroid, (a, b) => a - b)
+
   /** Integer-exact per-list centroid SUMS for the sign-quantizer IVF:
     * (list_id, pos, s, cnt) where s = Σ ⌊v[pos]·scale⌋ over the list's
     * members. Sums (not means) are what an INCREMENTAL index stores:
@@ -851,7 +756,7 @@ object Similarity {
     corpus.select(signBucket(col(vecCol), dims).as("list_id"),
         posexplode(col(vecCol)).as(Seq("pos", "v")))
       .groupBy(col("list_id"), col("pos"))
-      .agg(sum(floor(col("v").cast("double") * centroidScale).cast("long")).as("s"),
+      .agg(sum(scaled(col("v"))).as("s"),
         count(lit(1)).as("cnt"))
 
   /** Per-list integer centroids from the stored sums: component means
@@ -920,8 +825,8 @@ object Similarity {
     * computation serves a whole recall-vs-nProbe calibration sweep
     * ([[recallProbeCurve]]): the ranking is nProbe-independent, so the
     * grid points differ only by a filter.
-    */
-  /** `withQv = false` (r16) skips the query-vector attach join AND
+    *
+    * `withQv = false` skips the query-vector attach join AND
     * exposes `s2 = ⟨⌊q·scale⌋, c_L⟩` — the probe already computes the
     * exact per-(query, probed-list) centroid dot product that the
     * IVFADC serving paths re-derived as `lc` through two more joins
@@ -944,8 +849,7 @@ object Similarity {
       queries: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String, withQv: Boolean = true): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      transform(col(vecCol),
-        v => floor(v.cast("double") * centroidScale).cast("long")).as("qi"))
+      scaledVec(col(vecCol)).as("qi"))
     // Loud domain guard: the exact comparisons below live in
     // DECIMAL(12,0), which holds because |v| < 1 keeps |s2| and t2
     // under dim·scale² ≈ 6.4e9. Unnormalized embeddings would breach
@@ -997,14 +901,6 @@ object Similarity {
       .select(col("query_id"), col("qv"), col("list_id"), col("s2"), col("nbetter"))
   }
 
-  /** IVF with a sign-pattern coarse quantizer: 2^bits lists keyed by
-    * the signs of `bits` evenly spread components, probed by centroid
-    * proximity ([[centroidProbe]]). The FAISS IVF shape (list
-    * assignment is one map-side projection, the probe join shuffles on
-    * list id) with a quantizer AND probe rule any SQL engine can
-    * reproduce exactly — the oracle-checked counterpart of the k-means
-    * [[ivfTopK]].
-    */
   /** Shared serving tail for both sign-IVF paths: probed (query, list)
     * pairs joined to the inverted lists, self-matches dropped, exact
     * cosine ranked. ONE implementation so the `signIvfTopK` ≡
@@ -1016,6 +912,14 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv2"))), k)
 
+  /** IVF with a sign-pattern coarse quantizer: 2^bits lists keyed by
+    * the signs of `bits` evenly spread components, probed by centroid
+    * proximity ([[centroidProbe]]). The FAISS IVF shape (list
+    * assignment is one map-side projection, the probe join shuffles on
+    * list id) with a quantizer AND probe rule any SQL engine can
+    * reproduce exactly — the oracle-checked counterpart of the k-means
+    * [[ivfTopK]].
+    */
   def signIvfTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       bits: Int = 7, nProbe: Int = 48,
@@ -1040,32 +944,15 @@ object Similarity {
   }
 
   /** Persist the sign-quantizer IVF index: corpus parquet PARTITIONED
-    * BY list id, like [[buildIvfIndex]], plus the per-list integer
-    * centroid SUMS as a side table ([[signListCentroidSums]]) — the
-    * serving probe ranks lists by centroid proximity, and recomputing
-    * sums at query time would scan every list, defeating the partition
-    * pruning the index exists for. The quantizer itself stays
-    * structural (sign bits), so list ASSIGNMENTS are still
-    * recomputable by any engine from the data alone.
+    * BY list id, plus the per-list integer centroid SUMS as a side
+    * table ([[signListCentroidSums]]) — the serving probe ranks lists
+    * by centroid proximity, and recomputing sums at query time would
+    * scan every list, defeating the partition pruning the index exists
+    * for. The quantizer itself stays structural (sign bits), so list
+    * ASSIGNMENTS are still recomputable by any engine from the data
+    * alone. Generations are batch-keyed: the build writes the reserved
+    * [[BatchedIndex.buildBatchId]] generation, appends any other.
     */
-  /** Reserved batch id for the build generation of a batch-keyed
-    * index; appends must use any other id. Machinery shared with the
-    * banded near-dup index lives in [[BatchedIndex]].
-    */
-  val buildBatchId: String = BatchedIndex.buildBatchId
-
-  private def requireBatchId(batchId: String): Unit =
-    BatchedIndex.requireBatchId(batchId)
-
-  /** Fold the per-batch sum shards of a batch-keyed index side table
-    * into the logical sums. Long sums are exactly associative, so the
-    * fold equals the old read-modify-write merged table bit-for-bit;
-    * input is ≤ #batches · #cells tiny rows ([[compactSignIvfIndex]]/
-    * [[compactIvfAdcIndex]] bound #batches).
-    */
-  private def foldSums(shards: DataFrame, keys: Seq[String]): DataFrame =
-    BatchedIndex.foldSums(shards, keys)
-
   def buildSignIvfIndex(
       corpus: DataFrame, path: String, dim: Int, bits: Int = 7,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
@@ -1091,10 +978,11 @@ object Similarity {
         // session shuffle width (r16): [[BatchedIndex.writeWidth]].
         .repartition(BatchedIndex.writeWidth(corpus.sparkSession, 1 << bits), col("list_id"))
         .write.mode("overwrite")
-        .partitionBy("list_id").parquet(s"$path/lists/batch_id=$buildBatchId"),
+        .partitionBy("list_id").parquet(s"$path/lists/batch_id=${BatchedIndex.buildBatchId}"),
       signListCentroidSums(corpus, quantDims(dim, bits), vecCol)
         .coalesce(1) // ≤ 2^bits·dim tiny rows — one file, no shuffle
-        .write.mode("overwrite").parquet(s"$path/centroid_sums/batch_id=$buildBatchId"))
+        .write.mode("overwrite")
+        .parquet(s"$path/centroid_sums/batch_id=${BatchedIndex.buildBatchId}"))
   }
 
   /** Incrementally add a batch to a persisted sign-IVF index. The
@@ -1113,7 +1001,7 @@ object Similarity {
   def appendSignIvfIndex(
       batch: DataFrame, path: String, batchId: String, dim: Int, bits: Int = 7,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    requireBatchId(batchId)
+    BatchedIndex.requireBatchId(batchId)
     // concurrent independent writes (r16, [[BatchedIndex.inParallel]])
     BatchedIndex.inParallel(
       batch.select(col(idCol), col(vecCol),
@@ -1126,9 +1014,10 @@ object Similarity {
         .write.mode("overwrite")
         .partitionBy("list_id").parquet(s"$path/lists/batch_id=$batchId"),
       // The batch's OWN centroid sums land as their own shard — readers
-      // fold shards by summing ([[foldSums]]), which long-associativity
-      // makes bit-identical to the one-shot table (the q134 oracle's
-      // invariant). No read-modify-write, no swap (r10, ADVICE r9): both
+      // fold shards by summing (BatchedIndex.foldSums), which
+      // long-associativity makes bit-identical to the one-shot table
+      // (the q134 oracle's invariant). No read-modify-write, no swap
+      // (r10, ADVICE r9): both
       // writes overwrite only this batch's subdirs, so a crashed or
       // duplicated append recovers by RE-RUNNING THE SAME (batch,
       // batchId) call — the retry overwrites the torn shard instead of
@@ -1157,7 +1046,7 @@ object Similarity {
     BatchedIndex.assertConsistentBatches(spark, s"$path/lists", s"$path/centroid_sums")
     val lists = spark.read.parquet(s"$path/lists")
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"), col("list_id"))
-    val cents = signListCentroids(foldSums(
+    val cents = signListCentroids(BatchedIndex.foldSums(
       spark.read.parquet(s"$path/centroid_sums"), Seq("list_id", "pos")))
     rankSignCandidates(lists,
       centroidProbe(queries, cents, nProbe, idCol, vecCol), k)
@@ -1185,30 +1074,6 @@ object Similarity {
     (0 until m).map(j => (1 to w).map(i => j * w + i))
   }
 
-  /** Product-quantization ANN with asymmetric-distance (ADC) scoring —
-    * the memory-bounded serving path: each corpus vector is stored as
-    * `m` sub-vector CODES (here: the sign pattern of its block, so the
-    * quantizer is structural and engine-portable, like [[signBucket]]),
-    * each (block, code) cell gets an integer centroid (floor-scaled
-    * component means, the [[signListCentroids]] arithmetic), and a
-    * query scores every candidate from the m table lookups
-    * Σⱼ ⟨qᵢ, centroid(j, codeⱼ)⟩ — never touching the stored floats
-    * until the exact-cosine re-rank of the top `rerank` survivors.
-    *
-    * At 100 TB this is the FAISS IVFADC memory story: the compressed
-    * scan reads m bytes of codes per vector instead of 4·dim bytes of
-    * floats (here 8 longs vs 256 bytes), the per-query lookup table is
-    * m·2^(dim/m) integers built once from the broadcast codebook, and
-    * only `rerank` full vectors per query are fetched. The whole
-    * pipeline is integer arithmetic plus one quantized-cosine re-rank,
-    * so the DuckDB oracle reproduces it exactly (q174) — the
-    * PQ counterpart of the sign-IVF oracle family (q44/q72/q134).
-    *
-    * Scoring is EXACT integer math end to end: components floor to
-    * [[centroidScale]] longs, |qx·mc| ≤ dim·10⁸ ≈ 6.4·10⁹ fits a long
-    * with 9 digits to spare, ADC ties break on neighbor_id, and the
-    * re-rank uses the 1e-6-grid cosine key every oracle mirrors.
-    */
   /** (neighbor_id, sub, code, sv): one row per corpus sub-vector,
     * carrying its block slice for the codebook sums. `corpusC` must
     * expose (neighbor_id, cv2).
@@ -1233,7 +1098,7 @@ object Similarity {
     codeRows
       .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pp0", "x")))
       .groupBy(col("sub"), col("code"), (col("pp0") + 1).as("pp"))
-      .agg(sum(floor(col("x").cast("double") * centroidScale).cast("long")).as("s"),
+      .agg(sum(scaled(col("x"))).as("s"),
         count(lit(1)).as("cnt"))
       .withColumn("mc", expr("(s - ((s % cnt) + cnt) % cnt) DIV cnt"))
       .select(col("sub"), col("code"), col("pp"), col("mc"))
@@ -1251,7 +1116,7 @@ object Similarity {
         posexplode(col(vecCol)).as(Seq("p0", "x")))
       .select(col("query_id"),
         (col("p0") / w).cast("int").as("sub"), (col("p0") % w + 1).as("pp"),
-        floor(col("x").cast("double") * centroidScale).cast("long").as("qx"))
+        scaled(col("x")).as("qx"))
       // ONE exchange for the whole LUT build (r16): hash(query_id)
       // satisfies every downstream clustering — (query_id, sub, code)
       // here and (query_id) in [[pqLuts]] — and the broadcast codebook
@@ -1326,6 +1191,30 @@ object Similarity {
       .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv2"))), k)
   }
 
+  /** Product-quantization ANN with asymmetric-distance (ADC) scoring —
+    * the memory-bounded serving path: each corpus vector is stored as
+    * `m` sub-vector CODES (here: the sign pattern of its block, so the
+    * quantizer is structural and engine-portable, like [[signBucket]]),
+    * each (block, code) cell gets an integer centroid (floor-scaled
+    * component means, the [[signListCentroids]] arithmetic), and a
+    * query scores every candidate from the m table lookups
+    * Σⱼ ⟨qᵢ, centroid(j, codeⱼ)⟩ — never touching the stored floats
+    * until the exact-cosine re-rank of the top `rerank` survivors.
+    *
+    * At 100 TB this is the FAISS IVFADC memory story: the compressed
+    * scan reads m bytes of codes per vector instead of 4·dim bytes of
+    * floats (here 8 longs vs 256 bytes), the per-query lookup table is
+    * m·2^(dim/m) integers built once from the broadcast codebook, and
+    * only `rerank` full vectors per query are fetched. The whole
+    * pipeline is integer arithmetic plus one quantized-cosine re-rank,
+    * so the DuckDB oracle reproduces it exactly (q174) — the
+    * PQ counterpart of the sign-IVF oracle family (q44/q72/q134).
+    *
+    * Scoring is EXACT integer math end to end: components floor to
+    * [[centroidScale]] longs, |qx·mc| ≤ dim·10⁸ ≈ 6.4·10⁹ fits a long
+    * with 9 digits to spare, ADC ties break on neighbor_id, and the
+    * re-rank uses the 1e-6-grid cosine key every oracle mirrors.
+    */
   def pqAdcTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       m: Int = 8, rerank: Int = 64,
@@ -1593,9 +1482,7 @@ object Similarity {
         signBucket(col(vecCol), dims).as("list_id"))
       .join(broadcast(lvecs), Seq("list_id"))
       .select(col("neighbor_id"), col("list_id"),
-        zip_with(
-          transform(col("cv2"), v => floor(v.cast("double") * centroidScale).cast("long")),
-          col("mvec"), (a, b) => a - b).as("rv"))
+        residual(col("cv2"), col("mvec")).as("rv"))
       .persist()
     try {
       val blocks = pqBlocks(dim, m)
@@ -1611,14 +1498,15 @@ object Similarity {
           // by the session shuffle width (r16): [[BatchedIndex.writeWidth]]
           .repartition(BatchedIndex.writeWidth(spark, 1 << bits), col("list_id"))
           .write.mode("overwrite")
-          .partitionBy("list_id").parquet(s"$path/codes/batch_id=$buildBatchId"),
+          .partitionBy("list_id").parquet(s"$path/codes/batch_id=${BatchedIndex.buildBatchId}"),
         // SUMS, not means: long sums merge associatively, so readers
         // fold the per-batch shards [[appendIvfAdcIndex]] writes into a
         // codebook bit-identical to a one-shot rebuild over the same
         // encoding (serving derives the means).
         residualCodebookSums(residualCodeRows(corpusR, dim, m))
           .coalesce(1) // ≤ m·2^(dim/m)·(dim/m) tiny rows — one file
-          .write.mode("overwrite").parquet(s"$path/codebook_sums/batch_id=$buildBatchId"))
+          .write.mode("overwrite")
+          .parquet(s"$path/codebook_sums/batch_id=${BatchedIndex.buildBatchId}"))
     } finally corpusR.unpersist()
   }
 
@@ -1644,7 +1532,7 @@ object Similarity {
       batch: DataFrame, path: String, batchId: String,
       dim: Int, bits: Int = 7, m: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    requireBatchId(batchId)
+    BatchedIndex.requireBatchId(batchId)
     val spark = batch.sparkSession
     val dims = quantDims(dim, bits)
     val lvecs = spark.read.parquet(s"$path/centroids")
@@ -1655,9 +1543,7 @@ object Similarity {
         signBucket(col(vecCol), dims).as("list_id"))
       .join(broadcast(lvecs), Seq("list_id"), "left")
       .select(col("neighbor_id"), col("list_id"),
-        zip_with(
-          transform(col("cv2"), v => floor(v.cast("double") * centroidScale).cast("long")),
-          coalesce(col("mvec"), zeroVec), (a, b) => a - b).as("rv"))
+        residual(col("cv2"), coalesce(col("mvec"), zeroVec)).as("rv"))
       .persist()
     try {
       val blocks = pqBlocks(dim, m)
@@ -1742,8 +1628,10 @@ object Similarity {
     val codes = spark.read.parquet(s"$path/codes")
     val counts = codes.groupBy(col("list_id"))
       .agg(
-        sum(when(col("batch_id") === buildBatchId, 1L).otherwise(0L)).as("built_rows"),
-        sum(when(col("batch_id") =!= buildBatchId, 1L).otherwise(0L)).as("appended_rows"))
+        sum(when(col("batch_id") === BatchedIndex.buildBatchId, 1L).otherwise(0L))
+          .as("built_rows"),
+        sum(when(col("batch_id") =!= BatchedIndex.buildBatchId, 1L).otherwise(0L))
+          .as("appended_rows"))
     val servable = signListCentroidsFromVectors(
         spark.read.parquet(s"$path/centroids"))
       .select(col("list_id"), lit(true).as("__servable"))
@@ -1771,28 +1659,51 @@ object Similarity {
     // without its codebook-sums shard would serve silently-shifted ADC
     // scores — fail naming the recovery instead (pure dir listing)
     BatchedIndex.assertConsistentBatches(spark, s"$path/codes", s"$path/codebook_sums")
-    val lvecs = spark.read.parquet(s"$path/centroids")
-    val cents = signListCentroidsFromVectors(lvecs)
-    val codes = spark.read.parquet(s"$path/codes")
-    val sc = pqQueryTable(queries,
-      residualCodebookFromSums(foldSums(
+    // the stored codes are already packed (codes[j] = block j) and
+    // partitioned by list_id, so the probe's list cut reaches the scan
+    // as dynamic partition pruning
+    probedAdcTopK(queries,
+      spark.read.parquet(s"$path/codes"),
+      signListCentroidsFromVectors(spark.read.parquet(s"$path/centroids")),
+      residualCodebookFromSums(BatchedIndex.foldSums(
         spark.read.parquet(s"$path/codebook_sums"), Seq("sub", "code", "pp"))),
-      dim, m, idCol, vecCol)
-    // the exact centroid term lc = ⟨⌊q·scale⌋, c_L⟩ rides out of the
-    // probe as s2 (r16, [[centroidProbeRanks]]): the probe computes it
-    // for the ranking anyway, so the old qi-projection ⋈ broadcast
-    // centroid-vectors re-derivation (two joins + one broadcast per
-    // serve) is gone — bit-identical integer arithmetic.
+      vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
+      k, dim, nProbe, m, rerank, idCol, vecCol)
+  }
+
+  /** The probed-ADC serving tail of [[ivfAdcTopK]] and
+    * [[queryIvfAdcIndex]] — one implementation, so index-serving ≡
+    * in-flight is structural. `codes` is the packed code table
+    * (neighbor_id, list_id, codes), `cents` the probe-facing centroid
+    * table, `codebook` the residual cell means (sub, code, pp, mc) and
+    * `floats` the (neighbor_id, cv2) source of the exact rerank.
+    *
+    * The exact half of the residual decomposition, lc = ⟨⌊q·scale⌋, c_L⟩
+    * per (query, probed list), rides out of the probe as s2
+    * ([[centroidProbeRanks]]), which computes the identical integer dot
+    * product for its ranking. The lookup table scores RAW query
+    * components against the RESIDUAL codebook (⟨q, r̂_v⟩ — the quantized
+    * half).
+    *
+    * The IVF cut AND the scoring run in ONE streamed pass: the probed
+    * (query, list, lc) relation — |Q|·nProbe rows, bounded by the
+    * serving batch — BROADCASTS onto the code table's list_id, so
+    * candidate pairs are born next to their codes and score inline
+    * against the broadcast LUTs; the first exchange any pair-derived
+    * row crosses is the BoundedTopK heap cut. Shuffling the pair stream
+    * instead (onto the codes' neighbor_id and onto the list-constant
+    * keys) spilled past 71 GB of free disk at the sf30 probe point
+    * (|Q| = n/50, 43.8% probed fraction → 3.15 B candidate rows); at
+    * 100 TB a candidate stream ∝ |Q|·n must NEVER cross an exchange.
+    */
+  private def probedAdcTopK(
+      queries: DataFrame, codes: DataFrame, cents: DataFrame, codebook: DataFrame,
+      floats: DataFrame, k: Int, dim: Int, nProbe: Int, m: Int, rerank: Int,
+      idCol: String, vecCol: String): DataFrame = {
+    val sc = pqQueryTable(queries, codebook, dim, m, idCol, vecCol)
     val listConst = centroidProbe(queries, cents, nProbe, idCol, vecCol,
         withQv = false)
       .select(col("query_id"), col("list_id"), col("s2").as("lc"))
-    // the stored codes are already packed (codes[j] = block j): the
-    // probed (query, list, lc) relation BROADCASTS onto the code
-    // table's list_id — its PARTITION column, so the list cut reaches
-    // the scan as dynamic partition pruning — and candidates score
-    // inline against the broadcast LUTs. No pair-derived row crosses
-    // an exchange before the BoundedTopK cut (r15; see [[ivfAdcTopK]]
-    // for the sf30 spill the old listConst shuffle caused).
     val w = dim / m
     val luts = pqLuts(sc, m, w)
     val adc = codes
@@ -1802,9 +1713,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         (GraftFunctions.adcLookupSum(col("codes"), col("lut"), w) + col("lc"))
           .as("adc"))
-    adcRerank(adc, queries,
-      vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
-      k, rerank, idCol, vecCol)
+    adcRerank(adc, queries, floats, k, rerank, idCol, vecCol)
   }
 
   /** IVFADC — the FAISS-default composition: the sign-IVF centroid
@@ -1845,8 +1754,8 @@ object Similarity {
       signBucket(col(vecCol), dims).as("list_id"))
     // One corpus pass builds the per-list centroid VECTORS (≤ 2^bits
     // rows), materialized once: the probe references it on both sides
-    // of its pairwise rank, residual encoding joins it into every
-    // corpus row, and the list-constant term joins it per probe.
+    // of its pairwise rank, and residual encoding joins it into every
+    // corpus row.
     val lvecs = DurableSnapshots.truncate(
       listCentroidVectors(signListCentroidSums(corpus, dims, vecCol)),
       checkpointDir, "ivfadc_centroids")
@@ -1855,9 +1764,7 @@ object Similarity {
     val corpusR = corpusC
       .join(broadcast(lvecs.select(col("list_id"), col("mvec"))), Seq("list_id"))
       .select(col("neighbor_id"), col("list_id"),
-        zip_with(
-          transform(col("cv2"), v => floor(v.cast("double") * centroidScale).cast("long")),
-          col("mvec"), (a, b) => a - b).as("rv"))
+        residual(col("cv2"), col("mvec")).as("rv"))
     // materialize the code rows ONCE: the codebook aggregation and the
     // ADC scan both consume them, and without truncation each re-runs
     // the full corpus residual-encode pass (scan + centroid join +
@@ -1868,42 +1775,9 @@ object Similarity {
     // frees).
     val codeRows = DurableSnapshots.truncate(
       residualCodeRows(corpusR, dim, m), checkpointDir, "ivfadc_codes")
-    // lookup table: RAW query components against the RESIDUAL codebook
-    // (⟨q, r̂_v⟩ — the quantized half of the decomposition)
-    val sc = pqQueryTable(queries, residualCodebook(codeRows), dim, m, idCol, vecCol)
-    // exact half: lc = ⟨⌊q·scale⌋, c_L⟩ per (query, probed list) —
-    // rides out of the probe as s2 (r16, [[centroidProbeRanks]]): the
-    // probe computes the identical integer dot product for its
-    // ranking, so the old qi-projection ⋈ broadcast centroid-vectors
-    // re-derivation (two joins + a broadcast build) is gone.
-    val listConst = centroidProbe(queries, cents, nProbe, idCol, vecCol,
-        withQv = false)
-      .select(col("query_id"), col("list_id"), col("s2").as("lc"))
-    // the IVF cut AND the scoring in ONE streamed pass (r15): the
-    // probed (query, list, lc) relation — |Q|·nProbe rows, bounded by
-    // the serving batch — BROADCASTS onto the packed code table's
-    // list_id, so candidate pairs are born next to their codes and
-    // score inline against the broadcast LUTs; the first exchange any
-    // pair-derived row crosses is the BoundedTopK heap cut. The old
-    // shape shuffled the pair stream TWICE (onto packCodes.neighbor_id
-    // and onto listConst's keys): at the sf30 probe point (|Q| = n/50,
-    // 43.8% probed fraction → 3.15 B candidate rows) that spilled past
-    // the sandbox's 71 GB of free disk and died — and at 100 TB a
-    // candidate stream ∝ |Q|·n must NEVER cross an exchange; it stays
-    // where the codes are. Same pair set (listConst has exactly one
-    // row per probed (query, list)), same integer arithmetic —
-    // bit-identical results, re-gated hash-green.
-    val w = dim / m
-    val luts = pqLuts(sc, m, w)
-    val adc = packCodes(codeRows)
-      .join(broadcast(listConst), Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .join(broadcast(luts), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (GraftFunctions.adcLookupSum(col("codes"), col("lut"), w) + col("lc"))
-          .as("adc"))
-    adcRerank(adc, queries, corpusC.select(col("neighbor_id"), col("cv2")),
-      k, rerank, idCol, vecCol)
+    probedAdcTopK(queries, packCodes(codeRows), cents, residualCodebook(codeRows),
+      corpusC.select(col("neighbor_id"), col("cv2")),
+      k, dim, nProbe, m, rerank, idCol, vecCol)
   }
 
   /** [[pqCodeRows]] for integer RESIDUAL vectors: one row per corpus
@@ -1941,14 +1815,13 @@ object Similarity {
     * makes calibration affordable to re-run as the corpus drifts.
     * (Ground truth is the documented brute-force baseline; calibrate
     * on a query SAMPLE at scale, like every recall evaluation.)
-    */
-  /** `maxQueries` (r10, VERDICT r9 #7) makes "calibrate on a query
-    * sample at scale" executable instead of advisory: when set, the
-    * sweep runs over a deterministic hash-priority sample of that many
-    * queries (the [[Sampling]] posture — no RNG, rerun-stable; the
-    * priority hash is md5 of the id string, which BOTH engines
-    * implement identically, so the sampled sweep is itself
-    * oracle-checkable — q199), so the
+    *
+    * `maxQueries` makes "calibrate on a query sample at scale"
+    * executable instead of advisory: when set, the sweep runs over a
+    * deterministic hash-priority sample of that many queries (the
+    * [[Sampling]] posture — no RNG, rerun-stable; the priority hash is
+    * md5 of the id string, which BOTH engines implement identically, so
+    * the sampled sweep is itself oracle-checkable — q199), so the
     * sweep's dominant cost — brute-force ground truth, |Q|·n — stays
     * FIXED as the corpus grows and the whole calibration is ~linear in
     * n. Recall estimated from a few hundred queries is how every ANN
@@ -2002,9 +1875,7 @@ object Similarity {
     val corpusR = corpusC
       .join(broadcast(lvecs.select(col("list_id"), col("mvec"))), Seq("list_id"))
       .select(col("neighbor_id"), col("list_id"),
-        zip_with(
-          transform(col("cv2"), v => floor(v.cast("double") * centroidScale).cast("long")),
-          col("mvec"), (a, b) => a - b).as("rv"))
+        residual(col("cv2"), col("mvec")).as("rv"))
     val codeRows = DurableSnapshots.truncate(
       residualCodeRows(corpusR, dim, m), checkpointDir, "recall_codes")
     val sc = pqQueryTable(queriesS, residualCodebook(codeRows), dim, m, idCol, vecCol)

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * organic corpus, with the query sample hash-prioritized so runs are
   * deterministic. q185 pins sign-IVF at driver-gated scales; this
   * measures ALL serving families (sign-IVF, IVFADC, the joint-plan
-  * LSH, and the annTopK dispatcher's chosen route) where serving
+  * LSH, and the annTopK dispatcher's chosen plan) where serving
   * decisions actually get made. Ground truth is the documented
   * quadratic baseline over the SAMPLE only (the q177 posture).
   *
@@ -36,13 +36,16 @@ object MrrAudit {
       val m = f
       println(f"MRR $name n=$n nq=$nq mrr=$m%.3f t=${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
-    val bits = Similarity.autoQuantBits(n, 64)
-    val rerank = Similarity.autoAdcRerank(n)
+    // the dispatcher's plans at this corpus size: full-precision
+    // vectors, and a codes-only 8 B/vector budget (the 32× compressed
+    // index at dim 64), whose IVFADC budgets the family rows reuse
+    val fullPlan = Similarity.annPlan(n, 64)
+    val adcPlan @ Similarity.IvfAdc(bits, nProbe, _, rerank) =
+      Similarity.annPlan(n, 64, maxBytesPerVector = 8)
     val (planes, tables) = Similarity.autoLshPlan(n, 64)
-    println(s"MRR plan bits=$bits rerank=$rerank lsh=($planes,$tables) " +
-      s"route=${Similarity.annRoute(n, 64)}")
+    println(s"MRR plan full=$fullPlan budget_8B=$adcPlan lsh=($planes,$tables)")
     timed("sign_ivf")(mrr(Similarity.signIvfTopK(qs, e, k = 10, dim = 64,
-      bits = bits, nProbe = Similarity.probeBudget(bits))))
+      bits = bits, nProbe = nProbe)))
     timed("ivfadc")(mrr(Similarity.ivfAdcTopK(qs, e, k = 10, dim = 64,
       bits = bits, nProbe = Similarity.probeBudget(bits, 438), m = 8,
       rerank = rerank)))
@@ -50,22 +53,20 @@ object MrrAudit {
       k = 10, nTables = tables, planesPerTable = planes)))
     timed("ann_topk_dispatch")(mrr(Similarity.annTopK(qs, e, k = 10, dim = 64,
       corpusCount = n)))
-    // the serving-plan dispatcher under a codes-only memory budget
-    // (8 B/vector at dim 64 = the 32× compressed index): must route to
-    // IVFADC at the auto budgets — the r12 annServePlan row
-    timed("ann_serve_8B_" + Similarity.annServePlan(n, 64, 8))(
-      mrr(Similarity.annServeTopK(qs, e, k = 10, dim = 64,
+    // the dispatcher under the 8 B/vector budget: IVFADC at adcPlan
+    timed("ann_serve_8B_" + adcPlan.family)(
+      mrr(Similarity.annTopK(qs, e, k = 10, dim = 64,
         maxBytesPerVector = 8, corpusCount = n)))
-    // index-backed serving (r13, VERDICT r12 #4): build the budgeted
-    // index once, serve from the artifact — same route discipline,
-    // quality must match the in-flight row above
+    // index-backed serving: build the budgeted index once, serve from
+    // the artifact under the same plan — quality must match the
+    // in-flight row above
     val idxDir = java.nio.file.Files.createTempDirectory("graft_mrr_serveidx").toString
     val t0 = System.nanoTime()
     val fam = Similarity.buildAnnServeIndex(e, idxDir, dim = 64,
       maxBytesPerVector = 8, corpusCount = n)
-    println(f"MRR ann_serve_idx build family=$fam " +
+    println(f"MRR ann_serve_idx build family=${fam.family} " +
       f"t=${(System.nanoTime() - t0) / 1e9}%.1f s")
-    timed(s"ann_serve_idx_8B_$fam")(
+    timed(s"ann_serve_idx_8B_${fam.family}")(
       mrr(Similarity.annServeFromIndex(spark, idxDir, qs, e, k = 10,
         dim = 64, maxBytesPerVector = 8, corpusCount = n)))
     spark.stop()

@@ -480,11 +480,15 @@ class DedupSpec extends SparkSpec {
       "every hot-block member must resolve to one component")
   }
 
-  test("autoPlanesPerTable: 4 at every gated scale, grows with log2(n), clamped by dim") {
-    import graft.operators.Similarity.autoPlanesPerTable
-    // the driver-gated regime (n <= 2000) pins the oracle's 4-plane SQL
-    assert(Seq(20L, 200L, 2000L).map(autoPlanesPerTable(_)).forall(_ == 4))
-    assert(autoPlanesPerTable(20000L) === 8) // sf1.0: occupancy back to ~78
-    assert(autoPlanesPerTable(1000000000L) === 8, "clamped to dim/nTables")
+  test("repeatedSpans/removeRepeatedSpans: a non-scan-level input gives the scan-level rows") {
+    // distinct() puts an Aggregate above the scan, so the rebalance step
+    // must be skipped for it; the spans never depend on that step
+    val in = docs((1L, "a b c d e"), (2L, "x a b c d y"), (3L, "q r s t"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val spans = rows(Dedup.repeatedSpans(in, "doc_id", "text", w = 3))
+    assert(spans.nonEmpty)
+    assert(rows(Dedup.repeatedSpans(in.distinct(), "doc_id", "text", w = 3)) === spans)
+    assert(rows(Dedup.removeRepeatedSpans(in.distinct(), "doc_id", "text", w = 3)) ===
+      rows(Dedup.removeRepeatedSpans(in, "doc_id", "text", w = 3)))
   }
 }

@@ -131,14 +131,14 @@ class DegenerateInputsSpec extends SparkSpec {
     }
   }
 
-  test("annServeTopK: empty and single-vector corpus under a tight budget " +
+  test("annTopK: empty and single-vector corpus under a tight budget " +
     "→ empty / the one neighbor, no failure") {
     val q = vecDf(Seq((100L, Seq.fill(64)(1.0f))))
     val empty = vecDf(Seq.empty)
-    assert(Similarity.annServeTopK(q, empty, k = 3, dim = 64,
+    assert(Similarity.annTopK(q, empty, k = 3, dim = 64,
       maxBytesPerVector = 8).count() === 0L)
     val c = vecDf(Seq((1L, Seq.fill(64)(0.5f))))
-    val out = Similarity.annServeTopK(q, c, k = 3, dim = 64,
+    val out = Similarity.annTopK(q, c, k = 3, dim = 64,
       maxBytesPerVector = 8).collect()
     assert(out.length === 1)
     assert(out.head.getAs[Long]("query_id") === 100L)

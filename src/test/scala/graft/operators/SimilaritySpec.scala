@@ -155,24 +155,6 @@ class SimilaritySpec extends SparkSpec {
       "ragged rows must be excluded from training, not corrupt the dim")
   }
 
-  test("persisted IVF index: query path matches in-flight ivfTopK exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
-    val q = e.filter($"vec_id" % 50 === 0)
-    Similarity.buildIvfIndex(e, dir, nLists = 8)
-    val fromIndex = Similarity.queryIvfIndex(spark, dir, q, k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // same deterministic training → same centroids → same assignments
-    val inFlight = Similarity.ivfTopK(q, e, k = 5, nLists = 8, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(fromIndex === inFlight)
-    // the probe join drives partition pruning on the list_id directories
-    val plan = Similarity.queryIvfIndex(spark, dir, q, k = 5, nProbe = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters"),
-      s"probed-list scan should carry a partition filter:\n$plan")
-  }
-
   test("ivfTopK recall@5 >= 0.7 vs brute force on the real embeddings table") {
     // the driver's correctness scale: 500 × 64-dim vectors; the gate
     // pins the measured-quality configuration (nLists=32, nProbe=12 —
@@ -861,18 +843,41 @@ class SimilaritySpec extends SparkSpec {
     assert(out.count() === 0L)
   }
 
+  // annPlan's grid: both sides of the dim-64 regime boundary
+  // (1600·64 = 102 400), dims with and without a power-of-two code
+  // count, and budgets on both sides of full precision (4·dim bytes)
+  private val planGrid = for {
+    n <- Seq(1L, 2000L, 102400L, 102401L, 200000L)
+    dim <- Seq(16, 48, 64)
+    budget <- Seq(1, 8, 4 * dim - 1, 4 * dim)
+  } yield (n, dim, budget)
+
   test("annTopK: dispatch boundary pinned; each route ≡ its family called directly (VERDICT r10 #1)") {
-    import Similarity.{annRoute, lshRegimeMax}
+    import Similarity.{annPlan, autoLshPlan, autoQuantBits, lshRegimeMax, probeBudget, SignIvf, SignLsh}
     // the boundary: 1600·dim — gated scales and both measured sweep
     // points (20k, 60k) inside the LSH regime; the measured 1,055 s
     // 200k point outside it
     assert(lshRegimeMax(64) === 102400L)
     assert(Seq(1L, 2000L, 20000L, 60000L, 102400L)
-      .forall(annRoute(_, 64) == "sign-lsh"))
+      .forall(annPlan(_, 64).isInstanceOf[SignLsh]))
     assert(Seq(102401L, 200000L, 10000000L)
-      .forall(annRoute(_, 64) == "sign-ivf"))
+      .forall(annPlan(_, 64).isInstanceOf[SignIvf]))
     // fewer dims = a tighter dim wall = an earlier boundary
-    assert(annRoute(30000L, 16) === "sign-ivf")
+    assert(annPlan(30000L, 16).isInstanceOf[SignIvf])
+    // full-precision budgets (and the default): the regime plan carries
+    // exactly the auto budgets
+    for ((n, dim, budget) <- planGrid if budget >= 4 * dim) {
+      val expected =
+        if (n <= lshRegimeMax(dim)) {
+          val (planes, tables) = autoLshPlan(n, dim)
+          SignLsh(planes, tables)
+        } else {
+          val bits = autoQuantBits(n, dim)
+          SignIvf(bits, probeBudget(bits))
+        }
+      assert(annPlan(n, dim, budget) === expected, s"n=$n dim=$dim budget=$budget")
+      assert(annPlan(n, dim) === expected, s"n=$n dim=$dim default budget")
+    }
     val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter($"vec_id" % 50 === 0)
     val n = e.count()
@@ -893,16 +898,22 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().toSeq === ivf)
   }
 
-  test("annServeTopK: memory-budget route pinned; each route ≡ its family (VERDICT r11 #6)") {
-    import Similarity.{annServePlan, adcCodeBudget}
+  test("annTopK: memory-budget route pinned; each route ≡ its family (VERDICT r11 #6)") {
+    import Similarity.{annPlan, adcCodeBudget, autoAdcRerank, autoQuantBits, probeBudget, IvfAdc, SignIvf, SignLsh}
     // boundary: 4·dim bytes = full-precision float32 vectors fit →
     // the regime-dispatched exact-rank families; below it only the
     // byte-coded IVFADC index fits the budget
-    assert(annServePlan(2000L, 64, 256) === "sign-lsh")   // full floats, in-regime
-    assert(annServePlan(200000L, 64, 256) === "sign-ivf") // full floats, past-regime
+    assert(annPlan(2000L, 64, 256).isInstanceOf[SignLsh])   // full floats, in-regime
+    assert(annPlan(200000L, 64, 256).isInstanceOf[SignIvf]) // full floats, past-regime
     assert(Seq(255, 64, 8, 1)
-      .forall(annServePlan(200000L, 64, _) == "ivf-adc")) // budget-bound
-    assert(annServePlan(2000L, 64, 8) === "ivf-adc")      // tight budget beats regime
+      .forall(annPlan(200000L, 64, _).isInstanceOf[IvfAdc])) // budget-bound
+    assert(annPlan(2000L, 64, 8).isInstanceOf[IvfAdc])      // tight budget beats regime
+    // below full precision: IVFADC carrying exactly the auto budgets
+    for ((n, dim, budget) <- planGrid if budget < 4 * dim) {
+      val bits = autoQuantBits(n, dim)
+      assert(annPlan(n, dim, budget) === IvfAdc(bits, probeBudget(bits),
+        adcCodeBudget(dim, budget), autoAdcRerank(n)), s"n=$n dim=$dim budget=$budget")
+    }
     // the byte budget → subquantizer count: largest pow2 divisor of dim
     assert(adcCodeBudget(64, 8) === 8)    // the pinned catalog geometry
     assert(adcCodeBudget(64, 32) === 32)  // w = 2, near-scalar
@@ -915,7 +926,7 @@ class SimilaritySpec extends SparkSpec {
     // roomy budget: exactly annTopK (the regime dispatcher)
     val viaAnn = Similarity.annTopK(q, e, k = 5, dim = 64, corpusCount = n)
       .orderBy("query_id", "rank").collect().toSeq
-    assert(Similarity.annServeTopK(q, e, k = 5, dim = 64,
+    assert(Similarity.annTopK(q, e, k = 5, dim = 64,
         maxBytesPerVector = 4 * 64)
       .orderBy("query_id", "rank").collect().toSeq === viaAnn)
     // tight budget: exactly ivfAdcTopK at the auto budgets
@@ -924,29 +935,38 @@ class SimilaritySpec extends SparkSpec {
         nProbe = Similarity.probeBudget(bits), m = 8,
         rerank = Similarity.autoAdcRerank(n))
       .orderBy("query_id", "rank").collect().toSeq
-    assert(Similarity.annServeTopK(q, e, k = 5, dim = 64,
+    assert(Similarity.annTopK(q, e, k = 5, dim = 64,
         maxBytesPerVector = 8)
       .orderBy("query_id", "rank").collect().toSeq === adc)
   }
 
   test("annServeFromIndex: persisted-index serving ≡ in-flight, both routes (VERDICT r12 #4)") {
-    import Similarity.annServeIndexPlan
+    import Similarity.{annPlan, autoAdcRerank, autoQuantBits, indexPlan, probeBudget, IvfAdc, SignIvf, SignLsh}
     // plan: only two families have an on-disk form — full-precision
     // budgets collapse to the sign-IVF index (the LSH regime is
-    // in-flight-only); the compressed route matches annServePlan
-    assert(annServeIndexPlan(2000L, 64, 256) === "sign-ivf")
-    assert(annServeIndexPlan(200000L, 64, 256) === "sign-ivf")
-    assert(annServeIndexPlan(2000L, 64, 8) === "ivf-adc")
-    assert(annServeIndexPlan(200000L, 64, 255) === "ivf-adc")
+    // in-flight-only); the compressed plan is the in-flight one
+    assert(indexPlan(2000L, 64, 256).isInstanceOf[SignIvf])
+    assert(indexPlan(200000L, 64, 256).isInstanceOf[SignIvf])
+    assert(indexPlan(2000L, 64, 8).isInstanceOf[IvfAdc])
+    assert(indexPlan(200000L, 64, 255).isInstanceOf[IvfAdc])
+    for ((gn, dim, budget) <- planGrid) {
+      val inFlight = annPlan(gn, dim, budget) match {
+        case _: SignLsh =>
+          val bits = autoQuantBits(gn, dim)
+          SignIvf(bits, probeBudget(bits))
+        case p => p
+      }
+      assert(indexPlan(gn, dim, budget) === inFlight, s"n=$gn dim=$dim budget=$budget")
+    }
     val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter($"vec_id" % 50 === 0)
     val n = e.count()
-    val bits = Similarity.autoQuantBits(n, 64)
+    val bits = autoQuantBits(n, 64)
     // sign route: build under a roomy budget, serve ≡ the same-family
     // in-flight form at the same auto budgets
     val dirS = java.nio.file.Files.createTempDirectory("graft_serveidx_s").toString
     assert(Similarity.buildAnnServeIndex(e, dirS, dim = 64,
-      maxBytesPerVector = 256) === "sign-ivf")
+      maxBytesPerVector = 256) === SignIvf(bits, probeBudget(bits)))
     val servedS = Similarity.annServeFromIndex(spark, dirS, q, e, k = 5,
         dim = 64, maxBytesPerVector = 256)
       .orderBy("query_id", "rank").collect().toSeq
@@ -955,10 +975,10 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().toSeq
     assert(servedS === inflightS)
     // ADC route: tight budget, serve ≡ ivfAdcTopK at the same autos
-    // (which is also what in-flight annServeTopK runs at this budget)
+    // (which is also what in-flight annTopK runs at this budget)
     val dirA = java.nio.file.Files.createTempDirectory("graft_serveidx_a").toString
     assert(Similarity.buildAnnServeIndex(e, dirA, dim = 64,
-      maxBytesPerVector = 8) === "ivf-adc")
+      maxBytesPerVector = 8) === IvfAdc(bits, probeBudget(bits), 8, autoAdcRerank(n)))
     val servedA = Similarity.annServeFromIndex(spark, dirA, q, e, k = 5,
         dim = 64, maxBytesPerVector = 8)
       .orderBy("query_id", "rank").collect().toSeq

@@ -29,6 +29,16 @@ object AnnQueries extends Family {
     (Similarity.autoQuantBits(n, 64), Similarity.autoAdcRerank(n))
   }
 
+  /** The probe permilles `annParamsCte` emits `np_P` columns for.
+    * `signIvfProbeCtes` / `recallCalibrationOracleSql` interpolate
+    * `np_$p` column names from their arguments, so a permille outside
+    * this set would generate SQL referencing a nonexistent column —
+    * a binder error at oracle RUN time, far from the call site. Both
+    * generators `require` membership instead (fail at CATALOG-BUILD
+    * time, at the offending call).
+    */
+  private val annPermilles: Seq[Int] = Seq(63, 188, 375, 438)
+
   /** The ANN auto-budget params as ONE SQL CTE (`ap`), mirroring
     * `Similarity.autoQuantBits` / `probeBudget` / `autoAdcRerank`
     * exactly: the ENGINE side of every ANN catalog query derives its
@@ -47,16 +57,6 @@ object AnnQueries extends Family {
     * shape serves every caller; scalar subqueries on `ap` fold to
     * constants in DuckDB.
     */
-  /** The probe permilles `annParamsCte` emits `np_P` columns for.
-    * `signIvfProbeCtes` / `recallCalibrationOracleSql` interpolate
-    * `np_$p` column names from their arguments, so a permille outside
-    * this set would generate SQL referencing a nonexistent column —
-    * a binder error at oracle RUN time, far from the call site. Both
-    * generators `require` membership instead (fail at CATALOG-BUILD
-    * time, at the offending call).
-    */
-  private val annPermilles: Seq[Int] = Seq(63, 188, 375, 438)
-
   private val annParamsCte: String = {
     val nps = annPermilles.map(p =>
       s"       GREATEST(1, ((CAST(1 AS BIGINT) << bits) * $p) // 1000) AS np_$p").mkString(",\n")

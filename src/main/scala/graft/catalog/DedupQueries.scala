@@ -34,7 +34,7 @@ object DedupQueries extends Family {
         graft.expressions.GraftFunctions.shingleSet(col("text"), 3, charLevel = false).as("sh"))
       .filter(size(col("sh")) > 0)
     // Deliberate bounded all-pairs baseline — the banded twins
-    // (q26/q28, Dedup.minHashNearDups) are the scale path. Hard-stop
+    // (q26/q28, Dedup.nearDupPairsPrepared) are the scale path. Hard-stop
     // if a future testdata change grows the bounded subset, so the
     // cross join can't silently go quadratic.
     val nDocs = all.count()

@@ -165,10 +165,6 @@ object Sources {
         Map("mode" -> "PERMISSIVE",
           "columnNameOfCorruptRecord" -> "_corrupt_record")))
 
-  /** Incremental source: appends `WHERE <tsCol> > watermark` to a JDBC
-    * query (predicate evaluated by the database), or filters files
-    * post-scan (Catalyst pushes it into the parquet/CSV scan).
-    */
   /** Strict `yyyy-MM-dd[ HH:mm:ss[.SSS...]]` shape for persisted
     * watermarks (date-only and full-timestamp forms). Interpolating a
     * watermark into the JDBC pushdown query is only safe because this
@@ -179,6 +175,10 @@ object Sources {
   private val WatermarkShape =
     "^\\d{4}-\\d{2}-\\d{2}([ T]\\d{2}:\\d{2}:\\d{2}(\\.\\d{1,9})?)?$".r
 
+  /** Incremental source: appends `WHERE <tsCol> > watermark` to a JDBC
+    * query (predicate evaluated by the database), or filters files
+    * post-scan (Catalyst pushes it into the parquet/CSV scan).
+    */
   def incremental(
       spark: SparkSession, cfg: SourceConfig, tsCol: String): Option[String] => DataFrame = {
     case None => read(spark, cfg)

@@ -41,15 +41,6 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"),
       GraftFunctions.shingleSet(col(textCol), shingleSize, charLevel).as("sh"))
 
-  def tokenShingleSets(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int): DataFrame =
-    shingleSets(docs, idCol, textCol, shingleSize, charLevel = false)
-
-  /** Per-document distinct character n-gram hash set. */
-  def charShingleSets(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    shingleSets(docs, idCol, textCol, n, charLevel = true)
-
   /** MinHash signatures straight from text: one compiled kernel call
     * per row ([[graft.expressions.MinHashSig]]) — no explode, no
     * shuffle, no intermediate arrays. k permutations are derived from
@@ -60,28 +51,11 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"),
       GraftFunctions.minhashSig(col(textCol), shingleSize, k, charLevel).as("sig"))
 
-  /** LSH banding over a MinHash signature column: the k-long signature
-    * splits into `bands` groups of k/bands (the last band absorbs the
-    * k % bands remainder so no signature element is silently dropped),
-    * each hashed to a bucket key; docs sharing any (band, bucket) are
-    * candidate pairs.
-    *
-    * `neighborCap` bounds the per-bucket candidate blowup: a
-    * mass-duplicated boilerplate cluster of size m otherwise emits
-    * m(m-1)/2 pairs from its bucket. With a cap, docs in a bucket are
-    * ranked by id and each doc pairs only with its next `cap` neighbors
-    * in rank order — O(m·cap) pairs and O(m·cap) join work (the cap is
-    * applied via an equi-join on (band, bucket, rank), never by
-    * filtering an m² intermediate). Chains keep every cluster CONNECTED,
-    * so [[connectedComponents]] still recovers the full cluster; what's
-    * lost is only direct pairs between far-apart ranks — the
-    * resolution path is unaffected, pair-listing recall for clusters
-    * wider than `cap` is the documented trade (SCALING.md).
-    */
   /** Explode a (doc_id, sig) frame into (doc_id, band, bh) banding
-    * keys — shared by [[bandPairs]] and [[dedupeIncrement]] so the
-    * bands/k guard can't be bypassed (bands > k would make r = 0 and
-    * hash empty slices identically — a silent cross join).
+    * keys — shared by [[bandPairs]], [[dedupeIncrement]] and the banded
+    * index writes so the bands/k guard can't be bypassed (bands > k
+    * would make r = 0 and hash empty slices identically — a silent
+    * cross join).
     */
   private def bandedSignatures(sigs: DataFrame, bands: Int, k: Int): DataFrame = {
     require(bands >= 1 && bands <= k, s"need 1 <= bands <= k, got bands=$bands k=$k")
@@ -96,54 +70,70 @@ object Dedup {
       .select(col("doc_id"), col("bb.band"), col("bb.bh"))
   }
 
-  def bandPairs(sigs: DataFrame, bands: Int, k: Int,
-      neighborCap: Option[Int] = None): DataFrame = {
-    val banded = bandedSignatures(sigs, bands, k)
-    // both branches join two bands×corpus-sized frames: pin sort-merge
-    // (the [[neverBroadcast]] hazard — the estimate under a window +
-    // explode over a checkpointed input reads tiny, and the r11 sweep
-    // caught the planner building the 13.7 M-row shifted side as a
-    // broadcast HashedRelation)
-    val pairs = neighborCap match {
+  /** Candidate pairs of rows that share the block key `keys` — the
+    * blocking join behind [[bandPairs]] and [[fuzzyPairs]]. `rows`
+    * holds doc_id, the key columns and the `carry` payload columns,
+    * each given as (column, left name, right name). Returns
+    * (doc_a, doc_b, then every carried column under its left and right
+    * names) with doc_a < doc_b; a pair sharing several blocks comes out
+    * once per block.
+    *
+    * `cap = None` is the plain self-equi-join on the key. `cap` bounds
+    * the per-block blowup: a mass-duplicated boilerplate block of m
+    * rows otherwise emits m(m-1)/2 pairs. With a cap, block members
+    * rank by doc_id and each pairs only with its next `cap` neighbors
+    * in rank order — O(m·cap) pairs and O(m·cap) join work (an
+    * equi-join on (key, rank), never a filter over an m²
+    * intermediate). Chains keep every block CONNECTED, so
+    * [[connectedComponents]] still recovers the full cluster; what's
+    * lost is only direct pairs between far-apart ranks — pair-listing
+    * recall for blocks wider than `cap` is the documented trade
+    * (SCALING.md).
+    *
+    * Both branches join two corpus-sized frames, so the second side is
+    * pinned sort-merge ([[neverBroadcast]]): the size estimate under a
+    * window + explode over a checkpointed input reads tiny, and a
+    * sweep caught the planner building a 13.7 M-row shifted side as a
+    * broadcast HashedRelation.
+    */
+  private def blockPairs(rows: DataFrame, keys: Seq[String], cap: Option[Int],
+      carry: Seq[(String, String, String)] = Nil): DataFrame =
+    cap match {
       case None =>
-        banded.as("l").join(neverBroadcast(banded).as("r"),
-            col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-              col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+        val sameKey = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+        rows.as("l").join(neverBroadcast(rows).as("r"),
+            sameKey && col("l.doc_id") < col("r.doc_id"))
+          .select(Seq(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b")) ++
+            carry.flatMap { case (c, l, r) => Seq(col(s"l.$c").as(l), col(s"r.$c").as(r)) }: _*)
       case Some(cap) =>
         require(cap >= 1, s"neighborCap must be >= 1, got $cap")
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bh")).orderBy(col("doc_id"))
-        val ranked = banded.withColumn("rn", row_number().over(w))
+          .partitionBy(keys.map(col): _*).orderBy(col("doc_id"))
+        val ranked = rows.withColumn("rn", row_number().over(w))
         // right side emits `cap` keys (rn - j); equi-join pairs each doc
-        // with its next <=cap in-bucket neighbors — no m² intermediate
-        val shifted = ranked.select(col("doc_id").as("doc_b"),
-            col("band"), col("bh"),
-            explode(sequence(col("rn") - cap, col("rn") - 1)).as("rn"))
+        // with its next <=cap in-block neighbors — no m² intermediate
+        val shifted = ranked.select(col("doc_id").as("doc_b") +:
+            (carry.map { case (c, _, r) => col(c).as(r) } ++ keys.map(col)) :+
+            explode(sequence(col("rn") - cap, col("rn") - 1)).as("rn"): _*)
           .filter(col("rn") >= 1)
-        ranked.select(col("doc_id").as("doc_a"), col("band"), col("bh"), col("rn"))
-          .join(neverBroadcast(shifted), Seq("band", "bh", "rn"))
-          .select(col("doc_a"), col("doc_b"))
+        ranked.select(col("doc_id").as("doc_a") +:
+            (carry.map { case (c, l, _) => col(c).as(l) } ++ keys.map(col)) :+ col("rn"): _*)
+          .join(neverBroadcast(shifted), keys :+ "rn")
+          .select(Seq(col("doc_a"), col("doc_b")) ++
+            carry.flatMap { case (_, l, r) => Seq(col(l), col(r)) }: _*)
     }
-    pairs.distinct()
-  }
 
-  /** MinHash + LSH candidate pairs (no verification). */
-  def lshCandidates(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bands: Int = 4, shingleSize: Int = 3,
-      neighborCap: Option[Int] = None): DataFrame =
-    bandPairs(minhashSignatures(docs, idCol, textCol, shingleSize, k), bands, k,
-      neighborCap)
-
-  /** Exact Jaccard ≥ threshold on precomputed sorted hash sets —
-    * a linear merge per pair ([[graft.expressions.JaccardSorted]]).
+  /** LSH banding over a MinHash signature column: the k-long signature
+    * splits into `bands` groups of k/bands (the last band absorbs the
+    * k % bands remainder so no signature element is silently dropped),
+    * each hashed to a bucket key; docs sharing any (band, bucket) are
+    * candidate pairs, each listed once. `neighborCap` bounds each
+    * bucket to its next-`cap`-neighbor chains ([[blockPairs]]).
     */
-  private def verifyJaccard(pairs: DataFrame, threshold: Double): DataFrame =
-    pairs
-      .withColumn("jaccard", GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  def bandPairs(sigs: DataFrame, bands: Int, k: Int,
+      neighborCap: Option[Int] = None): DataFrame =
+    blockPairs(bandedSignatures(sigs, bands, k), Seq("band", "bh"), neighborCap)
+      .distinct()
 
   /** Exact Jaccard similarity between the token-shingle SETS of two
     * text columns (ad-hoc pairwise use; the scalable pipelines verify
@@ -177,20 +167,25 @@ object Dedup {
   }
 
   /** [[nearDupPairs]] over a precomputed (doc_id, sh, sig) frame from
-    * [[prepareNearDup]] — LSH banding on `sig`, exact sorted-set
-    * Jaccard verification on `sh`. Lets a caller compute the expensive
-    * shingle/signature pass ONCE and share it between candidate
-    * generation, verification, and any caller-side reuse of the sets.
+    * [[prepareNearDup]] — LSH banding on `sig`, then exact Jaccard
+    * ≥ threshold on the sorted `sh` sets of each candidate pair, a
+    * linear merge per pair ([[graft.expressions.JaccardSorted]]).
+    * Lets a caller compute the expensive shingle/signature pass ONCE
+    * and share it between candidate generation, verification, and any
+    * caller-side reuse of the sets ([[dedupeIncrement]]'s within-batch
+    * step passes its artifact rows).
     */
   def nearDupPairsPrepared(prepared: DataFrame, threshold: Double,
       k: Int, bands: Int, neighborCap: Option[Int] = None): DataFrame = {
     val cands = bandPairs(prepared.select(col("doc_id"), col("sig")), bands, k,
       neighborCap)
     val sets = neverBroadcast(prepared.select(col("doc_id"), col("sh")))
-    val pairs = cands
+    cands
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-    verifyJaccard(pairs, threshold)
+      .withColumn("jaccard", GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** Pin a corpus-sized PAYLOAD side (shingle sets, artifact tables,
@@ -210,9 +205,13 @@ object Dedup {
     */
   private def neverBroadcast(df: DataFrame): DataFrame = df.hint("merge")
 
-  /** Full near-dup pipeline: MinHash LSH candidates → exact token
-    * n-gram Jaccard verification ≥ threshold on precomputed sets.
-    * Returns (doc_a, doc_b, jaccard).
+  /** Full near-dup pipeline: MinHash LSH candidates → exact n-gram
+    * Jaccard verification ≥ threshold on precomputed sets. Returns
+    * (doc_a, doc_b, jaccard). `charLevel = true` shingles character
+    * n-grams instead of tokens — the set-similarity join that is robust
+    * to tokenization differences. Banding keys on signature fragments,
+    * so bucket collision probability tracks actual similarity
+    * (≈ 1-(1-j^r)^bands) rather than global shingle frequency.
     */
   def nearDupPairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -359,17 +358,19 @@ object Dedup {
         .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label")))
       // One propagation round: neighbor-min then path halving
       // (label := label(label) — without halving a chain of length m
-      // needs m rounds; with it O(log m)).
+      // needs m rounds; with it O(log m)). The input label rides along
+      // as `old` for the convergence test; column pruning drops it
+      // wherever nothing reads it.
       def propagate(in: DataFrame): DataFrame = {
         val neighborMin = edges
           .join(in.select(col("doc_id").as("dst"), col("label").as("nl")), Seq("dst"))
           .groupBy(col("src").as("doc_id")).agg(min(col("nl")).as("nmin"))
         val p = in.join(neighborMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
+          .select(col("doc_id"), col("label").as("old"),
             least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
         p.as("p").join(p.select(col("doc_id").as("label"),
             col("label").as("ll")).as("g"), Seq("label"), "left")
-          .select(col("doc_id"),
+          .select(col("doc_id"), col("old"),
             least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
       }
       var iter = 0
@@ -381,21 +382,10 @@ object Dedup {
         // at unchanged total shuffle work. The convergence test RIDES
         // THE SAME JOB as the truncation via observe(): `changed`
         // counts round-2 labels that differ from round-1's output
-        // (`old`), so changed == 0 means round 1's output was already
-        // a fixed point of propagate — converged.
-        val r1 = propagate(labels)
-        val neighborMin2 = edges
-          .join(r1.select(col("doc_id").as("dst"), col("label").as("nl")), Seq("dst"))
-          .groupBy(col("src").as("doc_id")).agg(min(col("nl")).as("nmin"))
-        val p2 = r1.join(neighborMin2, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("label").as("old"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+        // (round 2's `old`), so changed == 0 means round 1's output was
+        // already a fixed point of propagate — converged.
         val obs = new org.apache.spark.sql.Observation()
-        val halved = truncate(p2.as("p")
-          .join(p2.select(col("doc_id").as("label"),
-            col("label").as("ll")).as("g"), Seq("label"), "left")
-          .select(col("doc_id"), col("old"),
-            least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+        val halved = truncate(propagate(propagate(labels))
           .observe(obs,
             sum(when(col("label") =!= col("old"), 1L).otherwise(0L)).as("changed"))
           // `old` is only needed by the observed aggregate — dropping it
@@ -473,22 +463,6 @@ object Dedup {
     }
   }
 
-  /** Set-similarity join on character n-grams: MinHash signatures over
-    * the char-shingle sets, LSH-banded candidates, exact Jaccard
-    * verification. Char n-grams make the similarity robust to
-    * tokenization differences (the token-level variant is
-    * `nearDupPairs`). Banding keys on signature fragments, so bucket
-    * collision probability tracks actual similarity (≈ 1-(1-j^r)^bands)
-    * rather than global shingle frequency — a naive "anchor on the
-    * smallest shingle hashes" scheme degenerates here because common
-    * n-grams ("the ") put most of the corpus in one bucket.
-    */
-  def ngramJaccardPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 4, threshold: Double = 0.5,
-      k: Int = 16, bands: Int = 4): DataFrame =
-    nearDupPairs(docs, idCol, textCol, threshold, k, bands, n, charLevel = true)
-
   /** Edit-distance (Levenshtein) near-match pairs over a short key
     * column — the fuzzy-title/fuzzy-name join record linkage needs
     * (catalog titles, author names, URLs) where token/shingle methods
@@ -536,37 +510,13 @@ object Dedup {
         concat(lit("s:"), expr(s"right(key, $prefixLen)")))))
     // `neighborCap` is [[bandPairs]]' bound applied to prefix blocks: a
     // block of m boilerplate-identical keys otherwise emits m(m-1)/2
-    // pairs (the r9 sf1.0 sweep measured q128 at 46× its sf0.1 cost
-    // from exactly this — near-duplicate corpora make hot prefix
-    // blocks the NORM, not a skew corner). With a cap, block members
-    // rank by doc_id and each pairs only with its next `cap`
-    // neighbors — O(m·cap) via an equi-join on (blk, rank), never an
-    // m² intermediate. Chains keep every same-key cluster connected
-    // for downstream component resolution; direct far-rank pairs are
-    // the documented trade.
-    val candidates = neighborCap match {
-      case None =>
-        keyed.as("l").join(keyed.as("r"),
-            col("l.blk") === col("r.blk") &&
-              col("l.doc_id") < col("r.doc_id") &&
-              abs(col("l.len") - col("r.len")) <= maxDist)
-          .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-            col("l.key").as("lk"), col("r.key").as("rk"))
-      case Some(cap) =>
-        require(cap >= 1, s"neighborCap must be >= 1, got $cap")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("blk")).orderBy(col("doc_id"))
-        val ranked = keyed.withColumn("rn", row_number().over(w))
-        val shifted = ranked.select(col("doc_id").as("doc_b"),
-            col("key").as("rk"), col("len").as("rlen"), col("blk"),
-            explode(sequence(col("rn") - cap, col("rn") - 1)).as("rn"))
-          .filter(col("rn") >= 1)
-        ranked.select(col("doc_id").as("doc_a"), col("key").as("lk"),
-            col("len").as("llen"), col("blk"), col("rn"))
-          .join(shifted, Seq("blk", "rn"))
-          .filter(abs(col("llen") - col("rlen")) <= maxDist)
-          .select(col("doc_a"), col("doc_b"), col("lk"), col("rk"))
-    }
+    // pairs (a sf1.0 sweep measured q128 at 46× its sf0.1 cost from
+    // exactly this — near-duplicate corpora make hot prefix blocks the
+    // NORM, not a skew corner).
+    val candidates = blockPairs(keyed, Seq("blk"), neighborCap,
+        carry = Seq(("key", "lk", "rk"), ("len", "llen", "rlen")))
+      .filter(abs(col("llen") - col("rlen")) <= maxDist)
+      .select(col("doc_a"), col("doc_b"), col("lk"), col("rk"))
     candidates
       .distinct()
       .withColumn("dist", levenshtein(col("lk"), col("rk"), maxDist).cast("long"))
@@ -580,31 +530,68 @@ object Dedup {
     * per row ([[graft.expressions.SimHash64]]), no explode, no shuffle.
     */
   def simhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("sh"))
+    docs.select(col(idCol).as("doc_id"), GraftFunctions.simhash64(col(textCol)).as("sh"))
 
-  /** Per-row SimHash Column (same kernel as the pipeline). */
-  def simhash(text: Column): Column = GraftFunctions.simhash64(text)
-
-  /** SimHash near-dup candidates: docs whose signature matches on any of
-    * 4 16-bit bands (necessary condition for Hamming distance ≤ 3),
-    * filtered to Hamming ≤ maxHamming via bit_count.
+  /** SimHash near-dup pairs within Hamming `maxHamming` (0..3; a larger
+    * value throws, since the 4×16-bit banding could no longer see every
+    * such pair), each listed once as (doc_a, doc_b, hamming) — the
+    * [[hammingBandPairs]] join over [[simhashSignatures]].
+    *
+    * PRECONDITION: `idCol` must be unique in `docs`. Duplicate ids give
+    * one output row per pair of input rows, and rows sharing an id are
+    * never paired with each other.
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    val sigs = simhashSignatures(docs, idCol, textCol)
-    val banded = sigs.select(col("doc_id"), col("sh"),
+      maxHamming: Int = 3): DataFrame =
+    hammingBandPairs(simhashSignatures(docs, idCol, textCol), "doc_id", "sh",
+      maxHamming, ("doc_a", "doc_b"))
+
+  /** Hamming-banded near-dup pairs over a 64-bit hash column — the join
+    * behind [[simhashPairs]] and [[Multimodal.perceptualPairs]]. The
+    * hash splits into 4 disjoint 16-bit bands, so any pair within
+    * Hamming 3 shares an intact band (a NECESSARY condition — the
+    * banded join is a superset filter, never a miss, at
+    * maxHamming ≤ 3; beyond 3 it would miss pairs silently, so it is
+    * refused), then exact `bit_count` on the XOR keeps true near-dups.
+    * The exchange carries (id, hash, band) rows only. Collisions of
+    * UNRELATED hashes are ~2⁻¹⁶ per band, so bucket fan-out stays flat
+    * as the corpus grows — EXCEPT under a skewed hash distribution,
+    * which real corpora produce (at the sf10 sweep point the perceptual
+    * band 3 — the top bits, all-zero padding rows for every short
+    * document — held a 30 k-image bucket: ~1.7 B raw join pairs). Two
+    * structural guards make that survivable: the Hamming filter runs
+    * INSIDE the join projection, before any dedup, so losers never
+    * reach an exchange; and each surviving pair is emitted only from
+    * its CANONICAL band — the FIRST band where the two hashes agree,
+    * computable from the XOR alone — so multi-band collisions are
+    * dedup-by-construction and the result needs NO distinct shuffle.
+    *
+    * PRECONDITION: `idCol` must be unique in `sigs`. The canonical-band
+    * gate dedups MULTI-BAND collisions of one pair, not duplicate input
+    * rows: N rows per id yield N² copies of each pair.
+    */
+  private[operators] def hammingBandPairs(sigs: DataFrame, idCol: String,
+      hashCol: String, maxHamming: Int, pairCols: (String, String)): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"maxHamming $maxHamming outside the 4×16-band guarantee (0..3)")
+    def band(h: Column, b: Int): Column = shiftright(h, b * 16).bitwiseAND(0xFFFF)
+    val banded = sigs.select(col(idCol), col(hashCol),
       explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sh"), b * 16).bitwiseAND(0xFFFF).as("bh"))
+        struct(lit(b).as("band"), band(col(hashCol), b).as("bh"))
       }: _*)).as("bb"))
-      .select(col("doc_id"), col("sh"), col("bb.band"), col("bb.bh"))
+      .select(col(idCol), col(hashCol), col("bb.band"), col("bb.bh"))
+    val xr = col(s"l.$hashCol").bitwiseXOR(col(s"r.$hashCol"))
+    // first band where the hashes agree — ≤ l.band always exists here
+    // (the join matched on l.band), so "l.band is canonical" is total
+    val firstMatchBand = (0 until 4).foldRight(lit(4): Column) { (b, rest) =>
+      when(band(xr, b) === 0, lit(b)).otherwise(rest)
+    }
     banded.as("l").join(banded.as("r"),
         col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-        bit_count(col("l.sh").bitwiseXOR(col("r.sh"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+          col(s"l.$idCol") < col(s"r.$idCol"))
+      .filter(bit_count(xr) <= maxHamming && col("l.band") === firstMatchBand)
+      .select(col(s"l.$idCol").as(pairCols._1), col(s"r.$idCol").as(pairCols._2),
+        bit_count(xr).as("hamming"))
   }
 
   /** Winnowing document fingerprint (Schleimer et al., SIGMOD'03):
@@ -731,13 +718,7 @@ object Dedup {
       val freshExact = DurableSnapshots.truncateBulky(
         fresh.join(exactKeep, Seq("doc_id"), "left_semi"),
         checkpointDir, "fresh_exact")
-      val innerPairs = bandPairs(freshExact.select(col("doc_id"), col("sig")),
-          bands, k, neighborCap)
-        .join(neverBroadcast(freshExact.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))),
-          Seq("doc_a"))
-        .join(neverBroadcast(freshExact.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))),
-          Seq("doc_b"))
-        .filter(GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")) >= threshold)
+      val innerPairs = nearDupPairsPrepared(freshExact, threshold, k, bands, neighborCap)
         .select(col("doc_a"), col("doc_b"))
       val comps = connectedComponents(innerPairs,
         checkpointDir = checkpointDir.map(d => s"$d/components"))
@@ -782,12 +763,7 @@ object Dedup {
     // a rebuild supersedes every prior generation including appends
     BatchedIndex.deleteDir(spark, s"$path/bands")
     BatchedIndex.deleteDir(spark, s"$path/artifacts")
-    val base = BatchedIndex.buildBatchId
-    bandedSignatures(historyArt.select(col("doc_id"), col("sig")), bands, k)
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$path/bands/batch_id=$base")
-    historyArt.select(col("doc_id"), col("text_hash"), col("sh"), col("sig"))
-      .write.mode("overwrite").parquet(s"$path/artifacts/batch_id=$base")
+    writeGeneration(historyArt, path, BatchedIndex.buildBatchId, k, bands)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_index_meta"), s"$k,$bands")
@@ -811,10 +787,19 @@ object Dedup {
   def appendBandedIndex(newArt: DataFrame, path: String, batchId: String): Unit = {
     BatchedIndex.requireBatchId(batchId)
     val (k, bands) = readIndexMeta(path)
-    bandedSignatures(newArt.select(col("doc_id"), col("sig")), bands, k)
+    writeGeneration(newArt, path, batchId, k, bands)
+  }
+
+  /** One index generation: `art`'s bands, then its artifacts, each
+    * under its own `batch_id=<batchId>` directory in overwrite mode —
+    * bands FIRST, the crash posture [[writeBandedIndex]] documents.
+    */
+  private def writeGeneration(art: DataFrame, path: String, batchId: String,
+      k: Int, bands: Int): Unit = {
+    bandedSignatures(art.select(col("doc_id"), col("sig")), bands, k)
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$path/bands/batch_id=$batchId")
-    newArt.select(col("doc_id"), col("text_hash"), col("sh"), col("sig"))
+    art.select(col("doc_id"), col("text_hash"), col("sh"), col("sig"))
       .write.mode("overwrite").parquet(s"$path/artifacts/batch_id=$batchId")
   }
 
@@ -941,7 +926,7 @@ object Dedup {
     val toks = docs
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
-        expr(s"filter(split(trim(`$textCol`), '\\\\s+'), x -> x != '')").as("toks"))
+        tokens(textCol).as("toks"))
     // (doc_id, 0-based gram start, gram) — one explode, grams built
     // inside codegen
     val grams = toks.select(col("doc_id"),
@@ -955,22 +940,7 @@ object Dedup {
     val covered = grams.join(broadcast(frequent), Seq("gram"))
       .select(col("doc_id"), explode(expr(s"sequence(pos0 + 1, pos0 + $n)")).as("p"))
       .distinct()
-    val tokPos = toks
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("p0", "tok")))
-      .select(col("doc_id"), (col("p0") + 1).as("p"), col("tok"))
-    val rebuilt = tokPos.join(covered, Seq("doc_id", "p"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(
-        // positions are unique per doc, so the struct sort is a total
-        // order and the collect_list's arrival order cannot leak
-        expr("array_join(transform(array_sort(collect_list(struct(p, tok))), s -> s.tok), ' ')")
-          .as("cleaned"),
-        count(lit(1)).as("n_kept"))
-    toks.select(col("doc_id"), size(col("toks")).cast("long").as("n_toks"))
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cleaned"), lit("")).as("cleaned"),
-        (col("n_toks") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
+    rebuildWithout(toks, covered)
   }
 
   /** Maximal repeated-span mining — the ExactSubstr dedup shape
@@ -1051,7 +1021,7 @@ object Dedup {
       docs.filter(length(trim(col(textCol))) > 0)
         .select(col(idCol).as("doc_id"), col(textCol).as("__text")))
       .select(col("doc_id"),
-        expr("filter(split(trim(`__text`), '\\\\s+'), x -> x != '')").as("toks"))
+        tokens("__text").as("toks"))
 
   /** (doc_id, pos — 1-based, gh = xxhash64 of the space-joined
     * `w`-token window), with the hash computed ONCE per window (r16).
@@ -1107,12 +1077,29 @@ object Dedup {
     val covered = nonFirst
       .select(col("doc_id"), explode(expr(s"sequence(pos, pos + ${w - 1})")).as("p"))
       .distinct()
+    rebuildWithout(toks, covered)
+  }
+
+  /** Whitespace tokens of the text column named `textCol`, empty
+    * tokens dropped — the span family's one tokenizer.
+    */
+  private def tokens(textCol: String): Column =
+    expr(s"filter(split(trim(`$textCol`), '\\\\s+'), x -> x != '')")
+
+  /** The span family's rebuild: each (doc_id, toks) document keeps the
+    * tokens whose 1-based position is NOT in `covered` (doc_id, p), in
+    * order, joined by single spaces. Returns (doc_id, cleaned,
+    * n_removed); a fully covered document comes back as "".
+    */
+  private def rebuildWithout(toks: DataFrame, covered: DataFrame): DataFrame = {
     val tokPos = toks
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).as("p"), col("tok"))
     val rebuilt = tokPos.join(covered, Seq("doc_id", "p"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(
+        // positions are unique per doc, so the struct sort is a total
+        // order and the collect_list's arrival order cannot leak
         expr("array_join(transform(array_sort(collect_list(struct(p, tok))), s -> s.tok), ' ')")
           .as("cleaned"),
         count(lit(1)).as("n_kept"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column plumbing.
@@ -397,58 +397,22 @@ object Multimodal {
     }
   }
 
-  /** Hamming-banded near-dup pairs over a perceptual-hash column — the
-    * [[Dedup.simhashPairs]] banding applied to pixels: 4 disjoint
-    * 16-bit bands, so any pair within Hamming 3 shares an intact band
-    * (a NECESSARY condition — the banded join is a superset filter,
-    * never a miss, at maxHamming ≤ 3), then exact `bit_count` on the
-    * XOR keeps true near-dups. The exchange carries (id, hash, band)
-    * rows — 24 bytes each, never payloads; at 100 TB the media bytes
-    * stay at the scan and only hashes shuffle. Collisions of UNRELATED
-    * images are ~2⁻¹⁶ per band on these 56/64-bit hashes, so bucket
-    * fan-out stays flat as the corpus grows — EXCEPT under a skewed
-    * hash distribution, which real corpora produce (at the sf10 sweep
-    * point band 3 — the top bits, all-zero padding rows for every
-    * short document — held a 30 k-image bucket: ~1.7 B raw join
-    * pairs). Two structural guards make that survivable (r14):
-    * the Hamming filter runs INSIDE the join projection, before any
-    * dedup, so losers never reach an exchange; and each surviving
-    * pair is emitted only from its CANONICAL band — the FIRST band
-    * where the two hashes agree, computable from the XOR alone — so
-    * multi-band collisions are dedup-by-construction (the q167
-    * canonical-bucket gate, applied to bands) and the result needs NO
-    * distinct shuffle at all.
+  /** Hamming-banded near-dup pairs over a perceptual-hash column, each
+    * listed once as (media_a, media_b, hamming): the
+    * [[Dedup.hammingBandPairs]] join applied to pixels. `maxHamming`
+    * must be in 0..3. The exchange carries (id, hash, band) rows —
+    * 24 bytes each, never payloads; at 100 TB the media bytes stay at
+    * the scan and only hashes shuffle.
     *
     * PRECONDITION: `media_id` must be unique in `hashes` (one hash row
     * per media item — what every hash producer in this module emits).
-    * The canonical-band gate dedups MULTI-BAND collisions of one pair,
-    * not duplicate input rows: feeding N rows per id yields N² copies
-    * of each pair (ADVICE r14). Dedup upstream if the input is raw.
+    * Feeding N rows per id yields N² copies of each pair. Dedup
+    * upstream if the input is raw.
     */
   def perceptualPairs(hashes: DataFrame, hashCol: String = "dhash",
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"maxHamming $maxHamming outside the 4×16-band guarantee (0..3)")
-    val sigs = hashes.select(col("media_id"), col(hashCol).as("ph"))
-    val banded = sigs.select(col("media_id"), col("ph"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("ph"), b * 16).bitwiseAND(0xFFFF).as("bh"))
-      }: _*)).as("bb"))
-      .select(col("media_id"), col("ph"), col("bb.band"), col("bb.bh"))
-    val xr = col("l.ph").bitwiseXOR(col("r.ph"))
-    // first band where the hashes agree — ≤ l.band always exists here
-    // (the join matched on l.band), so "l.band is canonical" is total
-    val firstMatchBand = (0 until 4).foldRight(lit(4): Column) { (b, rest) =>
-      when(shiftright(xr, b * 16).bitwiseAND(0xFFFF) === 0, lit(b)).otherwise(rest)
-    }
-    banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.media_id") < col("r.media_id"))
-      .filter(bit_count(xr) <= maxHamming && col("l.band") === firstMatchBand)
-      .select(col("l.media_id").as("media_a"), col("r.media_id").as("media_b"),
-        bit_count(xr).as("hamming"))
-  }
+      maxHamming: Int = 3): DataFrame =
+    Dedup.hammingBandPairs(hashes.select(col("media_id"), col(hashCol).as("ph")),
+      "media_id", "ph", maxHamming, ("media_a", "media_b"))
 
   def imageStats(records: Dataset[MediaRecord]): Dataset[ImageStats] = {
     import records.sparkSession.implicits._

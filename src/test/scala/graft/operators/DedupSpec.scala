@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.expressions.GraftFunctions
 
 class DedupSpec extends SparkSpec {
 
@@ -39,7 +40,7 @@ class DedupSpec extends SparkSpec {
 
   test("shingle sets are sorted distinct and jaccardSorted matches set math") {
     val d = docs(1L -> "a b c d e f", 2L -> "a b c d e f extra")
-    val sets = Dedup.tokenShingleSets(d, "doc_id", "text", 2).collect()
+    val sets = Dedup.shingleSets(d, "doc_id", "text", 2, charLevel = false).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
     assert(sets(1L) === sets(1L).sorted)
     assert(sets(1L).distinct === sets(1L))
@@ -63,13 +64,14 @@ class DedupSpec extends SparkSpec {
     assert(pairs.head.getAs[Double]("jaccard") > 0.5)
   }
 
-  test("ngramJaccardPairs (char level) finds the same planted pair") {
+  test("nearDupPairs (char level) finds the same planted pair") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val d = docs(
       1L -> base,
       2L -> (base + " tail"),
       3L -> "one two three four five six seven eight nine ten")
-    val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 6, threshold = 0.5)
+    val pairs = Dedup.nearDupPairs(d, "doc_id", "text", threshold = 0.5, shingleSize = 6,
+        charLevel = true)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
   }
@@ -78,7 +80,7 @@ class DedupSpec extends SparkSpec {
     val d = docs(1L -> "the quick brown fox", 2L -> "pack my box with jugs")
     val pipeline = Dedup.simhashSignatures(d, "doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val perRow = d.select($"doc_id", Dedup.simhash($"text").as("sh")).collect()
+    val perRow = d.select($"doc_id", GraftFunctions.simhash64($"text").as("sh")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pipeline === perRow)
   }
@@ -91,6 +93,9 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.simhashPairs(d, "doc_id", "text", maxHamming = 3).collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     assert(pairs.head.getAs[Long]("hamming") === 0L)
+    // four 16-bit bands only guarantee a shared band up to Hamming 3
+    intercept[IllegalArgumentException](
+      Dedup.simhashPairs(d, "doc_id", "text", maxHamming = 4))
   }
 
   test("fingerprints: winnowing selects a subset of k-gram hashes, deterministic") {
@@ -123,11 +128,12 @@ class DedupSpec extends SparkSpec {
     val cap = 8
     val cluster = (0 until m).map(i => (i.toLong, "identical boilerplate text repeated everywhere"))
     val d = (cluster :+ (9999L -> "a genuinely different document about other things")).toDF("doc_id", "text")
-    val capped = Dedup.lshCandidates(d, "doc_id", "text", neighborCap = Some(cap)).count()
+    val sigs = Dedup.minhashSignatures(d, "doc_id", "text", 3, 16)
+    val capped = Dedup.bandPairs(sigs, bands = 4, k = 16, neighborCap = Some(cap)).count()
     // chain pairs: ≤ m·cap per band, identical across bands after distinct
     assert(capped <= m.toLong * cap, s"capped candidates $capped exceed m*cap")
     assert(capped >= m - 1, "cap must keep the cluster connected (chain)")
-    val uncapped = Dedup.lshCandidates(d, "doc_id", "text").count()
+    val uncapped = Dedup.bandPairs(sigs, bands = 4, k = 16).count()
     assert(uncapped === m.toLong * (m - 1) / 2)
   }
 

@@ -78,6 +78,10 @@ object Bench {
         val ratios = canaryConstants.flatMap { case (q, c) => timed(q).map(_ / c) }.sorted
         if (ratios.isEmpty) None else Some(ratios(ratios.size / 2)) // median
       }
+    // generated classes compiled over the timed pass (canary runs
+    // included): a warm engine whose codegen cache holds the catalog's
+    // plans compiles only first-seen shapes here
+    val compiles0 = GraftSession.codegenCompiles
     val envStart = envFactor()
     val names = SparkEntry.queries.keys.toSeq.sorted
     val (firstHalf, secondHalf) = names.splitAt(names.size / 2)
@@ -85,6 +89,7 @@ object Bench {
     val envMid = envFactor()
     val resultsSecond = secondHalf.flatMap(n => timed(n).map(n -> _))
     val envEnd = envFactor()
+    val timedCompiles = GraftSession.codegenCompiles - compiles0
     val results = resultsFirst ++ resultsSecond
     // Cold/warm split on the slowest five: the cold number carries
     // first-run codegen + whatever load spike it landed on; the warm
@@ -146,7 +151,7 @@ object Bench {
     // only round-over-round comparable at equal warmup_set — the list
     // is FROZEN at "r16" (last changed r16; see BASELINE.md).
     val envEcho = s""","cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":"${spark.conf.get("spark.sql.shuffle.partitions")}","warmup_set":"r16""""
-    val failJson = s""","n_failed":${failed.size},"failed":${failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")},"n_warmup_failed":$warmupFailed"""
+    val failJson = s""","n_failed":${failed.size},"failed":${failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")},"n_warmup_failed":$warmupFailed,"codegen_compiles":$timedCompiles"""
     val json = s"""{"metric":"total","value":$total,"unit":"sec","warmup_s":${num(warmupS, 2)}$envEcho$failJson$envJson$normJson$servingMsPerQ,"queries_warm":$warmJson,"queries":$qs,"sf":"$sfDir"}"""
     // Full per-query map goes to a file; stdout gets a compact summary
     // as the LAST line. The driver keeps only a ~2 KB stdout tail, so

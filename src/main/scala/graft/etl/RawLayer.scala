@@ -51,6 +51,24 @@ object RawLayer {
       .coalesce(1).write.mode(SaveMode.Overwrite).json(metadataPath)
   }
 
+  /** Row count and latest `date` of an increment, in one action taken
+    * before anything is written. The latest date is null when no row
+    * has a date.
+    */
+  private def countAndMaxDate(increment: DataFrame): (Long, java.sql.Timestamp) = {
+    val r = increment.agg(count(lit(1)), max(col("date"))).head()
+    (r.getLong(0), r.getTimestamp(1))
+  }
+
+  /** Persist the increment's latest date as the new watermark. An
+    * increment with no dated row leaves the watermark as it was: its
+    * rows are published, and the next cycle extracts from the old
+    * watermark again.
+    */
+  private def advanceWatermark(spark: SparkSession, metadataPath: String,
+      maxDate: java.sql.Timestamp): Unit =
+    if (maxDate != null) writeWatermark(spark, metadataPath, formatWatermark(maxDate))
+
   /** One ingest cycle (reference: raw_layer.py:94-135 both branches).
     *
     * @param source watermark → increment; None means full extract. A
@@ -67,7 +85,7 @@ object RawLayer {
     val watermark = readWatermark(spark, metadataPath)
     val increment = source(watermark).cache()
     try {
-      val n = increment.count()
+      val (n, maxDate) = countAndMaxDate(increment)
       if (n == 0) return 0L
       // Crash-recovery fallback: a crash mid-swap leaves the previous
       // raw zone at _old (never deleted before the new one is in
@@ -101,8 +119,7 @@ object RawLayer {
       if (!fs.rename(new Path(tmp), raw))
         throw new java.io.IOException(s"rename $tmp -> $raw failed")
       fs.delete(old, true)
-      val maxDate = increment.agg(max(col("date"))).head().getTimestamp(0)
-      writeWatermark(spark, metadataPath, formatWatermark(maxDate))
+      advanceWatermark(spark, metadataPath, maxDate)
       n
     } finally increment.unpersist()
   }
@@ -146,15 +163,14 @@ object RawLayer {
     val watermark = readWatermark(spark, metadataPath)
     val increment = source(watermark).dropDuplicates().cache()
     try {
-      val n = increment.count()
+      val (n, maxDate) = countAndMaxDate(increment)
       if (n == 0) return 0L
       increment
         .withColumn("ingest_date", to_date(col("date")))
         .write.mode(SaveMode.Append)
         .partitionBy("ingest_date")
         .parquet(rawPath)
-      val maxDate = increment.agg(max(col("date"))).head().getTimestamp(0)
-      writeWatermark(spark, metadataPath, formatWatermark(maxDate))
+      advanceWatermark(spark, metadataPath, maxDate)
       n
     } finally increment.unpersist()
   }

@@ -4,7 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Full-catalog sweep recording, per query, its catalog family, cold +
-  * warm wall time and the warm run's job/stage/task counts — the
+  * warm wall time, the warm run's job/stage/task counts and the
+  * generated classes it compiled (0 once the codegen cache holds the
+  * query's plans; a recompile costs planning time on every run) — the
   * attribution data for the ~0.3 s/query fixed-overhead floor across
   * the bench tail (VERDICT r16 "next round" #1). `failed` is 1 when either run threw: its times are
   * then the time to the failure, not a query time.
@@ -30,7 +32,7 @@ object QSweep {
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     val sb = new StringBuilder
-    sb.append("query\tfamily\tcold_s\twarm_s\tjobs\tstages\ttasks\tgc_ms\tfailed\n")
+    sb.append("query\tfamily\tcold_s\twarm_s\tjobs\tstages\ttasks\tgc_ms\tcompiles\tfailed\n")
     def sweepOne(q: String): Unit = {
       var failed = 0
       def run(): Double = {
@@ -42,9 +44,10 @@ object QSweep {
       val cold = run()
       Thread.sleep(150) // drain listener
       val j0 = jobs.get(); val s0 = stages.get(); val t0 = tasks.get(); val g0 = gcMs
+      val c0 = graft.GraftSession.codegenCompiles
       val warm = run()
       Thread.sleep(150)
-      val line = f"$q\t${graft.QueryCatalog.familyOf(q)}\t$cold%.3f\t$warm%.3f\t${jobs.get - j0}%d\t${stages.get - s0}%d\t${tasks.get - t0}%d\t${gcMs - g0}%d\t$failed%d"
+      val line = f"$q\t${graft.QueryCatalog.familyOf(q)}\t$cold%.3f\t$warm%.3f\t${jobs.get - j0}%d\t${stages.get - s0}%d\t${tasks.get - t0}%d\t${gcMs - g0}%d\t${graft.GraftSession.codegenCompiles - c0}%d\t$failed%d"
       println("QSWEEP " + line)
       sb.append(line).append('\n')
     }

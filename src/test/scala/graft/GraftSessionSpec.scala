@@ -1,6 +1,6 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Pins the session-sizing derivation (VERDICT r11 #5): shuffle width
   * defaults to the core count — the sf10 sweep measured 96-wide
@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * else the JVM's visible processors. The env-injectable overloads
   * make both branches testable regardless of the test JVM's real
   * environment; the no-arg forms are pinned to agree with the
-  * injectable forms on the real env.
+  * injectable forms on the real env. The profile's codegen class cache
+  * is checked on the shared session, which is built from the profile.
   */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
 
   test("shuffle width defaults to the core count when no override is set") {
     assert(GraftSession.shuffleWidth(4, Map.empty) === 4)
@@ -36,5 +37,24 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the no-arg forms read the real environment (same derivation)") {
     assert(GraftSession.availableCores === GraftSession.availableCores(sys.env))
     assert(GraftSession.shuffleWidth(13) === GraftSession.shuffleWidth(13, sys.env))
+  }
+
+  test("generated classes beyond Spark's default 100-entry cache compile once") {
+    // each projection inlines its own literal (offset so no other
+    // suite's plan can share one), so each is a distinct generated
+    // class: 160 of them overflow the default LRU, and there a second
+    // sweep recompiles every one of them
+    val n = 160
+    def sweep(): Long = {
+      val before = GraftSession.codegenCompiles
+      (1 to n).foreach { i =>
+        spark.range(4).select((col("id") * lit(7919000L + i)).as("x")).collect()
+      }
+      GraftSession.codegenCompiles - before
+    }
+    val first = sweep()
+    val second = sweep()
+    assert(first >= n, s"first sweep compiled $first classes")
+    assert(second === 0L, s"second sweep recompiled $second classes")
   }
 }

@@ -3,18 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt),
+  * built from the shipped profile so the tests run the settings the
+  * engine runs — including the JVM-wide ones, such as the codegen
+  * class cache, that the first session to compile fixes for the JVM.
+  */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val s = GraftSession.defaultBuilder("local[4]", 4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

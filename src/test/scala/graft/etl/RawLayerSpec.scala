@@ -69,6 +69,31 @@ class RawLayerSpec extends SparkSpec {
     assert(RawLayer.readWatermark(spark, s"$base/meta") === Some("2023-01-01"))
   }
 
+  test("runOnce: a first extract with no dated row publishes and writes no watermark") {
+    val base = tmpDir()
+    val undated = sourceRows("a" -> null, "b" -> null)
+    val n1 = RawLayer.runOnce(spark, watermarkedSource(undated), s"$base/raw", s"$base/meta")
+    assert(n1 === 2)
+    assert(spark.read.parquet(s"$base/raw").count() === 2)
+    assert(RawLayer.readWatermark(spark, s"$base/meta") === None)
+    // with no watermark the next cycle is a full extract, as on a first run
+    val dated = sourceRows("a" -> null, "b" -> null, "c" -> ts("2023-03-01"))
+    val n2 = RawLayer.runOnce(spark, watermarkedSource(dated), s"$base/raw", s"$base/meta")
+    assert(n2 === 3)
+    assert(spark.read.parquet(s"$base/raw").count() === 3)
+    assert(RawLayer.readWatermark(spark, s"$base/meta") === Some("2023-03-01"))
+  }
+
+  test("appendIncrement: an increment with no dated row appends and keeps the watermark") {
+    val base = tmpDir()
+    val batch1 = sourceRows("a" -> ts("2023-01-01"))
+    RawLayer.appendIncrement(spark, watermarkedSource(batch1), s"$base/raw", s"$base/meta")
+    val undated: Option[String] => DataFrame = _ => sourceRows("b" -> null)
+    assert(RawLayer.appendIncrement(spark, undated, s"$base/raw", s"$base/meta") === 1)
+    assert(spark.read.parquet(s"$base/raw").count() === 2)
+    assert(RawLayer.readWatermark(spark, s"$base/meta") === Some("2023-01-01"))
+  }
+
   test("incremental ≡ full: same final content either way") {
     val all = sourceRows(
       "a" -> ts("2023-01-01"), "b" -> ts("2023-02-01"), "c" -> ts("2023-03-01"))

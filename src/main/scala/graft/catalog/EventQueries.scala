@@ -15,7 +15,7 @@ object EventQueries extends Family {
   val name = "events"
 
   val entries: Seq[Entry] = Seq(
-    // streaming-equivalent tumbling window aggregation (batch mode).
+    // tumbling 1-hour window aggregation per event type.
     Entry("q20_events_hourly", (s, dir) => {
       EventStreams.hourlyStats(t(s, dir, "events"))
         .select(
@@ -28,7 +28,7 @@ object EventQueries extends Family {
         |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    // sessionization via session_window (batch mode).
+    // sessionization via session_window.
     Entry("q21_events_sessionize", (s, dir) => {
       EventStreams.sessionize(t(s, dir, "events"), "30 minutes")
         .select(
@@ -176,9 +176,9 @@ object EventQueries extends Family {
         |FROM a JOIN c USING (user_id)
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    // record-level funnel: each user's reach TIME per stage — the
-    // batch equivalent of the streaming funnel's advancement records
-    // (spec-asserted identical), value-checked row by row.
+    // record-level funnel: each user's reach TIME per stage (spec-
+    // asserted identical to a per-user progression reference),
+    // value-checked row by row.
     Entry("q89_events_funnel_reach", (s, dir) => {
       Funnel.reachTimes(t(s, dir, "events"), "user_id", "event_type", "ts",
           Seq("view", "click", "purchase"))
@@ -470,8 +470,7 @@ object EventQueries extends Family {
 
     // left-outer interval join: every click kept — per-user conversion
     // coverage where unmatched clicks feed the denominator (the inner
-    // q48 never sees them). Streaming twin:
-    // EventStreams.intervalJoinLeftOuterStreaming (spec-gated).
+    // q48 never sees them).
     Entry("q123_interval_left_outer", (s, dir) => {
       val ev = t(s, dir, "events")
       EventStreams.intervalJoinLeftOuter(
@@ -494,9 +493,8 @@ object EventQueries extends Family {
         |WHERE l.event_type = 'click'
         |GROUP BY l.user_id ORDER BY l.user_id""".stripMargin),
 
-    // time-bounded (interval) join: each event paired with the same
-    // user's purchases in the preceding hour (stream-stream joinable —
-    // see EventStreams.intervalJoinStreaming).
+    // time-bounded (interval) join: each click paired with the same
+    // user's purchases in the preceding hour.
     Entry("q48_interval_join", (s, dir) => {
       val ev = t(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")

@@ -41,19 +41,11 @@ object CuratedLayer {
     staging.select(col("product_id"), col("product_category"), col("unit_price"))
       .distinct()
 
-  def dimStore(
-      staging: DataFrame,
-      existing: Option[DataFrame],
-      asOf: Timestamp,
-      referenceSemantics: Boolean = true): DataFrame =
-    Scd2(dimStoreSource(staging), existing, "store_id", storeTracked, asOf, referenceSemantics)
+  def dimStore(staging: DataFrame, existing: Option[DataFrame], asOf: Timestamp): DataFrame =
+    Scd2(dimStoreSource(staging), existing, "store_id", storeTracked, asOf)
 
-  def dimProduct(
-      staging: DataFrame,
-      existing: Option[DataFrame],
-      asOf: Timestamp,
-      referenceSemantics: Boolean = true): DataFrame =
-    Scd2(dimProductSource(staging), existing, "product_id", productTracked, asOf, referenceSemantics)
+  def dimProduct(staging: DataFrame, existing: Option[DataFrame], asOf: Timestamp): DataFrame =
+    Scd2(dimProductSource(staging), existing, "product_id", productTracked, asOf)
 
   def factSales(staging: DataFrame): DataFrame =
     staging.select(

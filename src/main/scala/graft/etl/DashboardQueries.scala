@@ -7,8 +7,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference: dashboard.py:30-41, 53-67, 78-91, 102-115).
   *
   * Requires views: fact_sales, dim_date, dim_store, dim_product.
-  * All four are star joins + aggregation; with default AQE the tiny
-  * dims broadcast, so each query is one shuffle (the final groupBy).
+  * All four are star joins + aggregation + ORDER BY. With AQE the
+  * tiny dims broadcast, so the fact is never shuffled for a join, but
+  * each query still has two shuffles: the groupBy's hash exchange and
+  * the ORDER BY's range exchange. `explain` of q1 over parquet views
+  * shows two BroadcastExchanges (dim_date, dim_store), a partial →
+  * hashpartitioning → final HashAggregate, then rangepartitioning →
+  * Sort. Executed, that is 6 Spark jobs at sf0.01: one per broadcast,
+  * the hash-shuffle map stage, the range exchange's sampling job, its
+  * map stage and the result stage.
   */
 object DashboardQueries {
 

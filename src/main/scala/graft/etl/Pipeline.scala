@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Batch-first orchestration of the medallion pipeline: source → raw →
   * staging → curated → temp views for serving
   * (reference: src/main.py + the three layer modules, minus the
-  * poll-forever loop — scheduling is the caller's concern; a
-  * Structured Streaming variant lives in graft.streaming).
+  * poll-forever loop — scheduling is the caller's concern;
+  * `RawLayer.streamingIngest` is its Structured-Streaming replacement).
   *
   * Unlike the reference (which re-reads the staging scan 8×), the
   * staging DataFrame is cached once and all four curated outputs build
@@ -33,13 +33,13 @@ object Pipeline {
       raw: DataFrame,
       existingStore: Option[DataFrame] = None,
       existingProduct: Option[DataFrame] = None,
-      asOf: Timestamp = Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z")),
-      referenceSemantics: Boolean = true): CuratedOutputs = {
+      asOf: Timestamp = Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z")))
+    : CuratedOutputs = {
     val staging = StagingLayer.clean(raw).cache()
     CuratedOutputs(
       dimDate = CuratedLayer.dimDate(staging),
-      dimStore = CuratedLayer.dimStore(staging, existingStore, asOf, referenceSemantics),
-      dimProduct = CuratedLayer.dimProduct(staging, existingProduct, asOf, referenceSemantics),
+      dimStore = CuratedLayer.dimStore(staging, existingStore, asOf),
+      dimProduct = CuratedLayer.dimProduct(staging, existingProduct, asOf),
       factSales = CuratedLayer.factSales(staging),
       staging = staging)
   }

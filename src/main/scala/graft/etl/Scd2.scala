@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * (reference: src/curated/curated_layer.py:47-78, analyzed in
   * SURVEY.md §2.9): under 3-valued logic brand-new keys are dropped by
   * the change filter, the *unchanged* existing rows get expired, and
-  * old versions of changed keys vanish. `corrected` is the documented
-  * textbook default.
+  * old versions of changed keys vanish; the curated layer runs it.
+  * `corrected` is the textbook variant (q11 gates it).
   *
   * Both take the batch timestamp as a parameter — the reference calls
   * current_timestamp() in two places of one job, which is
@@ -100,19 +100,17 @@ object Scd2 {
       .unionByName(stampCurrent(changedNew.unionByName(newKeys), asOf))
   }
 
-  /** Dispatch used by the curated layer: first load vs merge
-    * (reference: curated_layer.py:73-77 branch).
+  /** Dispatch used by the curated layer: first load vs the reference
+    * merge (reference: curated_layer.py:73-77 branch).
     */
   def apply(
       newDf: DataFrame,
       existing: Option[DataFrame],
       pk: String,
       trackedCols: Seq[String],
-      asOf: Timestamp,
-      referenceSemantics: Boolean = true): DataFrame =
+      asOf: Timestamp): DataFrame =
     existing match {
       case None => firstLoad(newDf, asOf)
-      case Some(e) if referenceSemantics => reference(newDf, e, pk, trackedCols, asOf)
-      case Some(e) => corrected(newDf, e, pk, trackedCols, asOf)
+      case Some(e) => reference(newDf, e, pk, trackedCols, asOf)
     }
 }

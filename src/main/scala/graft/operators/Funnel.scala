@@ -53,9 +53,10 @@ object Funnel {
   }
 
   /** Per-user funnel reach TIMES — one row per (user, stage reached):
-    * the record-level view behind [[funnel]]'s counts, and the batch
-    * equivalent of [[graft.streaming.StreamingFunnel]]'s advancement
-    * stream (asserted equal in spec). Each stage's reach frame is
+    * the record-level view behind [[funnel]]'s counts, asserted equal
+    * in spec to a per-user in-order progression reference (a stage
+    * advances when it is the next one, at or after the previous
+    * stage's time). Each stage's reach frame is
     * localCheckpoint-ed: it feeds both the next stage's join and the
     * result union, and without the boundary the lazy union re-executes
     * the whole upstream chain per stage (O(k²) event-log scans). The

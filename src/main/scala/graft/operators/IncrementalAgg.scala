@@ -34,7 +34,7 @@ object IncrementalAgg {
 
   /** Fold a new batch into persisted state: union of two partial
     * frames, one groupBy to merge. Returns the NEW state — callers
-    * persist it back (write-then-swap, as Scd2Sink does) to advance
+    * persist it back (write-then-swap, as RawLayer.runOnce does) to advance
     * the view. Keys absent from the batch pass through untouched;
     * brand-new keys appear with their batch partials.
     */

@@ -1,28 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Event-stream processing: windowed aggregation and sessionization.
+/** Event-time transforms over the events table: tumbling-window
+  * aggregation, sessionization and interval joins.
   *
-  * Each transform is written once as DataFrame → DataFrame and works
-  * unchanged on a batch read or a `readStream` source — the
-  * Structured-Streaming counterpart of the reference's poll-loop ingest
-  * (reference: src/raw/raw_layer.py:138-159, which re-runs batch
-  * extracts every 5 s instead of using a streaming runtime).
+  * Each is a batch DataFrame → DataFrame transform. The catalog runs
+  * all four against the DuckDB oracle (q20 `hourlyStats`, q21
+  * `sessionize`, q48 `intervalJoin`, q123 `intervalJoinLeftOuter`) and
+  * `EventStreamsSpec` checks them on hand-built batches. No streaming
+  * source is tested here; the reference's 5-second poll loop maps to
+  * `RawLayer.streamingIngest` (reference: src/raw/raw_layer.py:138-159).
   *
-  * Scale: windowed aggregates shuffle on (window, key); watermarks
-  * bound state so a 1000-executor streaming job doesn't accumulate
-  * unbounded session state.
+  * Scale: windowed aggregates shuffle on (window, key); the interval
+  * joins are equi-joins on user_id with the range as a post-join
+  * condition.
   */
 object EventStreams {
-
-  /** Streaming source over a parquet directory (schema must be known
-    * up front for streams).
-    */
-  def streamFromParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
 
   /** Tumbling-window counts and value sums per event type. Decimal-sum
     * keeps results order-independent (double sums are not associative).
@@ -38,14 +33,8 @@ object EventStreams {
         col("event_type"), col("n_events"),
         col("total_value").cast("double").as("total_value"))
 
-  /** Same aggregation with an event-time watermark — required for
-    * append-mode streaming output; late events beyond 2 h are dropped.
-    */
-  def hourlyStatsStreaming(events: DataFrame): DataFrame =
-    hourlyStats(events.withWatermark("ts", "2 hours"))
-
   /** Sessionization: events from one user with gaps < `gap` merge into
-    * one session (session_window, batch and streaming).
+    * one session (session_window).
     */
   def sessionize(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
@@ -59,14 +48,8 @@ object EventStreams {
         col("user_id"), col("n_events"),
         col("session_value").cast("double").as("session_value"))
 
-  def sessionizeStreaming(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    sessionize(events.withWatermark("ts", "2 hours"), gap)
-
   /** Interval (time-bounded) join: pair each left event with right
     * events of the same user within `[left.ts - before, left.ts]`.
-    * Batch: SortMergeJoin on user_id with the range as a post-join
-    * condition. Streaming: both sides need watermarks and the range
-    * condition bounds the buffered state (stream-stream join).
     */
   def intervalJoin(
       left: DataFrame, right: DataFrame, before: String): DataFrame =
@@ -74,9 +57,7 @@ object EventStreams {
 
   /** Left-outer interval join: every left event survives, unmatched
     * ones with a null right wing — the "did this click convert?"
-    * shape. Streaming left-outer emits the null wing only once the
-    * watermark passes the join window (eventually-exact); the batch
-    * twin is the ground truth the spec compares against.
+    * shape.
     */
   def intervalJoinLeftOuter(
       left: DataFrame, right: DataFrame, before: String): DataFrame =
@@ -96,38 +77,4 @@ object EventStreams {
       joinType)
       .drop("r_user")
   }
-
-  /** Streaming variant: watermark both sides so the join state is
-    * bounded by the interval + watermark delay.
-    */
-  def intervalJoinStreaming(
-      left: DataFrame, right: DataFrame, before: String,
-      watermarkDelay: String = "1 hour"): DataFrame =
-    intervalJoin(
-      left.withWatermark("ts", watermarkDelay),
-      right.withWatermark("ts", watermarkDelay),
-      before)
-
-  /** Streaming left-outer: watermarks bound both the buffered state
-    * AND decide when an unmatched left row's null wing can be emitted
-    * (no right row within the interval can still arrive once the
-    * right watermark passes `l_ts`).
-    */
-  def intervalJoinLeftOuterStreaming(
-      left: DataFrame, right: DataFrame, before: String,
-      watermarkDelay: String = "1 hour"): DataFrame =
-    intervalJoinLeftOuter(
-      left.withWatermark("ts", watermarkDelay),
-      right.withWatermark("ts", watermarkDelay),
-      before)
-
-  /** Streaming exact dedup: drop events whose `keyCols` were already
-    * seen within the watermark horizon — state is bounded by the
-    * watermark (keys older than it are evicted), so a 1000-executor
-    * job doesn't accumulate unbounded seen-set state. The streaming
-    * counterpart of [[graft.operators.Dedup.exact]].
-    */
-  def dedupStream(events: DataFrame, watermarkDelay: String, keyCols: String*): DataFrame =
-    events.withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 }

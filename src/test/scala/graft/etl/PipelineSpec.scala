@@ -65,11 +65,28 @@ class PipelineSpec extends SparkSpec {
   test("SCD2 merge path: second batch against existing dims") {
     val first = Pipeline.runBatch(raw)
     val asOf2 = ts("2024-06-01")
-    val second = Pipeline.runBatch(
-      raw, Some(first.dimStore), Some(first.dimProduct), asOf2,
-      referenceSemantics = false)
-    // corrected semantics: every attribute tuple unchanged → all stay current
-    assert(second.dimStore.filter(second.dimStore("is_current")).count() ===
-      first.dimStore.count())
+    val second = Pipeline.runBatch(raw, Some(first.dimStore), Some(first.dimProduct), asOf2)
+    // Reference semantics (Scd2.reference), derived by hand. The dims
+    // are distinct attribute tuples, so they are multi-row per key:
+    // dim_product holds P1 at 10.00 and at 12.00.
+    // dim_store: ST1 and ST2 each have one unchanged tuple, so no row
+    // passes the change filter and both existing rows are expired.
+    val store = second.dimStore.collect()
+      .map(r => (r.getAs[String]("store_id"), r.getAs[Boolean]("is_current"),
+        r.getAs[Timestamp]("end_date"))).toSet
+    assert(store === Set(("ST1", false, asOf2), ("ST2", false, asOf2)))
+    // dim_product: each new P1 tuple differs from the OTHER existing P1
+    // tuple, so both come back as fresh current versions and P1's old
+    // rows vanish; P2 is unchanged, so its existing row is expired.
+    val product = second.dimProduct.collect()
+      .map(r => (r.getAs[String]("product_id"),
+        r.getAs[java.math.BigDecimal]("unit_price").doubleValue,
+        r.getAs[Boolean]("is_current"), r.getAs[Timestamp]("start_date"),
+        r.getAs[Timestamp]("end_date"))).toSet
+    assert(product === Set(
+      ("P1", 10.0, true, asOf2, null),
+      ("P1", 12.0, true, asOf2, null),
+      ("P2", 5.0, false, first.dimProduct.filter("product_id = 'P2'")
+        .head().getAs[Timestamp]("start_date"), asOf2)))
   }
 }

@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.sql.Timestamp
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -133,6 +136,78 @@ class AnalyticsOpsSpec extends SparkSpec {
     val r = Funnel.retentionCohorts(events, "user_id", "ts", period = 604800L)
       .collect().map(x => x.getLong(0)).toSet
     assert(r === Set(-1L, 0L), "pre-epoch events must land in period -1")
+  }
+
+  private val funnelStages = Seq("view", "click", "purchase")
+
+  private def funnelEvents = {
+    def ts(s: String) = Timestamp.valueOf(s)
+    Seq(
+      // user 1 completes in order
+      (1L, ts("2024-01-01 10:00:00"), "view"),
+      (1L, ts("2024-01-01 10:05:00"), "click"),
+      (1L, ts("2024-01-01 10:10:00"), "purchase"),
+      // user 2 clicks before viewing — that click must not advance
+      (2L, ts("2024-01-01 09:00:00"), "click"),
+      (2L, ts("2024-01-01 09:30:00"), "view"),
+      (2L, ts("2024-01-01 09:45:00"), "click"),
+      // user 3: same-instant view+click chain (inclusive semantics)
+      (3L, ts("2024-01-01 11:00:00"), "click"),
+      (3L, ts("2024-01-01 11:00:00"), "view"),
+      // user 4: non-stage events only
+      (4L, ts("2024-01-01 08:00:00"), "error")
+    ).toDF("user_id", "ts", "event_type")
+  }
+
+  /** Driver-side in-order stage progression: per user, in (ts, stage)
+    * order, a stage event advances when it is the next stage and not
+    * earlier than the last advance. Returns (user_id, stage, stage_idx,
+    * ts) per advance.
+    */
+  private def progressionsBatch(events: DataFrame, stages: Seq[String])
+      : Seq[(Long, String, Int, Timestamp)] = {
+    val stageIdx = stages.zipWithIndex.toMap
+    events.select(col("user_id"), col("ts"), col("event_type")).collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2)))
+      .filter(e => stageIdx.contains(e._3))
+      .groupBy(_._1).toSeq
+      .flatMap { case (uid, evs) =>
+        var reachedIdx = -1
+        var reachedTs = Long.MinValue
+        evs.sortBy(e => (e._2.getTime, stageIdx(e._3))).flatMap { case (_, t, stage) =>
+          val idx = stageIdx(stage)
+          if (idx == reachedIdx + 1 && t.getTime >= reachedTs) {
+            reachedIdx = idx
+            reachedTs = t.getTime
+            Some((uid, stage, idx, t))
+          } else None
+        }
+      }
+  }
+
+  test("batch reference: order enforced, ties advance, stage counts match Funnel") {
+    val adv = progressionsBatch(funnelEvents, funnelStages)
+    // user 1 full funnel, user 2 view→click only (the 09:00 click is
+    // pre-view), user 3 same-instant chain, user 4 nothing
+    assert(adv.count(_._3 == 0) === 3)
+    assert(adv.count(_._3 == 1) === 3)
+    assert(adv.count(_._3 == 2) === 1)
+    val u2 = adv.filter(_._1 == 2L).map(a => (a._2, a._4)).toMap
+    assert(u2("click") === Timestamp.valueOf("2024-01-01 09:45:00"),
+      "the pre-view click must not have advanced the funnel")
+    // per-stage counts agree with the batch Funnel operator
+    val counts = Funnel.funnel(funnelEvents, "user_id", "event_type", "ts", funnelStages)
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(counts === Map("view" -> 3L, "click" -> 3L, "purchase" -> 1L))
+  }
+
+  test("Funnel.reachTimes ≡ the batch progression reference, record for record") {
+    val distributed = Funnel.reachTimes(
+        funnelEvents, "user_id", "event_type", "ts", funnelStages)
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2).toInt, r.getTimestamp(3)))
+      .toSet
+    assert(distributed === progressionsBatch(funnelEvents, funnelStages).toSet)
   }
 
   test("reachTimes: reliable-checkpoint mode ≡ local, files cleaned on owner's terms") {

@@ -27,7 +27,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.positiveIntEnv(sys.env, "SPARK_GRAFT_CPUS").getOrElse(32)
     val spark = GraftSession.defaultBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // a query that throws is never timed: its name goes to `failed`

@@ -27,8 +27,19 @@ object GraftSession {
     * (both branches) regardless of the test JVM's real environment.
     */
   private[graft] def availableCores(env: Map[String, String]): Int =
-    env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    positiveIntEnv(env, "SPARK_GRAFT_CPUS")
       .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `name`'s value in `env` as a positive Int, if set. Anything else
+    * fails here, naming the variable: `abc` would otherwise surface as
+    * a bare NumberFormatException, and `0` would reach Spark as
+    * `local[0]` or as zero shuffle partitions.
+    */
+  private[graft] def positiveIntEnv(env: Map[String, String], name: String): Option[Int] =
+    env.get(name).map { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$v'"))
+    }
 
   /** Default shuffle width for `cores` executor threads: the sf10
     * sweep measured 96-wide shuffles 2–4× SLOWER than 32 at fixed 32
@@ -42,7 +53,7 @@ object GraftSession {
   def shuffleWidth(cores: Int): Int = shuffleWidth(cores, sys.env)
 
   private[graft] def shuffleWidth(cores: Int, env: Map[String, String]): Int =
-    env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(cores)
+    positiveIntEnv(env, "SPARK_GRAFT_SHUFFLE").getOrElse(cores)
 
   def defaultBuilder(master: String = s"local[${availableCores}]",
       cores: Int = availableCores): SparkSession.Builder =

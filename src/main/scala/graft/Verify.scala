@@ -8,7 +8,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.positiveIntEnv(sys.env, "SPARK_GRAFT_CPUS").getOrElse(32)
     // SPARK_GRAFT_HASHDUMP=1 (sweep-scale local runs only; the driver
     // sets no env): ship each query's 1-row engine-side digest instead
     // of the full result — the coalesce(1) single-writer dump dominates

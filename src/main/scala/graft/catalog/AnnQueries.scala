@@ -695,8 +695,7 @@ object AnnQueries extends Family {
     // approximate ANN via sign-bit LSH (8 tables × 4 axis planes) —
     // the oracle-portable variant: bucket membership is pure sign
     // tests on stored floats, so the DuckDB oracle reproduces the
-    // exact candidate sets and the full ranked result is value-checked
-    // (the random-plane lshTopK stays as the spec-gated quality path).
+    // exact candidate sets and the full ranked result is value-checked.
     Entry("q31_emb_ann_lsh", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") % 50 === 0)
@@ -841,8 +840,7 @@ object AnnQueries extends Family {
     // scan as partition filters, so per-query I/O is nProbe/nLists of
     // the corpus at any scale. Sign-quantizer variant at the same
     // params as q44, so index-serving ≡ in-flight is itself
-    // value-checked by the shared oracle (the k-means index path
-    // keeps its own spec).
+    // value-checked by the shared oracle.
     Entry("q72_emb_ann_ivf_index", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") % 50 === 0)
@@ -934,8 +932,7 @@ object AnnQueries extends Family {
     // IVF approximate nearest neighbor, sign-pattern coarse quantizer
     // (128 lists at every gated scale, 37.5% of them probed) —
     // candidate selection is all sign tests + BIGINT arithmetic, so
-    // the oracle value-checks the full approximate result (the k-means
-    // ivfTopK stays as the spec-gated quality path).
+    // the oracle value-checks the full approximate result.
     Entry("q44_emb_ann_ivf", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") % 50 === 0)

@@ -353,9 +353,8 @@ object EtlQueries extends Family {
         |FROM inv f JOIN dim_product p ON f.product_id = p.product_id
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    // z-order key: the Morton interleave that clusterByZ lays files
-    // out by, value-checked bit for bit (the layout itself is a write
-    // property — ZOrderSpec asserts the tile-locality it buys).
+    // z-order key: the Morton interleave a z-order layout
+    // range-partitions by, value-checked bit for bit.
     Entry("q97_zorder_key", (s, dir) => {
       t(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),

@@ -205,8 +205,7 @@ object LmQueries extends Family {
     // corpus-trained bigram-LM fluency scoring (the CCNet/KenLM
     // perplexity filter): train the add-one bigram LM on the
     // doc_id % 5 != 0 slice, score EVERY document — exact-integer ppm
-    // form so the gate hashes it; the true log2 cross-entropy twin
-    // is spec-grounded (LanguageModelSpec). Model = count frames
+    // form so the gate hashes it. Model = count frames
     // joined by token keys, never broadcast — the 100 TB posture.
     Entry("q184_docs_lm_fluency", (s, dir) => {
       val docs = t(s, dir, "documents")

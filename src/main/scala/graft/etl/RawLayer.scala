@@ -15,12 +15,10 @@ import org.apache.spark.sql.functions._
   * (source updates/deletes not captured); late rows with
   * date ≤ watermark are skipped; merge is full-row dropDuplicates. The
   * merge-the-world rewrite is the reference's; at 100 TB the steady
-  * state should be date-partitioned appends — `appendIncrement` below —
-  * so each batch touches only new partitions.
+  * state should be date-partitioned appends, so each batch touches
+  * only new partitions ([[streamingIngest]] writes that layout).
   */
 object RawLayer {
-
-  val WatermarkFormat = "yyyy-MM-dd"
 
   /** Format the watermark in UTC explicitly — SimpleDateFormat in the
     * JVM default timezone would shift the persisted date by a day on
@@ -151,30 +149,6 @@ object RawLayer {
       .trigger(trigger)
       .start()
 
-  /** Scale-path variant: append the increment as date-partitioned
-    * parquet instead of rewriting history. Dedup happens within the
-    * increment only; cross-batch dedup is the staging layer's job.
-    */
-  def appendIncrement(
-      spark: SparkSession,
-      source: Option[String] => DataFrame,
-      rawPath: String,
-      metadataPath: String): Long = {
-    val watermark = readWatermark(spark, metadataPath)
-    val increment = source(watermark).dropDuplicates().cache()
-    try {
-      val (n, maxDate) = countAndMaxDate(increment)
-      if (n == 0) return 0L
-      increment
-        .withColumn("ingest_date", to_date(col("date")))
-        .write.mode(SaveMode.Append)
-        .partitionBy("ingest_date")
-        .parquet(rawPath)
-      advanceWatermark(spark, metadataPath, maxDate)
-      n
-    } finally increment.unpersist()
-  }
-
   /** CDC apply with DELETE tombstones: reduce a change stream to the
     * current table state. Per key, the change with the highest
     * (orderCols) wins; a winning row whose `deleteCol` is true removes
@@ -184,9 +158,9 @@ object RawLayer {
     *
     * One window shuffle on the key; `orderCols` must totally order a
     * key's changes (ts + a unique change id — the q64/q69 discipline)
-    * or "latest" is partition-dependent. Composes with
-    * [[appendIncrement]]: append raw changes cheaply all day, apply
-    * tombstones when publishing the queryable state.
+    * or "latest" is partition-dependent. Composes with an append-only
+    * change log: append raw changes cheaply all day, apply tombstones
+    * when publishing the queryable state.
     *
     * A NULL `deleteCol` value means NOT deleted: without the coalesce,
     * `!delete` is NULL under 3VL and the filter would silently drop

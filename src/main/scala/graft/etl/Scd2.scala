@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Scd2 {
 
-  private val auditCols = Seq("start_date", "end_date", "is_current")
-
   private def stampCurrent(df: DataFrame, asOf: Timestamp): DataFrame =
     df.withColumn("start_date", lit(asOf))
       .withColumn("end_date", lit(null).cast("timestamp"))

@@ -17,13 +17,6 @@ object StagingLayer {
   val fillZeroInt: Seq[String] = Seq("stock_level", "reorder_point", "lead_time_days")
   val fillZeroDouble: Seq[String] = Seq("carrying_cost", "stock_out_risk", "inventory_turnover")
 
-  /** Rows that appear more than once, with their multiplicity
-    * (reference: staging_layer.py:41-49). Full-width groupBy, exact
-    * for parity.
-    */
-  def duplicateReport(df: DataFrame): DataFrame =
-    df.groupBy(df.columns.map(col).toIndexedSeq: _*).count().filter(col("count") > 1)
-
   /** Full staging clean (reference: staging_layer.py:53-87):
     * dropDuplicates → non-null date → casts → fillna → derived columns.
     *

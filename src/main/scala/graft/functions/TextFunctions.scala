@@ -17,14 +17,6 @@ object TextFunctions {
   def tokenCount(text: Column): Column =
     when(length(trim(text)) === 0, lit(0)).otherwise(size(tokens(text)))
 
-  /** A BPE-ish subword proxy: alternating letter/digit runs, counted.
-    * Splitting on transitions approximates subword boundaries without a
-    * vocab file.
-    */
-  def subwordCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "(?<=[a-zA-Z])(?=[0-9])|(?<=[0-9])(?=[a-zA-Z])|\\s+")))
-
   /** Canonical text normalization for dedup/training-data prep:
     * lowercase, digit runs masked to `<num>` (a cheap scrub of ids,
     * phone-ish numbers, timestamps — the variance that defeats exact
@@ -90,14 +82,8 @@ object TextFunctions {
   def alphaRatio(text: Column): Column =
     alphaChars(text).cast("double") / safeLen(text)
 
-  def digitRatio(text: Column): Column =
-    length(regexp_replace(text, "[^0-9]", "")).cast("double") / safeLen(text)
-
   def spaceRatio(text: Column): Column =
     (length(text) - length(regexp_replace(text, " ", ""))).cast("double") / safeLen(text)
-
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[^.,;:!?'\"()-]", "")).cast("double") / safeLen(text)
 
   /** Mean token length — a strong gibberish / boilerplate signal. */
   def meanTokenLen(text: Column): Column =
@@ -123,16 +109,6 @@ object TextFunctions {
       .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
   }
 
-  /** Composite document-quality score in [0,1]; weights chosen so that
-    * natural prose scores high and markup/noise scores low.
-    */
-  def qualityScore(text: Column): Column = {
-    val lenScore = least(length(text).cast("double") / lit(500.0), lit(1.0))
-    val alpha = alphaRatio(text)
-    val stop = stopwordRatio(text, "en")
-    lit(0.4) * alpha + lit(0.3) * lenScore + lit(0.3) * least(stop * 5.0, lit(1.0))
-  }
-
   // --- language identification (stopword-hit heuristic) ---
 
   val stopwords: Map[String, Seq[String]] = Map(
@@ -148,25 +124,13 @@ object TextFunctions {
       split(lower(trim(text)), "\\s+"),
       array(stopwords(lang).map(lit): _*)))
 
-  private def stopwordMatches(toks: Column, lang: String): Column = {
-    val stops = array(stopwords(lang).map(lit): _*)
-    size(filter(toks, t => array_contains(stops, t)))
-  }
-
   /** Multiset count of tokens that are `lang` stopwords, as BIGINT —
-    * the integer numerator behind [[stopwordRatio]], exposed for
-    * oracle-checked queries (counts compare exactly across engines;
-    * ratios re-introduce IEEE division).
+    * an integer signal for oracle-checked queries (counts compare
+    * exactly across engines; ratios re-introduce IEEE division).
     */
-  def stopwordTokenCount(text: Column, lang: String): Column =
-    stopwordMatches(split(lower(trim(text)), "\\s+"), lang).cast("long")
-
-  /** Fraction of tokens that are `lang` stopwords (multiset count).
-    * Tokenizes once: the split feeds both numerator and denominator.
-    */
-  def stopwordRatio(text: Column, lang: String): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    stopwordMatches(toks, lang).cast("double") / greatest(size(toks), lit(1))
+  def stopwordTokenCount(text: Column, lang: String): Column = {
+    val stops = array(stopwords(lang).map(lit): _*)
+    size(filter(split(lower(trim(text)), "\\s+"), t => array_contains(stops, t))).cast("long")
   }
 
   /** Heuristic language ID: CJK codepoints ⇒ zh, else argmax stopword

@@ -14,21 +14,12 @@ import graft.expressions.GraftFunctions
   */
 object VectorFunctions {
 
-  def dot(a: Column, b: Column): Column = GraftFunctions.vecDot(a, b)
-
   def norm(v: Column): Column = sqrt(GraftFunctions.vecDot(v, v))
 
   /** Cosine similarity — dot and both norms in one pass; zero-norm
     * input yields 0.0, not NaN.
     */
   def cosine(a: Column, b: Column): Column = GraftFunctions.vecCosine(a, b)
-
-  /** Squared L2 distance (avoids the sqrt when only ranking matters):
-    * |a|² + |b|² − 2a·b via the same fused kernels.
-    */
-  def sqDist(a: Column, b: Column): Column =
-    GraftFunctions.vecDot(a, a) + GraftFunctions.vecDot(b, b) -
-      lit(2.0) * GraftFunctions.vecDot(a, b)
 
   /** Sign-bit bucket for random-hyperplane LSH: bit j = 1 iff
     * dot(v, plane_j) > 0, packed into a long — all planes in one
@@ -46,18 +37,11 @@ object VectorFunctions {
     * (⌊±1·127⌋ = ±127 is already in range); −128 is only reachable
     * for inputs below −128/127. Scalar → codegen'd; aggregations
     * should posexplode + quantize per component (the q74/q65 shape)
-    * rather than evaluate the array [[quantizeInt8]] HOF, which is
+    * rather than wrap it in an array `transform` HOF, which is
     * interpreted and re-evaluated per reference.
     */
   def quantizeInt8Component(x: Column): Column =
     greatest(lit(-128L), least(lit(127L), floor(x.cast("double") * 127))).cast("int")
-
-  /** Array form of [[quantizeInt8Component]] — the embedding-
-    * compression primitive for serving 100 TB corpora from a quarter
-    * of the footprint (store codes, dequantize on read).
-    */
-  def quantizeInt8(v: Column): Column =
-    transform(v, quantizeInt8Component(_))
 
   /** Deterministic pseudo-random hyperplanes (fixed seed). */
   def randomPlanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Array[Double]] = {

@@ -69,21 +69,4 @@ object AsOfJoin {
           stale.fold(v)(s => when(s, lit(null)).otherwise(v)).as(prefix + c)
         }: _*)
   }
-
-  /** Point-in-time SCD2 lookup: resolve each fact row against the dim
-    * version whose [start_date, end_date) interval contains the fact
-    * timestamp. Built on the as-of join over start_date, then masked
-    * where the matched version had already expired.
-    */
-  def scd2Lookup(
-      facts: DataFrame, dim: DataFrame, key: String, factTime: String,
-      dimCols: Seq[String], prefix: String = "dim_"): DataFrame = {
-    val carried = dimCols ++ Seq("end_date")
-    val joined = asofJoin(facts, dim, key, factTime, "start_date", carried, prefix)
-    val expired = col(s"${prefix}end_date").isNotNull &&
-      col(s"${prefix}end_date") <= col(factTime)
-    dimCols.foldLeft(joined) { (df, c) =>
-      df.withColumn(prefix + c, when(expired, lit(null)).otherwise(col(prefix + c)))
-    }.drop(s"${prefix}end_date")
-  }
 }

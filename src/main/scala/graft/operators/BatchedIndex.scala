@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   *    on the usual lake-compaction cadence.
   *
   * Used by the sign-IVF / IVFADC ANN indexes
-  * ([[Similarity.appendSignIvfIndex]], [[Similarity.appendIvfAdcIndex]])
-  * and the banded near-dup index ([[Dedup.appendBandedIndex]]).
+  * ([[Similarity.appendSignIvfIndex]], [[Similarity.appendIvfAdcIndex]]).
   */
 private[operators] object BatchedIndex {
 
@@ -192,13 +191,12 @@ private[operators] object BatchedIndex {
     *    on `col` and write partitioned by it — one file per partition
     *    directory;
     *  - `sumKeys = Some(keys)`: fold sum shards to one file;
-    *  - neither: plain rows, coalesced to `plainFiles` files.
+    *  - neither: plain rows, coalesced to one file.
     */
   def compactTable(
       spark: SparkSession, table: String,
       partitionCol: Option[(String, Int)] = None,
-      sumKeys: Option[Seq[String]] = None,
-      plainFiles: Int = 1): Unit = {
+      sumKeys: Option[Seq[String]] = None): Unit = {
     val next = s"${table}__compact"
     recoverDir(spark, table) // prior compaction crashed mid-swap: restore aside
     deleteDir(spark, next)
@@ -211,7 +209,7 @@ private[operators] object BatchedIndex {
       case (None, Some(keys)) =>
         foldSums(src, keys).coalesce(1).write.mode("overwrite").parquet(out)
       case (None, None) =>
-        src.coalesce(plainFiles).write.mode("overwrite").parquet(out)
+        src.coalesce(1).write.mode("overwrite").parquet(out)
       case _ => throw new IllegalArgumentException(
         "compactTable: partitionCol and sumKeys are mutually exclusive")
     }

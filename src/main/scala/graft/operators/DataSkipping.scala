@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   *  1. [[writeClustered]] range-partitions on the skip column before
   *     writing, so each file owns a TIGHT, near-disjoint value range
-  *     (the same "cluster so min/max prunes" motivation as
-  *     [[ZOrder.clusterByZ]], in one dimension).
+  *     (the same "cluster so min/max prunes" motivation as the
+  *     two-column z-order of [[ZOrder.interleaveBits]], in one
+  *     dimension).
   *  2. [[buildManifest]] computes per-file (min, max, rows) in ONE scan
   *     keyed by `input_file_name()` — manifest size is #files, not
   *     #rows.

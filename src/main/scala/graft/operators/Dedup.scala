@@ -31,31 +31,10 @@ object Dedup {
     docs.groupBy(md5(col(textCol).cast("binary")).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Per-document SORTED distinct shingle-hash set: (doc_id, sh:
-    * array<long>). One compiled kernel call per row
-    * ([[graft.expressions.ShingleSet]]); sorted so exact-Jaccard
-    * verification is a linear merge.
-    */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, charLevel: Boolean): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      GraftFunctions.shingleSet(col(textCol), shingleSize, charLevel).as("sh"))
-
-  /** MinHash signatures straight from text: one compiled kernel call
-    * per row ([[graft.expressions.MinHashSig]]) — no explode, no
-    * shuffle, no intermediate arrays. k permutations are derived from
-    * one shingle hash (g_i(h) = mix64(h ^ seed_i)).
-    */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, k: Int, charLevel: Boolean = false): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      GraftFunctions.minhashSig(col(textCol), shingleSize, k, charLevel).as("sig"))
-
   /** Explode a (doc_id, sig) frame into (doc_id, band, bh) banding
-    * keys — shared by [[bandPairs]], [[dedupeIncrement]] and the banded
-    * index writes so the bands/k guard can't be bypassed (bands > k
-    * would make r = 0 and hash empty slices identically — a silent
-    * cross join).
+    * keys — shared by [[bandPairs]] and [[dedupeIncrement]] so the
+    * bands/k guard can't be bypassed (bands > k would make r = 0 and
+    * hash empty slices identically — a silent cross join).
     */
   private def bandedSignatures(sigs: DataFrame, bands: Int, k: Int): DataFrame = {
     require(bands >= 1 && bands <= k, s"need 1 <= bands <= k, got bands=$bands k=$k")
@@ -147,7 +126,7 @@ object Dedup {
     when(union === 0, lit(1.0)).otherwise(inter / union)
   }
 
-  /** The per-document kernel pass of [[nearDupPairs]] in isolation:
+  /** The per-document kernel pass of [[nearDupPairsPrepared]]:
     * (doc_id, sh, sig) in ONE projection — the signature derives from
     * the set column (MinHashFromSet), and codegen subexpression
     * elimination computes the ShingleSet child once, so each document
@@ -166,14 +145,17 @@ object Dedup {
       GraftFunctions.minhashFromSet(shExpr, k).as("sig"))
   }
 
-  /** [[nearDupPairs]] over a precomputed (doc_id, sh, sig) frame from
-    * [[prepareNearDup]] — LSH banding on `sig`, then exact Jaccard
-    * ≥ threshold on the sorted `sh` sets of each candidate pair, a
-    * linear merge per pair ([[graft.expressions.JaccardSorted]]).
+  /** Near-duplicate pairs over a precomputed (doc_id, sh, sig) frame
+    * from [[prepareNearDup]]: MinHash LSH banding on `sig`, then exact
+    * Jaccard ≥ threshold on the sorted `sh` sets of each candidate
+    * pair, a linear merge per pair ([[graft.expressions.JaccardSorted]]).
     * Lets a caller compute the expensive shingle/signature pass ONCE
     * and share it between candidate generation, verification, and any
     * caller-side reuse of the sets ([[dedupeIncrement]]'s within-batch
-    * step passes its artifact rows).
+    * step passes its artifact rows). Returns (doc_a, doc_b, jaccard).
+    * Banding keys on signature fragments, so bucket collision
+    * probability tracks actual similarity (≈ 1-(1-j^r)^bands) rather
+    * than global shingle frequency.
     */
   def nearDupPairsPrepared(prepared: DataFrame, threshold: Double,
       k: Int, bands: Int, neighborCap: Option[Int] = None): DataFrame = {
@@ -204,22 +186,6 @@ object Dedup {
     * payload partition, while SMJ spills deterministically.
     */
   private def neverBroadcast(df: DataFrame): DataFrame = df.hint("merge")
-
-  /** Full near-dup pipeline: MinHash LSH candidates → exact n-gram
-    * Jaccard verification ≥ threshold on precomputed sets. Returns
-    * (doc_a, doc_b, jaccard). `charLevel = true` shingles character
-    * n-grams instead of tokens — the set-similarity join that is robust
-    * to tokenization differences. Banding keys on signature fragments,
-    * so bucket collision probability tracks actual similarity
-    * (≈ 1-(1-j^r)^bands) rather than global shingle frequency.
-    */
-  def nearDupPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, k: Int = 16, bands: Int = 4,
-      shingleSize: Int = 3, charLevel: Boolean = false,
-      neighborCap: Option[Int] = None): DataFrame =
-    nearDupPairsPrepared(prepareNearDup(docs, idCol, textCol, k, shingleSize, charLevel),
-      threshold, k, bands, neighborCap)
 
   /** Connected components over an undirected pair list by min-label
     * propagation with path halving: each round every node takes the
@@ -479,7 +445,7 @@ object Dedup {
     * `levenshtein(l, r, threshold)` band-limits the DP to O(len·d)
     * and early-exits past the threshold. At 100 TB the prefix blocks
     * bound candidate volume the same way LSH bands do for
-    * [[nearDupPairs]] — a hot prefix is the salting case
+    * [[nearDupPairsPrepared]] — a hot prefix is the salting case
     * ([[ScaleJoins]]), not an algorithmic wall.
     */
   def fuzzyPairs(docs: DataFrame, idCol: String, keyCol: String,
@@ -653,10 +619,8 @@ object Dedup {
     * history for the next batch. `historyArt` is referenced THREE
     * times (hash anti-join, banding, set lookup): pass a PERSISTED
     * artifact table (its role in a real pipeline), not a frame that
-    * re-derives artifacts from text on every reference. At scale,
-    * persist the history side already exploded by (band, bucket) so
-    * step 2 is a shuffle of the batch only. Re-running the same batch
-    * yields zero survivors (idempotent ingest).
+    * re-derives artifacts from text on every reference. Re-running
+    * the same batch yields zero survivors (idempotent ingest).
     *
     * `checkpointDir` mirrors [[resolveNearDups]]: None (default)
     * truncates the batch-bounded frames via `localCheckpoint` (local
@@ -669,7 +633,6 @@ object Dedup {
       batchArt: DataFrame, historyArt: DataFrame,
       threshold: Double, k: Int = 16, bands: Int = 4,
       neighborCap: Option[Int] = Some(8),
-      historyBands: Option[DataFrame] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     def banded(art: DataFrame) =
       bandedSignatures(art.select(col("doc_id"), col("sig")), bands, k)
@@ -682,16 +645,14 @@ object Dedup {
       historyArt.select(col("text_hash")).distinct(), Seq("text_hash"), "left_anti"),
       checkpointDir, "no_exact")
     // 2. near-vs-history: banded equi-join, Jaccard verify on sets.
-    // With a persisted banded index (historyBands), history is NOT
-    // re-banded per batch — only the batch side computes signatures.
     val cands = banded(noExact).as("b")
-      .join(historyBands.getOrElse(banded(historyArt)).as("h"), Seq("band", "bh"))
+      .join(banded(historyArt).as("h"), Seq("band", "bh"))
       .select(col("b.doc_id").as("batch_id"), col("h.doc_id").as("hist_id"))
       .distinct()
     // the history-set lookup is LEFT + loud failure on a missing
-    // artifact row: a band row without its artifact (a torn index —
-    // crash between the two index writes) must error, not silently
-    // verify nothing
+    // artifact row. Both sides now derive from the same `historyArt`,
+    // so the case cannot occur; it stays because dropping it changes
+    // q68's plan
     val contaminated = cands
       .join(neverBroadcast(noExact.select(col("doc_id").as("batch_id"), col("sh").as("sh_b"))),
         Seq("batch_id"))
@@ -705,7 +666,7 @@ object Dedup {
       .select(col("batch_id").as("doc_id")).distinct()
     // everything from here on (including the fresh_exact truncation —
     // the write that forces the whole step-2 evaluation and carries
-    // the torn-index raise_error) runs inside the cleanup scope: on
+    // the missing-artifact raise_error) runs inside the cleanup scope: on
     // ANY failure both snapshots this call wrote are freed; on success
     // only the dead no_exact one is, because fresh_exact and the final
     // component labels back the returned frame (caller/TTL frees them)
@@ -731,133 +692,6 @@ object Dedup {
       DurableSnapshots.delete(batchArt, s"$d/no_exact")
       if (!ok) DurableSnapshots.delete(batchArt, s"$d/fresh_exact")
     }
-  }
-
-  /** Persist the incremental-dedup history as a QUERYABLE INDEX:
-    * artifact rows (id, hash, set, signature) plus the signatures
-    * PRE-EXPLODED by LSH band, Hive-partitioned by `band` — the
-    * materialized form of [[dedupeIncrement]]'s step-2 join key. With
-    * this on disk, a daily batch shuffles ONLY itself: the history
-    * side arrives already banded, and the band partition directories
-    * prune at listing time. Same maintenance posture as
-    * [[graft.operators.Similarity.appendSignIvfIndex]]: appends are
-    * batch-sized, never a rewrite ([[appendBandedIndex]]).
-    *
-    * Crash posture (r10, batch-keyed — see [[BatchedIndex]]): the
-    * build and every append write only their own `batch_id=<id>`
-    * subdirectories in OVERWRITE mode, so recovery from any crash is
-    * re-running the same call (idempotent — no double-appended rows).
-    * Within a generation, bands are written BEFORE artifacts, and the
-    * verification join fails LOUDLY on a band row whose artifact is
-    * missing (see [[dedupeIncrement]]) — a crash between the two
-    * writes surfaces as an error on next use, never as silently
-    * uncaught near-dups (the opposite order would miss near-dups
-    * silently). (k, bands) are stored in `_index_meta` and re-read at
-    * serve time, so a parameter drift between write and read — which
-    * would silently empty the band join — is impossible.
-    * [[compactBandedIndex]] folds per-append generations back to one.
-    */
-  def writeBandedIndex(historyArt: DataFrame, path: String,
-      k: Int = 16, bands: Int = 4): Unit = {
-    val spark = historyArt.sparkSession
-    // a rebuild supersedes every prior generation including appends
-    BatchedIndex.deleteDir(spark, s"$path/bands")
-    BatchedIndex.deleteDir(spark, s"$path/artifacts")
-    writeGeneration(historyArt, path, BatchedIndex.buildBatchId, k, bands)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_index_meta"), s"$k,$bands")
-  }
-
-  private def readIndexMeta(path: String): (Int, Int) = {
-    val p = java.nio.file.Paths.get(path, "_index_meta")
-    require(java.nio.file.Files.exists(p), s"no banded index at $path (missing _index_meta)")
-    val Array(k, bands) = java.nio.file.Files.readString(p).trim.split(',')
-    (k.toInt, bands.toInt)
-  }
-
-  /** Add a survivor batch to the persisted index (run after each
-    * [[dedupeIncrementIndexed]] round with its survivors). Banding
-    * parameters come from the index's own metadata — they cannot
-    * drift from the build. Batch-keyed and idempotent (r10): a retried
-    * append overwrites its own `batch_id` subdirectories instead of
-    * double-appending; batch ids are unique per logical batch by
-    * caller contract (reusing one replaces that batch).
-    */
-  def appendBandedIndex(newArt: DataFrame, path: String, batchId: String): Unit = {
-    BatchedIndex.requireBatchId(batchId)
-    val (k, bands) = readIndexMeta(path)
-    writeGeneration(newArt, path, batchId, k, bands)
-  }
-
-  /** One index generation: `art`'s bands, then its artifacts, each
-    * under its own `batch_id=<batchId>` directory in overwrite mode —
-    * bands FIRST, the crash posture [[writeBandedIndex]] documents.
-    */
-  private def writeGeneration(art: DataFrame, path: String, batchId: String,
-      k: Int, bands: Int): Unit = {
-    bandedSignatures(art.select(col("doc_id"), col("sig")), bands, k)
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$path/bands/batch_id=$batchId")
-    art.select(col("doc_id"), col("text_hash"), col("sh"), col("sig"))
-      .write.mode("overwrite").parquet(s"$path/artifacts/batch_id=$batchId")
-  }
-
-  /** Fold the banded index's per-append generations back to one —
-    * bands to one file per band partition, artifacts to `plainFiles`
-    * files — leaving served survivors identical
-    * ([[BatchedIndex.compactTable]]'s rename-aside swap).
-    */
-  def compactBandedIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      plainFiles: Int = 4): Unit = {
-    val (_, bands) = readIndexMeta(path)
-    BatchedIndex.compactTable(spark, s"$path/bands",
-      partitionCol = Some(("band", bands)))
-    BatchedIndex.compactTable(spark, s"$path/artifacts", plainFiles = plainFiles)
-  }
-
-  private val artifactSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("text_hash",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("sh",
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)),
-    org.apache.spark.sql.types.StructField("sig",
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false))))
-
-  private val bandsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bh",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType)))
-
-  /** [[dedupeIncrement]] served from the persisted index — identical
-    * survivors (spec-proven), with history read as stored artifacts +
-    * stored bands instead of being re-derived and re-banded per batch.
-    * Explicit read schemas make an EMPTY index (first-ever run, no
-    * history yet) behave as empty history instead of failing schema
-    * inference; (k, bands) come from the index metadata.
-    */
-  def dedupeIncrementIndexed(
-      spark: org.apache.spark.sql.SparkSession, batchArt: DataFrame,
-      path: String, threshold: Double,
-      neighborCap: Option[Int] = Some(8),
-      checkpointDir: Option[String] = None): DataFrame = {
-    val (k, bands) = readIndexMeta(path)
-    // loud torn-append detection (r10): a bands generation without its
-    // artifacts already fails loudly in the verification join, but an
-    // ARTIFACTS generation without its bands would silently skip that
-    // batch's near-dup screening — fail symmetrically instead
-    BatchedIndex.assertConsistentBatches(spark, s"$path/bands", s"$path/artifacts")
-    dedupeIncrement(batchArt,
-      spark.read.schema(artifactSchema).parquet(s"$path/artifacts"),
-      threshold, k, bands, neighborCap,
-      historyBands = Some(spark.read.schema(bandsSchema).parquet(s"$path/bands")),
-      checkpointDir = checkpointDir)
   }
 
   /** Winnowing-fingerprint overlap join (the plagiarism-detection /

@@ -23,19 +23,13 @@ import org.apache.spark.sql.functions._
   * the scoring join is AQE-skew-splittable because the model side of a
   * hot key is ONE row.
   *
-  * Two scoring forms, one semantics:
-  *  - [[scoreFluencyPpm]] — exact-integer proxy (mean per-bigram
-  *    conditional probability in ppm, each term floor-divided before
-  *    the sum, the sum floor-divided by the bigram count). Every value
-  *    is a BIGINT any SQL engine reproduces bit-for-bit, so the
-  *    catalog can hash-check it (q184).
-  *  - [[crossEntropyBits]] — the true −mean log₂ p(w2|w1) in IEEE
-  *    doubles, the number CCNet actually thresholds. Log evaluation is
-  *    libm-dependent across engines, so this form is spec-grounded
-  *    (hand-computed example + ordering invariants) rather than
-  *    oracle-hashed; the two forms rank documents identically in the
-  *    high-probability regime because both are monotone in the same
-  *    per-bigram conditionals.
+  * Scoring form: [[scoreFluencyPpm]] is an exact-integer proxy (mean
+  * per-bigram conditional probability in ppm, each term floor-divided
+  * before the sum, the sum floor-divided by the bigram count). Every
+  * value is a BIGINT any SQL engine reproduces bit-for-bit, so the
+  * catalog can hash-check it (q184). It ranks documents like CCNet's
+  * −mean log₂ p(w2|w1) in the high-probability regime, because both
+  * are monotone in the same per-bigram conditionals.
   *
   * Pruning: `minCount` drops bigrams seen fewer times from the model
   * (CCNet prunes its KenLM the same way) — scoring then treats them as
@@ -288,26 +282,6 @@ object LanguageModel {
       spark.read.parquet(s"$path/prefix_counts"),
       spark.read.parquet(s"$path/meta").head.getLong(0))
 
-  /** True cross-entropy in bits per bigram: −(1/n)·Σ log₂ p(w2|w1),
-    * the number an LM-perplexity filter thresholds (perplexity =
-    * 2^xent). IEEE doubles — spec-grounded, not oracle-hashed (see
-    * object doc). Zero-bigram documents get NULL (no defined
-    * entropy), distinguishing them from genuinely low-entropy text. */
-  def crossEntropyBits(docs: DataFrame, lm: BigramLm, idCol: String,
-      textCol: String): DataFrame = {
-    val b = explodedBigrams(docs, idCol, textCol)
-    val logP = log2(
-      (coalesce(col("c_bigram"), lit(0L)) + lit(1L)).cast("double") /
-        (coalesce(col("c_prefix"), lit(0L)) + lit(lm.vocabSize)).cast("double"))
-    val perDoc = b
-      .join(lm.bigramCounts, Seq("bigram"), "left")
-      .join(lm.prefixCounts, Seq("w1"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), (-avg(logP)).as("xent_bits"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .na.fill(0L, Seq("n_bigrams"))
-  }
-
   // -----------------------------------------------------------------
   // Stupid-backoff trigram LM (r11, VERDICT r10 #3) — the higher-order
   // screen. CCNet's production filter is a 5-gram KenLM; the order
@@ -436,27 +410,4 @@ object LanguageModel {
           .otherwise(expr("CAST(__ppm_sum DIV n_trigrams AS BIGINT)")))
       .drop("__ppm_sum")
   }
-
-  /** Persist a trigram model — three count tables + a 1-row meta
-    * table, the [[save]] shape one order up.
-    */
-  def saveTrigram(lm: TrigramLm, path: String): Unit = {
-    val spark = lm.trigramCounts.sparkSession
-    import spark.implicits._
-    lm.trigramCounts.write.mode("overwrite").parquet(s"$path/trigram_counts")
-    lm.bigramCounts.write.mode("overwrite").parquet(s"$path/bigram_counts")
-    lm.unigramCounts.write.mode("overwrite").parquet(s"$path/unigram_counts")
-    Seq(lm.totalTokens).toDF("total_tokens")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a persisted trigram model; scoring from it is bit-identical
-    * to scoring the in-memory one (spec-pinned).
-    */
-  def loadTrigram(spark: org.apache.spark.sql.SparkSession, path: String): TrigramLm =
-    TrigramLm(
-      spark.read.parquet(s"$path/trigram_counts"),
-      spark.read.parquet(s"$path/bigram_counts"),
-      spark.read.parquet(s"$path/unigram_counts"),
-      spark.read.parquet(s"$path/meta").head.getLong(0))
 }

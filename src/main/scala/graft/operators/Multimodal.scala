@@ -9,10 +9,8 @@ import org.apache.spark.sql.functions._
   * The image path decodes REAL bytes twice over: [[BmpCodec]] parses
   * the public 24-bpp BMP format header-for-header (no image library
   * needed), and [[ImageIoCodec]] decodes JPEG/PNG/GIF via the JDK's
-  * built-in `javax.imageio` plugins — so
-  * [[imageStats]]/[[imageIoStats]]/[[BmpDecoder]] feature-extract from
-  * actual decoded pixels. [[StubDecoder]] remains only as the
-  * pluggable-codec test fake for genuinely unparseable payloads.
+  * built-in `javax.imageio` plugins — so [[imageStats]] and
+  * [[imageIoStats]] feature-extract from actual decoded pixels.
   *
   * Scale notes: decode runs in `mapPartitions` so a real decoder can
   * amortize per-partition init (model load, codec contexts) exactly
@@ -29,76 +27,6 @@ object Multimodal {
       width: Int,
       height: Int,
       duration_ms: Long)
-
-  final case class MediaFeatures(
-      media_id: Long,
-      media_type: String,
-      byte_len: Int,
-      content_hash: Long,
-      embedding: Array[Float])
-
-  /** Per-partition decoder: bytes → fixed-size feature vector. */
-  trait MediaDecoder extends Serializable {
-    def dim: Int
-    def decode(payload: Array[Byte]): Array[Float]
-  }
-
-  /** REAL image decode: parse the BMP payload with [[BmpCodec]] and
-    * bucket mean pixel intensities into a `dim`-float embedding — every
-    * feature value derives from actual decoded pixel bytes.
-    */
-  final class BmpDecoder(val dim: Int = 16) extends MediaDecoder {
-    def decode(payload: Array[Byte]): Array[Float] = {
-      val img = BmpCodec.decode(payload)
-      val out = new Array[Float](dim)
-      val counts = new Array[Int](dim)
-      var i = 0
-      while (i < img.pixels.length) {
-        out(i % dim) += (img.pixels(i) & 0xFF) / 255.0f
-        counts(i % dim) += 1
-        i += 1
-      }
-      var d = 0
-      while (d < dim) { if (counts(d) > 0) out(d) /= counts(d); d += 1 }
-      out
-    }
-  }
-
-  /** Deterministic fake decode: features derived from a rolling hash of
-    * the payload. The pluggable-codec stand-in for formats with no
-    * pure-JVM parser here (JPEG/PNG/audio) — the BMP path above is the
-    * real thing.
-    */
-  final class StubDecoder(val dim: Int = 16) extends MediaDecoder {
-    def decode(payload: Array[Byte]): Array[Float] = {
-      var h = 1125899906842597L
-      val out = new Array[Float](dim)
-      var i = 0
-      while (i < payload.length) {
-        h = 31 * h + payload(i)
-        out(i % dim) += (h & 0xFFFF) / 65536.0f
-        i += 1
-      }
-      out
-    }
-  }
-
-  /** Decode + feature-extract. Per-partition init of the decoder
-    * mirrors a Pandas-UDF's batch lifecycle.
-    */
-  def extractFeatures(
-      records: Dataset[MediaRecord],
-      decoder: MediaDecoder = new StubDecoder()): Dataset[MediaFeatures] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.map { r =>
-        val emb = decoder.decode(r.payload)
-        var h = 1125899906842597L
-        r.payload.foreach(b => h = 31 * h + b)
-        MediaFeatures(r.media_id, r.media_type, r.payload.length, h, emb)
-      }
-    }
-  }
 
   /** Frame sampling for video-typed payloads: pick every `stride`-th
     * chunk of `frameBytes` as a pseudo-frame. Real frame extraction

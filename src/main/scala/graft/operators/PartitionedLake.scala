@@ -66,39 +66,12 @@ object PartitionedLake {
   }
 
   /** Leaf parquet data files under `path` (post-compaction audit).
-    * Local-FS only, like [[vacuumPartitions]] — on a cluster store,
-    * route both through the Hadoop FileSystem API instead.
+    * Local-FS only — on a cluster store, route it through the Hadoop
+    * FileSystem API instead.
     */
   def dataFileCount(path: String): Long = {
     val dir = new java.io.File(path)
     if (!dir.isDirectory) 0L
     else dir.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet")).toLong
-  }
-
-  /** Retention enforcement: drop whole partition DIRECTORIES whose key
-    * value falls outside `keep` — the O(partitions) companion of
-    * [[compact]]: expiring a day of data is one directory unlink, never
-    * a rewrite of surviving rows (the delete-by-filter anti-pattern
-    * rewrites the world at 100 TB). Returns the dropped partition
-    * values. Only exact `key=value` directory names are touched;
-    * unknown files at the root (e.g. `_SUCCESS`) are left alone.
-    */
-  def vacuumPartitions(
-      path: String, key: String,
-      keep: String => Boolean): Seq[String] = {
-    val root = new java.io.File(path)
-    require(root.isDirectory, s"no partitioned table at $path")
-    val dropped = root.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith(s"$key="))
-      .map(f => (f, f.getName.stripPrefix(s"$key=")))
-      .filterNot { case (_, v) => keep(v) }
-    dropped.foreach { case (dir, _) =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        if (!f.delete()) throw new java.io.IOException(s"could not delete $f")
-      }
-      rm(dir)
-    }
-    dropped.map(_._2)
   }
 }

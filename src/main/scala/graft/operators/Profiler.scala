@@ -82,21 +82,4 @@ object Profiler {
       .groupBy(col(groupCol), col("pct"))
       .agg(min(col("bucket")).as("q_bucket"))
   }
-
-  /** Attach data-quality counters via the Observation API: row count
-    * plus a null count per listed column, collected as a SIDE EFFECT
-    * of whatever action the returned frame already runs — zero extra
-    * passes over the data, vs the separate `count()` jobs a naive
-    * quality gate schedules. At 100 TB a second full pass just to
-    * count nulls is a real cost; observed metrics ride the existing
-    * one. Read results from `obs.get` AFTER an action completes:
-    * `n_rows`, and `nulls_<c>` per column.
-    */
-  def withQualityObservation(
-      df: DataFrame, obs: org.apache.spark.sql.Observation,
-      nullCols: String*): DataFrame = {
-    val aggs = nullCols.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
-    df.observe(obs, count(lit(1)).as("n_rows"), aggs: _*)
-  }
 }

@@ -46,15 +46,6 @@ object Sampling {
   def deterministicSample(df: DataFrame, keyCol: String, fraction: Double): DataFrame =
     df.filter(bucket(col(keyCol)) < lit(thresholdOf(fraction)))
 
-  /** Disjoint (train, test) split: test = the first `testFraction`
-    * buckets, train = the rest. union == input, intersection == empty,
-    * stable under reruns and repartitioning.
-    */
-  def trainTestSplit(df: DataFrame, keyCol: String, testFraction: Double): (DataFrame, DataFrame) = {
-    val t = lit(thresholdOf(testFraction))
-    (df.filter(bucket(col(keyCol)) >= t), df.filter(bucket(col(keyCol)) < t))
-  }
-
   /** Exact-N uniform sample without replacement: every key gets a
     * deterministic pseudo-random priority (Knuth multiplicative hash
     * mod 2³²) and the N smallest priorities win. Unlike fraction

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Join strategies for the 100 TB regime: salting for skewed keys and
-  * bucketing for shuffle-free co-located joins.
+  * the skew report that decides when to salt.
   *
   * AQE's skew-join split (spark.sql.adaptive.skewJoin.enabled, on by
   * default) handles most skew at runtime by splitting oversized
@@ -31,28 +31,6 @@ object ScaleJoins {
       explode(sequence(lit(0L), lit((saltFactor - 1).toLong))))
     l.join(s, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Write both sides bucketed by the join key so subsequent joins are
-    * co-located: no Exchange on either side of the SortMergeJoin.
-    * Bucketed tables must go through the catalog (`saveAsTable`).
-    */
-  def writeBucketed(
-      df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Join two bucketed tables on their bucket key. With equal bucket
-    * counts Spark plans a SortMergeJoin with NO shuffle exchange —
-    * verify with df.explain: no "Exchange hashpartitioning" above
-    * either scan.
-    */
-  def bucketedJoin(
-      spark: SparkSession, leftTable: String, rightTable: String,
-      key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key))
 
   /** Join-skew diagnosis — the report to run BEFORE reaching for
     * [[saltedInnerJoin]] or trusting AQE's skew split: the top keys by

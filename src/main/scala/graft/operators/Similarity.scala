@@ -12,9 +12,9 @@ import graft.functions.VectorFunctions
   * `bruteForceTopK` is the exact baseline: queries × corpus. At scale
   * the small query set is broadcast, so the corpus is scanned once with
   * map-side scoring and only top-k per query survives the single
-  * shuffle (the window). `lshTopK` is the scale path: random-hyperplane
-  * LSH restricts scoring to same-bucket candidates, turning the
-  * quadratic scan into a bucket-local join — the standard
+  * shuffle (the window). `annTopK` is the scale path: sign-LSH or
+  * sign-IVF restricts scoring to same-bucket or probed-list candidates,
+  * turning the quadratic scan into a bucket-local join — the standard
   * accuracy/throughput trade.
   */
 object Similarity {
@@ -79,127 +79,6 @@ object Similarity {
       .select(col("query_id"), col("nlabel").as("predicted_label"), col("votes"))
   }
 
-  /** K-means-trained coarse centroids for [[ivfTopK]]: ONE distributed
-    * pass takes a deterministic hash-ordered sample of `sampleSize`
-    * rows (no `rand()` — reruns train identical centroids), then the
-    * whole fit runs driver-local: maximin (k-means++-style farthest-
-    * point) seeding followed by `iters` Lloyd iterations under cosine
-    * similarity. Training cost is bounded by `sampleSize` — corpus-
-    * size-independent — which is the standard pattern (FAISS and Spark
-    * MLlib both fit the coarse quantizer on an in-memory sample); the
-    * round-2 all-DataFrame variant spent ~10 Spark jobs per fit on a
-    * 2048-row problem and seeded from a hash order that ignores
-    * geometry. Maximin seeding spreads the initial centroids across
-    * the sample's clusters, which is what lifts recall at a fixed
-    * probe budget. Deterministic throughout: fixed iteration order,
-    * first-max tie-break, empty clusters keep their position.
-    */
-  def trainCentroids(
-      corpus: DataFrame, nLists: Int, iters: Int = 8, sampleSize: Int = 2048,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    // null/ragged rows are excluded from TRAINING only (a null vector
-    // would NPE on the driver; a ragged one would throw inside cos());
-    // assignment still sees every row downstream.
-    val rawSample: Array[Array[Float]] = corpus
-      .select(col(idCol).as("sid"), col(vecCol).cast("array<float>").as("sv"))
-      .filter(col("sv").isNotNull)
-      .orderBy(xxhash64(col("sid")), col("sid")).limit(sampleSize)
-      .collect().map(_.getSeq[Float](1).toArray)
-    require(rawSample.nonEmpty, "trainCentroids: empty corpus")
-    // anchor the training dim on the MAJORITY length (count-max, then
-    // smallest length for determinism) — anchoring on the hash-first
-    // row would let one ragged row discard every well-formed vector
-    val dim = rawSample.groupBy(_.length).toSeq
-      .maxBy { case (len, vs) => (vs.length, -len) }._1
-    val sample = rawSample.filter(_.length == dim)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
-    val k = math.min(nLists, sample.length)
-    // maximin seeding: start from the first sample vector, then always
-    // add the point least similar to its nearest chosen centroid
-    val seeds = Array.newBuilder[Array[Float]]
-    seeds += sample(0)
-    val bestSim = Array.fill(sample.length)(Double.MinValue)
-    var chosen = sample(0)
-    for (_ <- 1 until k) {
-      var worstIdx = 0; var worstSim = Double.MaxValue
-      var i = 0
-      while (i < sample.length) {
-        val s = cos(sample(i), chosen)
-        if (s > bestSim(i)) bestSim(i) = s
-        if (bestSim(i) < worstSim) { worstSim = bestSim(i); worstIdx = i }
-        i += 1
-      }
-      chosen = sample(worstIdx)
-      seeds += chosen
-    }
-    var cents = seeds.result()
-    for (_ <- 1 to iters) {
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Long](k)
-      for (v <- sample) {
-        var best = 0; var bestS = Double.MinValue; var c = 0
-        while (c < k) {
-          val s = cos(v, cents(c))
-          if (s > bestS) { bestS = s; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var d = 0
-        while (d < dim) { sums(best)(d) += v(d); d += 1 }
-      }
-      cents = cents.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old
-        else Array.tabulate(dim)(d => (sums(c)(d) / counts(c)).toFloat)
-      }
-    }
-    import spark.implicits._
-    spark.createDataset(cents.toIndexedSeq.zipWithIndex
-        .map { case (cv, cid) => (cid.toLong, cv) })
-      .toDF("cid", "cv")
-  }
-
-  /** IVF (inverted-file) approximate nearest neighbor: a coarse
-    * quantizer of `nLists` k-means-trained centroids partitions the
-    * corpus; each query scores only the `nProbe` lists whose centroids
-    * are nearest. Classic FAISS-style recall/throughput trade expressed
-    * as DataFrames: centroids broadcast (they are tiny), corpus
-    * assignment is one broadcast-join scan, and the probe join shuffles
-    * on list id — corpus-size-independent per-query work. At a fixed
-    * scanned fraction, finer partitioning raises recall: measured on
-    * the sf0.1 embeddings, recall@5 ≈ 0.78 at nProbe=12 of nLists=32
-    * (same 37.5% budget as 6/16, which measures 0.725) — gated ≥ 0.7
-    * by SimilaritySpec.
-    */
-  def ivfTopK(
-      queries: DataFrame, corpus: DataFrame, k: Int,
-      nLists: Int = 32, nProbe: Int = 12, trainIters: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = trainCentroids(corpus, nLists, trainIters,
-      idCol = idCol, vecCol = vecCol)
-    def assign(df: DataFrame, id: String, vec: String, n: Int) = {
-      val w = Window.partitionBy(col(id)).orderBy(col("__sim").desc, col("cid"))
-      df.crossJoin(broadcast(centroids))
-        .withColumn("__sim", VectorFunctions.cosine(col(vec), col("cv")))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= n)
-        .select(col(id), col(vec), col("cid").as("list_id"))
-    }
-    val corpusLists = assign(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
-      "neighbor_id", "cv2", 1)
-    val queryLists = assign(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "query_id", "qv", nProbe)
-    rankTopK(queryLists.join(corpusLists, Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv2"))), k)
-  }
-
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH buckets
     * generate candidates (multiple tables for recall), exact cosine
     * verifies ≥ threshold. The dedup-by-embedding flavor of
@@ -234,22 +113,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
-
-  /** Per-class mean embedding (class centroids / prototypes): the
-    * element-wise mean of every vector sharing a label — nearest-
-    * centroid classification, class-balance diagnostics, and coreset
-    * seeding all start here. posexplode → groupBy(label, pos) keeps the
-    * shuffle rows (label, pos, x) — never whole vectors — and the
-    * re-assembly aggregates nLabels·dim tiny rows.
-    */
-  def classCentroids(
-      corpus: DataFrame, labelCol: String = "label",
-      vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(labelCol).as("label"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos")).agg(avg(col("x")).as("m"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("label"), transform(col("pm"), p => p.getField("m")).as("centroid"))
 
   /** Semantic (embedding-space) benchmark decontamination — the
     * embedding twin of [[Chunking.flagContaminated]]'s 13-gram
@@ -339,10 +202,9 @@ object Similarity {
   }
 
   // -----------------------------------------------------------------
-  // Oracle-portable ANN variants. The random-plane LSH and k-means IVF
-  // below are the quality paths (recall spec-gated), but their
-  // candidate generation (JVM-seeded Gaussian planes, Lloyd
-  // iterations) is not reproducible in a SQL oracle. The sign-bit
+  // Oracle-portable ANN variants. Random-plane LSH and k-means IVF
+  // generate candidates from JVM-seeded Gaussian planes and Lloyd
+  // iterations, which no SQL oracle reproduces. The sign-bit
   // variants here make candidate selection PURE sign tests and integer
   // arithmetic on the stored floats — bit-reproducible in any engine —
   // so the driver's DuckDB gate can value-check the full approximate
@@ -917,8 +779,7 @@ object Similarity {
     * proximity ([[centroidProbe]]). The FAISS IVF shape (list
     * assignment is one map-side projection, the probe join shuffles on
     * list id) with a quantizer AND probe rule any SQL engine can
-    * reproduce exactly — the oracle-checked counterpart of the k-means
-    * [[ivfTopK]].
+    * reproduce exactly, so every probe is oracle-checked.
     */
   def signIvfTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
@@ -1569,31 +1430,12 @@ object Similarity {
     } finally batchR.unpersist()
   }
 
-  /** Compact a sign-IVF index's per-append file accretion (VERDICT r9
-    * #3): each append adds up to 2^bits list files plus a sums shard,
-    * so at production cadence the lists table fragments toward
-    * (#batches · 2^bits) small files — the [[PartitionedLake.compact]]
-    * problem in index clothing. This rewrites the lists to EXACTLY one
-    * file per list partition and folds the sums shards to one, leaving
-    * served results bit-identical (row order inside a list never
-    * affects ranking — ties break on neighbor_id). Run it on the same
-    * cadence as any lake compaction: when file counts, not data size,
-    * dominate open/seek cost.
-    */
-  def compactSignIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String, bits: Int = 7): Unit =
-    // the two tables compact independently (r16,
-    // [[BatchedIndex.inParallel]]; a torn compaction of either still
-    // recovers via recoverDir + re-run, and the generation-equality
-    // assert covers every torn combination)
-    BatchedIndex.inParallel(
-      BatchedIndex.compactTable(spark, s"$path/lists",
-        partitionCol = Some(("list_id", 1 << bits))),
-      BatchedIndex.compactTable(spark, s"$path/centroid_sums",
-        sumKeys = Some(Seq("list_id", "pos"))))
-
-  /** [[compactSignIvfIndex]] for the IVFADC index: codes re-shuffle to
-    * one file per list partition, codebook-sums shards fold to one.
+  /** Compact an IVFADC index's per-append file accretion (VERDICT r9
+    * #3): each append adds up to 2^bits list files plus a codebook-sums
+    * shard — the [[PartitionedLake.compact]] problem in index clothing.
+    * Codes re-shuffle to exactly one file per list partition and the
+    * codebook-sums shards fold to one, leaving served results
+    * bit-identical (ties break on neighbor_id, never on row order).
     * The frozen centroids table is build-only (never fragmented) and
     * is left untouched. Note for [[ivfAdcServabilityAudit]] readers:
     * compaction folds appended generations into `batch_id=base`, so
@@ -1602,7 +1444,10 @@ object Similarity {
     */
   def compactIvfAdcIndex(
       spark: org.apache.spark.sql.SparkSession, path: String, bits: Int = 7): Unit =
-    // concurrent independent compactions (r16, see compactSignIvfIndex)
+    // the two tables compact independently (r16,
+    // [[BatchedIndex.inParallel]]; a torn compaction of either still
+    // recovers via recoverDir + re-run, and the generation-equality
+    // assert covers every torn combination)
     BatchedIndex.inParallel(
       BatchedIndex.compactTable(spark, s"$path/codes",
         partitionCol = Some(("list_id", 1 << bits))),
@@ -1971,44 +1816,6 @@ object Similarity {
     */
   private def residualCodebook(codeRows: DataFrame): DataFrame =
     residualCodebookFromSums(residualCodebookSums(codeRows))
-
-  /** Approximate top-k via random-hyperplane LSH: score only pairs
-    * sharing a bucket (`nPlanes` sign bits per table, `nTables`
-    * independent tables). Tune `nPlanes` so bucket occupancy
-    * n/2^nPlanes stays in the low hundreds — too many planes makes
-    * buckets near-singleton and recall collapses (measured on the
-    * sf0.1 embeddings: 12 planes → 0.015 recall@5; 4 planes ×
-    * 8 tables → 0.70 recall@5 scanning ~12% of the corpus per query).
-    */
-  def lshTopK(
-      queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-      nPlanes: Int = 4, nTables: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val tables = (0 until nTables).map { t =>
-      VectorFunctions.randomPlanes(nPlanes, dim, seed = 42L + t)
-    }
-    // same narrow-candidate discipline as [[signLshTopK]]: buckets and
-    // the pair dedup shuffle ids only; vectors re-join by id after
-    def bucketed(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id),
-        explode(array(tables.zipWithIndex.map { case (planes, t) =>
-          struct(lit(t).as("table"),
-            VectorFunctions.hyperplaneBucket(col(vecCol), planes).as("bucket"))
-        }: _*)).as("tb"))
-        .select(col(id), col("tb.table"), col("tb.bucket"))
-    val pairIds = bucketed(queries, "query_id")
-      .join(bucketed(corpus, "neighbor_id"), Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
-    val cands = pairIds
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        Seq("query_id"))
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        Seq("neighbor_id"))
-      .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv")))
-    rankTopK(cands, k)
-  }
 
   /** Retrieval-RANKING quality next to [[recallProbeCurve]]'s set
     * quality: per query, the reciprocal rank of the best relevant item

@@ -138,8 +138,8 @@ object Sketches {
     * reproduces every register exactly. Buckets no key hashes into are
     * absent from the output (they read as rank 0 when estimating).
     * The cardinality ESTIMATE (harmonic mean) is intentionally left to
-    * [[hllEstimate]] on the collected registers: it needs doubles,
-    * which stay out of every hashed column.
+    * the test/report helper [[hllEstimate]] on the collected registers:
+    * it needs doubles, which stay out of every hashed column.
     */
   def hllRegisters(df: DataFrame, keyCol: String, p: Int = 8): DataFrame = {
     require(p >= 4 && p <= 16, s"p must be 4..16, got $p")

@@ -21,12 +21,6 @@ import graft.functions.TextFunctions
   */
 object TermStats {
 
-  /** Document frequency per token (≥ `minTokenLen` chars, lowercased). */
-  def docFrequencies(docs: DataFrame, idCol: String, textCol: String,
-      minTokenLen: Int = 3): DataFrame =
-    termFrequencies(docs, idCol, textCol, minTokenLen)
-      .groupBy("word").agg(count(lit(1)).as("df"))
-
   /** Term frequency per (doc, token). */
   def termFrequencies(docs: DataFrame, idCol: String, textCol: String,
       minTokenLen: Int = 3): DataFrame =
@@ -44,7 +38,7 @@ object TermStats {
     val tf = termFrequencies(docs, idCol, textCol, minTokenLen)
     // df derives from the tf frame already in the plan — one row per
     // (doc, word) — NOT from a second tokenize-explode pass over the
-    // corpus (docFrequencies from scratch would plan the explode twice)
+    // corpus, which would plan the explode twice
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window

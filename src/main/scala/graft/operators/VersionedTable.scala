@@ -15,17 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Readers resolve the pointer first, so they see either the old or
   * the new version in full — never a half-written directory. A crash
   * after the data write but before the pointer flip leaves an orphan
-  * `v=N` that the next publish simply supersedes (and `vacuumVersions`
-  * removes); a crash during the pointer rename is atomic at the FS
-  * level. Old versions stay readable by number (time travel) until
-  * vacuumed — the rollback story is "point the pointer back", not a
-  * restore.
+  * `v=N` that the next publish simply supersedes; a crash during the
+  * pointer rename is atomic at the FS level. Old versions stay
+  * readable by number (time travel) — the rollback story is "point
+  * the pointer back", not a restore.
   *
   * At 100 TB the same layout works on object stores that offer atomic
   * single-object put (the pointer is one small object); the version
-  * directories pair with [[PartitionedLake.compact]] for layout and
-  * [[PartitionedLake.vacuumPartitions]]-style retention inside a
-  * version. Reference context: the reference overwrites each zone
+  * directories pair with [[PartitionedLake.compact]] for layout inside
+  * a version. Reference context: the reference overwrites each zone
   * in place (`curated_layer.py:88-89`) — an in-flight reader there
   * can see a truncated table, exactly what the pointer prevents.
   */
@@ -67,10 +65,7 @@ object VersionedTable {
     math.max(latestVersion(root).getOrElse(0L), maxDir) + 1L
   }
 
-  /** The single commit point: write-temp + atomic rename. Shared by
-    * both publish paths so the crash/atomicity protocol can never
-    * fork between them.
-    */
+  /** The single commit point: write-temp + atomic rename. */
   private def flipPointer(root: String, version: Long): Unit = {
     val tmp = java.nio.file.Paths.get(root, s"_latest.tmp.$version")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
@@ -90,62 +85,4 @@ object VersionedTable {
   /** Time travel: read an explicit version. */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
     spark.read.parquet(s"$root/v=$version")
-
-  /** Atomic MULTI-TABLE snapshot publish: all tables of a derived
-    * schema (fact + dims) written under one `v=N/<table>/` tree and
-    * exposed by the same single pointer flip — a reader can never see
-    * fact v2 joined against dim v1, the torn-star hazard the
-    * reference's four independent in-place overwrites
-    * (`curated_layer.py:88-144`) leave open. Same crash semantics as
-    * [[publish]]: an interrupted multi-table write leaves an orphan
-    * version invisible to readers.
-    */
-  def publishAll(tables: Map[String, DataFrame], root: String): Long = {
-    require(tables.nonEmpty, "nothing to publish")
-    tables.keys.foreach(requireSafeTableName)
-    val next = nextVersion(root)
-    tables.foreach { case (name, df) =>
-      df.write.mode("errorifexists").parquet(s"$root/v=$next/$name")
-    }
-    flipPointer(root, next)
-    next
-  }
-
-  // a table name is one PLAIN path segment inside the version dir —
-  // '..' (or a '/'/'\\') would escape the snapshot tree and write
-  // next to the pointer itself
-  private def requireSafeTableName(n: String): Unit =
-    require(n.nonEmpty && n.matches("[A-Za-z0-9][A-Za-z0-9_.-]*") &&
-      n != "." && n != ".." && !n.startsWith("v="),
-      s"unsafe table name '$n': must be a plain identifier segment")
-
-  /** Read one table of the current multi-table snapshot. */
-  def readTable(spark: SparkSession, root: String, table: String): DataFrame = {
-    requireSafeTableName(table)
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no published version under $root"))
-    spark.read.parquet(s"$root/v=$v/$table")
-  }
-
-  /** Drop version directories older than the newest `keepLast`
-    * (pointer target always survives). Returns dropped versions.
-    */
-  def vacuumVersions(root: String, keepLast: Int = 2): Seq[Long] = {
-    require(keepLast >= 1, "must keep at least the live version")
-    val live = latestVersion(root).getOrElse(return Nil)
-    val dir = new java.io.File(root)
-    val versions = dir.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(f => (f, f.getName.stripPrefix("v=").toLong))
-    val cutoff = versions.map(_._2).sorted.takeRight(keepLast).headOption.getOrElse(live)
-    val dropped = versions.filter { case (_, v) => v < cutoff && v != live }
-    dropped.foreach { case (d, _) =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        if (!f.delete()) throw new java.io.IOException(s"could not delete $f")
-      }
-      rm(d)
-    }
-    dropped.map(_._2).sorted
-  }
 }

@@ -31,19 +31,4 @@ object ZOrder {
         .bitwiseOR(shiftleft(shiftright(bl, i).bitwiseAND(lit(1L)), 2 * i))
     }.reduce(_.bitwiseOR(_))
   }
-
-  /** Cluster rows for writing: range-partition on the z-value, sort
-    * within partitions, drop the helper column. Each output partition
-    * covers a compact curve segment — a near-square tile in (a, b)
-    * space — so BOTH columns' per-file ranges are ~domain/√numPartitions
-    * wide instead of one exact and one full-width.
-    */
-  def clusterByZ(df: DataFrame, a: String, b: String, numPartitions: Int,
-      bitsPer: Int = 16): DataFrame = {
-    require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
-    df.withColumn("__z", interleaveBits(col(a), col(b), bitsPer))
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
 }

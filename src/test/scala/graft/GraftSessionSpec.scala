@@ -34,6 +34,26 @@ class GraftSessionSpec extends SparkSpec {
       Runtime.getRuntime.availableProcessors())
   }
 
+  // malformed values a plain `.toInt` either rejected without naming
+  // the variable or passed on to Spark (0 → local[0] / 0 partitions)
+  private val badCounts = Seq("abc", "0", "-4", "", "1.5", " 6")
+
+  test("SPARK_GRAFT_CPUS must be a positive integer, else the error names it") {
+    for (bad <- badCounts) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.availableCores(Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage === s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'")
+    }
+  }
+
+  test("SPARK_GRAFT_SHUFFLE must be a positive integer, else the error names it") {
+    for (bad <- badCounts) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.shuffleWidth(8, Map("SPARK_GRAFT_SHUFFLE" -> bad)))
+      assert(e.getMessage === s"SPARK_GRAFT_SHUFFLE must be a positive integer, got '$bad'")
+    }
+  }
+
   test("the no-arg forms read the real environment (same derivation)") {
     assert(GraftSession.availableCores === GraftSession.availableCores(sys.env))
     assert(GraftSession.shuffleWidth(13) === GraftSession.shuffleWidth(13, sys.env))

@@ -138,7 +138,7 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("dedup kernels: shingle/minhash projection is codegen'd, not interpreted") {
     val d = sources.Tables.load(spark, dir, "documents")
-    val prepared = operators.Dedup.minhashSignatures(d, "doc_id", "text", 3, 16)
+    val prepared = operators.Dedup.prepareNearDup(d, "doc_id", "text", 16)
     val p = planOf(prepared)
     assert(p.contains("codegen id"),
       s"custom expressions must run inside whole-stage codegen:\n$p")

@@ -84,12 +84,12 @@ class RawLayerSpec extends SparkSpec {
     assert(RawLayer.readWatermark(spark, s"$base/meta") === Some("2023-03-01"))
   }
 
-  test("appendIncrement: an increment with no dated row appends and keeps the watermark") {
+  test("runOnce: a later increment with no dated row publishes and keeps the watermark") {
     val base = tmpDir()
     val batch1 = sourceRows("a" -> ts("2023-01-01"))
-    RawLayer.appendIncrement(spark, watermarkedSource(batch1), s"$base/raw", s"$base/meta")
+    RawLayer.runOnce(spark, watermarkedSource(batch1), s"$base/raw", s"$base/meta")
     val undated: Option[String] => DataFrame = _ => sourceRows("b" -> null)
-    assert(RawLayer.appendIncrement(spark, undated, s"$base/raw", s"$base/meta") === 1)
+    assert(RawLayer.runOnce(spark, undated, s"$base/raw", s"$base/meta") === 1)
     assert(spark.read.parquet(s"$base/raw").count() === 2)
     assert(RawLayer.readWatermark(spark, s"$base/meta") === Some("2023-01-01"))
   }
@@ -129,21 +129,5 @@ class RawLayerSpec extends SparkSpec {
       spark, s"$base/src", sourceRows().schema, s"$base/raw", s"$base/ckpt")
     q2.awaitTermination(60000)
     assert(spark.read.parquet(s"$base/raw").count() === 2)
-  }
-
-  test("appendIncrement writes date-partitioned files and skips old rows") {
-    val base = tmpDir()
-    val batch1 = sourceRows("a" -> ts("2023-01-01"), "b" -> ts("2023-02-01"))
-    RawLayer.appendIncrement(spark, watermarkedSource(batch1), s"$base/raw", s"$base/meta")
-    val batch2 = sourceRows(
-      "a" -> ts("2023-01-01"), "c" -> ts("2023-03-01"))
-    val n = RawLayer.appendIncrement(spark, watermarkedSource(batch2), s"$base/raw", s"$base/meta")
-    assert(n === 1)
-    val out = spark.read.parquet(s"$base/raw")
-    assert(out.count() === 3)
-    // partition column materialized from the date
-    assert(out.columns.contains("ingest_date"))
-    // partition pruning works: one partition dir per ingest date
-    assert(out.where($"ingest_date" === "2023-03-01").count() === 1)
   }
 }

@@ -65,143 +65,6 @@ class SourcesSpec extends SparkSpec {
     assert(rewritten.query.contains("WHERE date > '2023-02-01'"))
   }
 
-  test("readCsvQuarantined: clean rows flow, malformed lines land whole in the dead-letter lane") {
-    val dir = Files.createTempDirectory("src_quar").toString
-    Files.writeString(java.nio.file.Paths.get(s"$dir/in.csv"),
-      """id,qty,day
-        |1,5,2023-01-01
-        |2,not_a_number,2023-01-02
-        |3,7,2023-01-03
-        |4,8
-        |""".stripMargin)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", "long").add("qty", "long").add("day", "string")
-    val (clean, quarantined) = Sources.readCsvQuarantined(spark, s"$dir/in.csv", schema)
-    assert(clean.select("id").collect().map(_.getLong(0)).toSet === Set(1L, 3L),
-      "rows 2 (bad long) and 4 (missing column) must not reach the clean lane")
-    val bad = quarantined.collect()
-    assert(bad.length === 2)
-    // the raw line is preserved byte-for-byte for replay
-    assert(bad.map(_.getAs[String]("raw_line")).toSet ===
-      Set("2,not_a_number,2023-01-02", "4,8"))
-    // schema contract: caller must not pre-declare the corrupt column
-    intercept[IllegalArgumentException] {
-      Sources.readCsvQuarantined(spark, s"$dir/in.csv",
-        schema.add("_corrupt_record", "string"))
-    }
-  }
-
-  test("quarantineCsvLines works unchanged on a STREAMING text source") {
-    val dir = Files.createTempDirectory("src_squar").toString
-    Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
-    Files.writeString(java.nio.file.Paths.get(s"$dir/in/batch1.txt"),
-      """1,5
-        |2,oops
-        |3,7
-        |""".stripMargin)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", "long").add("qty", "long")
-    val lines = spark.readStream.text(s"$dir/in").toDF("raw_line")
-    assert(lines.isStreaming)
-    val (clean, quarantined) = Sources.quarantineCsvLines(lines, schema)
-    val q1 = clean.writeStream.format("memory").queryName("sq_clean")
-      .option("checkpointLocation", s"$dir/ck1")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q1.awaitTermination(60000)
-    val q2 = quarantined.writeStream.format("memory").queryName("sq_dlq")
-      .option("checkpointLocation", s"$dir/ck2")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q2.awaitTermination(60000)
-    assert(spark.table("sq_clean").select("id").collect()
-      .map(_.getLong(0)).toSet === Set(1L, 3L))
-    assert(spark.table("sq_dlq").select("raw_line").collect()
-      .map(_.getString(0)).toSeq === Seq("2,oops"))
-  }
-
-  test("readJsonQuarantined: NDJSON split mirrors the CSV lane semantics") {
-    val dir = Files.createTempDirectory("src_jquar").toString
-    Files.writeString(java.nio.file.Paths.get(s"$dir/in.json"),
-      """{"id": 1, "qty": 5}
-        |{"id": 2, "qty": "not_a_number"}
-        |not json at all
-        |{"id": 4, "qty": 8}
-        |""".stripMargin)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", "long").add("qty", "long")
-    val (clean, quarantined) = Sources.readJsonQuarantined(spark, s"$dir/in.json", schema)
-    assert(clean.select("id").collect().map(_.getLong(0)).toSet === Set(1L, 4L))
-    assert(quarantined.collect().map(_.getAs[String]("raw_line")).toSet ===
-      Set("""{"id": 2, "qty": "not_a_number"}""", "not json at all"))
-  }
-
-  test("conformSchema: reorders, widens, nulls missing optionals, fails loudly on loss") {
-    val target = new org.apache.spark.sql.types.StructType()
-      .add("id", "long", nullable = false)
-      .add("qty", "long")
-      .add("note", "string") // nullable, absent from input → typed null
-    val in = Seq((5, "x", 9L)).toDF("qty", "junk", "id") // wrong order, qty int, extra col
-    val out = Sources.conformSchema(in, target)
-    assert(out.columns.toSeq === Seq("id", "qty", "note"))
-    assert(out.schema("qty").dataType.typeName === "long", "int must widen to long")
-    val row = out.head()
-    assert((row.getLong(0), row.getLong(1), row.isNullAt(2)) === ((9L, 5L, true)))
-    // narrowing fails fast with the violation named
-    val narrow = new org.apache.spark.sql.types.StructType().add("id", "integer")
-    val ex = intercept[IllegalArgumentException](Sources.conformSchema(in, narrow))
-    assert(ex.getMessage.contains("does not widen"))
-    // missing REQUIRED column fails fast
-    val required = new org.apache.spark.sql.types.StructType()
-      .add("absent", "string", nullable = false)
-    val ex2 = intercept[IllegalArgumentException](Sources.conformSchema(in, required))
-    assert(ex2.getMessage.contains("missing"))
-  }
-
-  test("conformSchema: case-insensitive resolution, dotted names, null guard on required") {
-    // Case-mismatched input column must MATCH (Spark's default resolver
-    // is case-insensitive), not silently become a typed-null column.
-    val target = new org.apache.spark.sql.types.StructType()
-      .add("qty", "long")
-    val caseIn = Seq(7).toDF("Qty")
-    assert(Sources.conformSchema(caseIn, target).head().getLong(0) === 7L)
-    // Two inputs colliding case-insensitively on one target name: error.
-    val ambig = Seq((1, 2)).toDF("qty", "QTY")
-    val exA = intercept[IllegalArgumentException](Sources.conformSchema(ambig, target))
-    assert(exA.getMessage.contains("ambiguous"))
-    // Dotted column names resolve verbatim, never as struct paths.
-    val dotted = Seq(1.5).toDF("geo.lat")
-    val dotTarget = new org.apache.spark.sql.types.StructType().add("geo.lat", "double")
-    assert(Sources.conformSchema(dotted, dotTarget).head().getDouble(0) === 1.5)
-    // Null flowing into a non-nullable target column aborts at action time.
-    val reqTarget = new org.apache.spark.sql.types.StructType()
-      .add("id", "long", nullable = false)
-    val withNull = Seq[Option[Long]](Some(1L), None).toDF("id")
-    val exN = intercept[Exception](Sources.conformSchema(withNull, reqTarget).collect())
-    assert(exN.getMessage.contains("null in required column 'id'"))
-    // ...and the guard passes clean data through untouched.
-    val clean = Seq[Option[Long]](Some(3L)).toDF("id")
-    assert(Sources.conformSchema(clean, reqTarget).head().getLong(0) === 3L)
-  }
-
-  test("conformSchema: honors spark.sql.caseSensitive=true") {
-    val target = new org.apache.spark.sql.types.StructType()
-      .add("qty", "long")
-    spark.conf.set("spark.sql.caseSensitive", "true")
-    try {
-      // 'Qty' no longer matches 'qty': nullable target → typed null...
-      val out = Sources.conformSchema(Seq(7).toDF("Qty"), target)
-      assert(out.head().isNullAt(0))
-      // ...and a required target column fails fast as missing.
-      val required = new org.apache.spark.sql.types.StructType()
-        .add("qty", "long", nullable = false)
-      val ex = intercept[IllegalArgumentException](
-        Sources.conformSchema(Seq(7).toDF("Qty"), required))
-      assert(ex.getMessage.contains("missing"))
-      // ...while case-colliding input columns are no longer ambiguous.
-      assert(Sources.conformSchema(Seq((1, 2)).toDF("qty", "QTY"), target)
-        .head().getLong(0) === 1L)
-    } finally spark.conf.set("spark.sql.caseSensitive", "false")
-  }
-
   test("partitioned parquet sink round-trips with partition pruning") {
     val dir = Files.createTempDirectory("src_sink").toString
     val df = Seq(("a", "2023-01-01"), ("b", "2023-02-01")).toDF("id", "day")

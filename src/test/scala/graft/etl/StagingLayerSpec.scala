@@ -81,13 +81,6 @@ class StagingLayerSpec extends SparkSpec {
     assert(flags === Map("TXN6" -> "Yes", "TXN7" -> "No"))
   }
 
-  test("duplicateReport counts multiplicity of repeated rows") {
-    val rep = StagingLayer.duplicateReport(raw(Seq(clean1, clean1, clean1)))
-    val r = rep.collect()
-    assert(r.length === 1)
-    assert(r.head.getLong(r.head.length - 1) === 3L)
-  }
-
   test("clean dedups the fixture zoo to the hand-expected rows") {
     val dirty = Row("TXN4", ts("2023-01-03"), "ST1", "NYC", "P1", "Dum",
       2, 10.0, 50.0, 5, 10, 3, 1.0, 0.1, 2.0)

@@ -18,10 +18,9 @@ class TextFunctionsSpec extends SparkSpec {
     assert(one(TextFunctions.tokenCount(col("t")), "single").getInt(0) === 1)
   }
 
-  test("alphaRatio / digitRatio / spaceRatio on a known string") {
+  test("alphaRatio / spaceRatio on a known string") {
     // "ab 12" → 5 chars: 2 alpha, 2 digit, 1 space
     assert(one(TextFunctions.alphaRatio(col("t")), "ab 12").getDouble(0) === 0.4)
-    assert(one(TextFunctions.digitRatio(col("t")), "ab 12").getDouble(0) === 0.4)
     assert(one(TextFunctions.spaceRatio(col("t")), "ab 12").getDouble(0) === 0.2)
   }
 
@@ -44,10 +43,9 @@ class TextFunctionsSpec extends SparkSpec {
     }
   }
 
-  test("stopwordRatio counts multiset occurrences") {
+  test("stopwordTokenCount counts multiset occurrences") {
     // "the the cat" → 2 of 3 tokens are stopwords
-    val r = one(TextFunctions.stopwordRatio(col("t"), "en"), "the the cat").getDouble(0)
-    assert(math.abs(r - 2.0 / 3.0) < 1e-12)
+    assert(one(TextFunctions.stopwordTokenCount(col("t"), "en"), "the the cat").getLong(0) === 2L)
   }
 
   test("tokenShingles: n-grams of tokens, too-short → empty") {
@@ -62,19 +60,6 @@ class TextFunctionsSpec extends SparkSpec {
     val h2 = one(TextFunctions.charShingleHashes(col("t"), 3), "abcdef").getSeq[Long](0)
     assert(h1.length === 4)
     assert(h1 === h2)
-  }
-
-  test("qualityScore: natural prose scores above noise") {
-    val prose = "the house is warm and the cat is sleeping in it for hours"
-    val noise = "@#$% 123 *&^ ~~ || >>>"
-    val p = one(TextFunctions.qualityScore(col("t")), prose).getDouble(0)
-    val n = one(TextFunctions.qualityScore(col("t")), noise).getDouble(0)
-    assert(p > n)
-  }
-
-  test("subwordCount splits letter/digit transitions") {
-    assert(one(TextFunctions.subwordCount(col("t")), "abc123def").getInt(0) === 3)
-    assert(one(TextFunctions.subwordCount(col("t")), "abc def").getInt(0) === 2)
   }
 
   test("dupNgramRatio: 0 for all-distinct grams, rises with repetition") {

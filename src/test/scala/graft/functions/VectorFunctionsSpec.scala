@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.expressions.GraftFunctions
 
 class VectorFunctionsSpec extends SparkSpec {
 
@@ -13,7 +14,7 @@ class VectorFunctionsSpec extends SparkSpec {
 
   test("dot product") {
     val r = pair(Array(1f, 2f, 3f), Array(4f, 5f, 6f))
-      .select(VectorFunctions.dot(col("a"), col("b"))).head.getDouble(0)
+      .select(GraftFunctions.vecDot(col("a"), col("b"))).head.getDouble(0)
     assert(r === 32.0)
   }
 
@@ -31,12 +32,6 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(math.abs(cos(Array(1f, 0f), Array(-1f, 0f)) + 1.0) < 1e-12)
   }
 
-  test("sqDist") {
-    val r = pair(Array(1f, 2f), Array(4f, 6f))
-      .select(VectorFunctions.sqDist(col("a"), col("b"))).head.getDouble(0)
-    assert(r === 25.0)
-  }
-
   test("hyperplaneBucket: deterministic and sign-sensitive") {
     val planes = VectorFunctions.randomPlanes(nPlanes = 8, dim = 2, seed = 7L)
     val df = Seq(
@@ -52,13 +47,13 @@ class VectorFunctionsSpec extends SparkSpec {
   test("quantizeInt8: floor scaling, clamped at the rails") {
     val df = Seq((1L, Array(0.5f, -0.5f, 1.0f, -1.0f, 0.0f, 0.0079f)))
       .toDF("id", "v")
-      .select(VectorFunctions.quantizeInt8(col("v")).as("q"))
+      .select(transform(col("v"), VectorFunctions.quantizeInt8Component(_)).as("q"))
     val q = df.head.getSeq[Int](0)
     // floor(0.5*127)=63, floor(-0.5*127)=-64 (floor, not trunc),
     // 1.0→127, -1.0→-127 (in-range, no clamp), 0→0, floor(.0079*127)=1
     assert(q === Seq(63, -64, 127, -127, 0, 1))
     val rails = Seq((2L, Array(2.0f, -2.0f))).toDF("id", "v")
-      .select(VectorFunctions.quantizeInt8(col("v")).as("q"))
+      .select(transform(col("v"), VectorFunctions.quantizeInt8Component(_)).as("q"))
     assert(rails.head.getSeq[Int](0) === Seq(127, -128))
   }
 }

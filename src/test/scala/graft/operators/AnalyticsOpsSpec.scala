@@ -321,23 +321,6 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(ex.getMessage != null)
   }
 
-  test("withQualityObservation counts rows and nulls as a side effect of one action") {
-    val df = Seq(
-      (1L, Some("a"), Some(10L)),
-      (2L, None, Some(20L)),
-      (3L, Some("c"), None),
-      (4L, None, None)
-    ).toDF("id", "s", "v")
-    val obs = new org.apache.spark.sql.Observation("quality")
-    val observed = Profiler.withQualityObservation(df, obs, "s", "v")
-    // the observation rides the action that would run anyway
-    assert(observed.count() === 4L)
-    val m = obs.get
-    assert(m("n_rows") === 4L)
-    assert(m("nulls_s") === 2L)
-    assert(m("nulls_v") === 2L)
-  }
-
   test("Quality.snapshotDrift: exact ppm shares, one-sided categories kept") {
     val prev = Seq("en", "en", "en", "fr").toDF("lang")
     val cur = Seq("en", "en", "de", "de").toDF("lang")

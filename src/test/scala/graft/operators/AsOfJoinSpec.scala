@@ -53,29 +53,6 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out("none") === None)
   }
 
-  test("scd2Lookup resolves each fact to the dim version valid at fact time") {
-    val dim = Seq(
-      // key 1: v=old until 2024-01-01, then v=new
-      (1L, "old", ts("2023-01-01 00:00:00"), Some(ts("2024-01-01 00:00:00")), false),
-      (1L, "new", ts("2024-01-01 00:00:00"), Option.empty[Timestamp], true),
-      // key 2: expired with no successor (deleted key)
-      (2L, "gone", ts("2023-01-01 00:00:00"), Some(ts("2023-06-01 00:00:00")), false),
-    ).toDF("k", "attr", "start_date", "end_date", "is_current")
-    val facts = Seq(
-      (1L, ts("2023-07-01 00:00:00"), "f_mid"),   // → old
-      (1L, ts("2024-05-01 00:00:00"), "f_late"),  // → new
-      (1L, ts("2022-01-01 00:00:00"), "f_early"), // → before history: null
-      (2L, ts("2023-08-01 00:00:00"), "f_gone"),  // → version expired: null
-    ).toDF("k", "t", "name")
-    val out = AsOfJoin.scd2Lookup(facts, dim, "k", "t", Seq("attr"))
-      .select("name", "dim_attr").collect()
-      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(out("f_mid") === Some("old"))
-    assert(out("f_late") === Some("new"))
-    assert(out("f_early") === None)
-    assert(out("f_gone") === None)
-  }
-
   test("asofJoin accepts valueCols in a different order than the right schema") {
     val left = Seq((1L, ts("2024-01-02 00:00:00"), "e")).toDF("k", "t", "name")
     // right schema order: (k, t, a, b); carried as Seq(b, a) — reversed

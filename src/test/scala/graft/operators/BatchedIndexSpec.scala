@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.hadoop.fs.Path
 
 /** The swap/recovery machinery shared by every batch-keyed index
-  * (sign-IVF, PQ, IVFADC, banded dedup). The crash windows here are
+  * (sign-IVF, PQ, IVFADC). The crash windows here are
   * simulated with the exact filesystem states swapDir can leave.
   */
 class BatchedIndexSpec extends SparkSpec {

@@ -31,7 +31,7 @@ class DedupSpec extends SparkSpec {
   test("minhash signatures: identical texts → identical signatures") {
     val d = docs(1L -> "the quick brown fox jumps", 2L -> "the quick brown fox jumps",
       3L -> "completely different words here now")
-    val sigs = Dedup.minhashSignatures(d, "doc_id", "text", 3, 16).collect()
+    val sigs = Dedup.prepareNearDup(d, "doc_id", "text", 16).select("doc_id", "sig").collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) === sigs(2L))
     assert(sigs(1L) !== sigs(3L))
@@ -40,13 +40,14 @@ class DedupSpec extends SparkSpec {
 
   test("shingle sets are sorted distinct and jaccardSorted matches set math") {
     val d = docs(1L -> "a b c d e f", 2L -> "a b c d e f extra")
-    val sets = Dedup.shingleSets(d, "doc_id", "text", 2, charLevel = false).collect()
+    val prepared = Dedup.prepareNearDup(d, "doc_id", "text", 16, shingleSize = 2)
+    val sets = prepared.select("doc_id", "sh").collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
     assert(sets(1L) === sets(1L).sorted)
     assert(sets(1L).distinct === sets(1L))
     assert(sets(1L).length === 5) // 6 tokens → 5 bigrams
     // jaccard of 5-shared / 6-union = 0.8333…
-    val pairs = Dedup.nearDupPairs(d, "doc_id", "text", threshold = 0.5, shingleSize = 2)
+    val pairs = Dedup.nearDupPairsPrepared(prepared, threshold = 0.5, k = 16, bands = 4)
       .collect()
     assert(pairs.length === 1)
     assert(math.abs(pairs.head.getAs[Double]("jaccard") - 5.0 / 6.0) < 1e-12)
@@ -58,7 +59,8 @@ class DedupSpec extends SparkSpec {
       1L -> base,
       2L -> (base + " lambda"), // near-dup of 1
       3L -> "one two three four five six seven eight nine ten")
-    val pairs = Dedup.nearDupPairs(d, "doc_id", "text", threshold = 0.5)
+    val pairs = Dedup.nearDupPairsPrepared(Dedup.prepareNearDup(d, "doc_id", "text", 16),
+        threshold = 0.5, k = 16, bands = 4)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     assert(pairs.head.getAs[Double]("jaccard") > 0.5)
@@ -70,8 +72,9 @@ class DedupSpec extends SparkSpec {
       1L -> base,
       2L -> (base + " tail"),
       3L -> "one two three four five six seven eight nine ten")
-    val pairs = Dedup.nearDupPairs(d, "doc_id", "text", threshold = 0.5, shingleSize = 6,
-        charLevel = true)
+    val pairs = Dedup.nearDupPairsPrepared(
+        Dedup.prepareNearDup(d, "doc_id", "text", 16, shingleSize = 6, charLevel = true),
+        threshold = 0.5, k = 16, bands = 4)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
   }
@@ -117,7 +120,7 @@ class DedupSpec extends SparkSpec {
   test("bandPairs: k not divisible by bands still uses the whole signature") {
     // k=10, bands=4 → bands of 2/2/2/4; identical docs must still pair
     val d = docs(1L -> "alpha beta gamma delta epsilon", 2L -> "alpha beta gamma delta epsilon")
-    val sigs = Dedup.minhashSignatures(d, "doc_id", "text", 3, 10)
+    val sigs = Dedup.prepareNearDup(d, "doc_id", "text", 10).select("doc_id", "sig")
     val pairs = Dedup.bandPairs(sigs, bands = 4, k = 10).collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     intercept[IllegalArgumentException](Dedup.bandPairs(sigs, bands = 11, k = 10))
@@ -128,7 +131,7 @@ class DedupSpec extends SparkSpec {
     val cap = 8
     val cluster = (0 until m).map(i => (i.toLong, "identical boilerplate text repeated everywhere"))
     val d = (cluster :+ (9999L -> "a genuinely different document about other things")).toDF("doc_id", "text")
-    val sigs = Dedup.minhashSignatures(d, "doc_id", "text", 3, 16)
+    val sigs = Dedup.prepareNearDup(d, "doc_id", "text", 16).select("doc_id", "sig")
     val capped = Dedup.bandPairs(sigs, bands = 4, k = 16, neighborCap = Some(cap)).count()
     // chain pairs: ≤ m·cap per band, identical across bands after distinct
     assert(capped <= m.toLong * cap, s"capped candidates $capped exceed m*cap")
@@ -218,69 +221,6 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(reliable === survivors)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "no_exact")))
-  }
-
-  test("dedupeIncrementIndexed: persisted banded index serves identical survivors, appends stay equivalent") {
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val other = "one two three four five six seven eight nine ten eleven"
-    val history = Dedup.artifacts(docs(1L -> base, 2L -> other), "doc_id", "text")
-    val batch = Dedup.artifacts(docs(
-      10L -> base,
-      11L -> (base + " lambda"),
-      12L -> "a genuinely new document about completely fresh material",
-      14L -> "another new piece of text with its own unique words entirely"
-    ), "doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
-    Dedup.writeBandedIndex(history, idx)
-    val direct = Dedup.dedupeIncrement(batch, history, threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val survivors = Dedup.dedupeIncrementIndexed(spark, batch, idx, threshold = 0.5)
-    val indexed = survivors.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(indexed === direct, "index-served dedup must equal the direct path")
-    assert(indexed === Set(12L, 14L))
-    // grow the index with the survivors; a near-dup of a survivor in
-    // the NEXT batch must now be caught from the index
-    Dedup.appendBandedIndex(survivors, idx, batchId = "b1")
-    // retried append (crash-recovery contract): same batchId overwrites
-    // its own shards — the index must not grow or change
-    Dedup.appendBandedIndex(survivors, idx, batchId = "b1")
-    assert(spark.read.parquet(s"$idx/artifacts").count() === 4L,
-      "retried append must not duplicate artifact rows")
-    val batch2 = Dedup.artifacts(docs(
-      20L -> "a genuinely new document about completely fresh material plus",
-      21L -> "totally unrelated subject matter discussed at reasonable length"
-    ), "doc_id", "text")
-    val s2 = Dedup.dedupeIncrementIndexed(spark, batch2, idx, threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(s2 === Set(21L), s"doc 20 near-dups an appended survivor: $s2")
-    // compaction folds the generations, survivors unchanged
-    Dedup.compactBandedIndex(spark, idx)
-    val s2c = Dedup.dedupeIncrementIndexed(spark, batch2, idx, threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(s2c === s2, "banded-index compaction must be invisible to serving")
-    assert(new java.io.File(s"$idx/bands").listFiles().filter(_.isDirectory)
-      .map(_.getName).toSeq === Seq("batch_id=base"))
-    assertThrows[IllegalArgumentException](
-      Dedup.appendBandedIndex(survivors, idx, batchId = "base"))
-  }
-
-  test("banded index: empty-history bootstrap works, metadata pins the banding") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_dedup_idx0").toString
-    val none = Dedup.artifacts(docs(), "doc_id", "text")
-    Dedup.writeBandedIndex(none, idx, k = 16, bands = 4)
-    // first-ever batch against an EMPTY index: everything survives
-    val batch = Dedup.artifacts(docs(
-      1L -> "the very first document the pipeline has ever seen today",
-      2L -> "a second unrelated document with entirely different words"
-    ), "doc_id", "text")
-    val s = Dedup.dedupeIncrementIndexed(spark, batch, idx, threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(s === Set(1L, 2L))
-    // a missing index fails loudly, not with a schema-inference error
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.dedupeIncrementIndexed(spark, batch, "/tmp/nope_no_index", 0.5)
-    }
-    assert(ex.getMessage.contains("_index_meta"))
   }
 
   test("exactIncrement: history anti-join + min-id within batch, idempotent") {

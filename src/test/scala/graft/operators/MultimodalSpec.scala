@@ -21,22 +21,6 @@ class MultimodalSpec extends SparkSpec {
     assert(new String(rows.head.payload, "UTF-8") === "hello world payload")
   }
 
-  test("extractFeatures: deterministic, equal payloads → equal features") {
-    val f = Multimodal.extractFeatures(media).collect().sortBy(_.media_id)
-    assert(f.map(_.media_id).toSeq === Seq(1L, 2L, 3L))
-    assert(f(0).content_hash === f(1).content_hash)
-    assert(f(0).embedding.toSeq === f(1).embedding.toSeq)
-    assert(f(0).content_hash !== f(2).content_hash)
-    assert(f(0).byte_len === "hello world payload".length)
-    assert(f(0).embedding.length === 16)
-  }
-
-  test("custom decoder dimension flows through") {
-    val f = Multimodal.extractFeatures(media, new Multimodal.StubDecoder(dim = 4))
-      .head()
-    assert(f.embedding.length === 4)
-  }
-
   test("sampleFrames: video payload chunks by frame size and stride") {
     val videos = Seq((7L, "image", "x" * 100), (8L, "video", "y" * 100))
       .toDF("doc_id", "mt", "text")
@@ -94,14 +78,6 @@ class MultimodalSpec extends SparkSpec {
     assert(stats(1).sum_g === 17L * 'z')
     assert(stats(1).sum_r === 16L * 'z')
     assert(stats(1).height === 2)
-  }
-
-  test("BmpDecoder: embedding derives from real pixel intensities") {
-    val black = BmpCodec.encode(Array.fill[Byte](48)(0), width = 16)
-    val white = BmpCodec.encode(Array.fill[Byte](48)(-1), width = 16) // 0xFF
-    val dec = new Multimodal.BmpDecoder(dim = 4)
-    assert(dec.decode(black).forall(_ === 0.0f))
-    assert(dec.decode(white).forall(v => math.abs(v - 1.0f) < 1e-6))
   }
 
   test("resizeNearest: samples exact source pixels and re-encodes a valid BMP") {

@@ -68,22 +68,6 @@ class PartitionedLakeSpec extends SparkSpec {
     }
   }
 
-  test("vacuumPartitions: expires whole directories, keeps survivors intact") {
-    val dir = writeLake()
-    val dropped = PartitionedLake.vacuumPartitions(dir, "yr",
-      keep = v => v.toInt >= 2023)
-    assert(dropped.map(_.toInt).sorted === Seq(2020, 2021, 2022))
-    val back = PartitionedLake.read(spark, dir)
-    val years = back.select("yr").distinct().collect()
-      .map(_.getAs[Number](0).intValue()).sorted
-    assert(years.toSeq === (2023 to 2029))
-    // surviving rows untouched — not a rewrite
-    assert(back.count() === 7 * 365L)
-    // idempotent: nothing more to drop on re-run
-    assert(PartitionedLake.vacuumPartitions(dir, "yr",
-      keep = v => v.toInt >= 2023).isEmpty)
-  }
-
   test("parquet codec choice: zstd beats snappy on redundant text, content identical") {
     // the storage knob that matters at 100 TB: a cold/archive zone on
     // zstd, hot zones on snappy; either way the DATA is identical

@@ -21,15 +21,6 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(a.size / 2000.0 - 0.3) < 0.05, s"fraction off: ${a.size / 2000.0}")
   }
 
-  test("trainTestSplit is disjoint and complete") {
-    val (train, test) = Sampling.trainTestSplit(rows, "id", 0.25)
-    val tr = train.select("id").collect().map(_.getLong(0)).toSet
-    val te = test.select("id").collect().map(_.getLong(0)).toSet
-    assert(tr.intersect(te).isEmpty)
-    assert(tr.union(te).size === 2000)
-    assert(math.abs(te.size / 2000.0 - 0.25) < 0.05)
-  }
-
   test("stratifiedSample applies per-stratum rates") {
     val sampled = Sampling.stratifiedSample(rows, "id", "cls",
       Map("rare" -> 1.0), default = 0.1)

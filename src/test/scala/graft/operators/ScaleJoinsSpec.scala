@@ -25,28 +25,6 @@ class ScaleJoinsSpec extends SparkSpec {
     assert(saltSpread > 1)
   }
 
-  test("bucketed join plans a shuffle-free sort-merge join") {
-    val a = (1 to 500).map(i => (i.toLong, i * 2)).toDF("k", "va")
-    val b = (1 to 500).map(i => (i.toLong, i * 3)).toDF("k", "vb")
-    ScaleJoins.writeBucketed(a, "bk_a", "k", 4)
-    ScaleJoins.writeBucketed(b, "bk_b", "k", 4)
-    // force SMJ so the test demonstrates co-location, not broadcast
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = ScaleJoins.bucketedJoin(spark, "bk_a", "bk_b", "k")
-      assert(joined.count() === 500)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join should not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bk_a")
-      spark.sql("DROP TABLE IF EXISTS bk_b")
-    }
-  }
-
   test("a broadcast hint overrides a disabled auto-broadcast threshold") {
     // the manual override lever when stats mislead the planner — e.g.
     // the parity profile (reference knobs) pins the threshold to -1,

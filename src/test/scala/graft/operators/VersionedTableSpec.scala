@@ -35,45 +35,4 @@ class VersionedTableSpec extends SparkSpec {
     assert(v3 === 3L)
     assert(VersionedTable.read(spark, root).select("v").head().getLong(0) === 11L)
   }
-
-  test("publishAll: a reader can never join fact v2 against dim v1") {
-    val root = Files.createTempDirectory("graft_vt_star").toString
-    VersionedTable.publishAll(Map(
-      "fact" -> Seq((1L, 100L)).toDF("k", "amount"),
-      "dim" -> Seq((1L, "old_name")).toDF("k", "name")), root)
-    // an interrupted second publish: fact written, dim missing,
-    // pointer never flipped
-    Seq((1L, 200L)).toDF("k", "amount").write.parquet(s"$root/v=2/fact")
-    val fact = VersionedTable.readTable(spark, root, "fact")
-    val dim = VersionedTable.readTable(spark, root, "dim")
-    val joined = fact.join(dim, "k").select("amount", "name").head()
-    assert((joined.getLong(0), joined.getString(1)) === ((100L, "old_name")),
-      "reader must see the v1 PAIR, not the half-written v2 fact")
-    // complete second publish steps over the orphan and flips both
-    val v = VersionedTable.publishAll(Map(
-      "fact" -> Seq((1L, 300L)).toDF("k", "amount"),
-      "dim" -> Seq((1L, "new_name")).toDF("k", "name")), root)
-    assert(v === 3L)
-    val j2 = VersionedTable.readTable(spark, root, "fact")
-      .join(VersionedTable.readTable(spark, root, "dim"), "k")
-      .select("amount", "name").head()
-    assert((j2.getLong(0), j2.getString(1)) === ((300L, "new_name")))
-    intercept[IllegalArgumentException](
-      VersionedTable.publishAll(Map("v=9" -> Seq(1).toDF("x")), root))
-    // '..' would write OUTSIDE the version tree, next to the pointer
-    intercept[IllegalArgumentException](
-      VersionedTable.publishAll(Map(".." -> Seq(1).toDF("x")), root))
-    intercept[IllegalArgumentException](
-      VersionedTable.readTable(spark, root, "../fact"))
-  }
-
-  test("vacuumVersions drops superseded snapshots, never the live one") {
-    val root = Files.createTempDirectory("graft_vt_vac").toString
-    (1 to 4).foreach(i => VersionedTable.publish(Seq((i.toLong, i.toLong)).toDF("id", "v"), root))
-    val dropped = VersionedTable.vacuumVersions(root, keepLast = 2)
-    assert(dropped === Seq(1L, 2L))
-    assert(VersionedTable.read(spark, root).head().getLong(1) === 4L)
-    assert(VersionedTable.readVersion(spark, root, 3L).head().getLong(1) === 3L)
-    intercept[Exception](VersionedTable.readVersion(spark, root, 1L).collect())
-  }
 }

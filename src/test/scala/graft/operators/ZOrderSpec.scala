@@ -4,9 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Morton interleave values and the locality clusterByZ buys: every
-  * output partition is a compact tile in BOTH dimensions, not a stripe.
-  */
+/** Morton interleave values: known bit positions and width checks. */
 class ZOrderSpec extends SparkSpec {
 
   import spark.implicits._
@@ -23,34 +21,6 @@ class ZOrderSpec extends SparkSpec {
     assert(got((2L, 1L)) === 9L)
     assert(got((3L, 3L)) === 15L)
     assert(got((65535L, 65535L)) === 4294967295L) // all 32 low bits set
-  }
-
-  test("clusterByZ: partitions are tiles in both dims; plain sort leaves stripes") {
-    // full 64x64 grid, 16 partitions → ideal tiles are 16x16
-    val grid = (for (a <- 0 until 64; b <- 0 until 64) yield (a.toLong, b.toLong))
-      .toDF("a", "b")
-    def spreads(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.withColumn("pid", spark_partition_id())
-        .groupBy("pid")
-        .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-    val z = spreads(ZOrder.clusterByZ(grid, "a", "b", numPartitions = 16, bitsPer = 6))
-    assert(z.nonEmpty)
-    // curve segments can straddle one tile boundary → up to half the
-    // domain; a stripe layout would put 63 in every partition's b
-    z.foreach { case (sa, sb) =>
-      assert(sa <= 48 && sb <= 48, s"z-partition not a tile: spread ($sa, $sb)")
-    }
-    val striped = spreads(
-      grid.repartitionByRange(16, col("a")).sortWithinPartitions("a"))
-    assert(striped.forall(_._2 >= 60), "sanity: single-column sort leaves b full-width")
-  }
-
-  test("clusterByZ preserves the exact row multiset") {
-    val df = Seq((5L, 9L), (5L, 9L), (0L, 1L)).toDF("a", "b")
-    val out = ZOrder.clusterByZ(df, "a", "b", numPartitions = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(out === Seq((0L, 1L), (5L, 9L), (5L, 9L)))
   }
 
   test("interleaveBits rejects bad widths") {

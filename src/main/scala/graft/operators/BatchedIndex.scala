@@ -186,32 +186,29 @@ private[operators] object BatchedIndex {
 
   /** Rewrite one batch-keyed index table as a single consolidated
     * `batch_id=base` generation, replacing the live table via
-    * [[swapDir]]. Exactly one of the three shapes:
+    * [[swapDir]]. Exactly one of the two shapes:
     *  - `partitionCol = Some((col, n))`: re-shuffle to `n` partitions
     *    on `col` and write partitioned by it — one file per partition
     *    directory;
-    *  - `sumKeys = Some(keys)`: fold sum shards to one file;
-    *  - neither: plain rows, coalesced to one file.
+    *  - `sumKeys = Some(keys)`: fold sum shards to one file.
     */
   def compactTable(
       spark: SparkSession, table: String,
       partitionCol: Option[(String, Int)] = None,
       sumKeys: Option[Seq[String]] = None): Unit = {
+    require(partitionCol.isDefined != sumKeys.isDefined,
+      "compactTable: give exactly one of partitionCol and sumKeys")
     val next = s"${table}__compact"
     recoverDir(spark, table) // prior compaction crashed mid-swap: restore aside
     deleteDir(spark, next)
     val src = spark.read.parquet(table).drop("batch_id")
     val out = s"$next/batch_id=$buildBatchId"
-    (partitionCol, sumKeys) match {
-      case (Some((c, n)), None) =>
+    partitionCol match {
+      case Some((c, n)) =>
         src.repartition(writeWidth(spark, n), col(c))
           .write.mode("overwrite").partitionBy(c).parquet(out)
-      case (None, Some(keys)) =>
-        foldSums(src, keys).coalesce(1).write.mode("overwrite").parquet(out)
-      case (None, None) =>
-        src.coalesce(1).write.mode("overwrite").parquet(out)
-      case _ => throw new IllegalArgumentException(
-        "compactTable: partitionCol and sumKeys are mutually exclusive")
+      case None =>
+        foldSums(src, sumKeys.get).coalesce(1).write.mode("overwrite").parquet(out)
     }
     swapDir(spark, next, table)
   }

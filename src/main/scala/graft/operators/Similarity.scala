@@ -19,6 +19,12 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
+  /** The two columns of the `embeddings` schema every entry point reads:
+    * a unique long id and an `array<float>` vector.
+    */
+  private val vecId: Column = col("vec_id")
+  private val embedding: Column = col("embedding")
+
   /** Oracle-robust neighbor-ranking key: cosine quantized to the 1e-6
     * grid. Under a raw double key, two engines whose cosine
     * accumulation differs by 1 ulp (SIMD partial sums / FMA fusion —
@@ -35,10 +41,9 @@ object Similarity {
     * Ties break on neighbor id — deterministic output.
     */
   def bruteForceTopK(
-      queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c0 = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+      queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(vecId.as("query_id"), embedding.as("qv"))
+    val c0 = corpus.select(vecId.as("neighbor_id"), embedding.as("cv"))
     // Rebalance before the flop-dense cross product: the compute here
     // is |Q|·n cosines, so parallelism must come from the ROW count,
     // not the byte size. A 200 k-vector corpus is ~50 MB — one HDFS
@@ -62,15 +67,13 @@ object Similarity {
     rankTopK(cross, k)
   }
 
-  /** k-NN majority-label classification built on bruteForceTopK.
-    * Tie-break: larger vote count first, then smaller label.
+  /** k-NN majority-label classification built on bruteForceTopK, over
+    * the corpus's `label` column. Tie-break: larger vote count first,
+    * then smaller label.
     */
-  def knnLabel(
-      queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      labelCol: String = "label"): DataFrame = {
-    val topk = bruteForceTopK(queries, corpus, k, idCol, vecCol)
-    val labels = corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("nlabel"))
+  def knnLabel(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val topk = bruteForceTopK(queries, corpus, k)
+    val labels = corpus.select(vecId.as("neighbor_id"), col("label").as("nlabel"))
     val votes = topk.join(labels, Seq("neighbor_id"))
       .groupBy("query_id", "nlabel").agg(count(lit(1)).as("votes"))
     val w = Window.partitionBy(col("query_id"))
@@ -87,18 +90,17 @@ object Similarity {
     */
   def embeddingNearDupPairs(
       corpus: DataFrame, threshold: Double, dim: Int,
-      nPlanes: Int = 12, nTables: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      nPlanes: Int = 12, nTables: Int = 4): DataFrame = {
     val tables = (0 until nTables).map { t =>
       VectorFunctions.randomPlanes(nPlanes, dim, seed = 42L + t)
     }
     // narrow-candidate discipline (late r10, the q31 lesson): the
     // bucket self-join and the pair dedup shuffle id tuples only;
     // vectors re-join by id for the cosine verification afterwards
-    val bucketed = corpus.select(col(idCol).as("id"),
+    val bucketed = corpus.select(vecId.as("id"),
       explode(array(tables.zipWithIndex.map { case (planes, t) =>
         struct(lit(t).as("table"),
-          VectorFunctions.hyperplaneBucket(col(vecCol), planes).as("bucket"))
+          VectorFunctions.hyperplaneBucket(embedding, planes).as("bucket"))
       }: _*)).as("tb"))
       .select(col("id"), col("tb.table"), col("tb.bucket"))
     val pairIds = bucketed.as("l").join(bucketed.as("r"),
@@ -107,8 +109,8 @@ object Similarity {
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     pairIds
-      .join(corpus.select(col(idCol).as("id_a"), col(vecCol).as("va")), Seq("id_a"))
-      .join(corpus.select(col(idCol).as("id_b"), col(vecCol).as("vb")), Seq("id_b"))
+      .join(corpus.select(vecId.as("id_a"), embedding.as("va")), Seq("id_a"))
+      .join(corpus.select(vecId.as("id_b"), embedding.as("vb")), Seq("id_b"))
       .withColumn("cosine", VectorFunctions.cosine(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
@@ -138,10 +140,9 @@ object Similarity {
     * real contamination, which sits near cosine 1) are exposed.
     */
   def semanticDecontaminate(
-      train: DataFrame, bench: DataFrame, thresholdE6: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val t = train.select(col(idCol).as("train_id"), col(vecCol).as("tv"))
-    val b = bench.select(col(vecCol).as("bv"))
+      train: DataFrame, bench: DataFrame, thresholdE6: Long): DataFrame = {
+    val t = train.select(vecId.as("train_id"), embedding.as("tv"))
+    val b = bench.select(embedding.as("bv"))
     t.crossJoin(broadcast(b))
       .filter(rankKey(VectorFunctions.cosine(col("tv"), col("bv"))) >= thresholdE6)
       .groupBy(col("train_id"))
@@ -163,13 +164,12 @@ object Similarity {
     */
   def semanticDecontaminateBlocked(
       train: DataFrame, bench: DataFrame, thresholdE6: Long,
-      dim: Int, bits: Int = 7,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      dim: Int, bits: Int = 7): DataFrame = {
     val dims = quantDims(dim, bits)
-    val t = train.select(col(idCol).as("train_id"), col(vecCol).as("tv"),
-      signBucket(col(vecCol), dims).as("list_id"))
-    val b = bench.select(col(vecCol).as("bv"),
-      signBucket(col(vecCol), dims).as("list_id"))
+    val t = train.select(vecId.as("train_id"), embedding.as("tv"),
+      signBucket(embedding, dims).as("list_id"))
+    val b = bench.select(embedding.as("bv"),
+      signBucket(embedding, dims).as("list_id"))
     t.join(b, Seq("list_id"))
       .filter(rankKey(VectorFunctions.cosine(col("tv"), col("bv"))) >= thresholdE6)
       .groupBy(col("train_id"))
@@ -189,14 +189,12 @@ object Similarity {
   def resolveEmbeddingNearDups(
       corpus: DataFrame, threshold: Double, dim: Int,
       nPlanes: Int = 12, nTables: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       checkpointDir: Option[String] = None): DataFrame = {
-    val pairs = embeddingNearDupPairs(corpus, threshold, dim, nPlanes, nTables,
-      idCol, vecCol)
+    val pairs = embeddingNearDupPairs(corpus, threshold, dim, nPlanes, nTables)
     val comps = Dedup.connectedComponents(pairs, "id_a", "id_b",
         checkpointDir = checkpointDir)
       .withColumnRenamed("doc_id", "vec_id")
-    corpus.select(col(idCol).as("vec_id"))
+    corpus.select(vecId.as("vec_id"))
       .join(comps, Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("component"), col("vec_id")).as("keep_id"))
   }
@@ -267,8 +265,8 @@ object Similarity {
     * family (organic 0.82–0.85 at its budgets) is the documented scale
     * path there.
     */
-  def autoLshPlan(
-      n: Long, dim: Int = 64, targetOccupancy: Int = 125): (Int, Int) = {
+  def autoLshPlan(n: Long, dim: Int = 64): (Int, Int) = {
+    val targetOccupancy = 125 // vectors per bucket; n ≤ 2000 stays at (4, 8)
     val buckets = (n + targetOccupancy - 1) / targetOccupancy
     val needed =
       if (buckets <= 1) 0
@@ -298,185 +296,47 @@ object Similarity {
     * capacity planning and specs read the plan instead of re-deriving
     * it.
     */
-  sealed abstract class AnnPlan(val family: String)
-  /** The families with a persisted-index form ([[buildAnnServeIndex]]). */
-  sealed abstract class IndexPlan(family: String) extends AnnPlan(family)
+  sealed trait AnnPlan
   /** [[signLshTopK]] under the joint [[autoLshPlan]]. */
-  final case class SignLsh(planes: Int, tables: Int) extends AnnPlan("sign-lsh")
+  final case class SignLsh(planes: Int, tables: Int) extends AnnPlan
   /** [[signIvfTopK]] at [[autoQuantBits]] lists and [[probeBudget]] probes. */
-  final case class SignIvf(bits: Int, nProbe: Int) extends IndexPlan("sign-ivf")
-  /** [[ivfAdcTopK]] at the sign-IVF budgets plus [[adcCodeBudget]]
-    * codes and an [[autoAdcRerank]] exact rerank.
-    */
-  final case class IvfAdc(bits: Int, nProbe: Int, m: Int, rerank: Int)
-    extends IndexPlan("ivf-adc")
+  final case class SignIvf(bits: Int, nProbe: Int) extends AnnPlan
 
-  /** The ANN plan for `n` corpus vectors of `dim` components under a
-    * per-vector serving-memory budget. Two boundaries decide it:
-    *
-    *  - Memory: a full-precision vector is 4·dim bytes (float32, the
-    *    canonical embedding storage). A memory-bounded deployment (the
-    *    reason PQ exists: serve 100 TB of vectors from RAM-sized
-    *    executors) states its budget in bytes per corpus vector. Below
-    *    4·dim the only family that fits is IVFADC — codes are one byte
-    *    per subquantizer (m bytes/vector, 32× smaller at dim 64 / m 8),
-    *    and the float I/O that remains is the bounded rerank read.
-    *  - Corpus regime, when full vectors fit: sign-LSH inside
-    *    [[lshRegimeMax]], sign-IVF past it — the measured 50× cliff
-    *    (1,055 s vs ~20 s at n = 200 000) that a scaladoc pointer alone
-    *    let callers walk into.
-    *
-    * The default budget holds full vectors. At every oracle-gated scale
-    * (n ≤ 2000) that plan is the pinned SignLsh(4, 8) the q31 oracle
-    * encodes.
+  /** The ANN plan for `n` corpus vectors of `dim` components, decided by
+    * corpus regime: sign-LSH inside [[lshRegimeMax]], sign-IVF past it —
+    * the measured 50× cliff (1,055 s vs ~20 s at n = 200 000) that a
+    * scaladoc pointer alone let callers walk into. At every oracle-gated
+    * scale (n ≤ 2000) the plan is the pinned SignLsh(4, 8) the q31
+    * oracle encodes.
     */
-  def annPlan(n: Long, dim: Int, maxBytesPerVector: Int = Int.MaxValue): AnnPlan = {
-    require(maxBytesPerVector >= 1,
-      s"maxBytesPerVector out of range: $maxBytesPerVector")
-    if (maxBytesPerVector < 4 * dim) {
-      val SignIvf(bits, nProbe) = signIvfPlan(n, dim)
-      IvfAdc(bits, nProbe, adcCodeBudget(dim, maxBytesPerVector), autoAdcRerank(n))
-    } else if (n <= lshRegimeMax(dim)) {
+  def annPlan(n: Long, dim: Int): AnnPlan =
+    if (n <= lshRegimeMax(dim)) {
       val (planes, tables) = autoLshPlan(n, dim)
       SignLsh(planes, tables)
-    } else signIvfPlan(n, dim)
-  }
-
-  private def signIvfPlan(n: Long, dim: Int): SignIvf = {
-    val bits = autoQuantBits(n, dim)
-    SignIvf(bits, probeBudget(bits))
-  }
-
-  /** [[annPlan]] for the persisted-index pair. The LSH regime is
-    * in-flight-only: its "index" would be the hash tables, corpus-sized
-    * in full vectors, and at LSH-regime corpus sizes (n ≤ 1600·dim)
-    * there is nothing to save by persisting. A SignLsh plan is
-    * therefore served from the sign-IVF index at that corpus's sign-IVF
-    * budgets; the other plans are unchanged.
-    */
-  private[operators] def indexPlan(n: Long, dim: Int, maxBytesPerVector: Int): IndexPlan =
-    annPlan(n, dim, maxBytesPerVector) match {
-      case p: IndexPlan => p
-      case _: SignLsh => signIvfPlan(n, dim)
+    } else {
+      val bits = autoQuantBits(n, dim)
+      SignIvf(bits, probeBudget(bits))
     }
 
-  /** ANN top-k under [[annPlan]]: sign-LSH or sign-IVF by corpus regime
-    * when full-precision vectors fit the per-vector memory budget,
-    * IVFADC when they do not. Every family is deterministic sign-test
-    * candidate generation plus exact-cosine ranking, so the result
-    * stays oracle-reproducible whichever plan a corpus lands on.
-    * `corpusCount` lets callers that already know n (or specs pinning
-    * the plan) skip the count job; `checkpointDir` is the durable
-    * truncation option of the sign-IVF and IVFADC families.
+  /** ANN top-k under [[annPlan]]: sign-LSH or sign-IVF by corpus regime.
+    * Both families are deterministic sign-test candidate generation
+    * plus exact-cosine ranking, so the result stays oracle-reproducible
+    * whichever plan a corpus lands on. `corpusCount` lets callers that
+    * already know n (or specs pinning the plan) skip the count job;
+    * `checkpointDir` is the durable truncation option of the sign-IVF
+    * family.
     */
   def annTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int = 64,
-      maxBytesPerVector: Int = Int.MaxValue,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       corpusCount: Long = -1L,
       checkpointDir: Option[String] = None): DataFrame = {
     val n = if (corpusCount >= 0L) corpusCount else corpus.count()
-    annPlan(n, dim, maxBytesPerVector) match {
+    annPlan(n, dim) match {
       case SignLsh(planes, tables) =>
-        signLshTopK(queries, corpus, k, nTables = tables,
-          planesPerTable = planes, idCol = idCol, vecCol = vecCol, dim = dim)
+        signLshTopK(queries, corpus, k, nTables = tables, planesPerTable = planes, dim = dim)
       case SignIvf(bits, nProbe) =>
         signIvfTopK(queries, corpus, k, dim = dim, bits = bits, nProbe = nProbe,
-          idCol = idCol, vecCol = vecCol, checkpointDir = checkpointDir)
-      case IvfAdc(bits, nProbe, m, rerank) =>
-        ivfAdcTopK(queries, corpus, k, dim = dim, bits = bits, nProbe = nProbe,
-          m = m, rerank = rerank, idCol = idCol, vecCol = vecCol,
           checkpointDir = checkpointDir)
-    }
-  }
-
-  /** Subquantizer count the byte budget buys: codes are one byte each,
-    * so m ≤ maxBytesPerVector; m must divide dim (each code covers
-    * w = dim/m components), and more codes = finer quantization — so
-    * take the largest power-of-two divisor of dim inside the budget.
-    * dim 64: budget 8 → m 8 (the pinned catalog geometry, w = 8);
-    * budget 32 → m 32 (w = 2, near-scalar); budget 1 → m 1 (the
-    * loudest compression that still runs). Monotone in the budget.
-    */
-  def adcCodeBudget(dim: Int, maxBytesPerVector: Int): Int = {
-    require(maxBytesPerVector >= 1,
-      s"maxBytesPerVector out of range: $maxBytesPerVector")
-    var m = Integer.highestOneBit(math.min(maxBytesPerVector, dim))
-    while (dim % m != 0) m >>= 1
-    m
-  }
-
-  /** Build the serving index [[annServeFromIndex]] reads, with family
-    * and geometry from the same [[annPlan]] (a SignLsh plan persists as
-    * the sign-IVF index), so the build/serve pair agrees by
-    * construction. Returns the plan built. A deployment that changes
-    * its budget (or whose corpus outgrows its quantizer) rebuilds;
-    * [[annServeFromIndex]]'s geometry check fails loudly on a
-    * budget/index mismatch rather than serving wrong ADC scores.
-    */
-  def buildAnnServeIndex(
-      corpus: DataFrame, path: String, dim: Int, maxBytesPerVector: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      corpusCount: Long = -1L): IndexPlan = {
-    val n = if (corpusCount >= 0L) corpusCount else corpus.count()
-    val plan = indexPlan(n, dim, maxBytesPerVector)
-    plan match {
-      case IvfAdc(bits, _, m, _) =>
-        buildIvfAdcIndex(corpus, path, dim, bits = bits, m = m,
-          idCol = idCol, vecCol = vecCol)
-      case SignIvf(bits, _) =>
-        buildSignIvfIndex(corpus, path, dim, bits = bits,
-          idCol = idCol, vecCol = vecCol)
-    }
-    plan
-  }
-
-  /** Serve ANN top-k under a per-vector memory budget FROM A PERSISTED
-    * index: [[annTopK]] rebuilds its quantizer in-flight on every call
-    * — fine for a pipeline stage, wrong for a deployment, which builds
-    * once ([[buildAnnServeIndex]]) and serves queries against the
-    * stored artifact. A SignIvf plan serves through
-    * [[querySignIvfIndex]] (exact cosine over probed stored lists), an
-    * IvfAdc plan through [[queryIvfAdcIndex]] (compressed-domain ADC
-    * over probed code partitions + bounded float rerank from `vectors`,
-    * the lake table). Each is value-identical to its in-flight
-    * counterpart at the same budgets (the q72/q178 guarantee, inherited
-    * structurally from the query functions it calls).
-    *
-    * `vectors` is the full-precision lake table the index was built
-    * from: the ADC plan reads only its `rerank` survivors per query;
-    * the sign plan never touches it (lists store the vectors). Both
-    * inherit the torn-index batch checks of their query functions;
-    * additionally the ADC plan asserts the stored code width matches
-    * the budget's [[adcCodeBudget]] — a stale index built under a
-    * different budget would otherwise score with a mis-sliced lookup
-    * table.
-    */
-  def annServeFromIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vectors: DataFrame, k: Int, dim: Int,
-      maxBytesPerVector: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      corpusCount: Long = -1L): DataFrame = {
-    val n = if (corpusCount >= 0L) corpusCount else vectors.count()
-    indexPlan(n, dim, maxBytesPerVector) match {
-      case IvfAdc(bits, nProbe, m, rerank) =>
-        // loud geometry check: one partition-pruned row, not a scan
-        val stored = spark.read.parquet(s"$path/codes")
-          .select(size(col("codes")).as("m")).limit(1).collect()
-        stored.headOption.foreach { r =>
-          require(r.getInt(0) == m,
-            s"annServeFromIndex: index at $path stores ${r.getInt(0)} " +
-              s"codes/vector but the $maxBytesPerVector B/vec budget " +
-              s"implies m=$m — rebuild with buildAnnServeIndex under " +
-              "the current budget")
-        }
-        queryIvfAdcIndex(spark, path, queries, vectors, k, dim,
-          bits = bits, nProbe = nProbe, m = m,
-          rerank = rerank, idCol = idCol, vecCol = vecCol)
-      case SignIvf(bits, nProbe) =>
-        querySignIvfIndex(spark, path, queries, k, dim,
-          bits = bits, nProbe = nProbe, idCol = idCol, vecCol = vecCol)
     }
   }
 
@@ -493,10 +353,10 @@ object Similarity {
     * min(16, dim) — quantDims needs dim ≥ bits, and 2^16 lists is
     * already past any corpus this library meets per partition.
     */
-  def autoQuantBits(n: Long, dim: Int, floorBits: Int = 7): Int = {
+  def autoQuantBits(n: Long, dim: Int): Int = {
     val bl = if (n <= 1L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(n - 1) // = ceil(log2 n)
-    math.min(math.max(floorBits, (bl + 1) / 2), math.min(16, dim))
+    math.min(math.max(7, (bl + 1) / 2), math.min(16, dim))
   }
 
   /** Occupancy-scaled exact-rerank budget for the ADC family —
@@ -512,8 +372,8 @@ object Similarity {
     * bits instead. Recall is monotone in rerank (a larger ADC cut is a
     * superset re-ranked exactly), so growing the budget never hurts.
     */
-  def autoAdcRerank(n: Long, floor: Int = 96): Int =
-    math.min(math.max(floor.toLong, n / 100L), 1024L).toInt
+  def autoAdcRerank(n: Long): Int =
+    math.min(math.max(96L, n / 100L), 1024L).toInt
 
   /** Probe budget as a FRACTION of the list count — the 100× sweep's
     * lesson made executable: recall per probed-fraction is ~flat as
@@ -543,7 +403,6 @@ object Similarity {
   def signLshTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nTables: Int = 8, planesPerTable: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64): DataFrame = {
     // table nTables-1 reads components up to nTables*planesPerTable;
     // past the vector's end element_at is an ANSI runtime error (or a
@@ -560,10 +419,10 @@ object Similarity {
     // ~16 GB of vector bytes through two exchanges; this shape moves
     // ~1 GB of ids and re-joins the corpus once.
     def bucketed(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id),
+      df.select(vecId.as(id),
         explode(array((0 until nTables).map { t =>
           struct(lit(t).as("table"),
-            signBucket(col(vecCol),
+            signBucket(embedding,
               (1 to planesPerTable).map(j => t * planesPerTable + j)).as("bucket"))
         }: _*)).as("tb"))
         .select(col(id), col("tb.table"), col("tb.bucket"))
@@ -573,9 +432,9 @@ object Similarity {
       .select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
     val cands = pairIds
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      .join(queries.select(vecId.as("query_id"), embedding.as("qv")),
         Seq("query_id"))
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
+      .join(corpus.select(vecId.as("neighbor_id"), embedding.as("cv")),
         Seq("neighbor_id"))
       .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv")))
     rankTopK(cands, k)
@@ -613,10 +472,9 @@ object Similarity {
     * corpus.
     */
   def signListCentroidSums(
-      corpus: DataFrame, dims: Seq[Int],
-      vecCol: String = "embedding"): DataFrame =
-    corpus.select(signBucket(col(vecCol), dims).as("list_id"),
-        posexplode(col(vecCol)).as(Seq("pos", "v")))
+      corpus: DataFrame, dims: Seq[Int]): DataFrame =
+    corpus.select(signBucket(embedding, dims).as("list_id"),
+        posexplode(embedding).as(Seq("pos", "v")))
       .groupBy(col("list_id"), col("pos"))
       .agg(sum(scaled(col("v"))).as("s"),
         count(lit(1)).as("cnt"))
@@ -673,9 +531,8 @@ object Similarity {
     * is the final per-(query, list) count.
     */
   private def centroidProbe(
-      queries: DataFrame, cents: DataFrame, nProbe: Int,
-      idCol: String, vecCol: String, withQv: Boolean = true): DataFrame = {
-    val ranks = centroidProbeRanks(queries, cents, idCol, vecCol, withQv)
+      queries: DataFrame, cents: DataFrame, nProbe: Int, withQv: Boolean = true): DataFrame = {
+    val ranks = centroidProbeRanks(queries, cents, withQv)
       .filter(col("nbetter") < nProbe)
     if (withQv) ranks.select(col("query_id"), col("qv"), col("list_id"))
     else ranks.select(col("query_id"), col("list_id"), col("s2"))
@@ -698,7 +555,7 @@ object Similarity {
     * serve. The ADC paths never read `qv` from the probe, so the
     * attach join was pure overhead there.
     *
-    * CONTRACT (r17, ADVICE r16): `idCol` values must be UNIQUE in
+    * CONTRACT (r17, ADVICE r16): `vec_id` values must be UNIQUE in
     * `queries` — s2 is functionally dependent on (query_id, list_id)
     * only then. Duplicate ids with different vectors would carry
     * distinct s2 values into the grouping key and split their
@@ -708,10 +565,9 @@ object Similarity {
     * caller with non-unique ids must dedupe first.
     */
   private def centroidProbeRanks(
-      queries: DataFrame, cents: DataFrame,
-      idCol: String, vecCol: String, withQv: Boolean = true): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      scaledVec(col(vecCol)).as("qi"))
+      queries: DataFrame, cents: DataFrame, withQv: Boolean = true): DataFrame = {
+    val q = queries.select(vecId.as("query_id"), embedding.as("qv"),
+      scaledVec(embedding).as("qi"))
     // Loud domain guard: the exact comparisons below live in
     // DECIMAL(12,0), which holds because |v| < 1 keeps |s2| and t2
     // under dim·scale² ≈ 6.4e9. Unnormalized embeddings would breach
@@ -784,11 +640,10 @@ object Similarity {
   def signIvfTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       bits: Int = 7, nProbe: Int = 48,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       checkpointDir: Option[String] = None): DataFrame = {
     val dims = quantDims(dim, bits)
-    val lists = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"),
-      signBucket(col(vecCol), dims).as("list_id"))
+    val lists = corpus.select(vecId.as("neighbor_id"), embedding.as("cv2"),
+      signBucket(embedding, dims).as("list_id"))
     // materialize the ≤2^bits-row centroid table: the probe's pairwise
     // rank references it on BOTH sides of its self-join, and without
     // truncation each side re-runs the corpus-sized sum aggregation —
@@ -798,10 +653,10 @@ object Similarity {
     // package's usual durable-truncation option; the snapshot backs
     // the returned frame (caller/TTL frees it).
     val cents = DurableSnapshots.truncate(
-      signListCentroids(signListCentroidSums(corpus, dims, vecCol)),
+      signListCentroids(signListCentroidSums(corpus, dims)),
       checkpointDir, "probe_centroids")
     rankSignCandidates(lists,
-      centroidProbe(queries, cents, nProbe, idCol, vecCol), k)
+      centroidProbe(queries, cents, nProbe), k)
   }
 
   /** Persist the sign-quantizer IVF index: corpus parquet PARTITIONED
@@ -815,8 +670,7 @@ object Similarity {
     * [[BatchedIndex.buildBatchId]] generation, appends any other.
     */
   def buildSignIvfIndex(
-      corpus: DataFrame, path: String, dim: Int, bits: Int = 7,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      corpus: DataFrame, path: String, dim: Int, bits: Int = 7): Unit = {
     // a rebuild supersedes every prior generation INCLUDING append
     // batches: writing only its own batch_id=base subdir would leave
     // stale batch_id=<id> directories mixing an old corpus into the
@@ -825,8 +679,8 @@ object Similarity {
     DurableSnapshots.delete(corpus, s"$path/centroid_sums")
     // concurrent independent writes (r16, [[BatchedIndex.inParallel]])
     BatchedIndex.inParallel(
-      corpus.select(col(idCol), col(vecCol),
-        signBucket(col(vecCol), quantDims(dim, bits)).as("list_id"))
+      corpus.select(vecId, embedding,
+        signBucket(embedding, quantDims(dim, bits)).as("list_id"))
         // pre-shuffle on the partition key: an unshuffled partitionBy
         // write mints (write tasks × 2^bits) small files — at 1000
         // executors that is the classic small-files explosion. After the
@@ -840,7 +694,7 @@ object Similarity {
         .repartition(BatchedIndex.writeWidth(corpus.sparkSession, 1 << bits), col("list_id"))
         .write.mode("overwrite")
         .partitionBy("list_id").parquet(s"$path/lists/batch_id=${BatchedIndex.buildBatchId}"),
-      signListCentroidSums(corpus, quantDims(dim, bits), vecCol)
+      signListCentroidSums(corpus, quantDims(dim, bits))
         .coalesce(1) // ≤ 2^bits·dim tiny rows — one file, no shuffle
         .write.mode("overwrite")
         .parquet(s"$path/centroid_sums/batch_id=${BatchedIndex.buildBatchId}"))
@@ -860,13 +714,12 @@ object Similarity {
     * [[PartitionedLake.compact]] is the companion pass when they do.
     */
   def appendSignIvfIndex(
-      batch: DataFrame, path: String, batchId: String, dim: Int, bits: Int = 7,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      batch: DataFrame, path: String, batchId: String, dim: Int, bits: Int = 7): Unit = {
     BatchedIndex.requireBatchId(batchId)
     // concurrent independent writes (r16, [[BatchedIndex.inParallel]])
     BatchedIndex.inParallel(
-      batch.select(col(idCol), col(vecCol),
-        signBucket(col(vecCol), quantDims(dim, bits)).as("list_id"))
+      batch.select(vecId, embedding,
+        signBucket(embedding, quantDims(dim, bits)).as("list_id"))
         // ≤2^bits new files per batch, not per (task × list); explicit
         // count so AQE can't coalesce the exchange to one sequential
         // writer task (see buildSignIvfIndex); width capped by the
@@ -885,7 +738,7 @@ object Similarity {
       // double-appending rows, and no window ever leaves the index
       // without a durable sums copy. Caller contract: batch ids are
       // unique per logical batch (reusing one replaces that batch).
-      signListCentroidSums(batch, quantDims(dim, bits), vecCol)
+      signListCentroidSums(batch, quantDims(dim, bits))
         .coalesce(1) // ≤ 2^bits·dim tiny rows — one file
         .write.mode("overwrite").parquet(s"$path/centroid_sums/batch_id=$batchId"))
   }
@@ -899,18 +752,17 @@ object Similarity {
     */
   def querySignIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int, dim: Int, bits: Int = 7, nProbe: Int = 48,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      queries: DataFrame, k: Int, dim: Int, bits: Int = 7, nProbe: Int = 48): DataFrame = {
     // loud torn-append/compaction detection before any data is read —
     // a lists generation without its sums shard (or vice versa) would
     // otherwise serve silently-shifted probes (r10; pure dir listing)
     BatchedIndex.assertConsistentBatches(spark, s"$path/lists", s"$path/centroid_sums")
     val lists = spark.read.parquet(s"$path/lists")
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"), col("list_id"))
+      .select(vecId.as("neighbor_id"), embedding.as("cv2"), col("list_id"))
     val cents = signListCentroids(BatchedIndex.foldSums(
       spark.read.parquet(s"$path/centroid_sums"), Seq("list_id", "pos")))
     rankSignCandidates(lists,
-      centroidProbe(queries, cents, nProbe, idCol, vecCol), k)
+      centroidProbe(queries, cents, nProbe), k)
   }
 
   /** Contiguous sub-vector blocks for product quantization: `m` blocks
@@ -969,12 +821,11 @@ object Similarity {
     * codebook.
     */
   private[graft] def pqQueryTable(
-      queries: DataFrame, codebook: DataFrame, dim: Int, m: Int,
-      idCol: String, vecCol: String): DataFrame = {
+      queries: DataFrame, codebook: DataFrame, dim: Int, m: Int): DataFrame = {
     val w = dim / m
     queries
-      .select(col(idCol).as("query_id"),
-        posexplode(col(vecCol)).as(Seq("p0", "x")))
+      .select(vecId.as("query_id"),
+        posexplode(embedding).as(Seq("p0", "x")))
       .select(col("query_id"),
         (col("p0") / w).cast("int").as("sub"), (col("p0") % w + 1).as("pp"),
         scaled(col("x")).as("qx"))
@@ -1032,7 +883,7 @@ object Similarity {
     */
   private def adcRerank(
       pairsScored: DataFrame, queries: DataFrame, corpusC: DataFrame,
-      k: Int, rerank: Int, idCol: String, vecCol: String): DataFrame = {
+      k: Int, rerank: Int): DataFrame = {
     // bounded top-`rerank` aggregate instead of a row_number window:
     // the ADC cut's input is the full scored candidate relation (the
     // EXHAUSTIVE scan's is |Q|·n — 800 M pairs at the sf10 sweep
@@ -1047,7 +898,7 @@ object Similarity {
       .select(col("query_id"), explode(col("top")).as("t"))
       .select(col("query_id"), col("t.i").as("neighbor_id"))
     rankTopK(survivors
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), Seq("query_id"))
+      .join(queries.select(vecId.as("query_id"), embedding.as("qv")), Seq("query_id"))
       .join(corpusC, Seq("neighbor_id"))
       .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv2"))), k)
   }
@@ -1079,13 +930,12 @@ object Similarity {
   def pqAdcTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       m: Int = 8, rerank: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       corpusCount: Long = -1L): DataFrame = {
     val w = dim / m
-    val corpusC = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"))
+    val corpusC = corpus.select(vecId.as("neighbor_id"), embedding.as("cv2"))
     val codeRows = pqCodeRows(corpusC, dim, m)
     val luts = pqLuts(
-      pqQueryTable(queries, pqCodebook(codeRows), dim, m, idCol, vecCol), m, w)
+      pqQueryTable(queries, pqCodebook(codeRows), dim, m), m, w)
     // narrow compressed-domain scan: one kernel call scores each pair,
     // so only (query_id, neighbor_id, adc) ever reaches the ranking
     // exchange. The previous (sub, code)-keyed join + m-row
@@ -1099,7 +949,7 @@ object Similarity {
     // scan's row count (no code evaluation), one lightweight job
     val n = if (corpusCount >= 0L) corpusCount else corpusC.count()
     adcRerank(adcScan(codesPacked, luts, w, m, n, rerank),
-      queries, corpusC, k, rerank, idCol, vecCol)
+      queries, corpusC, k, rerank)
   }
 
   /** Byte budget below which the packed-codes side of the exhaustive
@@ -1265,16 +1115,15 @@ object Similarity {
     * sums-merge the sign-IVF index uses; no retraining.
     */
   def buildPqIndex(
-      corpus: DataFrame, path: String, dim: Int, m: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      corpus: DataFrame, path: String, dim: Int, m: Int = 8): Unit = {
     val blocks = pqBlocks(dim, m)
     // concurrent independent writes (r16, [[BatchedIndex.inParallel]])
     BatchedIndex.inParallel(
-      corpus.select(col(idCol).as("neighbor_id"),
-          array(blocks.map(b => signBucket(col(vecCol), b)): _*).as("codes"))
+      corpus.select(vecId.as("neighbor_id"),
+          array(blocks.map(b => signBucket(embedding, b)): _*).as("codes"))
         .write.mode("overwrite").parquet(s"$path/codes"),
       pqCodebook(pqCodeRows(
-          corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")), dim, m))
+          corpus.select(vecId.as("neighbor_id"), embedding.as("cv2")), dim, m))
         .coalesce(1) // ≤ m·2^(dim/m)·(dim/m) tiny rows — one file
         .write.mode("overwrite").parquet(s"$path/codebook"))
   }
@@ -1288,23 +1137,19 @@ object Similarity {
   def queryPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, vectors: DataFrame, k: Int, dim: Int,
-      m: Int = 8, rerank: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      codesCount: Long = -1L): DataFrame = {
+      m: Int = 8, rerank: Int = 64): DataFrame = {
     val w = dim / m
     val luts = pqLuts(
       pqQueryTable(queries, spark.read.parquet(s"$path/codebook"),
-        dim, m, idCol, vecCol), m, w)
+        dim, m), m, w)
     // the stored codes are already packed (codes[j] = block j): the
-    // same loop-order-dispatched kernel scan as [[pqAdcTopK]]. The
-    // dispatch count comes from the caller when known; the fallback is
-    // a parquet-footer row count on the bare index scan (ADVICE r14)
+    // same loop-order-dispatched kernel scan as [[pqAdcTopK]], its
+    // dispatch count a parquet-footer row count on the bare index scan
     val codes = spark.read.parquet(s"$path/codes")
-    val n = if (codesCount >= 0L) codesCount else codes.count()
-    val adc = adcScan(codes, luts, w, m, n, rerank)
+    val adc = adcScan(codes, luts, w, m, codes.count(), rerank)
     adcRerank(adc, queries,
-      vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
-      k, rerank, idCol, vecCol)
+      vectors.select(vecId.as("neighbor_id"), embedding.as("cv2")),
+      k, rerank)
   }
 
   /** Persist the full IVFADC serving index — the FAISS on-disk shape:
@@ -1320,15 +1165,14 @@ object Similarity {
     * in-flight is driver-checked — the q72/q176 pattern).
     */
   def buildIvfAdcIndex(
-      corpus: DataFrame, path: String, dim: Int, bits: Int = 7, m: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      corpus: DataFrame, path: String, dim: Int, bits: Int = 7, m: Int = 8): Unit = {
     val spark = corpus.sparkSession
     val dims = quantDims(dim, bits)
     // a rebuild supersedes every prior generation INCLUDING append
     // batches (see buildSignIvfIndex)
     DurableSnapshots.delete(corpus, s"$path/codes")
     DurableSnapshots.delete(corpus, s"$path/codebook_sums")
-    listCentroidVectors(signListCentroidSums(corpus, dims, vecCol))
+    listCentroidVectors(signListCentroidSums(corpus, dims))
       .coalesce(1) // ≤ 2^bits tiny rows — one file
       .write.mode("overwrite").parquet(s"$path/centroids")
     // residual-encode against the STORED centroids (the same table
@@ -1339,8 +1183,8 @@ object Similarity {
     // centroid join + residual encode; bounded scope, so the blocks
     // free deterministically in the finally
     val corpusR = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"),
-        signBucket(col(vecCol), dims).as("list_id"))
+      .select(vecId.as("neighbor_id"), embedding.as("cv2"),
+        signBucket(embedding, dims).as("list_id"))
       .join(broadcast(lvecs), Seq("list_id"))
       .select(col("neighbor_id"), col("list_id"),
         residual(col("cv2"), col("mvec")).as("rv"))
@@ -1391,8 +1235,7 @@ object Similarity {
     */
   def appendIvfAdcIndex(
       batch: DataFrame, path: String, batchId: String,
-      dim: Int, bits: Int = 7, m: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      dim: Int, bits: Int = 7, m: Int = 8): Unit = {
     BatchedIndex.requireBatchId(batchId)
     val spark = batch.sparkSession
     val dims = quantDims(dim, bits)
@@ -1400,8 +1243,8 @@ object Similarity {
     val zeroVec = array((1 to dim).map(_ => lit(0L)): _*)
     // persisted across codes-append + sums-merge (see buildIvfAdcIndex)
     val batchR = batch
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"),
-        signBucket(col(vecCol), dims).as("list_id"))
+      .select(vecId.as("neighbor_id"), embedding.as("cv2"),
+        signBucket(embedding, dims).as("list_id"))
       .join(broadcast(lvecs), Seq("list_id"), "left")
       .select(col("neighbor_id"), col("list_id"),
         residual(col("cv2"), coalesce(col("mvec"), zeroVec)).as("rv"))
@@ -1498,8 +1341,7 @@ object Similarity {
   def queryIvfAdcIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, vectors: DataFrame, k: Int, dim: Int,
-      bits: Int = 7, nProbe: Int = 48, m: Int = 8, rerank: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      bits: Int = 7, nProbe: Int = 48, m: Int = 8, rerank: Int = 64): DataFrame = {
     // loud torn-append/compaction detection (r10): a codes generation
     // without its codebook-sums shard would serve silently-shifted ADC
     // scores — fail naming the recovery instead (pure dir listing)
@@ -1512,8 +1354,8 @@ object Similarity {
       signListCentroidsFromVectors(spark.read.parquet(s"$path/centroids")),
       residualCodebookFromSums(BatchedIndex.foldSums(
         spark.read.parquet(s"$path/codebook_sums"), Seq("sub", "code", "pp"))),
-      vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
-      k, dim, nProbe, m, rerank, idCol, vecCol)
+      vectors.select(vecId.as("neighbor_id"), embedding.as("cv2")),
+      k, dim, nProbe, m, rerank)
   }
 
   /** The probed-ADC serving tail of [[ivfAdcTopK]] and
@@ -1543,11 +1385,9 @@ object Similarity {
     */
   private def probedAdcTopK(
       queries: DataFrame, codes: DataFrame, cents: DataFrame, codebook: DataFrame,
-      floats: DataFrame, k: Int, dim: Int, nProbe: Int, m: Int, rerank: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val sc = pqQueryTable(queries, codebook, dim, m, idCol, vecCol)
-    val listConst = centroidProbe(queries, cents, nProbe, idCol, vecCol,
-        withQv = false)
+      floats: DataFrame, k: Int, dim: Int, nProbe: Int, m: Int, rerank: Int): DataFrame = {
+    val sc = pqQueryTable(queries, codebook, dim, m)
+    val listConst = centroidProbe(queries, cents, nProbe, withQv = false)
       .select(col("query_id"), col("list_id"), col("s2").as("lc"))
     val w = dim / m
     val luts = pqLuts(sc, m, w)
@@ -1558,7 +1398,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         (GraftFunctions.adcLookupSum(col("codes"), col("lut"), w) + col("lc"))
           .as("adc"))
-    adcRerank(adc, queries, floats, k, rerank, idCol, vecCol)
+    adcRerank(adc, queries, floats, k, rerank)
   }
 
   /** IVFADC — the FAISS-default composition: the sign-IVF centroid
@@ -1592,17 +1432,16 @@ object Similarity {
   def ivfAdcTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       bits: Int = 7, nProbe: Int = 48, m: Int = 8, rerank: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       checkpointDir: Option[String] = None): DataFrame = {
     val dims = quantDims(dim, bits)
-    val corpusC = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"),
-      signBucket(col(vecCol), dims).as("list_id"))
+    val corpusC = corpus.select(vecId.as("neighbor_id"), embedding.as("cv2"),
+      signBucket(embedding, dims).as("list_id"))
     // One corpus pass builds the per-list centroid VECTORS (≤ 2^bits
     // rows), materialized once: the probe references it on both sides
     // of its pairwise rank, and residual encoding joins it into every
     // corpus row.
     val lvecs = DurableSnapshots.truncate(
-      listCentroidVectors(signListCentroidSums(corpus, dims, vecCol)),
+      listCentroidVectors(signListCentroidSums(corpus, dims)),
       checkpointDir, "ivfadc_centroids")
     val cents = signListCentroidsFromVectors(lvecs)
     // integer residuals: rv = ⌊v·scale⌋ − centroid(list(v))
@@ -1622,7 +1461,7 @@ object Similarity {
       residualCodeRows(corpusR, dim, m), checkpointDir, "ivfadc_codes")
     probedAdcTopK(queries, packCodes(codeRows), cents, residualCodebook(codeRows),
       corpusC.select(col("neighbor_id"), col("cv2")),
-      k, dim, nProbe, m, rerank, idCol, vecCol)
+      k, dim, nProbe, m, rerank)
   }
 
   /** [[pqCodeRows]] for integer RESIDUAL vectors: one row per corpus
@@ -1676,7 +1515,6 @@ object Similarity {
   def recallProbeCurve(
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       bits: Int, probeGrid: Seq[Int], m: Int = 8, rerank: Int = 96,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       checkpointDir: Option[String] = None,
       maxQueries: Option[Int] = None): DataFrame = {
     require(probeGrid.nonEmpty, "probeGrid must not be empty")
@@ -1688,21 +1526,21 @@ object Similarity {
         // list-constant subtrees, and each reference would re-run the
         // sort-limit otherwise
         DurableSnapshots.truncate(
-          queries.orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(mq),
+          queries.orderBy(md5(vecId.cast("string")), vecId).limit(mq),
           checkpointDir, "recall_qsample")
       case None => queries
     }
     val queriesS = qIn
     val maxP = probeGrid.max
     val dims = quantDims(dim, bits)
-    val corpusC = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2"),
-      signBucket(col(vecCol), dims).as("list_id"))
+    val corpusC = corpus.select(vecId.as("neighbor_id"), embedding.as("cv2"),
+      signBucket(embedding, dims).as("list_id"))
     val lvecs = DurableSnapshots.truncate(
-      listCentroidVectors(signListCentroidSums(corpus, dims, vecCol)),
+      listCentroidVectors(signListCentroidSums(corpus, dims)),
       checkpointDir, "recall_centroids")
     val cents = signListCentroidsFromVectors(lvecs)
     val ranks = DurableSnapshots.truncate(
-      centroidProbeRanks(queriesS, cents, idCol, vecCol)
+      centroidProbeRanks(queriesS, cents)
         .filter(col("nbetter") < maxP),
       checkpointDir, "recall_ranks")
     // widest-budget candidate pool, exact cosine attached ONCE
@@ -1713,7 +1551,7 @@ object Similarity {
           VectorFunctions.cosine(col("qv"), col("cv2")).as("cosine")),
       checkpointDir, "recall_cands")
     val truth = DurableSnapshots.truncate(
-      bruteForceTopK(queriesS, corpus, k, idCol, vecCol)
+      bruteForceTopK(queriesS, corpus, k)
         .select(col("query_id"), col("neighbor_id")),
       checkpointDir, "recall_truth")
     // residual ADC scores over the widest pool (also nProbe-independent)
@@ -1723,7 +1561,7 @@ object Similarity {
         residual(col("cv2"), col("mvec")).as("rv"))
     val codeRows = DurableSnapshots.truncate(
       residualCodeRows(corpusR, dim, m), checkpointDir, "recall_codes")
-    val sc = pqQueryTable(queriesS, residualCodebook(codeRows), dim, m, idCol, vecCol)
+    val sc = pqQueryTable(queriesS, residualCodebook(codeRows), dim, m)
     // lc rides out of the probe as s2 (r16, [[centroidProbeRanks]]) —
     // the materialized ranks snapshot already carries it per
     // (query, list), so the qi ⋈ centroid-vectors re-derivation is gone
@@ -1865,8 +1703,7 @@ object Similarity {
     * queries-sized frame (never corpus volume).
     */
   def evalQuerySample(
-      queries: DataFrame, cap: Int = 4096,
-      idCol: String = "vec_id"): DataFrame = {
+      queries: DataFrame, cap: Int = 4096): DataFrame = {
     require(cap > 0, s"evalQuerySample: cap must be positive (got $cap)")
     // decide the identity branch from a cap+1-row probe, not a full
     // count (ADVICE r15): the common ≤cap case — every gated scale —
@@ -1875,6 +1712,6 @@ object Similarity {
     // limit(cap+1) terminates the scan as soon as cap+1 rows exist,
     // and the branch taken is identical for any |Q|.
     if (queries.limit(cap + 1).count() <= cap) queries
-    else queries.orderBy(xxhash64(col(idCol)), col(idCol)).limit(cap)
+    else queries.orderBy(xxhash64(vecId), vecId).limit(cap)
   }
 }

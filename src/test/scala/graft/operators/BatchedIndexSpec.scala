@@ -12,9 +12,14 @@ class BatchedIndexSpec extends SparkSpec {
   test("crash between swapDir's renames recovers via recoverDir AND via re-running the pass (ADVICE r10)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_swap_crash").toString
     val tbl = s"$dir/t"
-    spark.range(10).selectExpr("id AS v").write.parquet(s"$tbl/batch_id=base")
-    spark.range(10, 15).selectExpr("id AS v").write.parquet(s"$tbl/batch_id=b1")
-    BatchedIndex.compactTable(spark, tbl)
+    // a list-partitioned table, the layout of an IVFADC index's codes
+    def write(lo: Long, hi: Long, gen: String): Unit =
+      spark.range(lo, hi).selectExpr("id AS v", "id % 3 AS list_id")
+        .write.partitionBy("list_id").parquet(s"$tbl/batch_id=$gen")
+    def compact(): Unit = BatchedIndex.compactTable(spark, tbl, partitionCol = Some(("list_id", 3)))
+    write(0, 10, "base")
+    write(10, 15, "b1")
+    compact()
     val before = spark.read.parquet(tbl).orderBy("v").collect().toSeq
     val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -31,7 +36,7 @@ class BatchedIndexSpec extends SparkSpec {
     assert(fs.rename(new Path(tbl), new Path(tbl + "__old")))
     spark.range(3).selectExpr("id AS v")
       .write.parquet(s"${tbl}__compact/batch_id=base")
-    BatchedIndex.compactTable(spark, tbl)
+    compact()
     assert(spark.read.parquet(tbl).orderBy("v").collect().toSeq === before)
 
     // window 2: table PRESENT plus a stale aside (crash after the
@@ -41,7 +46,7 @@ class BatchedIndexSpec extends SparkSpec {
       .write.parquet(s"${tbl}__old/batch_id=base")
     BatchedIndex.recoverDir(spark, tbl)
     assert(spark.read.parquet(tbl).orderBy("v").collect().toSeq === before)
-    BatchedIndex.compactTable(spark, tbl) // swapDir path tolerates it too
+    compact() // swapDir path tolerates it too
     assert(spark.read.parquet(tbl).orderBy("v").collect().toSeq === before)
   }
 }

@@ -110,36 +110,19 @@ class DegenerateInputsSpec extends SparkSpec {
     assert(out.head.getAs[Long]("neighbor_id") === 1L)
   }
 
-  // ---- serving-budget dispatcher (VERDICT r12 #6) ---------------------
+  // ---- IVFADC -------------------------------------------------------
 
-  test("adcCodeBudget: non-power-of-two dims — largest pow2 divisor inside the budget") {
-    import Similarity.adcCodeBudget
-    // dim 48 = 16·3: pow2 divisors {1,2,4,8,16}
-    assert(adcCodeBudget(48, 1) === 1)
-    assert(adcCodeBudget(48, 1000) === 16) // budget past dim caps at 16
-    assert(adcCodeBudget(48, 12) === 8)    // 12 → pow2 8, divides 48
-    // dim 20 = 4·5: pow2 divisors {1,2,4}
-    assert(adcCodeBudget(20, 1) === 1)
-    assert(adcCodeBudget(20, 1000) === 4)
-    assert(adcCodeBudget(20, 3) === 2)
-    // every result divides dim and fits the budget (the invariant
-    // pqBlocks requires)
-    for (dim <- Seq(20, 48, 64); b <- Seq(1, 2, 3, 5, 8, 100)) {
-      val m = adcCodeBudget(dim, b)
-      assert(dim % m === 0 && m <= math.max(1, math.min(b, dim)),
-        s"dim=$dim budget=$b m=$m")
+  test("ivfAdcTopK: empty and one-vector corpus at the auto budgets") {
+    import Similarity.{autoAdcRerank, autoQuantBits, ivfAdcTopK, probeBudget}
+    def adc(q: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) = {
+      val n = c.count()
+      val bits = autoQuantBits(n, 64)
+      ivfAdcTopK(q, c, k = 3, dim = 64, bits = bits, nProbe = probeBudget(bits),
+        m = 8, rerank = autoAdcRerank(n))
     }
-  }
-
-  test("annTopK: empty and single-vector corpus under a tight budget " +
-    "→ empty / the one neighbor, no failure") {
     val q = vecDf(Seq((100L, Seq.fill(64)(1.0f))))
-    val empty = vecDf(Seq.empty)
-    assert(Similarity.annTopK(q, empty, k = 3, dim = 64,
-      maxBytesPerVector = 8).count() === 0L)
-    val c = vecDf(Seq((1L, Seq.fill(64)(0.5f))))
-    val out = Similarity.annTopK(q, c, k = 3, dim = 64,
-      maxBytesPerVector = 8).collect()
+    assert(adc(q, vecDf(Seq.empty)).count() === 0L)
+    val out = adc(q, vecDf(Seq((1L, Seq.fill(64)(0.5f))))).collect()
     assert(out.length === 1)
     assert(out.head.getAs[Long]("query_id") === 100L)
     assert(out.head.getAs[Long]("neighbor_id") === 1L)

@@ -209,7 +209,7 @@ class SimilaritySpec extends SparkSpec {
     val luts = Similarity.pqLuts(
       Similarity.pqQueryTable(q,
         Similarity.pqCodebook(Similarity.pqCodeRows(corpusC, dim, m)),
-        dim, m, "vec_id", "embedding"), m, w)
+        dim, m), m, w)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val single = rows(Similarity.adcScanBlocked(codes, luts, w, m, 8))
@@ -747,13 +747,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   // annPlan's grid: both sides of the dim-64 regime boundary
-  // (1600·64 = 102 400), dims with and without a power-of-two code
-  // count, and budgets on both sides of full precision (4·dim bytes)
+  // (1600·64 = 102 400), at dims with and without a power of two
   private val planGrid = for {
     n <- Seq(1L, 2000L, 102400L, 102401L, 200000L)
     dim <- Seq(16, 48, 64)
-    budget <- Seq(1, 8, 4 * dim - 1, 4 * dim)
-  } yield (n, dim, budget)
+  } yield (n, dim)
 
   test("annTopK: dispatch boundary pinned; each route ≡ its family called directly (VERDICT r10 #1)") {
     import Similarity.{annPlan, autoLshPlan, autoQuantBits, lshRegimeMax, probeBudget, SignIvf, SignLsh}
@@ -767,9 +765,8 @@ class SimilaritySpec extends SparkSpec {
       .forall(annPlan(_, 64).isInstanceOf[SignIvf]))
     // fewer dims = a tighter dim wall = an earlier boundary
     assert(annPlan(30000L, 16).isInstanceOf[SignIvf])
-    // full-precision budgets (and the default): the regime plan carries
-    // exactly the auto budgets
-    for ((n, dim, budget) <- planGrid if budget >= 4 * dim) {
+    // the regime plan carries exactly the auto budgets
+    for ((n, dim) <- planGrid) {
       val expected =
         if (n <= lshRegimeMax(dim)) {
           val (planes, tables) = autoLshPlan(n, dim)
@@ -778,8 +775,7 @@ class SimilaritySpec extends SparkSpec {
           val bits = autoQuantBits(n, dim)
           SignIvf(bits, probeBudget(bits))
         }
-      assert(annPlan(n, dim, budget) === expected, s"n=$n dim=$dim budget=$budget")
-      assert(annPlan(n, dim) === expected, s"n=$n dim=$dim default budget")
+      assert(annPlan(n, dim) === expected, s"n=$n dim=$dim")
     }
     val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter($"vec_id" % 50 === 0)
@@ -799,101 +795,5 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().toSeq
     assert(Similarity.annTopK(q, e, k = 5, dim = 64, corpusCount = bigN)
       .orderBy("query_id", "rank").collect().toSeq === ivf)
-  }
-
-  test("annTopK: memory-budget route pinned; each route ≡ its family (VERDICT r11 #6)") {
-    import Similarity.{annPlan, adcCodeBudget, autoAdcRerank, autoQuantBits, probeBudget, IvfAdc, SignIvf, SignLsh}
-    // boundary: 4·dim bytes = full-precision float32 vectors fit →
-    // the regime-dispatched exact-rank families; below it only the
-    // byte-coded IVFADC index fits the budget
-    assert(annPlan(2000L, 64, 256).isInstanceOf[SignLsh])   // full floats, in-regime
-    assert(annPlan(200000L, 64, 256).isInstanceOf[SignIvf]) // full floats, past-regime
-    assert(Seq(255, 64, 8, 1)
-      .forall(annPlan(200000L, 64, _).isInstanceOf[IvfAdc])) // budget-bound
-    assert(annPlan(2000L, 64, 8).isInstanceOf[IvfAdc])      // tight budget beats regime
-    // below full precision: IVFADC carrying exactly the auto budgets
-    for ((n, dim, budget) <- planGrid if budget < 4 * dim) {
-      val bits = autoQuantBits(n, dim)
-      assert(annPlan(n, dim, budget) === IvfAdc(bits, probeBudget(bits),
-        adcCodeBudget(dim, budget), autoAdcRerank(n)), s"n=$n dim=$dim budget=$budget")
-    }
-    // the byte budget → subquantizer count: largest pow2 divisor of dim
-    assert(adcCodeBudget(64, 8) === 8)    // the pinned catalog geometry
-    assert(adcCodeBudget(64, 32) === 32)  // w = 2, near-scalar
-    assert(adcCodeBudget(64, 1) === 1)
-    assert(adcCodeBudget(64, 1000) === 64) // budget past dim caps at dim
-    assert(adcCodeBudget(48, 13) === 8)   // 13 → pow2 8 divides 48
-    val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val q = e.filter($"vec_id" % 50 === 0)
-    val n = e.count()
-    // roomy budget: exactly annTopK (the regime dispatcher)
-    val viaAnn = Similarity.annTopK(q, e, k = 5, dim = 64, corpusCount = n)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(Similarity.annTopK(q, e, k = 5, dim = 64,
-        maxBytesPerVector = 4 * 64)
-      .orderBy("query_id", "rank").collect().toSeq === viaAnn)
-    // tight budget: exactly ivfAdcTopK at the auto budgets
-    val bits = Similarity.autoQuantBits(n, 64)
-    val adc = Similarity.ivfAdcTopK(q, e, k = 5, dim = 64, bits = bits,
-        nProbe = Similarity.probeBudget(bits), m = 8,
-        rerank = Similarity.autoAdcRerank(n))
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(Similarity.annTopK(q, e, k = 5, dim = 64,
-        maxBytesPerVector = 8)
-      .orderBy("query_id", "rank").collect().toSeq === adc)
-  }
-
-  test("annServeFromIndex: persisted-index serving ≡ in-flight, both routes (VERDICT r12 #4)") {
-    import Similarity.{annPlan, autoAdcRerank, autoQuantBits, indexPlan, probeBudget, IvfAdc, SignIvf, SignLsh}
-    // plan: only two families have an on-disk form — full-precision
-    // budgets collapse to the sign-IVF index (the LSH regime is
-    // in-flight-only); the compressed plan is the in-flight one
-    assert(indexPlan(2000L, 64, 256).isInstanceOf[SignIvf])
-    assert(indexPlan(200000L, 64, 256).isInstanceOf[SignIvf])
-    assert(indexPlan(2000L, 64, 8).isInstanceOf[IvfAdc])
-    assert(indexPlan(200000L, 64, 255).isInstanceOf[IvfAdc])
-    for ((gn, dim, budget) <- planGrid) {
-      val inFlight = annPlan(gn, dim, budget) match {
-        case _: SignLsh =>
-          val bits = autoQuantBits(gn, dim)
-          SignIvf(bits, probeBudget(bits))
-        case p => p
-      }
-      assert(indexPlan(gn, dim, budget) === inFlight, s"n=$gn dim=$dim budget=$budget")
-    }
-    val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val q = e.filter($"vec_id" % 50 === 0)
-    val n = e.count()
-    val bits = autoQuantBits(n, 64)
-    // sign route: build under a roomy budget, serve ≡ the same-family
-    // in-flight form at the same auto budgets
-    val dirS = java.nio.file.Files.createTempDirectory("graft_serveidx_s").toString
-    assert(Similarity.buildAnnServeIndex(e, dirS, dim = 64,
-      maxBytesPerVector = 256) === SignIvf(bits, probeBudget(bits)))
-    val servedS = Similarity.annServeFromIndex(spark, dirS, q, e, k = 5,
-        dim = 64, maxBytesPerVector = 256)
-      .orderBy("query_id", "rank").collect().toSeq
-    val inflightS = Similarity.signIvfTopK(q, e, k = 5, dim = 64,
-        bits = bits, nProbe = Similarity.probeBudget(bits))
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(servedS === inflightS)
-    // ADC route: tight budget, serve ≡ ivfAdcTopK at the same autos
-    // (which is also what in-flight annTopK runs at this budget)
-    val dirA = java.nio.file.Files.createTempDirectory("graft_serveidx_a").toString
-    assert(Similarity.buildAnnServeIndex(e, dirA, dim = 64,
-      maxBytesPerVector = 8) === IvfAdc(bits, probeBudget(bits), 8, autoAdcRerank(n)))
-    val servedA = Similarity.annServeFromIndex(spark, dirA, q, e, k = 5,
-        dim = 64, maxBytesPerVector = 8)
-      .orderBy("query_id", "rank").collect().toSeq
-    val inflightA = Similarity.ivfAdcTopK(q, e, k = 5, dim = 64, bits = bits,
-        nProbe = Similarity.probeBudget(bits), m = 8,
-        rerank = Similarity.autoAdcRerank(n))
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(servedA === inflightA)
-    // geometry check: serving an index built at m=8 under a budget
-    // implying m=32 refuses loudly instead of mis-slicing the LUT
-    intercept[IllegalArgumentException](
-      Similarity.annServeFromIndex(spark, dirA, q, e, k = 5, dim = 64,
-        maxBytesPerVector = 32))
   }
 }

@@ -137,8 +137,8 @@ object CatalogSupport {
     * use 2·off / 3·off — disjoint from the corpus AND each other.
     */
   private[catalog] def plantOffset(df: DataFrame, idCol: String): Long = {
-    val footer = sourceParquetPath(df)
-      .flatMap(p => Tables.footerMaxLong(df.sparkSession, p, idCol))
+    val footer = sourceParquetFiles(df)
+      .flatMap(fs => Tables.footerMaxLong(df.sparkSession, fs, idCol))
     val maxId = footer match {
       case Some(m) => m.getOrElse(0L) // exact footer max (None = no rows)
       case None =>
@@ -148,28 +148,28 @@ object CatalogSupport {
     (maxId / 1000000L + 1L) * 1000000L
   }
 
-  /** The single parquet root behind `df` when — and only when — the
-    * frame is a BARE scan (Project-of-attributes/alias nodes over one
-    * parquet relation; any Filter/derivation disqualifies). This is
-    * the guard that lets [[plantOffset]]/[[probeCount]] answer from
-    * footer metadata with values identical to the scan-based
-    * aggregation: over a bare scan, footer row counts and column
-    * min/max ARE the aggregation's answers.
+  /** The parquet files the scan behind `df` reads — its relation's own
+    * file index listing — when, and only when, the frame is a BARE scan
+    * (Project-of-attributes/alias nodes over one parquet relation; any
+    * Filter/derivation disqualifies). This is the guard that lets
+    * [[plantOffset]]/[[probeCount]] answer from footer metadata with
+    * values identical to the scan-based aggregation: over a bare scan,
+    * the footer row counts and column min/max of exactly these files
+    * ARE the aggregation's answers.
     */
-  private def sourceParquetPath(df: DataFrame): Option[String] = {
+  private def sourceParquetFiles(df: DataFrame): Option[Seq[String]] = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def walk(p: LogicalPlan): Option[String] = p match {
+    def walk(p: LogicalPlan): Option[Seq[String]] = p match {
       case Project(projs, child)
           if projs.forall(_.isInstanceOf[AttributeReference]) => walk(child)
       case SubqueryAlias(_, child) => walk(child)
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation
             if fs.fileFormat.isInstanceOf[
-              org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]
-              && fs.location.rootPaths.size == 1 =>
-          Some(fs.location.rootPaths.head.toString)
+              org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
+          Some(fs.location.inputFiles.toSeq)
         case _ => None
       }
       case _ => None
@@ -178,7 +178,7 @@ object CatalogSupport {
   }
 
   /** Row count of `df` — from parquet footer metadata when the frame
-    * is a bare table scan ([[sourceParquetPath]]; block row counts are
+    * is a bare table scan ([[sourceParquetFiles]]; block row counts are
     * exact by the format's definition), else the ordinary `count()`.
     * The catalog's parameter probes (quantizer widths, inverted-index
     * caps) are metadata questions; answering them without a cluster
@@ -187,8 +187,8 @@ object CatalogSupport {
     * bench pass runs ~38 probes).
     */
   private[catalog] def probeCount(df: DataFrame): Long =
-    sourceParquetPath(df) match {
-      case Some(p) => Tables.footerRowCount(df.sparkSession, p)
+    sourceParquetFiles(df) match {
+      case Some(fs) => Tables.footerRowCount(df.sparkSession, fs)
       case None => df.count()
     }
 

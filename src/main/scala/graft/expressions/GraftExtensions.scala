@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.ColumnBridge
 
-/** SQL surface for the custom expressions.
+/** SQL surface for the custom functions: every scalar kernel function
+  * of [[GraftFunctions]] under its SQL name, built from the same
+  * definition as its Column form, plus the `minhash_union` aggregate.
   *
   * Two registration routes:
   *  - `spark.sql.extensions=graft.expressions.GraftExtensions` at
@@ -23,43 +25,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def intLit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-  private def boolLit(e: Expression): Boolean = e.eval().asInstanceOf[Boolean]
-
-  private def fn(name: String, usage: String)(builder: Seq[Expression] => Expression)
+  private def fn(name: String)(builder: Seq[Expression] => Expression)
     : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      // 3-arg ExpressionInfo is (className, db, name) — usage goes in
-      // the extended constructor we don't need; db stays default
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name),
+    // 3-arg ExpressionInfo is (className, db, name); db stays default
+    (FunctionIdentifier(name), new ExpressionInfo(classOf[GraftExtensions].getName, null, name),
       builder)
 
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    fn("minhash_sig", "minhash_sig(text, shingleSize, k, charLevel) - MinHash signature array") {
-      args => MinHashSig(args(0), intLit(args(1)), intLit(args(2)), boolLit(args(3)))
-    },
-    fn("shingle_set", "shingle_set(text, shingleSize, charLevel) - sorted distinct shingle hashes") {
-      args => ShingleSet(args(0), intLit(args(1)), boolLit(args(2)))
-    },
-    fn("simhash64", "simhash64(text) - 64-bit SimHash") {
-      args => SimHash64(args(0))
-    },
-    fn("jaccard_sorted", "jaccard_sorted(a, b) - exact Jaccard of two sorted hash arrays") {
-      args => JaccardSorted(args(0), args(1))
-    },
-    fn("vec_dot", "vec_dot(a, b) - dot product of two float vectors") {
-      args => VecDot(args(0), args(1))
-    },
-    fn("vec_cosine", "vec_cosine(a, b) - cosine similarity of two float vectors") {
-      args => VecCosine(args(0), args(1))
-    },
-    fn("minhash_union", "minhash_union(sig, k) - aggregate elementwise-min of MinHash signatures") {
-      args => MinHashUnion(args(0), intLit(args(1)))
-    },
-    fn("winnow", "winnow(text, k, w) - winnowing fingerprint hashes (k-gram, window w)") {
-      args => Winnow(args(0), intLit(args(1)), intLit(args(2)))
-    },
-  )
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    GraftFunctions.scalars.map(f => fn(f.name)(f.apply)) :+
+      fn("minhash_union")(args =>
+        MinHashUnion(args(0), args(1).eval().asInstanceOf[Number].intValue))
 
   /** Register on a live session (idempotent — re-registration replaces). */
   def register(spark: SparkSession): Unit =

@@ -1,11 +1,17 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Primitive compute kernels behind the custom Catalyst expressions:
-  * tight compiled loops over raw bytes, no per-element Column
-  * evaluation, no intermediate object churn. Called from generated
-  * code via the static forwarders Scala emits for top-level objects.
+/** Primitive compute kernels behind the scalar functions of
+  * [[GraftFunctions]]: tight compiled loops over raw bytes, no
+  * per-element Column evaluation, no intermediate object churn. Spark's
+  * `StaticInvoke` calls them through the static forwarders Scala emits
+  * for top-level objects, so the entry points take and return
+  * Catalyst's own types (`UTF8String`/`ArrayData` in,
+  * `ArrayData`/`long`/`double` out) and convert to primitive arrays
+  * here, once.
   *
   * Hashing: FNV-1a over the shingle bytes finished with the splitmix64
   * avalanche — stable across JVMs/runs (no seed from the environment).
@@ -40,6 +46,9 @@ object Kernels {
     * engine and oracle cannot drift (the signIvfOracle design rule).
     */
   private[graft] def permSeed(i: Int): Long = mix64(GOLDEN * (i + 1))
+
+  /** A kernel's long-array result as Catalyst array data. */
+  private def longs(a: Array[Long]): ArrayData = UnsafeArrayData.fromPrimitiveArray(a)
 
   @inline private def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
@@ -98,20 +107,22 @@ object Kernels {
     out
   }
 
+  private def shingleHashes(s: UTF8String, n: Int, charLevel: Boolean): Array[Long] =
+    if (charLevel) charShingleHashes(s, n) else tokenShingleHashes(s, n)
+
   /** Sorted distinct shingle-hash set (char or token level). Sorted so
     * set intersection is a linear merge.
     */
-  def shingleSet(s: UTF8String, n: Int, charLevel: Boolean): Array[Long] = {
-    val h = if (charLevel) charShingleHashes(s, n) else tokenShingleHashes(s, n)
-    if (h.length <= 1) return h
+  def shingleSet(s: UTF8String, n: Int, charLevel: Boolean): ArrayData = {
+    val h = shingleHashes(s, n, charLevel)
     java.util.Arrays.sort(h)
-    var w = 1
+    var w = math.min(h.length, 1)
     var i = 1
     while (i < h.length) {
       if (h(i) != h(w - 1)) { h(w) = h(i); w += 1 }
       i += 1
     }
-    if (w == h.length) h else java.util.Arrays.copyOf(h, w)
+    longs(if (w == h.length) h else java.util.Arrays.copyOf(h, w))
   }
 
   /** MinHash signature straight from text: one pass over the shingle
@@ -119,13 +130,13 @@ object Kernels {
     * beyond the signature itself. Empty text → Long.MaxValue sentinels
     * (all empty docs collide, which is the desired dedup behavior).
     */
-  def minhash(s: UTF8String, n: Int, k: Int, charLevel: Boolean): Array[Long] = {
-    val hs = if (charLevel) charShingleHashes(s, n) else tokenShingleHashes(s, n)
-    minhashFromHashes(hs, k)
-  }
+  def minhash(s: UTF8String, n: Int, k: Int, charLevel: Boolean): ArrayData =
+    longs(signature(shingleHashes(s, n, charLevel), k))
 
   /** MinHash signature from a precomputed hash array. */
-  def minhashFromHashes(hs: Array[Long], k: Int): Array[Long] = {
+  def minhashFromHashes(hs: ArrayData, k: Int): ArrayData = longs(signature(hs.toLongArray(), k))
+
+  private def signature(hs: Array[Long], k: Int): Array[Long] = {
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
@@ -171,19 +182,12 @@ object Kernels {
     * in first-occurrence order. Fewer grams than one window → the
     * single global min; no grams → empty.
     */
-  def winnow(s: UTF8String, k: Int, w: Int): Array[Long] = {
+  def winnow(s: UTF8String, k: Int, w: Int): ArrayData = {
     val h = charShingleHashes(s, k)
-    if (h.length == 0) return Array.emptyLongArray
-    val nWin = h.length - (w - 1)
-    if (nWin < 1) {
-      var m = h(0)
-      var i = 1
-      while (i < h.length) { if (h(i) < m) m = h(i); i += 1 }
-      return Array(m)
-    }
     val sel = new java.util.LinkedHashSet[java.lang.Long]()
+    if (h.nonEmpty && h.length < w) sel.add(h.min)
     var i = 0
-    while (i < nWin) {
+    while (i + w <= h.length) {
       var m = h(i)
       var j = i + 1
       while (j < i + w) { if (h(j) < m) m = h(j); j += 1 }
@@ -194,7 +198,7 @@ object Kernels {
     val it = sel.iterator()
     var idx = 0
     while (it.hasNext) { out(idx) = it.next(); idx += 1 }
-    out
+    longs(out)
   }
 
   /** Intersection size of two SORTED long arrays — linear merge. */
@@ -213,21 +217,23 @@ object Kernels {
   }
 
   /** Jaccard of two sorted distinct hash sets; both empty → 1.0. */
-  def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
-    val inter = sortedIntersectSize(a, b)
-    val union = a.length + b.length - inter
+  def jaccardSorted(a: ArrayData, b: ArrayData): Double = {
+    val inter = sortedIntersectSize(a.toLongArray(), b.toLongArray())
+    val union = a.numElements() + b.numElements() - inter
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
   /** Random-hyperplane LSH bucket: bit j = sign(v · plane_j), planes
-    * flattened row-major. All plane dots in one kernel call.
+    * flattened row-major. All plane dots in one kernel call; the planes
+    * are a constant array read in place, never copied per row.
     */
-  def hyperplaneBucket(v: Array[Float], planes: Array[Double], nPlanes: Int): Long = {
+  def hyperplaneBucket(vec: ArrayData, planes: ArrayData, nPlanes: Int): Long = {
     // stride comes from the plane matrix, NOT the vector: if the
     // vector is shorter than the configured dim the extra coefficients
     // are ignored; if longer, the tail is ignored — but offsets never
     // misalign across planes.
-    val dim = planes.length / nPlanes
+    val v = vec.toFloatArray()
+    val dim = planes.numElements() / nPlanes
     val n = math.min(dim, v.length)
     var sig = 0L
     var j = 0
@@ -236,7 +242,7 @@ object Kernels {
       var s = 0.0
       var i = 0
       while (i < n) {
-        s += v(i).toDouble * planes(off + i)
+        s += v(i).toDouble * planes.getDouble(off + i)
         i += 1
       }
       if (s > 0) sig |= (1L << j)
@@ -246,7 +252,9 @@ object Kernels {
   }
 
   /** Dot product over float arrays (double accumulation). */
-  def dotF(a: Array[Float], b: Array[Float]): Double = {
+  def dotF(va: ArrayData, vb: ArrayData): Double = {
+    val a = va.toFloatArray()
+    val b = vb.toFloatArray()
     val n = math.min(a.length, b.length)
     var s = 0.0
     var i = 0
@@ -257,7 +265,9 @@ object Kernels {
   /** Cosine similarity over float arrays — dot and both norms in ONE
     * pass. Zero-norm input → 0.0 (not NaN).
     */
-  def cosineF(a: Array[Float], b: Array[Float]): Double = {
+  def cosineF(va: ArrayData, vb: ArrayData): Double = {
+    val a = va.toFloatArray()
+    val b = vb.toFloatArray()
     val n = math.min(a.length, b.length)
     var dot = 0.0
     var na = 0.0
@@ -278,14 +288,14 @@ object Kernels {
     * codebook was trained on). Out-of-range idx throws loudly rather
     * than truncating.
     */
-  def scatterLut(idxs: Array[Long], vals: Array[Long], size: Int): Array[Long] = {
+  def scatterLut(idxs: ArrayData, vals: ArrayData, size: Int): ArrayData = {
     val out = new Array[Long](size)
     var i = 0
-    while (i < idxs.length) {
-      out(idxs(i).toInt) = vals(i)
+    while (i < idxs.numElements()) {
+      out(idxs.getLong(i).toInt) = vals.getLong(i)
       i += 1
     }
-    out
+    longs(out)
   }
 
   /** ADC score of one corpus vector against one query's dense lookup
@@ -296,9 +306,7 @@ object Kernels {
     * would copy the m·2^w-cell table once per scored pair — a 16 KB
     * memcpy multiplied by |Q|·n pairs dwarfed the m lookups it fed.
     */
-  def adcLookupSum(
-      codes: org.apache.spark.sql.catalyst.util.ArrayData,
-      lut: org.apache.spark.sql.catalyst.util.ArrayData, w: Int): Long = {
+  def adcLookupSum(codes: ArrayData, lut: ArrayData, w: Int): Long = {
     var s = 0L
     var j = 0
     val n = codes.numElements()

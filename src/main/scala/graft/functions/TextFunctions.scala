@@ -94,10 +94,10 @@ object TextFunctions {
     * n-gram in the same document (0 = no repetition, → 1 = heavy
     * boilerplate) — the duplicate-n-gram class of quality filter used
     * by large-scale corpus curation (Gopher/RefinedWeb style). The
-    * distinct count comes from the compiled [[graft.expressions]]
-    * shingle-set kernel (one pass per row, no higher-order functions);
-    * the total is plain length arithmetic, so the whole signal stays
-    * inside codegen.
+    * distinct count comes from the compiled
+    * [[graft.expressions.GraftFunctions.shingleSet]] kernel (one pass
+    * per row, no higher-order functions); the total is plain length
+    * arithmetic, so the whole signal stays inside codegen.
     */
   def dupNgramRatio(text: Column, n: Int): Column = {
     // the shingle kernel operates on UTF-8 BYTES, so the total must be

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.expressions.GraftFunctions
 
 /** Dense-vector math over `array<float>` embedding columns, backed by
-  * the custom codegen expressions in [[graft.expressions]] — one fused
+  * the kernel functions of [[graft.expressions.GraftFunctions]] — one fused
   * compiled loop per row instead of interpreted `zip_with`/`aggregate`
   * higher-order functions (which fall back to per-element expression
   * evaluation and dominate brute-force similarity cost at scale).
@@ -23,7 +23,7 @@ object VectorFunctions {
 
   /** Sign-bit bucket for random-hyperplane LSH: bit j = 1 iff
     * dot(v, plane_j) > 0, packed into a long — all planes in one
-    * kernel call ([[graft.expressions.HyperplaneBucket]]).
+    * kernel call ([[graft.expressions.GraftFunctions.hyperplaneBucket]]).
     */
   def hyperplaneBucket(v: Column, planes: Seq[Array[Double]]): Column =
     GraftFunctions.hyperplaneBucket(

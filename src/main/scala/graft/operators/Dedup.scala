@@ -11,9 +11,9 @@ import graft.functions.TextFunctions
   *
   * Scale design:
   *  - per-document work (shingling, hashing, signatures) is ONE
-  *    compiled kernel call per row via the custom Catalyst expressions
-  *    in [[graft.expressions]] — no interpreted higher-order functions,
-  *    no explode, no signature shuffle;
+  *    compiled kernel call per row via the kernel functions of
+  *    [[graft.expressions.GraftFunctions]] — no interpreted
+  *    higher-order functions, no explode, no signature shuffle;
   *  - candidate generation is always a self-equi-join on a bounded
   *    blocking key (LSH band hash / signature band / anchor hash),
   *    shuffled on that key — never an all-pairs cross join;
@@ -128,9 +128,9 @@ object Dedup {
 
   /** The per-document kernel pass of [[nearDupPairsPrepared]]:
     * (doc_id, sh, sig) in ONE projection — the signature derives from
-    * the set column (MinHashFromSet), and codegen subexpression
-    * elimination computes the ShingleSet child once, so each document
-    * is tokenized/hashed exactly once per evaluation. Callers that
+    * the set column ([[GraftFunctions.minhashFromSet]]), and codegen
+    * subexpression elimination computes the shingle set once, so each
+    * document is tokenized/hashed exactly once per evaluation. Callers that
     * reference the result more than once (verification joins, audit
     * gram counts) should MATERIALIZE it (cache / localCheckpoint /
     * reliable checkpoint on a cluster): the frame is unmaterialized
@@ -148,7 +148,7 @@ object Dedup {
   /** Near-duplicate pairs over a precomputed (doc_id, sh, sig) frame
     * from [[prepareNearDup]]: MinHash LSH banding on `sig`, then exact
     * Jaccard ≥ threshold on the sorted `sh` sets of each candidate
-    * pair, a linear merge per pair ([[graft.expressions.JaccardSorted]]).
+    * pair, a linear merge per pair ([[GraftFunctions.jaccardSorted]]).
     * Lets a caller compute the expensive shingle/signature pass ONCE
     * and share it between candidate generation, verification, and any
     * caller-side reuse of the sets ([[dedupeIncrement]]'s within-batch
@@ -493,7 +493,7 @@ object Dedup {
 
   /** 64-bit SimHash signatures: bit j of the signature is the sign of
     * Σ_tokens (±1 by bit j of hash(token)) — one compiled kernel call
-    * per row ([[graft.expressions.SimHash64]]), no explode, no shuffle.
+    * per row ([[GraftFunctions.simhash64]]), no explode, no shuffle.
     */
   def simhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"), GraftFunctions.simhash64(col(textCol)).as("sh"))
@@ -649,27 +649,22 @@ object Dedup {
       .join(banded(historyArt).as("h"), Seq("band", "bh"))
       .select(col("b.doc_id").as("batch_id"), col("h.doc_id").as("hist_id"))
       .distinct()
-    // the history-set lookup is LEFT + loud failure on a missing
-    // artifact row. Both sides now derive from the same `historyArt`,
-    // so the case cannot occur; it stays because dropping it changes
-    // q68's plan
+    // every hist_id is a doc of historyArt, so the set lookup is an
+    // inner join. A null text has a null `sh` and `sig`; its band hashes
+    // meet only other null signatures, and the null Jaccard drops the pair
     val contaminated = cands
       .join(neverBroadcast(noExact.select(col("doc_id").as("batch_id"), col("sh").as("sh_b"))),
         Seq("batch_id"))
       .join(neverBroadcast(historyArt.select(col("doc_id").as("hist_id"), col("sh").as("sh_h"))),
-        Seq("hist_id"), "left")
-      .filter(
-        when(col("sh_h").isNull,
-          raise_error(concat(lit("dedupeIncrement: history artifact missing for banded doc_id "),
-            col("hist_id").cast("string"))).cast("boolean"))
-        .otherwise(GraftFunctions.jaccardSorted(col("sh_b"), col("sh_h")) >= threshold))
+        Seq("hist_id"))
+      .filter(GraftFunctions.jaccardSorted(col("sh_b"), col("sh_h")) >= threshold)
       .select(col("batch_id").as("doc_id")).distinct()
     // everything from here on (including the fresh_exact truncation —
-    // the write that forces the whole step-2 evaluation and carries
-    // the missing-artifact raise_error) runs inside the cleanup scope: on
-    // ANY failure both snapshots this call wrote are freed; on success
-    // only the dead no_exact one is, because fresh_exact and the final
-    // component labels back the returned frame (caller/TTL frees them)
+    // the write that forces the whole step-2 evaluation) runs inside
+    // the cleanup scope: on ANY failure both snapshots this call wrote
+    // are freed; on success only the dead no_exact one is, because
+    // fresh_exact and the final component labels back the returned
+    // frame (caller/TTL frees them)
     var ok = false
     try {
       val fresh = noExact.join(contaminated, Seq("doc_id"), "left_anti")

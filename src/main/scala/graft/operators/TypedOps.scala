@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Typed Dataset surface: the same exact-integer discipline as the
-  * untyped catalog, through case-class rows and a custom [[Aggregator]]
+  * untyped catalog, through case-class rows and a custom Spark `Aggregator`
   * — compile-time schemas for pipeline stages where a field typo must
   * not survive to runtime. Encoders keep rows in Tungsten binary form,
   * and the Aggregator's reduce/merge is the associative+commutative

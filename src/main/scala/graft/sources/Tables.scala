@@ -102,48 +102,42 @@ object Tables {
   // block lacks usable stats).
   // ------------------------------------------------------------------
 
-  private def parquetFooters(spark: SparkSession, tablePath: String)
+  /** Footers of `files`, given as the URI strings a scan's file index
+    * lists (`inputFiles`), so the probes read exactly the scanned files.
+    */
+  private def parquetFooters(spark: SparkSession, files: Seq[String])
       : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    // every leaf data file below the root, as the scan's file index
-    // lists it: partition directories (`k=v/`) and nested dirs are
-    // descended, `_`/`.`-prefixed entries (`_SUCCESS`, `_temporary`,
-    // `.crc` checksums) skipped at every level
-    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.Path] =
-      if (!st.isDirectory) Seq(st.getPath)
-      else fs.listStatus(st.getPath).toIndexedSeq
-        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
-        .flatMap(leaves)
-    leaves(fs.getFileStatus(root)).map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+    files.map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getFooter finally r.close()
     }
   }
 
-  /** Exact row count of a table from its parquet footers — block row
+  /** Exact row count of parquet `files` from their footers — block row
     * counts are definitional parquet metadata (present and exact in
     * every file, unlike min/max stats), so there is no fallback to
-    * need. Equals `load(...).count()` bit-for-bit.
+    * need. Given the files a scan lists (`inputFiles`), equals that
+    * scan's `count()` bit-for-bit.
     */
-  def footerRowCount(spark: SparkSession, tablePath: String): Long = {
+  def footerRowCount(spark: SparkSession, files: Seq[String]): Long = {
     import scala.jdk.CollectionConverters._
-    parquetFooters(spark, tablePath)
+    parquetFooters(spark, files)
       .flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
   }
 
-  /** Exact `max(col)` of an integral column from parquet footer
-    * statistics; `None` when the table has no rows with a non-null
-    * value, or when any block lacks usable stats for the column (the
+  /** Exact `max(col)` of an integral column of parquet `files` from
+    * their footer statistics; `None` when the files hold no row with a
+    * non-null value, or when any block lacks usable stats for the column (the
     * caller falls back to the scan-based aggregation — correctness
     * never depends on stats being present).
     */
-  def footerMaxLong(spark: SparkSession, tablePath: String,
+  def footerMaxLong(spark: SparkSession, files: Seq[String],
       column: String): Option[Option[Long]] = {
     import scala.jdk.CollectionConverters._
-    val blocks = parquetFooters(spark, tablePath).flatMap(_.getBlocks.asScala)
+    val blocks = parquetFooters(spark, files).flatMap(_.getBlocks.asScala)
     val chunks = blocks.flatMap(b => b.getColumns.asScala
       .filter(_.getPath.toDotString == column).map(c => (b.getRowCount, c)))
     if (chunks.size != blocks.size) return None // column absent somewhere: scan

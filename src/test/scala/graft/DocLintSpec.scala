@@ -12,6 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * lines between, by another doc block, scaladoc attaches the second
   * block to the next definition and the first one documents nothing.
   *
+  * Stale scaladoc links: the last segment of every `[[…]]` link must
+  * name a class, object, trait, def or val defined under
+  * `src/main/scala`, so a deleted definition strands no link.
+  *
   * Reachability: a top-level object that no other main or perfbench
   * source names, and that defines no `main`, is reached only by its
   * own specs — no catalog query, main or benchmark runs it. The same
@@ -84,6 +88,21 @@ class DocLintSpec extends AnyFunSuite {
     }
     assert(orphans.isEmpty,
       s"doc blocks directly followed by another doc block at: ${orphans.mkString(", ")}")
+  }
+
+  test("scaladoc: every [[link]] names a definition under src/main/scala") {
+    val files = scalaFiles(Paths.get("src/main/scala"))
+    val defined = files.flatMap { f =>
+      "\\b(?:class|object|trait|def|val) +(\\w+)".r.findAllMatchIn(code(f)).map(_.group(1))
+    }.toSet
+    val stale = files.flatMap { f =>
+      val docs = "(?s)/\\*\\*.*?\\*/".r
+        .findAllIn(new String(Files.readAllBytes(f), "UTF-8"))
+      docs.flatMap(d => "\\[\\[([^\\]\\s]+)".r.findAllMatchIn(d).map(_.group(1))).collect {
+        case target if !defined(target.split("[.#]").last) => s"[[$target]] ($f)"
+      }
+    }.distinct.sorted
+    assert(stale.isEmpty, s"scaladoc links naming no main definition: ${stale.mkString(", ")}")
   }
 
   test("reachability: every top-level object is named by another source or defines a main") {

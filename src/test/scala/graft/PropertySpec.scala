@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -26,7 +27,7 @@ class PropertySpec extends SparkSpec {
     check(Prop.forAll(textGen, Gen.choose(1, 6)) { (s, n) =>
       val u = UTF8String.fromString(s)
       Seq(true, false).forall { charLevel =>
-        val set = Kernels.shingleSet(u, n, charLevel).toSeq
+        val set = Kernels.shingleSet(u, n, charLevel).toLongArray().toSeq
         set == set.sorted && set == set.distinct
       }
     })
@@ -34,7 +35,7 @@ class PropertySpec extends SparkSpec {
 
   test("kernel: jaccardSorted is symmetric, bounded, and 1.0 on self") {
     val arrGen = Gen.listOf(Gen.choose(-50L, 50L))
-      .map(_.distinct.sorted.toArray)
+      .map(xs => UnsafeArrayData.fromPrimitiveArray(xs.distinct.sorted.toArray))
     check(Prop.forAll(arrGen, arrGen) { (a, b) =>
       val ab = Kernels.jaccardSorted(a, b)
       val ba = Kernels.jaccardSorted(b, a)
@@ -55,8 +56,10 @@ class PropertySpec extends SparkSpec {
     // adding elements can only lower (or keep) each per-permutation min
     val arrGen = Gen.nonEmptyListOf(Gen.long).map(_.toArray)
     check(Prop.forAll(arrGen, arrGen) { (a, extra) =>
-      val sub = Kernels.minhashFromHashes(a, 8)
-      val sup = Kernels.minhashFromHashes(a ++ extra, 8)
+      def sig(hs: Array[Long]) =
+        Kernels.minhashFromHashes(UnsafeArrayData.fromPrimitiveArray(hs), 8).toLongArray()
+      val sub = sig(a)
+      val sup = sig(a ++ extra)
       sub.zip(sup).forall { case (s1, s2) => s2 <= s1 }
     })
   }

@@ -1,6 +1,11 @@
 package graft.expressions
 
+import org.apache.spark.sql.{AnalysisException, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
 
@@ -8,47 +13,102 @@ class GraftExpressionsSpec extends SparkSpec {
 
   import spark.implicits._
 
+  private def ad(xs: Array[Long]): ArrayData = UnsafeArrayData.fromPrimitiveArray(xs)
+  private def floats(xs: Float*): ArrayData = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
+
   test("kernels: shingle set is sorted distinct; minhash minima are consistent") {
-    import org.apache.spark.unsafe.types.UTF8String
     val s = UTF8String.fromString("a b a b a b c")
-    val set = Kernels.shingleSet(s, 2, charLevel = false)
+    val set = Kernels.shingleSet(s, 2, charLevel = false).toLongArray()
     assert(set.toSeq === set.toSeq.sorted)
     assert(set.toSeq.distinct === set.toSeq)
     assert(set.length === 3) // "a b", "b a", "b c"
-    val sig = Kernels.minhash(s, 2, 8, charLevel = false)
+    val sig = Kernels.minhash(s, 2, 8, charLevel = false).toLongArray()
     assert(sig.length === 8)
     // signature values must be minima of the per-permutation hashes of
     // the set — recomputing from the set agrees
     assert(sig.toSeq === Kernels.minhashFromHashes(
-      Kernels.tokenShingleHashes(s, 2), 8).toSeq)
+      ad(Kernels.tokenShingleHashes(s, 2)), 8).toLongArray().toSeq)
   }
 
   test("kernels: jaccardSorted edge cases") {
-    assert(Kernels.jaccardSorted(Array.emptyLongArray, Array.emptyLongArray) === 1.0)
-    assert(Kernels.jaccardSorted(Array(1L, 2L), Array.emptyLongArray) === 0.0)
-    assert(Kernels.jaccardSorted(Array(1L, 2L, 3L), Array(2L, 3L, 4L)) === 0.5)
+    assert(Kernels.jaccardSorted(ad(Array.emptyLongArray), ad(Array.emptyLongArray)) === 1.0)
+    assert(Kernels.jaccardSorted(ad(Array(1L, 2L)), ad(Array.emptyLongArray)) === 0.0)
+    assert(Kernels.jaccardSorted(ad(Array(1L, 2L, 3L)), ad(Array(2L, 3L, 4L))) === 0.5)
   }
 
   test("expressions evaluate identically via codegen and interpreted paths") {
-    val df = Seq((1L, "the quick brown fox"), (2L, "")).toDF("id", "t")
+    // every scalar function over a row of values and a row of nulls;
+    // repartition keeps the optimizer from evaluating the projection
+    // over the local rows itself
+    val planes = (0 until 4).flatMap(j => Seq(0.5 - j, -0.25 * j, 0.125))
+    val df = Seq(
+      (Option("the quick brown fox jumps"), Option(Array(1L, 5L, 9L)), Option(Array(5L, 9L, 12L)),
+        Option(Array(1L, 1L, 1L)), Option(Array(1f, -2f, 3f)), Option(Array(0.5f, 4f, -1f)),
+        Option(2.5)),
+      (None, None, None, None, None, None, None))
+      .toDF("t", "a", "b", "codes", "u", "v", "d").repartition(1)
     val cols = Seq(
-      GraftFunctions.simhash64(col("t")).as("sh"),
-      GraftFunctions.minhashSig(col("t"), 3, 8, false).as("mh"),
-      GraftFunctions.shingleSet(col("t"), 4, true).as("ss"))
-    val codegen = df.select(cols: _*).collect()
-    // the plan above runs through whole-stage codegen; compare against
-    // direct (interpreted-path) kernel calls
-    import org.apache.spark.unsafe.types.UTF8String
-    val expected = Seq("the quick brown fox", "").map { s =>
-      (Kernels.simhash(UTF8String.fromString(s)),
-        Kernels.minhash(UTF8String.fromString(s), 3, 8, false).toSeq,
-        Kernels.shingleSet(UTF8String.fromString(s), 4, true).toSeq)
+      GraftFunctions.minhashSig(col("t"), 3, 8, false),
+      GraftFunctions.shingleSet(col("t"), 4, true),
+      GraftFunctions.minhashFromSet(col("a"), 4),
+      GraftFunctions.winnow(col("t"), 4, 3),
+      GraftFunctions.simhash64(col("t")),
+      GraftFunctions.jaccardSorted(col("a"), col("b")),
+      GraftFunctions.vecDot(col("u"), col("v")),
+      GraftFunctions.vecCosine(col("u"), col("v")),
+      GraftFunctions.hyperplaneBucket(col("u"), planes, 4),
+      GraftFunctions.scatterLut(col("a"), col("b"), 16),
+      GraftFunctions.adcLookupSum(col("codes"),
+        GraftFunctions.scatterLut(col("a"), col("b"), 16), 2),
+      GraftFunctions.doubleBits(col("d")))
+    def run(): (String, Seq[Row]) = {
+      val q = df.select(cols.zipWithIndex.map { case (c, i) => c.as(s"c$i") }: _*)
+      val rows = q.collect().toSeq // first: the explained plan is then the final one
+      (q.queryExecution.explainString(ExplainMode.fromString("formatted")), rows)
     }
-    codegen.zip(expected).foreach { case (row, (sh, mh, ss)) =>
-      assert(row.getLong(0) === sh)
-      assert(row.getSeq[Long](1) === mh)
-      assert(row.getSeq[Long](2) === ss)
-    }
+    val (codegenPlan, codegen) = run()
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val (interpretedPlan, interpreted) =
+      try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; run() }
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(saved.forall { case (k, v) => spark.conf.getOption(k) == v })
+    assert(codegenPlan.contains("codegen id") && !interpretedPlan.contains("codegen id"))
+    assert(interpreted === codegen)
+    assert(codegen(1).toSeq.forall(_ == null), s"null inputs must give nulls: ${codegen(1)}")
+    // and the value row is the kernels' own answer
+    val text = UTF8String.fromString("the quick brown fox jumps")
+    val (a, b) = (ad(Array(1L, 5L, 9L)), ad(Array(5L, 9L, 12L)))
+    val (u, v) = (floats(1f, -2f, 3f), floats(0.5f, 4f, -1f))
+    val lut = Kernels.scatterLut(a, b, 16)
+    val expected = Seq(
+      Kernels.minhash(text, 3, 8, false).toLongArray().toSeq,
+      Kernels.shingleSet(text, 4, true).toLongArray().toSeq,
+      Kernels.minhashFromHashes(a, 4).toLongArray().toSeq,
+      Kernels.winnow(text, 4, 3).toLongArray().toSeq,
+      Kernels.simhash(text),
+      Kernels.jaccardSorted(a, b),
+      Kernels.dotF(u, v),
+      Kernels.cosineF(u, v),
+      Kernels.hyperplaneBucket(u, UnsafeArrayData.fromPrimitiveArray(planes.toArray), 4),
+      lut.toLongArray().toSeq,
+      Kernels.adcLookupSum(ad(Array(1L, 1L, 1L)), lut, 2),
+      java.lang.Double.doubleToLongBits(2.5))
+    assert(codegen(0).toSeq === expected)
+    assert(codegen(0).getLong(10) === 5L + 9L + 12L) // lut[1] + lut[4 + 1] + lut[8 + 1]
+  }
+
+  test("a wrong-typed argument fails at analysis") {
+    val df = Seq((Array(1L, 2L), "text")).toDF("longs", "s")
+    intercept[AnalysisException](df.select(GraftFunctions.simhash64(col("longs"))))
+    intercept[AnalysisException](df.select(GraftFunctions.vecCosine(col("s"), col("s"))))
+    GraftExtensions.register(spark)
+    df.createOrReplaceTempView("ge_types")
+    try {
+      intercept[AnalysisException](spark.sql("SELECT simhash64(longs) FROM ge_types"))
+      intercept[AnalysisException](spark.sql("SELECT vec_cosine(s, s) FROM ge_types"))
+    } finally spark.catalog.dropTempView("ge_types")
   }
 
   test("null inputs propagate as null") {
@@ -89,6 +149,11 @@ class GraftExpressionsSpec extends SparkSpec {
     assert(r.getDouble(2) === 1.0)
     assert(r.getInt(3) > 0)
     spark.catalog.dropTempView("ge_docs")
+    // every scalar function is registered under its SQL name, and so
+    // is the aggregate
+    (GraftFunctions.scalars.map(_.name) :+ "minhash_union").foreach { n =>
+      assert(spark.catalog.functionExists(n), s"$n is not registered")
+    }
   }
 
   test("hyperplane bucket: opposite vectors produce complementary buckets") {
@@ -100,13 +165,11 @@ class GraftExpressionsSpec extends SparkSpec {
   }
 
   test("scatterLut places entries densely; unobserved cells stay 0") {
-    val lut = Kernels.scatterLut(Array(3L, 0L, 5L), Array(30L, -7L, 50L), 8)
-    assert(lut.toSeq === Seq(-7L, 0L, 0L, 30L, 0L, 50L, 0L, 0L))
+    val lut = Kernels.scatterLut(ad(Array(3L, 0L, 5L)), ad(Array(30L, -7L, 50L)), 8)
+    assert(lut.toLongArray().toSeq === Seq(-7L, 0L, 0L, 30L, 0L, 50L, 0L, 0L))
   }
 
   test("adcLookupSum = Σⱼ lut[(j << w) + codes[j]] — hand case") {
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    def ad(xs: Array[Long]) = UnsafeArrayData.fromPrimitiveArray(xs)
     // m = 2 blocks, w = 2 bits: lut cells 0-3 = block 0, 4-7 = block 1
     val lut = ad(Array(10L, 11L, 12L, 13L, 20L, 21L, 22L, 23L))
     // codes = [2, 1] → lut[2] + lut[4 + 1] = 12 + 21 = 33
@@ -123,12 +186,9 @@ class GraftExpressionsSpec extends SparkSpec {
           col("codes"),
           GraftFunctions.scatterLut(col("idxs"), col("vals"), 8), 2).as("adc"))
     // lut = [-7, 0, 0, 30, 0, 0, 0, 0]; codes [2, 1] → lut[2] + lut[5] = 0
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     assert(df.head.getLong(0) ===
-      Kernels.adcLookupSum(
-        UnsafeArrayData.fromPrimitiveArray(Array(2L, 1L)),
-        UnsafeArrayData.fromPrimitiveArray(
-          Kernels.scatterLut(Array(3L, 0L), Array(30L, -7L), 8)), 2))
+      Kernels.adcLookupSum(ad(Array(2L, 1L)),
+        Kernels.scatterLut(ad(Array(3L, 0L)), ad(Array(30L, -7L)), 8), 2))
     assert(df.head.getLong(0) === 0L)
   }
 }

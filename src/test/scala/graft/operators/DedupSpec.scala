@@ -223,6 +223,18 @@ class DedupSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "no_exact")))
   }
 
+  test("dedupeIncrement: null texts on both sides neither fail nor contaminate") {
+    // null signatures share one band hash, so the two null docs are
+    // candidates; the null Jaccard drops the pair
+    val history = Dedup.artifacts(docs(1L -> null, 2L -> "one two three four five six"),
+      "doc_id", "text")
+    val batch = Dedup.artifacts(docs(10L -> null, 12L -> "seven eight nine ten eleven twelve"),
+      "doc_id", "text")
+    val survivors = Dedup.dedupeIncrement(batch, history, threshold = 0.5)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(survivors === Set(10L, 12L))
+  }
+
   test("exactIncrement: history anti-join + min-id within batch, idempotent") {
     val history = docs(1L -> "alpha beta", 2L -> "gamma delta")
     val batch = docs(

@@ -104,21 +104,21 @@ class TablesSpec extends SparkSpec {
     // row counts: block row counts are definitional metadata — must
     // equal count() on every testdata table
     Tables.names.foreach { n =>
-      val p = Tables.path(dir, n)
-      assert(Tables.footerRowCount(spark, p) == Tables.load(spark, dir, n).count(),
+      val t = Tables.load(spark, dir, n)
+      assert(Tables.footerRowCount(spark, t.inputFiles) == t.count(),
         s"footerRowCount($n) != count()")
     }
     // integral max: footer stats must reproduce agg(max(id)) where the
     // id columns exist
     Seq("documents" -> "doc_id", "embeddings" -> "vec_id",
       "part" -> "p_partkey", "orders" -> "o_orderkey").foreach { case (n, c) =>
-      val p = Tables.path(dir, n)
-      val expected = Tables.load(spark, dir, n).agg(max(col(c))).head.getLong(0)
-      assert(Tables.footerMaxLong(spark, p, c) == Some(Some(expected)),
+      val t = Tables.load(spark, dir, n)
+      val expected = t.agg(max(col(c))).head.getLong(0)
+      assert(Tables.footerMaxLong(spark, t.inputFiles, c) == Some(Some(expected)),
         s"footerMaxLong($n.$c) != agg(max)")
     }
     // unknown column: must demand the scan fallback, never guess
-    assert(Tables.footerMaxLong(spark, Tables.path(dir, "documents"),
+    assert(Tables.footerMaxLong(spark, Tables.load(spark, dir, "documents").inputFiles,
       "no_such_column").isEmpty)
   }
 
@@ -133,12 +133,14 @@ class TablesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(allNull)
     // all-null column: provably no non-null max — Some(None), matching
     // agg(max) = NULL (plantOffset's maxId = 0 branch)
-    assert(Tables.footerMaxLong(spark, allNull, "id") == Some(None))
+    val allNullFiles = spark.read.schema(schema).parquet(allNull).inputFiles
+    assert(Tables.footerMaxLong(spark, allNullFiles, "id") == Some(None))
     val empty = s"$tmp/empty.parquet"
     spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       .coalesce(1).write.mode("overwrite").parquet(empty)
-    assert(Tables.footerRowCount(spark, empty) == 0L)
-    assert(Tables.footerMaxLong(spark, empty, "id") == Some(None))
+    val emptyFiles = spark.read.schema(schema).parquet(empty).inputFiles
+    assert(Tables.footerRowCount(spark, emptyFiles) == 0L)
+    assert(Tables.footerMaxLong(spark, emptyFiles, "id") == Some(None))
   }
 
   private def tmpDir(prefix: String): String =
@@ -149,14 +151,14 @@ class TablesSpec extends SparkSpec {
     val dir = tmpDir("graft_footer_part")
     val df = spark.range(0, 500).withColumn("yr", (col("id") % 3).cast("int"))
     graft.operators.PartitionedLake.writePartitioned(df.repartition(2), Tables.path(dir, "lake"), "yr")
-    val p = Tables.path(dir, "lake")
     val loaded = Tables.load(spark, dir, "lake")
-    assert(Tables.footerRowCount(spark, p) == loaded.count())
-    assert(Tables.footerMaxLong(spark, p, "id") ==
+    val files = loaded.inputFiles
+    assert(Tables.footerRowCount(spark, files) == loaded.count())
+    assert(Tables.footerMaxLong(spark, files, "id") ==
       Some(Some(loaded.agg(max(col("id"))).head.getLong(0))))
     // the partition column lives in directory names, not in the files:
     // no footer can answer it, so the caller must scan
-    assert(Tables.footerMaxLong(spark, p, "yr").isEmpty)
+    assert(Tables.footerMaxLong(spark, files, "yr").isEmpty)
   }
 
   test("footer row count sums every part file of a multi-file root") {
@@ -164,7 +166,8 @@ class TablesSpec extends SparkSpec {
     val p = Tables.path(dir, "multi")
     spark.range(0, 700).repartition(3).write.parquet(p)
     assert(graft.operators.PartitionedLake.dataFileCount(p) > 1)
-    assert(Tables.footerRowCount(spark, p) == Tables.load(spark, dir, "multi").count())
+    val loaded = Tables.load(spark, dir, "multi")
+    assert(Tables.footerRowCount(spark, loaded.inputFiles) == loaded.count())
   }
 
   test("a table regenerated at the same path loads with its new schema") {
